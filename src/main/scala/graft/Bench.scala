@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 
 /** Benchmark main (driver contract): runs every declared query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -33,21 +33,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Single-shot timings at sf0.1 are dominated by per-plan fixed cost
-    // (codegen/JIT + task scheduling), so a small local parallelism wins
-    // here (measured: 4 threads ≈ 51s, 32 threads ≈ 65s for the same 66
-    // queries). Real-scale parallelism comes from executors × shuffle
-    // partitions on content-derived keys, not from this local setting.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.build()
 
     // warmup (untimed): touch every table once so file listing warms
     // (events via the loader — its ns timestamps need normalizing),
@@ -129,9 +115,13 @@ object Bench {
     // reader acts on), capped so the line stays well under the ~2.5 KB
     // tail window; the COMPLETE per-query map goes to BENCH_SELF.json.
     val top = results.sortBy(-_._2).take(20).sortBy(_._1)
-    val line = s"""{"metric":"total","value":${d2(total)},"unit":"sec","queries":${qmap(top)},"n_queries":${results.size},"errors":$errs,"triage_n":${triage.size},"triage_regressions":$regressions,"sf":"$sfDir","full":"BENCH_SELF.json"}"""
+    // the engine configuration this run used: without it a reader of
+    // the line cannot tell a local[4] run from a local[32] one
+    val conf = s""""cpus":${Session.cpus},"shuffle_partitions":${Session.shufflePartitions},""" +
+      s""""stream_parts":${Session.streamParts}"""
+    val line = s"""{"metric":"total","value":${d2(total)},"unit":"sec","queries":${qmap(top)},"n_queries":${results.size},"errors":$errs,"triage_n":${triage.size},"triage_regressions":$regressions,"sf":"$sfDir",$conf,"full":"BENCH_SELF.json"}"""
     println(line)
-    val full = s"""{"metric":"total","value":${d2(total)},"unit":"sec","queries":${qmap(results)},"errors":$errs,"triage":$triageJson,"triage_regressions":$regressions,"triage_skipped":$triageSkipped,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":${d2(total)},"unit":"sec","queries":${qmap(results)},"errors":$errs,"triage":$triageJson,"triage_regressions":$regressions,"triage_skipped":$triageSkipped,"sf":"$sfDir",$conf}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_SELF.json"), full + "\n")
     catch { case _: Throwable => () }

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Full (untruncated) `.explain("formatted")` dump of named queries to
   * one file per query — the per-round plan-evidence artifact
@@ -23,15 +22,7 @@ object PlanDump {
     val names =
       if (args.length > 3) args.drop(3).toSeq
       else SparkEntry.queries.keys.filterNot(_.startsWith("st")).toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.build()
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       try {

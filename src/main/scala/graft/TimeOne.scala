@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query timing under Bench conditions (same session config and
   * warmup), for iterating on one query's plan without a full bench
   * run: `runMain graft.TimeOne <query> [reps] [sfDir]`.
@@ -19,19 +17,7 @@ object TimeOne {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // ×1000-corpus timing needs shuffle partitions scaled past the
-    // core count (the r11 ScaleDecade lesson) — same override knob.
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.build()
     // Bench.warmup is THE shared definition (r16, advice #3): the
     // warmup sequence used to be a duplicated literal here and in
     // Bench — an independent edit would have silently broken rep1

@@ -9,7 +9,7 @@ import org.apache.spark.sql.DataFrame
   * transitively whole join/aggregate chains that only feed them)
   * below the count aggregate, so timing `query.count()` measures a
   * scan-count for any query whose heavy work is windows/projections.
-  * Measured r15 (CountPlanProbe over all 196 declared queries): every
+  * Measured r15 (count vs executed plan over all 196 declared queries): every
   * query loses its final Sort, ~30 lose WindowExecs, and a handful
   * lose their entire computation — d23_pagerank's 9-join iteration
   * chain, a15_funnel's 5 joins + 5 aggregates — because the output is

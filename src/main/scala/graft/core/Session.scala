@@ -1,0 +1,45 @@
+package graft.core
+
+import org.apache.spark.sql.SparkSession
+
+/** The one Spark session factory: Bench, TimeOne, Verify, PlanDump,
+  * Explain and the test suites all run on this configuration, so
+  * timings, oracle dumps, plan evidence and tests share one engine.
+  *
+  * `SPARK_GRAFT_CPUS` (default 4) sets `local[cpus]`: single-shot
+  * timings at sf0.1 are dominated by per-plan fixed cost, so a small
+  * local parallelism wins there (measured: 4 threads ≈ 51 s, 32
+  * threads ≈ 65 s for the same 66 queries); 32-core bench runs set
+  * `SPARK_GRAFT_CPUS=32`. `SPARK_GRAFT_PARTS` (default `cpus`) sets
+  * the shuffle partitions — ×1000-corpus runs scale it past the core
+  * count so per-task hash state fits executor memory. nanosAsLong lets
+  * pre-r6 TIMESTAMP(NANOS) fixtures load (see [[Tables.events]]). */
+object Session {
+  val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+  val shufflePartitions: Int =
+    sys.env.get("SPARK_GRAFT_PARTS").map(_.toInt).getOrElse(cpus)
+  /** State-store partitions of the streaming queries' child session
+    * (`TimeSeries.streamSession`): `SPARK_GRAFT_STREAM_PARTS`, the
+    * sizing knob a deployment sets per stream (r10 rule: ∝ per-batch
+    * row volume; the ×1000 dumps set 64, the ×1000 st7 replay 256).
+    * Default 2 = the gate-fixture optimum by the same volume rule (r17
+    * probe: per-batch state here is a few thousand rows, and each state
+    * store pays a per-batch commit — delta file + maintenance —
+    * regardless of data, so st7 measured 2.33/2.49/2.85/4.47 s at
+    * 2/4/8/16 stores). Volume sizing, the opposite direction of
+    * matching the local core count. */
+  val streamParts: Int = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "2").toInt
+
+  def build(): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+}

@@ -29,11 +29,10 @@ object Tables {
     * so the NTZ→LTZ cast is identity on the stored micros and both
     * engines see identical instants either way. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    // Session-level conf mutation at plan-build time: benign in the
-    // single-tenant drivers here (Verify/Bench also set it at session
-    // build), but racy if a shared session plans other queries
-    // concurrently — a multi-tenant caller should set it once at
-    // session construction instead.
+    // Session-level conf mutation at plan-build time: a no-op on
+    // sessions from core.Session (set at session build), but racy if a
+    // shared session built elsewhere plans other queries concurrently
+    // — such a caller should set it once at session construction too.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     normalizeTs(load(spark, dir, "events"))
   }

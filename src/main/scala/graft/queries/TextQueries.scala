@@ -30,6 +30,35 @@ object TextQueries {
     documents(s, d).select(col("doc_id"),
       explode(array_distinct(split(col("text"), " "))).as("tok"))
 
+  /** d4b's candidate stage over a `(doc_id, simhash)` frame of 32-bit
+    * simhashes: 2×16-bit halves, the probe side emitting each half's
+    * exact value plus its 16 one-bit flips, one plain equi-join on
+    * (half, value), the Hamming ≤ 3 popcount gate, then the pair-keyed
+    * distinct. Returns `(a_id, b_id, hamming, x32)` with a_id < b_id
+    * (exactness argument at the d4b query; D4bSkewSpec runs it under
+    * AQE skew-splitting). */
+  def simhashPairs(sh: DataFrame): DataFrame = {
+    val halves = sh.select(col("doc_id"), col("simhash"),
+      explode(array((0 until 2).map(b => struct(lit(b).as("half"),
+        expr(s"(simhash div ${1L << (16 * b)}) % 65536").as("hv"))): _*)).as("hb"))
+      .select(col("doc_id"), col("simhash"),
+        col("hb.half").as("half"), col("hb.hv").as("hv"))
+    val probes = halves.select(col("doc_id"), col("simhash"), col("half"),
+      explode(concat(array(col("hv")),
+        array((0 until 16).map(i => expr(s"hv ^ ${1L << i}")): _*))).as("pv"))
+    val rhs = halves.select(col("half").as("half2"), col("hv").as("hv2"),
+      col("doc_id").as("b_id"), col("simhash").as("sh2"))
+    probes.join(rhs,
+        col("half") === col("half2") && col("pv") === col("hv2") &&
+        col("doc_id") < col("b_id"))
+      .withColumn("hamming", expr("bit_count(simhash ^ sh2)"))
+      .filter(col("hamming") <= 3)
+      .withColumn("x32", expr("simhash ^ sh2"))
+      .select(col("doc_id").as("a_id"), col("b_id"),
+        col("hamming").cast("long").as("hamming"), col("x32"))
+      .distinct()
+  }
+
   /** e4/e6/e13's shared fixed codebook: 16 deterministic 64-dim
     * dyadic-float centroids + exact integer norms (one definition —
     * the three queries used to carry identical literals). */
@@ -530,25 +559,7 @@ object TextQueries {
         .withColumn("simhash", (0 until 32).map(j =>
           when(col(s"s$j") > 0, lit(1L << j)).otherwise(0L)).reduce(_ + _))
         .select("doc_id", "simhash")
-      val halves = sh.select(col("doc_id"), col("simhash"),
-        explode(array((0 until 2).map(b => struct(lit(b).as("half"),
-          expr(s"(simhash div ${1L << (16 * b)}) % 65536").as("hv"))): _*)).as("hb"))
-        .select(col("doc_id"), col("simhash"),
-          col("hb.half").as("half"), col("hb.hv").as("hv"))
-      val probes = halves.select(col("doc_id"), col("simhash"), col("half"),
-        explode(concat(array(col("hv")),
-          array((0 until 16).map(i => expr(s"hv ^ ${1L << i}")): _*))).as("pv"))
-      val rhs = halves.select(col("half").as("half2"), col("hv").as("hv2"),
-        col("doc_id").as("b_id"), col("simhash").as("sh2"))
-      probes.join(rhs,
-          col("half") === col("half2") && col("pv") === col("hv2") &&
-          col("doc_id") < col("b_id"))
-        .withColumn("hamming", expr("bit_count(simhash ^ sh2)"))
-        .filter(col("hamming") <= 3)
-        .withColumn("x32", expr("simhash ^ sh2"))
-        .select(col("doc_id").as("a_id"), col("b_id"),
-          col("hamming").cast("long").as("hamming"), col("x32"))
-        .distinct()
+      simhashPairs(sh)
         .withColumn("n_shared_bands", (0 until 4).map(b =>
           when(expr(s"(x32 div ${1L << (8 * b)}) % 256") === 0, 1L)
             .otherwise(0L)).reduce(_ + _))

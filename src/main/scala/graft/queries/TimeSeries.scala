@@ -167,26 +167,16 @@ object TimeSeries {
 
   /** Isolated child session for the streaming queries: the state-store
     * partition count is fixed from spark.sql.shuffle.partitions at the
-    * first micro-batch, and the shared session's 32 is ~10× more state
-    * stores than these small aggregates need — every instance pays its
-    * own per-batch commit (delta file write + maintenance). A child
-    * session pins 8 without mutating the shared session's conf
-    * mid-suite. (At real cluster scale the state partition count is a
-    * sizing decision per stream — this helper is where it lives.) */
+    * first micro-batch, and the shared session's core-sized count is
+    * more state stores than these small aggregates need — every
+    * instance pays its own per-batch commit (delta file write +
+    * maintenance). A child session pins `Session.streamParts` (default
+    * 2) without mutating the shared session's conf mid-suite. (At real
+    * cluster scale the state partition count is a sizing decision per
+    * stream — this helper is where it lives.) */
   private def streamSession(s: SparkSession): SparkSession = {
     val ss = s.newSession()
-    // SPARK_GRAFT_STREAM_PARTS: the state-partition sizing knob a
-    // deployment sets per stream (r10 rule: ∝ per-batch row volume;
-    // the ×1000 dumps set 64, the ×1000 st7 replay 256). Default 2 =
-    // the gate-fixture optimum by the SAME volume rule (r17 probe:
-    // per-batch state here is a few thousand rows, and each state
-    // store pays a per-batch commit — delta file + maintenance —
-    // regardless of data, so st7 measured 2.33/2.49/2.85/4.47 s at
-    // 2/4/8/16 stores; this is volume sizing, the OPPOSITE direction
-    // of matching local core count, and the env override is how every
-    // at-scale run sets it).
-    ss.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "2"))
+    ss.conf.set("spark.sql.shuffle.partitions", graft.core.Session.streamParts.toString)
     ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // StreamingQueryManager is per-session: carry the caller's
     // listeners over so progress observers (metrics assertions,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-import org.apache.spark.sql.functions._
+import graft.queries.TextQueries.simhashPairs
 
 /** r17 (verdict #2): d4b's post-multiprobe floor is Σ bucket² on the
   * 16-bit half-value join key. The promised safety valve for a
@@ -12,11 +12,11 @@ import org.apache.spark.sql.functions._
   * because the candidate stage is a plain equi-join (no collect_list
   * arrays, the r13 design note). This spec demonstrates it end to end:
   * a deliberately skewed synthetic simhash corpus (one half value
-  * shared by 25% of docs), run through the exact d4b candidate join at
-  * test-scale skew thresholds, must (a) SPLIT the hot partition — the
-  * finalized plan carries an AQEShuffleRead with PartialReducer
-  * (skew-split) partitions — and (b) produce the identical pair set
-  * with skew-splitting disabled.
+  * shared by 25% of docs), run through the shipped d4b candidate join
+  * (TextQueries.simhashPairs) at test-scale skew thresholds, must
+  * (a) SPLIT the hot partition — the finalized plan carries an
+  * AQEShuffleRead with PartialReducer (skew-split) partitions — and
+  * (b) produce the identical pair set with skew-splitting disabled.
   *
   * The alternative next step, 3×11-bit bands + 2-bit flips, was
   * examined and NOT attempted: 3 bands under H ≤ 3 pigeonhole to
@@ -27,30 +27,6 @@ import org.apache.spark.sql.functions._
   * proof. Documented in OPTIMIZATION_r17.md.
   */
 class D4bSkewSpec extends SparkSpec {
-
-  /** The d4b candidate pipeline downstream of the (doc_id, simhash)
-    * frame — replicated verbatim from TextQueries d4b_simhash_pairs so
-    * the experiment exercises the shipped join shape. */
-  private def d4bPairs(sh: DataFrame): DataFrame = {
-    val halves = sh.select(col("doc_id"), col("simhash"),
-      explode(array((0 until 2).map(b => struct(lit(b).as("half"),
-        expr(s"(simhash div ${1L << (16 * b)}) % 65536").as("hv"))): _*)).as("hb"))
-      .select(col("doc_id"), col("simhash"),
-        col("hb.half").as("half"), col("hb.hv").as("hv"))
-    val probes = halves.select(col("doc_id"), col("simhash"), col("half"),
-      explode(concat(array(col("hv")),
-        array((0 until 16).map(i => expr(s"hv ^ ${1L << i}")): _*))).as("pv"))
-    val rhs = halves.select(col("half").as("half2"), col("hv").as("hv2"),
-      col("doc_id").as("b_id"), col("simhash").as("sh2"))
-    probes.join(rhs,
-        col("half") === col("half2") && col("pv") === col("hv2") &&
-        col("doc_id") < col("b_id"))
-      .withColumn("hamming", expr("bit_count(simhash ^ sh2)"))
-      .filter(col("hamming") <= 3)
-      .select(col("doc_id").as("a_id"), col("b_id"),
-        col("hamming").cast("long").as("hamming"))
-      .distinct()
-  }
 
   private def collectAll[T](p: SparkPlan)(pf: PartialFunction[SparkPlan, T]): Seq[T] = {
     val here = p match {
@@ -109,7 +85,7 @@ class D4bSkewSpec extends SparkSpec {
 
     val (setOn, skewReads, planStr) = withConf(
       common :+ ("spark.sql.adaptive.skewJoin.enabled" -> "true"): _*) {
-      val df = d4bPairs(sh)
+      val df = simhashPairs(sh)
       val s = resultSet(df)
       val reads = collectAll(df.queryExecution.executedPlan) {
         case r: AQEShuffleReadExec if r.hasSkewedPartition => r
@@ -122,7 +98,7 @@ class D4bSkewSpec extends SparkSpec {
 
     val setOff = withConf(
       common :+ ("spark.sql.adaptive.skewJoin.enabled" -> "false"): _*) {
-      resultSet(d4bPairs(sh))
+      resultSet(simhashPairs(sh))
     }
     assert(setOn === setOff,
       s"skew-split changed the pair set: on=${setOn.size} off=${setOff.size}, " +

@@ -18,7 +18,9 @@ class QueriesSmokeSpec extends SparkSpec {
     test(s"query $name runs at sf0.001") {
       val df = fn(spark, sf)
       assert(df.columns.nonEmpty)
-      df.count() // just must not throw
+      // the full plan must run: count() lets Catalyst prune Sorts,
+      // Windows and whole join chains (core/Exec.scala)
+      graft.core.Exec.runCount(df)
     }
   }
 

@@ -1,0 +1,22 @@
+package graft
+
+/** Pins the one session factory's configuration as the suites see it:
+  * tests, Bench, Verify and the benchmark harness
+  * (`perfbench/.../Harness.session()`) run on the same engine settings. */
+class SessionSpec extends SparkSpec {
+
+  test("cores and shuffle partitions both follow SPARK_GRAFT_CPUS") {
+    val cores = "local\\[(\\d+)\\]".r
+      .findFirstMatchIn(spark.sparkContext.master).map(_.group(1).toInt)
+    assert(cores === Some(graft.core.Session.cpus))
+    assert(spark.sparkContext.defaultParallelism === graft.core.Session.cpus)
+    // the suites run with SPARK_GRAFT_PARTS unset: partitions = cores
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === cores.get.toString)
+  }
+
+  test("AQE on, nanosAsLong on, UTC session time zone") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
+  }
+}

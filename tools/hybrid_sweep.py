@@ -786,14 +786,19 @@ def d28(sf_dir, out_dir, chunks=16):
     con.execute("DROP TABLE IF EXISTS dbf_mat")
     v_total = 0
     for s_ in range(chunks):
+        # an empty slice (no chunk hashed into it) has no files, and
+        # read_parquet([]) errors: skip it; the cabs/cuas globs below
+        # then read only the slices that were written
         files = glob.glob(f"{dump}/cab/chunk*/slice={s_}/*.parquet")
-        con.execute(f"COPY (SELECT a, b, CAST(sum(p_ab) AS BIGINT) AS c_ab"
-                    f" FROM read_parquet({files!r}) GROUP BY 1, 2)"
-                    f" TO '{dump}/cab_s{s_}.parquet' (FORMAT parquet)")
+        if files:
+            con.execute(f"COPY (SELECT a, b, CAST(sum(p_ab) AS BIGINT) AS c_ab"
+                        f" FROM read_parquet({files!r}) GROUP BY 1, 2)"
+                        f" TO '{dump}/cab_s{s_}.parquet' (FORMAT parquet)")
         files = glob.glob(f"{dump}/cua/chunk*/slice={s_}/*.parquet")
-        con.execute(f"COPY (SELECT a, CAST(sum(p_a) AS BIGINT) AS c_a"
-                    f" FROM read_parquet({files!r}) GROUP BY 1)"
-                    f" TO '{dump}/cua_s{s_}.parquet' (FORMAT parquet)")
+        if files:
+            con.execute(f"COPY (SELECT a, CAST(sum(p_a) AS BIGINT) AS c_a"
+                        f" FROM read_parquet({files!r}) GROUP BY 1)"
+                        f" TO '{dump}/cua_s{s_}.parquet' (FORMAT parquet)")
         files = glob.glob(f"{dump}/tok/chunk*/slice={s_}/*.parquet")
         if files:
             v_total += con.execute(

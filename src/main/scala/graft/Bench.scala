@@ -99,16 +99,15 @@ object Bench {
       val verdict = if (median > 2 * floors(name)) "regression" else "noise"
       (name, driverSec, floors(name), reps, median, verdict)
     }
-    def d2t(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     val triageJson =
       if (floors.isEmpty) "\"no floors file\""
       else triage.map { case (n, run, fl, reps, med, v) =>
-        s""""$n":{"run":${d2t(run)},"floor":${d2t(fl)},"reps":[${reps.map(d2t).mkString(",")}],"median":${d2t(med)},"verdict":"$v"}"""
+        s""""$n":{"run":${d2(run)},"floor":${d2(fl)},"reps":[${reps.map(d2).mkString(",")}],"median":${d2(med)},"verdict":"$v"}"""
       }.mkString("{", ",", "}")
     val regressions = triage.filter(_._6 == "regression").map("\"" + _._1 + "\"")
       .mkString("[", ",", "]")
     val triageSkipped = skipped.map("\"" + _._1 + "\"").mkString("[", ",", "]")
-    // The full 111-query map is ~2.5 KB — past the driver's bounded
+    // The full 196-query map is ~4.3 KB — past the driver's bounded
     // tail-capture of sbt stdout (BENCH_r0{3,4,5} all recorded
     // "parsed": null from a line clipped mid-JSON). The STDOUT line
     // therefore carries only the slowest queries (the ones a perf

@@ -1,10 +1,13 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.Tables
 import graft.core.Tables._
+import graft.expr.VecExprs
+import graft.model.{Ensemble, LimbDark}
+import graft.model.Sql.D
 
 /** A8 — BLS spectrum post-processing (ref main.py:5742–5801): signal =
   * depth − rolling median of the spectrum, noise = peak-cut rolling
@@ -66,6 +69,165 @@ object Advanced {
        |       (SELECT unnest(generate_series(0, 499)) AS i)),
        |simv AS (SELECT part, id, i, t_us, $t3bSimValue AS value FROM sim),
        |td AS (SELECT *, CAST(t_us AS DOUBLE) / 86400e6 AS t_d FROM simv)""".stripMargin
+
+  private val PDAY = 86400000000L
+  private val P7 = 7L * PDAY
+
+  /** The t13 fixture grid: 4000 points over 30 days anchored at the
+    * events epoch, the integer LCG draw `r` (salted per energy bin
+    * `ener` = 0..7 when `perEner`) and its unit draw `u` in [−0.5, 0.5),
+    * the phase `ph` at 7 days and its 200-bin index `b`. Each fit adds
+    * its own flux or RV column. */
+  private def t13Grid(s: SparkSession, d: String, perEner: Boolean = false): DataFrame = {
+    val n = 4000L
+    val step = 30L * PDAY / n
+    val e0 = base(s, d).agg(min(col("t_us")).as("t0"))
+    val g = if (perEner) e0.withColumn("ener", explode(sequence(lit(0L), lit(7L)))) else e0
+    val idx = if (perEner) col("i") + col("ener") * 7919L else col("i")
+    g.withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
+      .withColumn("g_us", col("t0") + col("i") * step)
+      .withColumn("r", (idx % 65536L * 1103515245L + 12345L) % 2147483648L)
+      .withColumn("u", col("r").cast("double") / 2147483648.0 - 0.5)
+      .withColumn("ph", pmod(col("g_us") - col("t0"), lit(P7)))
+      .withColumn("b", expr(s"(ph * 200) div $P7"))
+  }
+
+  /** Box-dip flux on the t13 grid: 1 − `depth` within `half` of phase
+    * 0, plus the ±0.002 noise. */
+  private def boxFlux(depth: Column, half: Long = PDAY / 2): Column =
+    lit(1.0) - when(col("ph") < half || col("ph") > P7 - half, depth).otherwise(0.0) +
+      col("u") * 0.004
+
+  /** The grid's phase in days `phd` and the LD transit's distance from
+    * phase 0, `aph` (days, folded at 3.5). */
+  private def ldPhase(g: DataFrame): DataFrame =
+    g.withColumn("phd", expr("CAST(ph AS DOUBLE) / 86400e6"))
+      .withColumn("aph", expr("CASE WHEN phd < 3.5 THEN phd ELSE 7.0 - phd END"))
+
+  /** An injected limb-darkened transit (radius ratio `p`, duration
+    * `t14` days) at distance `aph` as named layer columns ending in
+    * `f`, all suffixed by `sfx` — the same per-layer SQL strings the
+    * oracle fixtures spell. `u` = Some((u1, u2)) injects non-default
+    * LD coefficients (t13g). */
+  private def ldTransit(g: DataFrame, aph: String, p: Double, t14: Double,
+                        sfx: String = "", u: Option[(Double, Double)] = None): DataFrame = {
+    val pp = LimbDark.D(p)
+    def c(x: String) = x + sfx
+    val chord = g.withColumn(c("hu"), expr(LimbDark.huSql(aph, LimbDark.D(t14))))
+      .withColumn(c("z"), expr(LimbDark.zSql(c("hu"), pp)))
+      .withColumn(c("lam"), expr(LimbDark.lamSql(c("z"), pp)))
+      .withColumn(c("mu"), expr(LimbDark.muSql(c("z"), pp)))
+    u match {
+      case None => chord
+          .withColumn(c("iz"), expr(LimbDark.izSql(c("mu"))))
+          .withColumn(c("f"), expr(LimbDark.fluxSql(c("hu"), pp, c("iz"), c("lam"))))
+      case Some((u1, u2)) => chord
+          .withColumn(c("iz"), expr(LimbDark.izSqlU(c("mu"), LimbDark.D(u1), LimbDark.D(u2))))
+          .withColumn(c("om4"), expr(LimbDark.om4SqlU(LimbDark.D(u1), LimbDark.D(u2))))
+          .withColumn(c("f"), expr(LimbDark.fluxSqlU(c("hu"), pp, c("iz"), c("lam"), c("om4"))))
+    }
+  }
+
+  /** The t13 phase fold each fit collects once: `v` quantized at `q`
+    * (1e6 for flux, 1e3 for RV) and summed into the 200 bins `b`.
+    * `perBin` adds a per-bin double `w` after the aggregation that
+    * joins each bin mean (t13c's wiggle, t13l's literal table).
+    * Returns the bin centers t (days), the bin means y and y
+    * quantized at 1e9 (the integer input of the walker-ball guesses). */
+  private def t13Fold(grid: DataFrame, v: Column, q: Double,
+                      perBin: Option[DataFrame => DataFrame] = None)
+      : (Array[Double], Array[Double], Array[Long]) = {
+    val binned = grid.withColumn("vq", round(v * q).cast("long"))
+      .groupBy("b").agg(count(lit(1)).as("n"), sum(col("vq")).as("sv"))
+    val rows = perBin.fold(binned)(_(binned)).orderBy("b").collect()
+    val t = rows.map(r => (r.getLong(0).toDouble + 0.5) * 7.0 / 200)
+    val y = rows.map { r =>
+      val m = r.getLong(2).toDouble / r.getLong(1) / q
+      if (perBin.isEmpty) m else m + r.getAs[Double]("w")
+    }
+    (t, y, y.map(v => VecExprs.roundHalfAway(v * 1e9)))
+  }
+
+  /** t13d's and t13j's fold: the injected quadratic-LD transit
+    * (p=0.15, T14=1.0 d) plus the grid noise. */
+  private def t13dFold(s: SparkSession, d: String) =
+    t13Fold(ldTransit(ldPhase(t13Grid(s, d)), "aph", 0.15, 1.0),
+      col("f") + col("u") * 0.004, 1e6)
+
+  /** t13i's and t13k's fold: a true curve shipped as 1e9-quantized
+    * bin-center literals (the fixture is data) plus the grid noise. */
+  private def literalCurveFold(s: SparkSession, d: String, trueVals: Seq[(Long, Long)]) = {
+    import s.implicits._
+    val g = t13Grid(s, d)
+      .join(broadcast(trueVals.toDF("bb", "fxq")), col("b") === col("bb"))
+    t13Fold(g, expr("fxq / 1e9") + col("u") * 0.004, 1e6)
+  }
+
+  /** The LD fits' walker-ball center: boxGuessQ with its window depth
+    * turned into a radius ratio, √(depth·KK) floored at 0.02. */
+  private def ldGuess(t: Array[Double], yq: Array[Long]): Array[Double] = {
+    val g = Ensemble.boxGuessQ(t, yq, 7.0, 1.0)
+    Array(math.sqrt(math.max(g(0) * LimbDark.KK, 4e-4)), g(1), g(2))
+  }
+
+  /** The RV fits' exact Fourier projection on [[rvBasis]]: integer
+    * (Σyq, Σyq·sq, Σyq·cq) over the 200 bins — order-free, so the SQL
+    * replay is exact (yq·sq ≤ ~2.5e16, ×200 < 2^63). */
+  private def rvProjection(yq: Array[Long]): (Long, Long, Long) = {
+    var sa = 0L; var psu = 0L; var pcu = 0L
+    rvBasis.foreach { case (b, sq, cq) =>
+      val v = yq(b.toInt); sa += v; psu += v * sq; pcu += v * cq }
+    (sa, psu, pcu)
+  }
+
+  /** The t13 posterior table: for each walk an `acceptance` row and
+    * the p16/p50/p84 of each named dimension, the names suffixed by the
+    * walk's tag (t13i puts two walks in one table), ordered by name. */
+  private def posterior(s: SparkSession, dims: Seq[(String, Int)],
+                        walks: (String, (Array[Array[Double]], Double))*): DataFrame = {
+    import s.implicits._
+    walks.flatMap { case (tag, (samples, acc)) =>
+      val pct = Ensemble.percentiles(samples)
+      (s"acceptance$tag", acc, acc, acc) +:
+        dims.map { case (p, i) => (p + tag, pct(i)(0), pct(i)(1), pct(i)(2)) }
+    }.toDF("param", "p16", "p50", "p84").orderBy("param")
+  }
+
+  /** One white-noise box fit per key (t13b's energy bins, t13m's
+    * transits), each in its own task: AQE coalesces a groupByKey
+    * exchange of a few thousand tiny rows to one partition, which runs
+    * the CPU-bound fits serially (measured 3.9 s vs 0.43 s/fit);
+    * repartitionByRange with an explicit count is exempt from that and
+    * puts exactly one key in each of `nKeys` partitions — the fit
+    * fan-out IS the partitioning, the right shape for ~10⁴ per-target
+    * fits too. `bins` holds (key, b, n, sv) over `nb` bins; `row` maps
+    * (key, percentiles, acceptance) onto an output row named `cols`.
+    *
+    * The localCheckpoint before the orderBy (r17): the fits sit in the
+    * stage that FEEDS the sort's range exchange, and that stage runs
+    * TWICE — once for the RangePartitioner's sampling pass, once for
+    * the real shuffle write (two ~1.5 s stages per run). Checkpointing
+    * the fit rows makes the fits run once; the sort then samples the
+    * materialized rows. Paid inside the timed region. */
+  private def fitPerKey[T <: Product : Encoder](
+      bins: Dataset[(Long, Long, Long, Long)], key: String, nKeys: Int, nb: Int,
+      scale: Double, cols: String*)(row: (Long, Array[Array[Double]], Double) => T): DataFrame =
+    bins.repartitionByRange(nKeys, col(key))
+      .mapPartitions(_.toArray.groupBy(_._1).toSeq.sortBy(_._1).iterator
+        .map { case (k, rs0) =>
+          val rs = rs0.sortBy(_._2)
+          val t = rs.map(r => (r._2.toDouble + 0.5) * 7.0 / nb)
+          val y = rs.map(r => r._4.toDouble / r._3 / 1e6)
+          val llq = Ensemble.boxLlq(t, y, scale = scale, period = 7.0) _
+          val yq = y.map(v => VecExprs.roundHalfAway(v * 1e9))
+          val (samples, acc) = Ensemble.sampleQ(llq,
+            lo = Array(-0.2, -3.5, 0.2), hi = Array(0.2, 3.5, 2.0), seed = 42L + k,
+            init = Ensemble.boxGuessQ(t, yq, 7.0, 1.0))
+          row(k, Ensemble.percentiles(samples), acc)
+        })
+      .toDF(cols: _*)
+      .localCheckpoint()
+      .orderBy(cols.head)
 
   /** The a8 spectrum re-derived through the PRE-BINNED multi-resolution
     * path (t6's load-bearing scale trick — this was the one remaining
@@ -208,16 +370,13 @@ object Advanced {
     // parallelizes ACROSS fits (t13b). EnsembleSpec pins recovery +
     // determinism; the DuckDB oracle replays the walk bit-exactly.
     "t13_mcmc_fit" -> ((s, d) => {
-      import s.implicits._
-      val PDAY = 86400000000L; val P7 = 7L * PDAY
-      // t6b-style injected fixture anchored at the data epoch: uniform
-      // 30-d grid, integer-LCG noise, a 3%-deep 1-d box at phase 0 —
-      // the events fixture carries no transit, and a fit that provably
-      // RECOVERS a known signal is the fidelity check (injection-
-      // recovery, same contract as t6b/t14). Spark builds and
-      // phase-bins the series (one shuffle, exact integer sums); the
-      // driver collects the 200-bin fit window and runs the walker
-      // loop — the reference's division of labor.
+      // t6b-style injected fixture anchored at the data epoch (t13Grid):
+      // a 3%-deep 1-d box at phase 0 — the events fixture carries no
+      // transit, and a fit that provably RECOVERS a known signal is the
+      // fidelity check (injection-recovery, same contract as t6b/t14).
+      // Spark builds and phase-bins the series (one shuffle, exact
+      // integer sums); the driver collects the 200-bin fit window and
+      // runs the walker loop — the reference's division of labor.
       //
       // ORACLE-EXACT since r6: the walk runs through Ensemble.sampleQ —
       // indexed integer draws, integer micro-nat likelihood, integer
@@ -228,47 +387,20 @@ object Advanced {
       // noise IS white by construction, so it is the matched model
       // here; the GP-marginalized branch (gpLogLik) remains covered by
       // EnsembleSpec's correlated-baseline test and the t3c oracle.
-      val n = 4000L
-      val step = 30L * PDAY / n
-      val bins = base(s, d).agg(min(col("t_us")).as("t0"))
-        .withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
-        .withColumn("g_us", col("t0") + col("i") * step)
-        .withColumn("r", (col("i") % 65536L * 1103515245L + 12345L) % 2147483648L)
-        .withColumn("noise", (col("r").cast("double") / 2147483648.0 - 0.5) * 0.004)
-        .withColumn("ph", pmod(col("g_us") - col("t0"), lit(P7)))
-        .withColumn("flux", lit(1.0)
-          - when(col("ph") < PDAY / 2 || col("ph") > P7 - PDAY / 2, 0.03).otherwise(0.0)
-          + col("noise"))
-        .withColumn("fc", round(col("flux") * 1e6).cast("long"))
-        .withColumn("b", expr(s"(ph * 200) div $P7"))
-        .groupBy("b").agg(count(lit(1)).as("n"), sum(col("fc")).as("sv"))
-        .orderBy("b")
-        .collect()
-      val t = bins.map(r => (r.getLong(0).toDouble + 0.5) * 7.0 / 200)
-      val y = bins.map(r => r.getLong(2).toDouble / r.getLong(1) / 1e6)
+      val (t, y, yq) = t13Fold(t13Grid(s, d), boxFlux(lit(0.03)), 1e6)
       // yerr = 4e-4 (the fixture's noise scale): micro-nat likelihood
       // scale = 1e6 / (2·yerr²) = 3.125e12
-      val llq = graft.model.Ensemble.boxLlq(t, y, scale = 3.125e12, period = 7.0) _
+      val llq = Ensemble.boxLlq(t, y, scale = 3.125e12, period = 7.0) _
       // data-derived walker-ball center (the reference seeds walkers
       // around prior means): a mini-BLS — the deepest 1-day CIRCULAR
       // window of bins, not the single deepest bin, whose argmin can
       // sit on a transit edge and strand the ball in a no-overlap
       // local optimum. Integer window sums (boxGuessQ) so the SQL
       // replay is order-free.
-      val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
-      val guess = graft.model.Ensemble.boxGuessQ(t, yq, 7.0, 1.0)
-      val (samples, acc) = graft.model.Ensemble.sampleQ(llq,
-        lo = Array(-0.2, -3.5, 0.2), hi = Array(0.2, 3.5, 2.0),
-        nWalkers = 100, nSteps = 100, burnFrac = 0.3, seed = 42L,
-        init = guess, ballFrac = 0.005)
-      val pct = graft.model.Ensemble.percentiles(samples)
-      Seq(
-        ("acceptance", acc, acc, acc),
-        ("depth", pct(0)(0), pct(0)(1), pct(0)(2)),
-        ("dur", pct(2)(0), pct(2)(1), pct(2)(2)),
-        ("epoch", pct(1)(0), pct(1)(1), pct(1)(2)))
-        .toDF("param", "p16", "p50", "p84")
-        .orderBy("param")
+      val guess = Ensemble.boxGuessQ(t, yq, 7.0, 1.0)
+      val walk = Ensemble.sampleQ(llq,
+        lo = Array(-0.2, -3.5, 0.2), hi = Array(0.2, 3.5, 2.0), init = guess)
+      posterior(s, Seq("depth" -> 0, "dur" -> 2, "epoch" -> 1), "" -> walk)
     }),
 
     // T13c — GP-LIKELIHOOD MCMC (the reference's DEFAULT inference
@@ -296,44 +428,14 @@ object Advanced {
     // geometry 50×60 keeps the oracle's 3050 GP evaluations
     // (200 bins × 32 lags each) tractable in DuckDB.
     "t13c_mcmc_gp" -> ((s, d) => {
-      import s.implicits._
-      val PDAY = 86400000000L; val P7 = 7L * PDAY
-      val n = 4000L
-      val step = 30L * PDAY / n
-      val bins = base(s, d).agg(min(col("t_us")).as("t0"))
-        .withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
-        .withColumn("g_us", col("t0") + col("i") * step)
-        .withColumn("r", (col("i") % 65536L * 1103515245L + 12345L) % 2147483648L)
-        .withColumn("noise", (col("r").cast("double") / 2147483648.0 - 0.5) * 0.004)
-        .withColumn("ph", pmod(col("g_us") - col("t0"), lit(P7)))
-        .withColumn("flux", lit(1.0)
-          - when(col("ph") < PDAY / 2 || col("ph") > P7 - PDAY / 2, 0.03).otherwise(0.0)
-          + col("noise"))
-        .withColumn("fc", round(col("flux") * 1e6).cast("long"))
-        .withColumn("b", expr(s"(ph * 200) div $P7"))
-        .groupBy("b").agg(count(lit(1)).as("n"), sum(col("fc")).as("sv"))
-        .withColumn("wigq", expr(t13cWigSql("b")))
-        .orderBy("b")
-        .collect()
-      val t = bins.map(r => (r.getLong(0).toDouble + 0.5) * 7.0 / 200)
-      val y = bins.map(r => r.getLong(2).toDouble / r.getLong(1) / 1e6
-        + (r.getLong(3) - 4000L).toDouble * 1.25e-6)
+      val (t, y, yq) = t13Fold(t13Grid(s, d), boxFlux(lit(0.03)), 1e6, Some(
+        _.withColumn("w", (expr(t13cWigSql("b")) - 4000L).cast("double") * 1.25e-6)))
       val (cq, scale) = t13cGp
-      val llq = graft.model.Ensemble.gpBoxLlq(t, y, cq, scale, period = 7.0) _
-      val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
-      val guess = graft.model.Ensemble.boxGuessQ(t, yq, 7.0, 1.0)
-      val (samples, acc) = graft.model.Ensemble.sampleQ(llq,
+      val llq = Ensemble.gpBoxLlq(t, y, cq, scale, period = 7.0) _
+      val walk = Ensemble.sampleQ(llq,
         lo = Array(-0.2, -3.5, 0.2), hi = Array(0.2, 3.5, 2.0),
-        nWalkers = 50, nSteps = 60, burnFrac = 0.3, seed = 42L,
-        init = guess, ballFrac = 0.005)
-      val pct = graft.model.Ensemble.percentiles(samples)
-      Seq(
-        ("acceptance", acc, acc, acc),
-        ("depth", pct(0)(0), pct(0)(1), pct(0)(2)),
-        ("dur", pct(2)(0), pct(2)(1), pct(2)(2)),
-        ("epoch", pct(1)(0), pct(1)(1), pct(1)(2)))
-        .toDF("param", "p16", "p50", "p84")
-        .orderBy("param")
+        nWalkers = 50, nSteps = 60, init = Ensemble.boxGuessQ(t, yq, 7.0, 1.0))
+      posterior(s, Seq("depth" -> 0, "dur" -> 2, "epoch" -> 1), "" -> walk)
     }),
 
     // T13d — LIMB-DARKENED MCMC fit (the reference's ACTUAL model
@@ -355,51 +457,11 @@ object Advanced {
     // both engines produce bit-identical doubles, and the micro-nat
     // rounding + integer accept comparison replay exactly as in t13.
     "t13d_mcmc_ld" -> ((s, d) => {
-      import s.implicits._
-      import graft.model.LimbDark
-      val PDAY = 86400000000L; val P7 = 7L * PDAY
-      val n = 4000L
-      val step = 30L * PDAY / n
-      val PT = LimbDark.D(0.15); val TT = LimbDark.D(1.0)
-      val bins = base(s, d).agg(min(col("t_us")).as("t0"))
-        .withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
-        .withColumn("g_us", col("t0") + col("i") * step)
-        .withColumn("r", (col("i") % 65536L * 1103515245L + 12345L) % 2147483648L)
-        .withColumn("ph", pmod(col("g_us") - col("t0"), lit(P7)))
-        .withColumn("phd", expr("CAST(ph AS DOUBLE) / 86400e6"))
-        .withColumn("aph", expr("CASE WHEN phd < 3.5 THEN phd ELSE 7.0 - phd END"))
-        .withColumn("hu", expr(LimbDark.huSql("aph", TT)))
-        .withColumn("z", expr(LimbDark.zSql("hu", PT)))
-        .withColumn("lam", expr(LimbDark.lamSql("z", PT)))
-        .withColumn("mu", expr(LimbDark.muSql("z", PT)))
-        .withColumn("iz", expr(LimbDark.izSql("mu")))
-        .withColumn("ldf", expr(LimbDark.fluxSql("hu", PT, "iz", "lam")))
-        .withColumn("noise", (col("r").cast("double") / 2147483648.0 - 0.5) * 0.004)
-        .withColumn("flux", col("ldf") + col("noise"))
-        .withColumn("fc", round(col("flux") * 1e6).cast("long"))
-        .withColumn("b", expr(s"(ph * 200) div $P7"))
-        .groupBy("b").agg(count(lit(1)).as("n"), sum(col("fc")).as("sv"))
-        .orderBy("b")
-        .collect()
-      val t = bins.map(r => (r.getLong(0).toDouble + 0.5) * 7.0 / 200)
-      val y = bins.map(r => r.getLong(2).toDouble / r.getLong(1) / 1e6)
-      val llq = graft.model.Ensemble.ldBoxLlq(t, y, scale = 3.125e12, period = 7.0) _
-      val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
-      val g = graft.model.Ensemble.boxGuessQ(t, yq, 7.0, 1.0)
-      val guess = Array(
-        math.sqrt(math.max(g(0) * LimbDark.KK, 4e-4)), g(1), g(2))
-      val (samples, acc) = graft.model.Ensemble.sampleQ(llq,
-        lo = Array(0.02, -3.5, 0.2), hi = Array(0.45, 3.5, 2.0),
-        nWalkers = 100, nSteps = 100, burnFrac = 0.3, seed = 42L,
-        init = guess, ballFrac = 0.005)
-      val pct = graft.model.Ensemble.percentiles(samples)
-      Seq(
-        ("acceptance", acc, acc, acc),
-        ("dur", pct(2)(0), pct(2)(1), pct(2)(2)),
-        ("epoch", pct(1)(0), pct(1)(1), pct(1)(2)),
-        ("rrat", pct(0)(0), pct(0)(1), pct(0)(2)))
-        .toDF("param", "p16", "p50", "p84")
-        .orderBy("param")
+      val (t, y, yq) = t13dFold(s, d)
+      val llq = Ensemble.ldBoxLlq(t, y, scale = 3.125e12, period = 7.0) _
+      val walk = Ensemble.sampleQ(llq,
+        lo = Array(0.02, -3.5, 0.2), hi = Array(0.45, 3.5, 2.0), init = ldGuess(t, yq))
+      posterior(s, Seq("dur" -> 2, "epoch" -> 1, "rrat" -> 0), "" -> walk)
     }),
 
     // T13e — TWO-PLANET joint limb-darkened fit (the reference's
@@ -425,43 +487,10 @@ object Advanced {
     // measured recovery (0.150, 0.001, 0.110, 1.200) at 300 vs a
     // still-biased (0.142, 0.004, 0.037, 1.107) at 60.
     "t13e_mcmc_ld2" -> ((s, d) => {
-      import s.implicits._
-      import graft.model.LimbDark
-      val PDAY = 86400000000L; val P7 = 7L * PDAY
-      val n = 4000L
-      val step = 30L * PDAY / n
-      val PA = LimbDark.D(0.15); val TA = LimbDark.D(1.0)
-      val PB = LimbDark.D(0.11); val TB = LimbDark.D(0.5)
-      val bins = base(s, d).agg(min(col("t_us")).as("t0"))
-        .withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
-        .withColumn("g_us", col("t0") + col("i") * step)
-        .withColumn("r", (col("i") % 65536L * 1103515245L + 12345L) % 2147483648L)
-        .withColumn("ph", pmod(col("g_us") - col("t0"), lit(P7)))
-        .withColumn("phd", expr("CAST(ph AS DOUBLE) / 86400e6"))
-        .withColumn("aph_a", expr("CASE WHEN phd < 3.5 THEN phd ELSE 7.0 - phd END"))
+      val grid = ldPhase(t13Grid(s, d))
         .withColumn("aph_b", expr("abs((phd - 1.2 + 1.75) % 3.5 - 1.75)"))
-        .withColumn("hu_a", expr(LimbDark.huSql("aph_a", TA)))
-        .withColumn("z_a", expr(LimbDark.zSql("hu_a", PA)))
-        .withColumn("lam_a", expr(LimbDark.lamSql("z_a", PA)))
-        .withColumn("mu_a", expr(LimbDark.muSql("z_a", PA)))
-        .withColumn("iz_a", expr(LimbDark.izSql("mu_a")))
-        .withColumn("f_a", expr(LimbDark.fluxSql("hu_a", PA, "iz_a", "lam_a")))
-        .withColumn("hu_b", expr(LimbDark.huSql("aph_b", TB)))
-        .withColumn("z_b", expr(LimbDark.zSql("hu_b", PB)))
-        .withColumn("lam_b", expr(LimbDark.lamSql("z_b", PB)))
-        .withColumn("mu_b", expr(LimbDark.muSql("z_b", PB)))
-        .withColumn("iz_b", expr(LimbDark.izSql("mu_b")))
-        .withColumn("f_b", expr(LimbDark.fluxSql("hu_b", PB, "iz_b", "lam_b")))
-        .withColumn("noise", (col("r").cast("double") / 2147483648.0 - 0.5) * 0.004)
-        .withColumn("flux", expr("f_a + f_b - 1.0") + col("noise"))
-        .withColumn("fc", round(col("flux") * 1e6).cast("long"))
-        .withColumn("b", expr(s"(ph * 200) div $P7"))
-        .groupBy("b").agg(count(lit(1)).as("n"), sum(col("fc")).as("sv"))
-        .orderBy("b")
-        .collect()
-      val t = bins.map(r => (r.getLong(0).toDouble + 0.5) * 7.0 / 200)
-      val y = bins.map(r => r.getLong(2).toDouble / r.getLong(1) / 1e6)
-      val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
+      val g = ldTransit(ldTransit(grid, "aph", 0.15, 1.0, "_a"), "aph_b", 0.11, 0.5, "_b")
+      val (t, y, yq) = t13Fold(g, expr("f_a + f_b - 1.0") + col("u") * 0.004, 1e6)
       // two-window guess: mirror of the oracle's gx block (b1 = deepest
       // 29-bin circular window; b2 = deepest at circular distance > 28)
       val h = 14
@@ -483,20 +512,12 @@ object Advanced {
       val guess = Array(
         math.sqrt(math.max(dA * LimbDark.KK, 4e-4)), g1,
         math.sqrt(math.max(dB * LimbDark.KK, 4e-4)), g3)
-      val llq = graft.model.Ensemble.ld2Llq(t, y, scale = 3.125e12) _
-      val (samples, acc) = graft.model.Ensemble.sampleQ(llq,
+      val llq = Ensemble.ld2Llq(t, y, scale = 3.125e12) _
+      val walk = Ensemble.sampleQ(llq,
         lo = Array(0.02, -3.5, 0.02, -1.75), hi = Array(0.45, 3.5, 0.45, 1.75),
-        nWalkers = 50, nSteps = 300, burnFrac = 0.3, seed = 42L,
-        init = guess, ballFrac = 0.005)
-      val pct = graft.model.Ensemble.percentiles(samples)
-      Seq(
-        ("acceptance", acc, acc, acc),
-        ("epoch_a", pct(1)(0), pct(1)(1), pct(1)(2)),
-        ("epoch_b", pct(3)(0), pct(3)(1), pct(3)(2)),
-        ("rrat_a", pct(0)(0), pct(0)(1), pct(0)(2)),
-        ("rrat_b", pct(2)(0), pct(2)(1), pct(2)(2)))
-        .toDF("param", "p16", "p50", "p84")
-        .orderBy("param")
+        nWalkers = 50, nSteps = 300, init = guess)
+      posterior(s, Seq("epoch_a" -> 1, "epoch_b" -> 3, "rrat_a" -> 0, "rrat_b" -> 2),
+        "" -> walk)
     }),
 
     // T13f — RADIAL-VELOCITY orbit MCMC (the reference's RV model
@@ -513,51 +534,22 @@ object Advanced {
     // (integer sums of yq·sq / yq·cq — order-free, SQL-replayable).
     "t13f_mcmc_rv" -> ((s, d) => {
       import s.implicits._
-      val PDAY = 86400000000L; val P7 = 7L * PDAY
-      val n = 4000L
-      val step = 30L * PDAY / n
-      val bdf = broadcast(rvBasis.toDF("bb", "sq", "cq"))
-      val bins = base(s, d).agg(min(col("t_us")).as("t0"))
-        .withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
-        .withColumn("g_us", col("t0") + col("i") * step)
-        .withColumn("r", (col("i") % 65536L * 1103515245L + 12345L) % 2147483648L)
-        .withColumn("ph", pmod(col("g_us") - col("t0"), lit(P7)))
-        .withColumn("b", expr(s"(ph * 200) div $P7"))
-        .join(bdf, col("b") === col("bb"))
-        .withColumn("v", expr("CAST(12.5 AS DOUBLE) " +
-            "+ CAST(8.0 AS DOUBLE) * (sq / 1e6) " +
-            "+ CAST(-5.0 AS DOUBLE) * (cq / 1e6)")
-          + (col("r").cast("double") / 2147483648.0 - 0.5) * 4.0)
-        .withColumn("rc", round(col("v") * 1e3).cast("long"))
-        .groupBy("b").agg(count(lit(1)).as("n"), sum(col("rc")).as("sv"))
-        .orderBy("b")
-        .collect()
-      val y = bins.map(r => r.getLong(2).toDouble / r.getLong(1) / 1e3)
-      val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
-      val sq = rvBasis.map(_._2).toArray
-      val cq = rvBasis.map(_._3).toArray
-      // exact Fourier-projection guess (yq·sq ≤ ~1.25e16, ×200 < 2^63)
-      var sa = 0L; var psu = 0L; var pcu = 0L
-      var b = 0
-      while (b < 200) { sa += yq(b); psu += yq(b) * sq(b); pcu += yq(b) * cq(b); b += 1 }
+      val g = t13Grid(s, d)
+        .join(broadcast(rvBasis.toDF("bb", "sq", "cq")), col("b") === col("bb"))
+      val (_, y, yq) = t13Fold(g, expr("CAST(12.5 AS DOUBLE) " +
+          "+ CAST(8.0 AS DOUBLE) * (sq / 1e6) " +
+          "+ CAST(-5.0 AS DOUBLE) * (cq / 1e6)") + col("u") * 4.0, 1e3)
+      val (sa, psu, pcu) = rvProjection(yq)
       val guess = Array(
         sa.toDouble / 200 / 1e9,
         2.0 * (psu.toDouble / 200 / 1e15),
         2.0 * (pcu.toDouble / 200 / 1e15))
       // binned noise σ ≈ (2/√3)/√20 ≈ 0.26 m/s ⇒ scale = 1e6/(2σ²) ≈ 7.4e6
-      val llq = graft.model.Ensemble.rvLlq(y, sq, cq, scale = 7.4e6) _
-      val (samples, acc) = graft.model.Ensemble.sampleQ(llq,
-        lo = Array(0.0, -15.0, -15.0), hi = Array(25.0, 15.0, 15.0),
-        nWalkers = 100, nSteps = 100, burnFrac = 0.3, seed = 42L,
-        init = guess, ballFrac = 0.005)
-      val pct = graft.model.Ensemble.percentiles(samples)
-      Seq(
-        ("acceptance", acc, acc, acc),
-        ("amp_cos", pct(2)(0), pct(2)(1), pct(2)(2)),
-        ("amp_sin", pct(1)(0), pct(1)(1), pct(1)(2)),
-        ("gamma", pct(0)(0), pct(0)(1), pct(0)(2)))
-        .toDF("param", "p16", "p50", "p84")
-        .orderBy("param")
+      val llq = Ensemble.rvLlq(y, rvBasis.map(_._2).toArray, rvBasis.map(_._3).toArray,
+        scale = 7.4e6) _
+      val walk = Ensemble.sampleQ(llq,
+        lo = Array(0.0, -15.0, -15.0), hi = Array(25.0, 15.0, 15.0), init = guess)
+      posterior(s, Seq("amp_cos" -> 2, "amp_sin" -> 1, "gamma" -> 0), "" -> walk)
     }),
 
     // T13g — the LD COEFFICIENTS join the walk (r9, verdict #3; the
@@ -578,57 +570,15 @@ object Advanced {
     // higher-dim walks need the longer chain to converge from the
     // tiny ball).
     "t13g_mcmc_ldfit" -> ((s, d) => {
-      import s.implicits._
-      import graft.model.LimbDark
-      val PDAY = 86400000000L; val P7 = 7L * PDAY
-      val n = 4000L
-      val step = 30L * PDAY / n
-      val PT = LimbDark.D(0.15); val TT = LimbDark.D(1.0)
-      val U1I = LimbDark.D(0.6); val U2I = LimbDark.D(0.1)
-      val bins = base(s, d).agg(min(col("t_us")).as("t0"))
-        .withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
-        .withColumn("g_us", col("t0") + col("i") * step)
-        .withColumn("r", (col("i") % 65536L * 1103515245L + 12345L) % 2147483648L)
-        .withColumn("ph", pmod(col("g_us") - col("t0"), lit(P7)))
-        .withColumn("phd", expr("CAST(ph AS DOUBLE) / 86400e6"))
-        .withColumn("aph", expr("CASE WHEN phd < 3.5 THEN phd ELSE 7.0 - phd END"))
-        .withColumn("hu", expr(LimbDark.huSql("aph", TT)))
-        .withColumn("z", expr(LimbDark.zSql("hu", PT)))
-        .withColumn("lam", expr(LimbDark.lamSql("z", PT)))
-        .withColumn("mu", expr(LimbDark.muSql("z", PT)))
-        .withColumn("iz", expr(LimbDark.izSqlU("mu", U1I, U2I)))
-        .withColumn("om4", expr(LimbDark.om4SqlU(U1I, U2I)))
-        .withColumn("ldf", expr(LimbDark.fluxSqlU("hu", PT, "iz", "lam", "om4")))
-        .withColumn("noise", (col("r").cast("double") / 2147483648.0 - 0.5) * 0.004)
-        .withColumn("flux", col("ldf") + col("noise"))
-        .withColumn("fc", round(col("flux") * 1e6).cast("long"))
-        .withColumn("b", expr(s"(ph * 200) div $P7"))
-        .groupBy("b").agg(count(lit(1)).as("n"), sum(col("fc")).as("sv"))
-        .orderBy("b")
-        .collect()
-      val t = bins.map(r => (r.getLong(0).toDouble + 0.5) * 7.0 / 200)
-      val y = bins.map(r => r.getLong(2).toDouble / r.getLong(1) / 1e6)
-      val llq = graft.model.Ensemble.ldFitLlq(t, y, scale = 3.125e12, period = 7.0) _
-      val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
-      val g = graft.model.Ensemble.boxGuessQ(t, yq, 7.0, 1.0)
-      val guess = Array(
-        math.sqrt(math.max(g(0) * LimbDark.KK, 4e-4)), g(1), g(2),
-        LimbDark.U1, LimbDark.U2)
-      val (samples, acc) = graft.model.Ensemble.sampleQ(llq,
+      val g = ldTransit(ldPhase(t13Grid(s, d)), "aph", 0.15, 1.0, u = Some((0.6, 0.1)))
+      val (t, y, yq) = t13Fold(g, col("f") + col("u") * 0.004, 1e6)
+      val llq = Ensemble.ldFitLlq(t, y, scale = 3.125e12, period = 7.0) _
+      val walk = Ensemble.sampleQ(llq,
         lo = Array(0.02, -3.5, 0.2, 0.0, -0.3),
         hi = Array(0.45, 3.5, 2.0, 1.2, 0.7),
-        nWalkers = 50, nSteps = 300, burnFrac = 0.3, seed = 42L,
-        init = guess, ballFrac = 0.005)
-      val pct = graft.model.Ensemble.percentiles(samples)
-      Seq(
-        ("acceptance", acc, acc, acc),
-        ("dur", pct(2)(0), pct(2)(1), pct(2)(2)),
-        ("epoch", pct(1)(0), pct(1)(1), pct(1)(2)),
-        ("rrat", pct(0)(0), pct(0)(1), pct(0)(2)),
-        ("u1", pct(3)(0), pct(3)(1), pct(3)(2)),
-        ("u2", pct(4)(0), pct(4)(1), pct(4)(2)))
-        .toDF("param", "p16", "p50", "p84")
-        .orderBy("param")
+        nWalkers = 50, nSteps = 300, init = ldGuess(t, yq) ++ Array(LimbDark.U1, LimbDark.U2))
+      posterior(s, Seq("dur" -> 2, "epoch" -> 1, "rrat" -> 0, "u1" -> 3, "u2" -> 4),
+        "" -> walk)
     }),
 
     // T13h — ECCENTRIC Keplerian RV fit (r9, verdict #4): extends
@@ -649,36 +599,12 @@ object Advanced {
     // grid by integer-llq argmax (atan2 is libm — banned).
     "t13h_mcmc_rvecc" -> ((s, d) => {
       import s.implicits._
-      import graft.model.{Ensemble, Kepler}
-      val PDAY = 86400000000L; val P7 = 7L * PDAY
-      val n = 4000L
-      val step = 30L * PDAY / n
-      val bdf = broadcast(t13hTrue.toDF("bb", "vq"))
-      val bins = base(s, d).agg(min(col("t_us")).as("t0"))
-        .withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
-        .withColumn("g_us", col("t0") + col("i") * step)
-        .withColumn("r", (col("i") % 65536L * 1103515245L + 12345L) % 2147483648L)
-        .withColumn("ph", pmod(col("g_us") - col("t0"), lit(P7)))
-        .withColumn("b", expr(s"(ph * 200) div $P7"))
-        .join(bdf, col("b") === col("bb"))
-        .withColumn("v", expr("vq / 1e6")
-          + (col("r").cast("double") / 2147483648.0 - 0.5) * 4.0)
-        .withColumn("rc", round(col("v") * 1e3).cast("long"))
-        .groupBy("b").agg(count(lit(1)).as("n"), sum(col("rc")).as("sv"))
-        .orderBy("b")
-        .collect()
-      val y = bins.map(r => r.getLong(2).toDouble / r.getLong(1) / 1e3)
-      val m = bins.map { r =>
-        val tb = (r.getLong(0).toDouble + 0.5) * 7.0 / 200
-        Kepler.TWOPI * (tb / 7.0)
-      }
-      val llq = Ensemble.rvEccLlq(y, m, scale = 7.4e6) _
-      val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
-      val sq = rvBasis.map(_._2).toArray
-      val cq = rvBasis.map(_._3).toArray
-      var sa = 0L; var psu = 0L; var pcu = 0L
-      var b = 0
-      while (b < 200) { sa += yq(b); psu += yq(b) * sq(b); pcu += yq(b) * cq(b); b += 1 }
+      import graft.model.Kepler
+      val g = t13Grid(s, d)
+        .join(broadcast(t13hTrue.toDF("bb", "vq")), col("b") === col("bb"))
+      val (t, y, yq) = t13Fold(g, expr("vq / 1e6") + col("u") * 4.0, 1e3)
+      val llq = Ensemble.rvEccLlq(y, t.map(tb => Kepler.TWOPI * (tb / 7.0)), scale = 7.4e6) _
+      val (sa, psu, pcu) = rvProjection(yq)
       // bounds (the r9 2^53 audit): |y| ≤ ~25 on the prior box so
       // |yq| ≤ 2.5e10, |yq·sq| ≤ 2.5e16, |Σ200| ≤ 5e18 < 2^63 (1.8×
       // headroom — re-derive if the prior box or scales change). The
@@ -692,21 +618,11 @@ object Advanced {
       val as0 = 2.0 * (psu.toDouble / 200 / 1e15) // ≈ −K·sin ω
       val k0 = math.sqrt(ac * ac + as0 * as0)
       val om0 = t13hOmegaGrid.maxBy(w => llq(Array(gamma0, k0, 0.1, w)))
-      val guess = Array(gamma0, k0, 0.1, om0)
-      val (samples, acc) = Ensemble.sampleQ(llq,
+      val walk = Ensemble.sampleQ(llq,
         lo = Array(0.0, 0.0, 0.0, -Kepler.PI),
         hi = Array(25.0, 20.0, 0.6, Kepler.PI),
-        nWalkers = 50, nSteps = 300, burnFrac = 0.3, seed = 42L,
-        init = guess, ballFrac = 0.005)
-      val pct = Ensemble.percentiles(samples)
-      Seq(
-        ("acceptance", acc, acc, acc),
-        ("ecc", pct(2)(0), pct(2)(1), pct(2)(2)),
-        ("gamma", pct(0)(0), pct(0)(1), pct(0)(2)),
-        ("k_amp", pct(1)(0), pct(1)(1), pct(1)(2)),
-        ("omega", pct(3)(0), pct(3)(1), pct(3)(2)))
-        .toDF("param", "p16", "p50", "p84")
-        .orderBy("param")
+        nWalkers = 50, nSteps = 300, init = Array(gamma0, k0, 0.1, om0))
+      posterior(s, Seq("ecc" -> 2, "gamma" -> 0, "k_amp" -> 1, "omega" -> 3), "" -> walk)
     }),
 
     // T13i — MCMC fit under the EXACT occultation (r10, verdict #1):
@@ -734,53 +650,16 @@ object Advanced {
     // (nested named layers, the t13h pattern; one 200-bin × 64-node
     // quadrature per proposal).
     "t13i_mcmc_ldx" -> ((s, d) => {
-      import s.implicits._
-      import graft.model.{Ensemble, LimbDark}
-      val PDAY = 86400000000L; val P7 = 7L * PDAY
-      val n = 4000L
-      val step = 30L * PDAY / n
-      val bdf = broadcast(t13iTrue.toDF("bb", "fxq"))
-      val bins = base(s, d).agg(min(col("t_us")).as("t0"))
-        .withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
-        .withColumn("g_us", col("t0") + col("i") * step)
-        .withColumn("r", (col("i") % 65536L * 1103515245L + 12345L) % 2147483648L)
-        .withColumn("ph", pmod(col("g_us") - col("t0"), lit(P7)))
-        .withColumn("b", expr(s"(ph * 200) div $P7"))
-        .join(bdf, col("b") === col("bb"))
-        .withColumn("flux", expr("fxq / 1e9")
-          + (col("r").cast("double") / 2147483648.0 - 0.5) * 0.004)
-        .withColumn("fc", round(col("flux") * 1e6).cast("long"))
-        .groupBy("b").agg(count(lit(1)).as("n"), sum(col("fc")).as("sv"))
-        .orderBy("b")
-        .collect()
-      val t = bins.map(r => (r.getLong(0).toDouble + 0.5) * 7.0 / 200)
-      val y = bins.map(r => r.getLong(2).toDouble / r.getLong(1) / 1e6)
-      val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
-      val g = Ensemble.boxGuessQ(t, yq, 7.0, 1.0)
-      val guess = Array(
-        math.sqrt(math.max(g(0) * LimbDark.KK, 4e-4)), g(1), g(2))
+      val (t, y, yq) = literalCurveFold(s, d, t13iTrue)
+      val guess = ldGuess(t, yq)
       val lo = Array(0.02, -3.5, 0.2); val hi = Array(0.45, 3.5, 2.0)
       val llqX = Ensemble.ldxLlq(t, y, scale = 3.125e12, period = 7.0,
         n = t13iNFit) _
       val llqA = Ensemble.ldBoxLlq(t, y, scale = 3.125e12, period = 7.0) _
-      val (sx, accx) = Ensemble.sampleQ(llqX, lo, hi,
-        nWalkers = 50, nSteps = 150, burnFrac = 0.3, seed = 42L,
-        init = guess, ballFrac = 0.005)
-      val (sa, acca) = Ensemble.sampleQ(llqA, lo, hi,
-        nWalkers = 50, nSteps = 150, burnFrac = 0.3, seed = 42L,
-        init = guess, ballFrac = 0.005)
-      val px = Ensemble.percentiles(sx); val pa = Ensemble.percentiles(sa)
-      Seq(
-        ("acceptance_approx", acca, acca, acca),
-        ("acceptance_exact", accx, accx, accx),
-        ("dur_approx", pa(2)(0), pa(2)(1), pa(2)(2)),
-        ("dur_exact", px(2)(0), px(2)(1), px(2)(2)),
-        ("epoch_approx", pa(1)(0), pa(1)(1), pa(1)(2)),
-        ("epoch_exact", px(1)(0), px(1)(1), px(1)(2)),
-        ("rrat_approx", pa(0)(0), pa(0)(1), pa(0)(2)),
-        ("rrat_exact", px(0)(0), px(0)(1), px(0)(2)))
-        .toDF("param", "p16", "p50", "p84")
-        .orderBy("param")
+      val walkX = Ensemble.sampleQ(llqX, lo, hi, nWalkers = 50, nSteps = 150, init = guess)
+      val walkA = Ensemble.sampleQ(llqA, lo, hi, nWalkers = 50, nSteps = 150, init = guess)
+      posterior(s, Seq("dur" -> 2, "epoch" -> 1, "rrat" -> 0),
+        "_exact" -> walkX, "_approx" -> walkA)
     }),
 
     // T13j — the OPTIMIZER inference mode (r10, verdict #2): the
@@ -801,41 +680,11 @@ object Advanced {
     // the declared iteration count.
     "t13j_opti" -> ((s, d) => {
       import s.implicits._
-      import graft.model.{Ensemble, LimbDark}
-      val PDAY = 86400000000L; val P7 = 7L * PDAY
-      val n = 4000L
-      val step = 30L * PDAY / n
-      val PT = LimbDark.D(0.15); val TT = LimbDark.D(1.0)
-      val bins = base(s, d).agg(min(col("t_us")).as("t0"))
-        .withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
-        .withColumn("g_us", col("t0") + col("i") * step)
-        .withColumn("r", (col("i") % 65536L * 1103515245L + 12345L) % 2147483648L)
-        .withColumn("ph", pmod(col("g_us") - col("t0"), lit(P7)))
-        .withColumn("phd", expr("CAST(ph AS DOUBLE) / 86400e6"))
-        .withColumn("aph", expr("CASE WHEN phd < 3.5 THEN phd ELSE 7.0 - phd END"))
-        .withColumn("hu", expr(LimbDark.huSql("aph", TT)))
-        .withColumn("z", expr(LimbDark.zSql("hu", PT)))
-        .withColumn("lam", expr(LimbDark.lamSql("z", PT)))
-        .withColumn("mu", expr(LimbDark.muSql("z", PT)))
-        .withColumn("iz", expr(LimbDark.izSql("mu")))
-        .withColumn("ldf", expr(LimbDark.fluxSql("hu", PT, "iz", "lam")))
-        .withColumn("noise", (col("r").cast("double") / 2147483648.0 - 0.5) * 0.004)
-        .withColumn("flux", col("ldf") + col("noise"))
-        .withColumn("fc", round(col("flux") * 1e6).cast("long"))
-        .withColumn("b", expr(s"(ph * 200) div $P7"))
-        .groupBy("b").agg(count(lit(1)).as("n"), sum(col("fc")).as("sv"))
-        .orderBy("b")
-        .collect()
-      val t = bins.map(r => (r.getLong(0).toDouble + 0.5) * 7.0 / 200)
-      val y = bins.map(r => r.getLong(2).toDouble / r.getLong(1) / 1e6)
+      val (t, y, yq) = t13dFold(s, d)
       val llq = Ensemble.ldBoxLlq(t, y, scale = 3.125e12, period = 7.0) _
-      val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
-      val g = Ensemble.boxGuessQ(t, yq, 7.0, 1.0)
-      val guess = Array(
-        math.sqrt(math.max(g(0) * LimbDark.KK, 4e-4)), g(1), g(2))
       val (bestV, bestLl) = Ensemble.nelderMeadQ(llq,
         lo = Array(0.02, -3.5, 0.2), hi = Array(0.45, 3.5, 2.0),
-        init = guess, nIter = 120)
+        init = ldGuess(t, yq), nIter = 120)
       Seq(
         ("dur", bestV(2)),
         ("epoch", bestV(1)),
@@ -859,28 +708,7 @@ object Advanced {
     // The guess: peak-bin argmax (integer, first-wins) for t0, its
     // excess over the global mean for A, mid-prior for τ.
     "t13k_mcmc_flare" -> ((s, d) => {
-      import s.implicits._
-      import graft.model.Ensemble
-      val PDAY = 86400000000L; val P7 = 7L * PDAY
-      val n = 4000L
-      val step = 30L * PDAY / n
-      val bdf = broadcast(t13kTrue.toDF("bb", "fxq"))
-      val bins = base(s, d).agg(min(col("t_us")).as("t0"))
-        .withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
-        .withColumn("g_us", col("t0") + col("i") * step)
-        .withColumn("r", (col("i") % 65536L * 1103515245L + 12345L) % 2147483648L)
-        .withColumn("ph", pmod(col("g_us") - col("t0"), lit(P7)))
-        .withColumn("b", expr(s"(ph * 200) div $P7"))
-        .join(bdf, col("b") === col("bb"))
-        .withColumn("flux", expr("fxq / 1e9")
-          + (col("r").cast("double") / 2147483648.0 - 0.5) * 0.004)
-        .withColumn("fc", round(col("flux") * 1e6).cast("long"))
-        .groupBy("b").agg(count(lit(1)).as("n"), sum(col("fc")).as("sv"))
-        .orderBy("b")
-        .collect()
-      val t = bins.map(r => (r.getLong(0).toDouble + 0.5) * 7.0 / 200)
-      val y = bins.map(r => r.getLong(2).toDouble / r.getLong(1) / 1e6)
-      val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
+      val (t, y, yq) = literalCurveFold(s, d, t13kTrue)
       // peak-bin guess: integer argmax (yq DESC, b ASC first-wins)
       val bmax = (0 until 200).minBy(b => (-yq(b), b))
       var sa = 0L; yq.foreach(sa += _)
@@ -889,18 +717,9 @@ object Advanced {
         (bmax + 0.5) * 7.0 / 200,
         0.3)
       val llq = Ensemble.flareLlq(t, y, scale = 3.125e12) _
-      val (samples, acc) = Ensemble.sampleQ(llq,
-        lo = Array(0.005, 0.5, 0.05), hi = Array(0.15, 6.0, 1.0),
-        nWalkers = 100, nSteps = 100, burnFrac = 0.3, seed = 42L,
-        init = guess, ballFrac = 0.005)
-      val pct = Ensemble.percentiles(samples)
-      Seq(
-        ("acceptance", acc, acc, acc),
-        ("amp", pct(0)(0), pct(0)(1), pct(0)(2)),
-        ("t0", pct(1)(0), pct(1)(1), pct(1)(2)),
-        ("tau", pct(2)(0), pct(2)(1), pct(2)(2)))
-        .toDF("param", "p16", "p50", "p84")
-        .orderBy("param")
+      val walk = Ensemble.sampleQ(llq,
+        lo = Array(0.005, 0.5, 0.05), hi = Array(0.15, 6.0, 1.0), init = guess)
+      posterior(s, Seq("amp" -> 0, "t0" -> 1, "tau" -> 2), "" -> walk)
     }),
 
     // T13l — GP HYPERPARAMETERS JOIN THE WALK (r11 verdict #1, the one
@@ -943,127 +762,48 @@ object Advanced {
     // (GpHyperSpec "fixed-wrong vs joint": widths 0.00071 vs 0.00106).
     "t13l_mcmc_gphyper" -> ((s, d) => {
       import s.implicits._
-      import graft.model.{Ensemble, GpHyper}
-      val PDAY = 86400000000L; val P7 = 7L * PDAY
-      val n = 4000L
-      val step = 30L * PDAY / n
+      import graft.model.GpHyper
       val bdf = broadcast(t13lWig.toDF("wb", "wv"))
-      val bins = base(s, d).agg(min(col("t_us")).as("t0"))
-        .withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
-        .withColumn("g_us", col("t0") + col("i") * step)
-        .withColumn("r", (col("i") % 65536L * 1103515245L + 12345L) % 2147483648L)
-        .withColumn("noise", (col("r").cast("double") / 2147483648.0 - 0.5) * 0.004)
-        .withColumn("ph", pmod(col("g_us") - col("t0"), lit(P7)))
-        .withColumn("flux", lit(1.0)
-          - when(col("ph") < 45360000000L || col("ph") > 559440000000L, 0.03)
-            .otherwise(0.0)
-          + col("noise"))
-        .withColumn("fc", round(col("flux") * 1e6).cast("long"))
-        .withColumn("b", expr(s"(ph * 200) div $P7"))
-        .groupBy("b").agg(count(lit(1)).as("n"), sum(col("fc")).as("sv"))
-        .join(bdf, col("b") === col("wb"))
-        .orderBy("b")
-        .collect()
-      val t = bins.map(r => (r.getLong(0).toDouble + 0.5) * 7.0 / 200)
-      val y = bins.map(r => r.getLong(2).toDouble / r.getLong(1) / 1e6
-        + r.getLong(4).toDouble * 1e-9)
+      // half-duration 0.525 d = 15 bins: the box edges sit on bin edges
+      val (t, y, yq) = t13Fold(t13Grid(s, d), boxFlux(lit(0.03), half = 45360000000L), 1e6,
+        Some(_.join(bdf, col("b") === col("wb")).withColumn("w", col("wv").cast("double") * 1e-9)))
       val llq = GpHyper.llq(t, y, 7.0) _
-      val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
       val g = Ensemble.boxGuessQ(t, yq, 7.0, 1.05)
-      val guess = Array(g(0), g(1), g(2), 1.5e-3, 0.3)
-      val (samples, acc) = Ensemble.sampleQ(llq,
+      val walk = Ensemble.sampleQ(llq,
         lo = Array(-0.2, -3.5, 0.2, 2e-4, 0.06),
         hi = Array(0.2, 3.5, 2.0, 6e-3, 1.2),
-        nWalkers = 50, nSteps = 150, burnFrac = 0.3, seed = 42L,
-        init = guess, ballFrac = 0.005)
-      val pct = Ensemble.percentiles(samples)
-      Seq(
-        ("acceptance", acc, acc, acc),
-        ("depth", pct(0)(0), pct(0)(1), pct(0)(2)),
-        ("dur", pct(2)(0), pct(2)(1), pct(2)(2)),
-        ("epoch", pct(1)(0), pct(1)(1), pct(1)(2)),
-        ("rho", pct(4)(0), pct(4)(1), pct(4)(2)),
-        ("sigma", pct(3)(0), pct(3)(1), pct(3)(2)))
-        .toDF("param", "p16", "p50", "p84")
-        .orderBy("param")
+        nWalkers = 50, nSteps = 150, init = Array(g(0), g(1), g(2), 1.5e-3, 0.3))
+      posterior(s, Seq("depth" -> 0, "dur" -> 2, "epoch" -> 1, "rho" -> 4, "sigma" -> 3),
+        "" -> walk)
     }),
 
     // T13 per-energy-bin fits, SPARK-PARALLEL (ref main.py:12301–12316:
     // typemodlenerfitt='iter' loops the whole fit once per energy bin —
     // here the loop IS the shuffle key): phase-fold each energy bin at
     // P7 into 200 exact-integer phase bins (one aggregation), then
-    // groupByKey(ener).mapGroups runs the full 100×100 GP-likelihood
-    // ensemble fit per bin in its own task. The output is the per-ener
-    // depth posterior — the transmission-spectrum table en1 summarizes
-    // descriptively, now with 16/50/84 uncertainties. Deterministic:
+    // fitPerKey runs the full 100×100 white-noise ensemble fit per bin
+    // in its own task. The output is the per-ener depth posterior —
+    // the transmission-spectrum table en1 summarizes descriptively, now
+    // with 16/50/84 uncertainties. 8 energy bins carry an injected
+    // DEPTH RAMP 0.015 + 0.003·ener — the per-ener fits must recover a
+    // transmission-spectrum slope, not just one depth. Deterministic:
     // integer bin sums, sorted group iteration, per-ener seed.
+    // Oracle-exact since r6 (the sampleQ machinery, one recursion per
+    // ener in the SQL replay); the white-noise likelihood is the
+    // matched model for this white-noise fixture — see t13. Raw
+    // doubles out (bit-identical chain; rounding would only add
+    // boundary risk — the a8 lesson).
     "t13b_mcmc_perener" -> ((s, d) => {
       import s.implicits._
-      val PDAY = 86400000000L; val P7 = 7L * PDAY
-      val nb = 200; val n = 4000L
-      val step = 30L * PDAY / n
-      // 8 energy bins with an injected DEPTH RAMP 0.015 + 0.003·ener —
-      // the per-ener fits must recover a transmission-spectrum slope,
-      // not just one depth. Grid+inject+bin is one Spark aggregation;
-      // then groupByKey(ener).mapGroups runs the full 100×100 ensemble
-      // fit per energy bin in its own task. Deterministic: integer bin
-      // sums, sorted group iteration, per-ener seed.
-      val bins = base(s, d).agg(min(col("t_us")).as("t0"))
-        .withColumn("ener", explode(sequence(lit(0L), lit(7L))))
-        .withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
-        .withColumn("g_us", col("t0") + col("i") * step)
-        .withColumn("r",
-          ((col("i") + col("ener") * 7919L) % 65536L * 1103515245L + 12345L) % 2147483648L)
-        .withColumn("noise", (col("r").cast("double") / 2147483648.0 - 0.5) * 0.004)
-        .withColumn("ph", pmod(col("g_us") - col("t0"), lit(P7)))
-        .withColumn("dtrue", lit(0.015) + col("ener") * lit(0.003))
-        .withColumn("flux", lit(1.0)
-          - when(col("ph") < PDAY / 2 || col("ph") > P7 - PDAY / 2, col("dtrue"))
-            .otherwise(0.0)
-          + col("noise"))
-        .withColumn("fc", round(col("flux") * 1e6).cast("long"))
-        .withColumn("b", expr(s"(ph * $nb) div $P7"))
+      val bins = t13Grid(s, d, perEner = true)
+        .withColumn("vq", round(boxFlux(lit(0.015) + col("ener") * lit(0.003)) * 1e6).cast("long"))
         .groupBy("ener", "b")
-        .agg(count(lit(1)).as("n"), sum(col("fc")).as("sv"))
-        .select(col("ener"), col("b"), col("n"), col("sv"))
+        .agg(count(lit(1)).as("n"), sum(col("vq")).as("sv"))
         .as[(Long, Long, Long, Long)]
-      // one fit per TASK, explicitly: groupByKey's exchange moves ~1600
-      // tiny rows, so AQE coalesces it to a single partition and the 8
-      // CPU-bound fits run serially in one task (measured 3.9 s vs
-      // 0.43 s/fit). repartitionByRange with an explicit partition
-      // count is exempt from AQE coalescing and range-splits 8 distinct
-      // keys into exactly one ener per partition — the fit fan-out IS
-      // the partitioning, the right shape for ~10⁴ per-target fits too.
-      // Oracle-exact since r6 (the sampleQ machinery, one recursion
-      // per ener in the SQL replay); the white-noise likelihood is the
-      // matched model for this white-noise fixture — see t13. Raw
-      // doubles out (bit-identical chain; rounding would only add
-      // boundary risk — the a8 lesson).
-      bins.repartitionByRange(8, col("ener"))
-        .mapPartitions(_.toArray.groupBy(_._1).toSeq.sortBy(_._1).iterator
-          .map { case (ener, rs0) =>
-        val rs = rs0.sortBy(_._2)
-        val t = rs.map(r => (r._2.toDouble + 0.5) * 7.0 / nb)
-        val y = rs.map(r => r._4.toDouble / r._3 / 1e6)
-        val llq = graft.model.Ensemble.boxLlq(t, y, scale = 3.125e12, period = 7.0) _
-        val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
-        val guess = graft.model.Ensemble.boxGuessQ(t, yq, 7.0, 1.0)
-        val (samples, acc) = graft.model.Ensemble.sampleQ(llq,
-          lo = Array(-0.2, -3.5, 0.2), hi = Array(0.2, 3.5, 2.0),
-          nWalkers = 100, nSteps = 100, burnFrac = 0.3, seed = 42L + ener,
-          init = guess, ballFrac = 0.005)
-        val pct = graft.model.Ensemble.percentiles(samples)
-        (ener, pct(0)(0), pct(0)(1), pct(0)(2), acc)
-      }).toDF("ener", "depth_p16", "depth_p50", "depth_p84", "acceptance")
-        // localCheckpoint before the orderBy (r17): the fits sit in the
-        // stage that FEEDS the sort's range exchange, and that stage
-        // runs TWICE — once for the RangePartitioner's sampling pass,
-        // once for the real shuffle write (ProbeT13m: two 4-task
-        // ~1.5 s stages per run). Checkpointing the 8-row fit output
-        // makes the fits run once; the sort then samples 8
-        // materialized rows. Paid inside the timed region.
-        .localCheckpoint()
-        .orderBy("ener")
+      fitPerKey(bins, "ener", 8, 200, 3.125e12,
+          "ener", "depth_p16", "depth_p50", "depth_p84", "acceptance") {
+        (ener, pct, acc) => (ener, pct(0)(0), pct(0)(1), pct(0)(2), acc)
+      }
     }),
 
     // T13m — the TTV FIT mode (PlanetarySystemWithTTVs with
@@ -1079,23 +819,23 @@ object Advanced {
     // k = 1..4 (window k = off ∈ [−3.5 d, 3.5 d) around the linear
     // center k·P; k = 0's window is only half-sampled and excluded),
     // each folded so the transit sits at phase 1.75 d — interior of
-    // the epoch prior, away from the gxDefault ±3.5 wrap, and keeping
+    // the epoch prior, away from the boxGuessQ ±3.5 wrap, and keeping
     // tb − e + 3.5 ≥ 0 so the SQL fmod needs no negative-operand
     // branch — then binned to 500 bins (exactly 2 grid points each).
     // The t13b fan-out applies per TRANSIT instead of per energy:
-    // repartitionByRange(4, k) gives each 100×100 ensemble fit its own
-    // task; fitted epoch → O−C minutes. Likelihood scale is MATCHED to
-    // the 2-point bins: var = (0.004²/12)/2 ⇒ scale = 1e6/(2·var) =
-    // 7.5e11 exactly. ORACLE-EXACT: the sampleQ chain replays per
-    // transit in the recursive CTE (one recursion, 4 groups), like
-    // t13b. Epoch resolution is bin-quantized (~20 min — the box model
-    // is evaluated at bin centers, so the likelihood is a step
-    // function of epoch); the injected amplitude (±3 bins) is resolved
-    // with margin, asserted in TtvFitSpec together with the
-    // depth-weighted t21-style measurement on the same fixture.
+    // fitPerKey gives each 100×100 ensemble fit its own task; fitted
+    // epoch → O−C minutes. Likelihood scale is MATCHED to the 2-point
+    // bins: var = (0.004²/12)/2 ⇒ scale = 1e6/(2·var) = 7.5e11
+    // exactly. ORACLE-EXACT: the sampleQ chain replays per transit in
+    // the recursive CTE (one recursion, 4 groups), like t13b. Epoch
+    // resolution is bin-quantized (~20 min — the box model is
+    // evaluated at bin centers, so the likelihood is a step function
+    // of epoch); the injected amplitude (±3 bins) is resolved with
+    // margin, asserted in TtvFitSpec together with the depth-weighted
+    // t21-style measurement on the same fixture.
     "t13m_mcmc_ttv" -> ((s, d) => {
       import s.implicits._
-      val PDAY = 86400000000L; val P7 = 7L * PDAY; val HP = P7 / 2
+      val HP = P7 / 2
       val nb = 500; val n = 4500L; val step = 604800000L // 0.007 d
       val bins = base(s, d).agg(min(col("t_us")).as("t0"))
         .withColumn("i", explode(sequence(lit(0L), lit(n - 1))))
@@ -1117,29 +857,11 @@ object Advanced {
         .groupBy("k", "b")
         .agg(count(lit(1)).as("n"), sum(col("fc")).as("sv"))
         .as[(Long, Long, Long, Long)]
-      bins.repartitionByRange(4, col("k"))
-        .mapPartitions(_.toArray.groupBy(_._1).toSeq.sortBy(_._1).iterator
-          .map { case (k, rs0) =>
-            val rs = rs0.sortBy(_._2)
-            val t = rs.map(r => (r._2.toDouble + 0.5) * 7.0 / nb)
-            val y = rs.map(r => r._4.toDouble / r._3 / 1e6)
-            val llq = graft.model.Ensemble.boxLlq(t, y, scale = 7.5e11, period = 7.0) _
-            val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
-            val guess = graft.model.Ensemble.boxGuessQ(t, yq, 7.0, 1.0)
-            val (samples, acc) = graft.model.Ensemble.sampleQ(llq,
-              lo = Array(-0.2, -3.5, 0.2), hi = Array(0.2, 3.5, 2.0),
-              nWalkers = 100, nSteps = 100, burnFrac = 0.3, seed = 42L + k,
-              init = guess, ballFrac = 0.005)
-            val pct = graft.model.Ensemble.percentiles(samples)
-            (k, pct(1)(0), pct(1)(1), pct(1)(2),
-              (pct(1)(1) - 1.75) * 1440.0, acc)
-          })
-        .toDF("tran", "epoch_p16", "epoch_p50", "epoch_p84",
-          "oc_min", "acceptance")
-        // the t13b double-fit fix (see its comment): run the 4 fits
-        // once, not once more for the sort's sampling pass
-        .localCheckpoint()
-        .orderBy("tran")
+      fitPerKey(bins, "k", 4, nb, 7.5e11,
+          "tran", "epoch_p16", "epoch_p50", "epoch_p84", "oc_min", "acceptance") {
+        (k, pct, acc) =>
+          (k, pct(1)(0), pct(1)(1), pct(1)(2), (pct(1)(1) - 1.75) * 1440.0, acc)
+      }
     }),
 
     // P1 — posterior derived-feature column math (calc_feat_alle, ref
@@ -1382,38 +1104,105 @@ object Advanced {
        |  WHERE d2 > CAST(sv AS DOUBLE)/n - 3*sqrt((q - CAST(sv AS DOUBLE)*sv/n)/n)
        |    AND d2 < CAST(sv AS DOUBLE)/n + 3*sqrt((q - CAST(sv AS DOUBLE)*sv/n)/n))""".stripMargin
 
-  /** SQL replay of Ensemble.sampleQ for the t13 oracles: one recursive
-    * CTE advances the WHOLE 100-walker ensemble one stretch-move step
-    * per recursion round (walkers move from the previous ensemble
-    * state, so within a step all 100 proposals are independent — the
-    * property that makes the walk set-expressible). Every float op
-    * mirrors the Scala kernel's IEEE expression shape exactly; draws
-    * are the same stateless integer hash; the likelihood is the same
-    * order-free integer micro-nat sum; accept/reject is the same
-    * integer comparison over ln-values quantized at 1e6 (ln is the one
-    * transcendental — lnQ6's runtime margin assert on the Scala side
-    * proves the fixed fixture rounds identically under any ≤1-ulp
-    * libm). DECIMAL pitfalls (memory: round5): every literal that
-    * meets another literal is CAST to DOUBLE; sums of BIGINT are CAST
-    * back from HUGEINT.
-    *
-    * @param enersSql  one row per fit: `SELECT ... AS ener`
-    * @param fixtureSql CTEs ending in `bins(ener, b, tb, y, yq)`
-    * @param seedBase  Scala-side seed = seedBase + ener
-    * @param nW,nSteps ensemble geometry (mirrors sampleQ's arguments)
-    * @param llqGen    (alias, paramPrefix) → scalar-subquery SQL for
-    *                  the integer micro-nat likelihood of that row's
-    *                  parameter columns; None → the white-noise
-    *                  boxLlq replay (t13/t13b). t13c passes the GP
-    *                  innovation-filter likelihood here.
-    * @param extraCte  additional CTEs (e.g. the GP lag-weight VALUES
-    *                  table) injected after the fixture
-    */
-  /** Depth of the deepest 1-day circular window (the boxGuessQ g0
-    * shape) — exposed so llq variants can transform it (t13d turns it
-    * into a radius-ratio guess). */
-  private val mcmcDepthG0 =
-    "(CAST(sa AS DOUBLE) / 200 - CAST(w AS DOUBLE) / 29) / 1e9"
+  /** The p16/p50/p84 picks of a pc$d percentile block (q is 0.16, 0.5
+    * or 0.84). */
+  private val pctSql = Seq(
+    "max(CASE WHEN q < 0.3 THEN v END)",
+    "max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END)",
+    "max(CASE WHEN q > 0.7 THEN v END)")
+
+  /** The posterior rows read after mcmcSamplerSql (the Spark side's
+    * `posterior` restated): `acceptance` and each named dimension's
+    * percentiles, the names suffixed by `sfx`. */
+  private def posteriorRowsSql(dims: Seq[(String, Int)], sfx: String = ""): String =
+    (s"SELECT 'acceptance$sfx' AS param, a AS p16, a AS p50, a AS p84 FROM accr" +:
+      dims.map { case (p, d) => s"SELECT '$p$sfx', ${pctSql.mkString(", ")} FROM pc$d" })
+      .mkString("\nUNION ALL\n")
+
+  /** The posterior table: [[posteriorRowsSql]] ordered by name. */
+  private def posteriorSql(dims: Seq[(String, Int)]): String =
+    s"SELECT * FROM (\n${posteriorRowsSql(dims)}\n) ORDER BY param"
+
+  /** A per-key fit's rows (t13b's energy bins, t13m's transits): the
+    * key as `key`, the percentiles of walk dimension `d` as
+    * `name`_p16/p50/p84, the `extra` columns and the acceptance. */
+  private def perKeySql(key: String, name: String, d: Int, extra: Seq[String] = Nil): String = {
+    val cols = pctSql.zip(Seq("p16", "p50", "p84")).map { case (m, c) => s"$m AS ${name}_$c" } ++
+      extra :+ "max(a) AS acceptance"
+    s"""SELECT p.ener AS $key,
+       |    ${cols.mkString(",\n    ")}
+       |FROM pc$d p JOIN accr ON accr.ener = p.ener
+       |GROUP BY 1 ORDER BY 1""".stripMargin
+  }
+
+  /** Ensemble.boxModel at bin alias `ba` for the walk columns
+    * `al`.`p`0..2 (depth, epoch, duration): ph = fmod-wrap into [0,P)
+    * minus P/2 (DuckDB fmod is floored mod = Java's truncated % plus
+    * the same +P wrap, bit-identically — verified on negative
+    * operands). */
+  private def boxMdlSql(al: String, p: String, ba: String = "bb"): String =
+    s"(1.0 - $al.${p}0 * (CASE WHEN abs(fmod($ba.tb - $al.${p}1 + 3.5, 7.0) - 3.5) < $al.${p}2 / 2" +
+      s" THEN ${D(1.0)} ELSE ${D(0.0)} END))"
+
+  /** The order-free integer micro-nat white-noise likelihood
+    * (Ensemble.boxLlq) at `scale` = 1e6/(2·yerr²) — 3.125e12 for t13's
+    * yerr = 4e-4. */
+  private def boxLlqSql(scale: String): (String, String) => String = (al, p) =>
+    s"(SELECT CAST(-sum(CAST(round((bb.y - ${boxMdlSql(al, p)}) * (bb.y - ${boxMdlSql(al, p)}) * $scale)" +
+      s" AS BIGINT)) AS BIGINT) FROM bins bb WHERE bb.ener = $al.ener)"
+
+  /** Ensemble.ldBoxLlq inline at the walk columns (rrat, epoch, T14) =
+    * `a`.`c0`, `c1`, `c2`: the full limb-darkened model composed from
+    * the same per-layer strings by substitution (LimbDark.fluxInlineSql),
+    * so the arithmetic DAG matches the engine's layered columns. */
+  private def ldLlqSql(a: String, c0: String, c1: String, c2: String): String = {
+    val aph = s"abs(fmod(bb.tb - $a.$c1 + 3.5, 7.0) - 3.5)"
+    s"(SELECT CAST(-sum(CAST(round((yy - mm) * (yy - mm) * 3.125e12)" +
+      s" AS BIGINT)) AS BIGINT) FROM (SELECT bb.y AS yy, " +
+      LimbDark.fluxInlineSql(aph, s"$a.$c0", s"$a.$c2") +
+      s" AS mm FROM bins bb WHERE bb.ener = $a.ener) qq)"
+  }
+
+  /** [[ldLlqSql]] over the walk's own parameter columns. */
+  private val ldLlq: (String, String) => String =
+    (al, p) => ldLlqSql(al, s"${p}0", s"${p}1", s"${p}2")
+
+  private val sallSql = "sall AS (SELECT ener, CAST(sum(yq) AS BIGINT) AS sa FROM bins GROUP BY 1)"
+
+  /** Depth below the mean of `nb` bins of a (2h+1)-bin window sum `w`
+    * (boxGuessQ's g0). */
+  private def windowDepthSql(w: String, h: Int = 14, nb: Int = 200): String =
+    s"(CAST(sa AS DOUBLE) / $nb - CAST($w AS DOUBLE) / ${2 * h + 1}) / 1e9"
+
+  /** A window depth as a radius ratio, √(depth·KK) floored at 0.02 —
+    * the LD fits' g0 (Scala: ldGuess). */
+  private def ldG0Sql(depth: String): String =
+    s"sqrt(GREATEST($depth * ${D(LimbDark.KK)}, ${D(4e-4)}))"
+
+  /** boxGuessQ restated: CTEs ending in gx(ener, g0, g1, …) centered on
+    * the deepest (2h+1)-bin circular window of integer yq sums over
+    * `nb` bins (first-index tiebreak). `g0` maps the window's depth
+    * onto the first coordinate; `rest` spells g2 onward. */
+  private def boxGxSql(g0: String => String = identity, rest: String = s"${D(1.0)} AS g2",
+                       h: Int = 14, nb: Int = 200): String =
+    s"""gw AS (SELECT c.ener AS ener, c.b AS c, CAST(sum(b2.yq) AS BIGINT) AS w
+       |  FROM bins c
+       |  CROSS JOIN (SELECT unnest(range(-$h, ${h + 1})) AS kk) o
+       |  JOIN bins b2 ON b2.ener = c.ener
+       |    AND b2.b = ((c.b + o.kk) % $nb + $nb) % $nb
+       |  GROUP BY 1, 2),
+       |best AS (SELECT ener, c, w FROM (
+       |    SELECT ener, c, w,
+       |      row_number() OVER (PARTITION BY ener ORDER BY w ASC, c ASC) AS rw
+       |    FROM gw) WHERE rw = 1),
+       |$sallSql,
+       |gx AS (SELECT best.ener AS ener,
+       |    ${g0(windowDepthSql("w", h, nb))} AS g0,
+       |    CASE WHEN (CAST(c AS DOUBLE) + 0.5) * 7.0 / $nb >= 3.5
+       |         THEN (CAST(c AS DOUBLE) + 0.5) * 7.0 / $nb - 7.0
+       |         ELSE (CAST(c AS DOUBLE) + 0.5) * 7.0 / $nb END AS g1,
+       |    $rest
+       |  FROM best JOIN sall ON sall.ener = best.ener)""".stripMargin
 
   /** t13f's quantized trig basis at the 200 fold-bin centers:
     * (b, round(sin·1e6), round(cos·1e6)) — computed ONCE and injected
@@ -1425,6 +1214,18 @@ object Advanced {
       val th = 2.0 * math.Pi * (b + 0.5) / 200.0
       (b.toLong, math.round(math.sin(th) * 1e6), math.round(math.cos(th) * 1e6))
     }
+
+  /** [[rvBasis]] as the oracle's literal CTE rvb(b, sq, cq). */
+  private lazy val rvbSql: String =
+    s"\nrvb AS (SELECT * FROM (VALUES ${rvBasis
+      .map { case (b, sq, cq) => s"($b, $sq, $cq)" }.mkString(", ")}) AS t(b, sq, cq)),"
+
+  /** The Fourier projection of yq on rvb (rvProjection restated). */
+  private val rvProjSql =
+    """proj AS (SELECT bb.ener AS ener,
+      |    CAST(sum(bb.yq * w.sq) AS BIGINT) AS ps,
+      |    CAST(sum(bb.yq * w.cq) AS BIGINT) AS pc
+      |  FROM bins bb JOIN rvb w ON w.b = bb.b GROUP BY 1)""".stripMargin
 
   /** t13h's injected TRUE curve: the declared eccentric model
     * (γ=12.5, K=9.0, e=0.3, ω=1.0) evaluated at the fold-bin mean
@@ -1479,14 +1280,48 @@ object Advanced {
     (0 until 8).map(j =>
       -graft.model.Kepler.PI + (2 * j + 1) * graft.model.Kepler.PI / 8.0)
 
-  private def mcmcSamplerSql(enersSql: String, fixtureSql: String,
-                             seedBase: Long,
+  /** SQL replay of Ensemble.sampleQ for the t13 oracles: one recursive
+    * CTE advances the WHOLE 100-walker ensemble one stretch-move step
+    * per recursion round (walkers move from the previous ensemble
+    * state, so within a step all 100 proposals are independent — the
+    * property that makes the walk set-expressible). Every float op
+    * mirrors the Scala kernel's IEEE expression shape exactly; draws
+    * are the same stateless integer hash; the likelihood is the same
+    * order-free integer micro-nat sum; accept/reject is the same
+    * integer comparison over ln-values quantized at 1e6 (ln is the one
+    * transcendental — lnQ6's runtime margin assert on the Scala side
+    * proves the fixed fixture rounds identically under any ≤1-ulp
+    * libm). DECIMAL pitfalls (memory: round5): every literal that
+    * meets another literal is CAST to DOUBLE; sums of BIGINT are CAST
+    * back from HUGEINT.
+    *
+    * @param fixtureSql CTEs ending in `bins(ener, b, tb, y, yq)`
+    * @param enersSql  one row per fit: `SELECT ... AS ener` (default:
+    *                  one fit, ener 0); fit `ener` replays the seed
+    *                  42 + ener (sampleQ's default 42, t13b/t13m's
+    *                  per-key seeds)
+    * @param nW,nSteps ensemble geometry (mirrors sampleQ's arguments)
+    * @param llq       (alias, paramPrefix) → scalar-subquery SQL for
+    *                  the integer micro-nat likelihood of that row's
+    *                  parameter columns; default the white-noise
+    *                  boxLlq replay (t13/t13b). t13c passes the GP
+    *                  innovation-filter likelihood here.
+    * @param extraCte  additional CTEs (e.g. the GP lag-weight VALUES
+    *                  table) injected after the fixture
+    * @param los,his   the prior box per walk dimension (sampleQ's
+    *                  lo/hi); their length is the walk dimension nd
+    * @param gxBlockSql CTEs ending in gx(ener, g0..g{nd-1}), the
+    *                  walker-ball center; None → [[boxGxSql]]'s
+    *                  3-dimensional boxGuessQ replay, so non-3-dim
+    *                  walks must supply one
+    */
+  private def mcmcSamplerSql(fixtureSql: String,
+                             enersSql: String = "SELECT CAST(0 AS BIGINT) AS ener",
                              nW: Int = 100, nSteps: Int = 100,
-                             llqGen: Option[(String, String) => String] = None,
+                             llq: (String, String) => String = boxLlqSql("3.125e12"),
                              extraCte: String = "",
                              los: Seq[Double] = Seq(-0.2, -3.5, 0.2),
                              his: Seq[Double] = Seq(0.2, 3.5, 2.0),
-                             g0Sql: Option[String] = None,
                              gxBlockSql: Option[String] = None): String = {
     // nd-dimensional since r8 (t13e needs 4 walk dimensions): every
     // per-dimension fragment is generated from 0 until nd; for nd != 3
@@ -1497,19 +1332,6 @@ object Advanced {
     require(his.length == nd && (nd == 3 || gxBlockSql.isDefined),
       "mcmcSamplerSql: non-3-dim walks need an explicit gx block")
     val dims = 0 until nd
-    def D(x: Double) = s"CAST($x AS DOUBLE)"
-    // box model at bin `bb` for parameter columns $al.${p}0..2 —
-    // mirrors Ensemble.boxModel: ph = fmod-wrap into [0,P) minus P/2
-    // (DuckDB fmod is floored mod = Java's truncated % plus the same
-    // +P wrap, bit-identically — verified on negative operands)
-    def mdl(al: String, p: String) =
-      s"(1.0 - $al.${p}0 * (CASE WHEN abs(fmod(bb.tb - $al.${p}1 + 3.5, 7.0) - 3.5) < $al.${p}2 / 2" +
-      s" THEN ${D(1.0)} ELSE ${D(0.0)} END))"
-    // order-free integer micro-nat log-likelihood (Ensemble.boxLlq),
-    // scale = 1e6/(2·(4e-4)²) = 3.125e12
-    val llq: (String, String) => String = llqGen.getOrElse((al, p) =>
-      s"(SELECT CAST(-sum(CAST(round((bb.y - ${mdl(al, p)}) * (bb.y - ${mdl(al, p)}) * 3.125e12)" +
-      s" AS BIGINT)) AS BIGINT) FROM bins bb WHERE bb.ener = $al.ener)")
     def lnq(x: String) = s"CAST(round(ln($x) * 1e6) AS BIGINT)"
     val burnRow = (nSteps * 0.3).toInt + 1 // first post-burn recursion row
     val nSamples = (nSteps - (nSteps * 0.3).toInt) * nW
@@ -1530,25 +1352,6 @@ object Advanced {
       s"""(SELECT CASE WHEN r % ${nW - 1} >= wt.k THEN r % ${nW - 1} + 1 ELSE r % ${nW - 1} END
          |                       FROM dr WHERE dr.ener = e.ener
          |                         AND dr.idx = (e.step * $nW + wt.k) * 3)""".stripMargin
-    val gxDefault =
-      s"""gw AS (SELECT c.ener AS ener, c.b AS c, CAST(sum(b2.yq) AS BIGINT) AS w
-         |  FROM bins c
-         |  CROSS JOIN (SELECT unnest(range(-14, 15)) AS kk) o
-         |  JOIN bins b2 ON b2.ener = c.ener
-         |    AND b2.b = ((c.b + o.kk) % 200 + 200) % 200
-         |  GROUP BY 1, 2),
-         |best AS (SELECT ener, c, w FROM (
-         |    SELECT ener, c, w,
-         |      row_number() OVER (PARTITION BY ener ORDER BY w ASC, c ASC) AS rw
-         |    FROM gw) WHERE rw = 1),
-         |sall AS (SELECT ener, CAST(sum(yq) AS BIGINT) AS sa FROM bins GROUP BY 1),
-         |gx AS (SELECT best.ener AS ener,
-         |    ${g0Sql.getOrElse(mcmcDepthG0)} AS g0,
-         |    CASE WHEN (CAST(c AS DOUBLE) + 0.5) * 7.0 / 200 >= 3.5
-         |         THEN (CAST(c AS DOUBLE) + 0.5) * 7.0 / 200 - 7.0
-         |         ELSE (CAST(c AS DOUBLE) + 0.5) * 7.0 / 200 END AS g1,
-         |    ${D(1.0)} AS g2
-         |  FROM best JOIN sall ON sall.ener = best.ener)""".stripMargin
     val pcBlocks = dims.map { d =>
       s"""o$d AS (SELECT ener, w$d AS x,
          |    row_number() OVER (PARTITION BY ener ORDER BY w$d) - 1 AS rn FROM smp),
@@ -1570,7 +1373,7 @@ object Advanced {
        |    FROM (SELECT ener, idx,
        |            (xor(x1, x1 >> 15) * 69069 + 1) % 2147483648 AS x3
        |          FROM (SELECT en.ener AS ener, ix.idx AS idx,
-       |                  ((($seedBase + en.ener + ix.idx) % 2147483648)
+       |                  (((42 + en.ener + ix.idx) % 2147483648)
        |                   * 1103515245 + 12345) % 2147483648 AS x1
        |                FROM eners en,
        |                  (SELECT unnest(range(0, ${nProps * 3})) AS idx
@@ -1580,7 +1383,7 @@ object Advanced {
        |-- CIRCULAR window of integer yq sums, h = 14, width 29,
        |-- first-index tiebreak); callers with other parametrizations
        |-- supply their own CTE chain ending in gx(ener, g0..g${nd - 1})
-       |${gxBlockSql.getOrElse(gxDefault)},
+       |${gxBlockSql.getOrElse(boxGxSql())},
        |ini AS (SELECT gx.ener AS ener, wk.k AS k,
        |    ${dims.map(d => s"${initW(d)} AS w$d").mkString(",\n    ")}
        |  FROM gx CROSS JOIN (SELECT unnest(range(0, $nW)) AS k) wk),
@@ -1648,8 +1451,67 @@ object Advanced {
        |  FROM ensm WHERE step = $nSteps)""".stripMargin
   }
 
-  /** t13's fixture CTEs (mirrors the declared query's Spark fixture
-    * bit-for-bit) ending in bins(ener, b, tb, y, yq); ener ≡ 0. */
+  /** The unit draw of the fixture grid's LCG value r, in [−0.5, 0.5)
+    * (t13Grid's `u`). */
+  private val unitSql = "(CAST(r AS DOUBLE) / 2147483648.0 - 0.5)"
+
+  /** The t13 oracle fixture frame (t13Grid + t13Fold restated for
+    * DuckDB), ending in bins(ener, b, tb, y, yq):
+    *   - e0, then the literal-table CTEs `lits`;
+    *   - gn(ener, i, r, ph): the 4000-point grid, r salted per ener when
+    *     `perEner`;
+    *   - the caller's `valueSql` CTEs over gn, ending in fl(ener, ph,
+    *     flux), or rv(ener, ph, v) when `rv` (quantized at 1e3, not 1e6);
+    *   - bnr, the 200-bin integer sums, and bins, whose y adds the
+    *     per-bin term `yTerm` of bnr `join`ed to a literal table (t13c,
+    *     t13l). `tb = false` leaves out the bin center (t13f). */
+  private def t13FrameSql(valueSql: String, rv: Boolean = false, lits: String = "",
+                          yTerm: String = "", join: String = "", tb: Boolean = true,
+                          perEner: Boolean = false): String = {
+    val (src, v, q) = if (rv) ("rv", "v", "1e3") else ("fl", "flux", "1e6")
+    val r =
+      if (perEner) "((i + ener * 7919) % 65536 * 1103515245 + 12345) % 2147483648"
+      else "(i % 65536 * 1103515245 + 12345) % 2147483648"
+    val m = s"CAST(sv AS DOUBLE) / n / $q"
+    val (y, y9) = if (yTerm.isEmpty) (m, s"$m * 1e9") else (s"$m + $yTerm", s"($m + $yTerm) * 1e9")
+    val tbCol = if (tb) "(CAST(b AS DOUBLE) + 0.5) * 7.0 / 200 AS tb," else ""
+    s"""e0 AS (SELECT min(epoch_us(ts)) AS t0 FROM events),$lits
+       |gn AS (SELECT en.ener AS ener, ii.i AS i,
+       |    $r AS r,
+       |    (ii.i * 648000000) % 604800000000 AS ph
+       |  FROM e0, eners en, (SELECT unnest(range(0, 4000)) AS i) ii),
+       |$valueSql,
+       |bnr AS (SELECT ener, (ph * 200) // 604800000000 AS b, count(*) AS n,
+       |    CAST(sum(CAST(round($v * $q) AS BIGINT)) AS BIGINT) AS sv
+       |  FROM $src GROUP BY 1, 2),
+       |bins AS MATERIALIZED (SELECT ener, b, $tbCol
+       |    $y AS y,
+       |    CAST(round($y9) AS BIGINT) AS yq
+       |  FROM bnr$join)""".stripMargin
+  }
+
+  /** The box-dip fixtures' fl (boxFlux restated): 1 − `depth` within
+    * `half` µs of phase 0, plus the ±0.002 noise. */
+  private def boxFlSql(depth: String = D(0.03), half: Long = 43200000000L): String =
+    s"""fl AS (SELECT ener, ph,
+       |    1.0 - (CASE WHEN ph < $half OR ph > ${604800000000L - half}
+       |                THEN $depth ELSE CAST(0.0 AS DOUBLE) END)
+       |        + $unitSql * 0.004 AS flux
+       |  FROM gn)""".stripMargin
+
+  /** A literal CTE `name`(`cols`) of per-bin (b, value) pairs. */
+  private def binValuesSql(name: String, cols: String, vals: Seq[(Long, Long)]): String =
+    s"$name AS (SELECT * FROM (VALUES ${vals.map { case (b, v) => s"($b, $v)" }.mkString(", ")})" +
+      s" AS t($cols)),"
+
+  /** t13's and t13b's fixture (the box dip; per-ener depth ramp and
+    * noise salt for t13b) — mirrors the declared query's Spark fixture
+    * bit-for-bit; ener ≡ 0 for t13. */
+  private def t13FixtureSql(perEner: Boolean): String =
+    t13FrameSql(boxFlSql(depth =
+      if (perEner) "CAST(0.015 AS DOUBLE) + ener * CAST(0.003 AS DOUBLE)" else D(0.03)),
+      perEner = perEner)
+
   /** t13c's correlated-baseline wiggle over the 200 phase bins: a
     * circular 8-bin moving sum of per-bin LCG draws — integer closed
     * form shared verbatim by both engines, correlated over ~8 bins
@@ -1676,34 +1538,11 @@ object Advanced {
       1e6 / (2 * sInn))
   }
 
-  /** t13's fixture + the wiggle: bins(ener, b, tb, y, yq) with
-    * y = binned flux + wig — mirrors the Spark fixture bit-for-bit
-    * (identical literal expression shapes, identical operation
-    * order). */
-  private def t13cFixtureSql: String = {
-    val wig = t13cWigSql("b")
-    s"""e0 AS (SELECT min(epoch_us(ts)) AS t0 FROM events),
-       |gn AS (SELECT en.ener AS ener, ii.i AS i,
-       |    (i % 65536 * 1103515245 + 12345) % 2147483648 AS r,
-       |    (ii.i * 648000000) % 604800000000 AS ph
-       |  FROM e0, eners en, (SELECT unnest(range(0, 4000)) AS i) ii),
-       |fl AS (SELECT ener, ph,
-       |    1.0 - (CASE WHEN ph < 43200000000 OR ph > 561600000000
-       |                THEN CAST(0.03 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END)
-       |        + (CAST(r AS DOUBLE) / 2147483648.0 - 0.5) * 0.004 AS flux
-       |  FROM gn),
-       |bnr AS (SELECT ener, (ph * 200) // 604800000000 AS b, count(*) AS n,
-       |    CAST(sum(CAST(round(flux * 1e6) AS BIGINT)) AS BIGINT) AS sv
-       |  FROM fl GROUP BY 1, 2),
-       |bins AS MATERIALIZED (SELECT ener, b,
-       |    (CAST(b AS DOUBLE) + 0.5) * 7.0 / 200 AS tb,
-       |    CAST(sv AS DOUBLE) / n / 1e6
-       |      + CAST(($wig) - 4000 AS DOUBLE) * CAST(1.25e-6 AS DOUBLE) AS y,
-       |    CAST(round((CAST(sv AS DOUBLE) / n / 1e6
-       |      + CAST(($wig) - 4000 AS DOUBLE) * CAST(1.25e-6 AS DOUBLE)) * 1e9)
-       |      AS BIGINT) AS yq
-       |  FROM bnr)""".stripMargin
-  }
+  /** t13's fixture + the wiggle: y = binned flux + wig — mirrors the
+    * Spark fixture bit-for-bit (identical literal expression shapes,
+    * identical operation order). */
+  private def t13cFixtureSql: String = t13FrameSql(boxFlSql(),
+    yTerm = s"CAST((${t13cWigSql("b")}) - 4000 AS DOUBLE) * CAST(1.25e-6 AS DOUBLE)")
 
   /** t13l's injected Matérn-3/2 wiggle: a truncated-MA(64) integer
     * closed form at the KNOWN (σ=2e-3, ρ=0.25 d) over Ensemble.draw
@@ -1720,259 +1559,112 @@ object Advanced {
     * no partial-bin spike the GP must explain as ρ→0) plus the
     * literal wiggle, in 1e-9 flux units. Mirrors the Spark fixture
     * bit-for-bit. */
-  private def t13lFixtureSql: String = {
-    val wigVals = t13lWig.map { case (b, v) => s"($b, $v)" }.mkString(", ")
-    s"""wigt AS (SELECT * FROM (VALUES $wigVals) AS t(wb, wv)),
-       |e0 AS (SELECT min(epoch_us(ts)) AS t0 FROM events),
-       |gn AS (SELECT en.ener AS ener, ii.i AS i,
-       |    (i % 65536 * 1103515245 + 12345) % 2147483648 AS r,
-       |    (ii.i * 648000000) % 604800000000 AS ph
-       |  FROM e0, eners en, (SELECT unnest(range(0, 4000)) AS i) ii),
-       |fl AS (SELECT ener, ph,
-       |    1.0 - (CASE WHEN ph < 45360000000 OR ph > 559440000000
-       |                THEN CAST(0.03 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END)
-       |        + (CAST(r AS DOUBLE) / 2147483648.0 - 0.5) * 0.004 AS flux
-       |  FROM gn),
-       |bnr AS (SELECT ener, (ph * 200) // 604800000000 AS b, count(*) AS n,
-       |    CAST(sum(CAST(round(flux * 1e6) AS BIGINT)) AS BIGINT) AS sv
-       |  FROM fl GROUP BY 1, 2),
-       |bins AS MATERIALIZED (SELECT ener, b,
-       |    (CAST(b AS DOUBLE) + 0.5) * 7.0 / 200 AS tb,
-       |    CAST(sv AS DOUBLE) / n / 1e6
-       |      + CAST(wv AS DOUBLE) * CAST(1e-9 AS DOUBLE) AS y,
-       |    CAST(round((CAST(sv AS DOUBLE) / n / 1e6
-       |      + CAST(wv AS DOUBLE) * CAST(1e-9 AS DOUBLE)) * 1e9) AS BIGINT) AS yq
-       |  FROM bnr JOIN wigt ON wigt.wb = bnr.b)""".stripMargin
-  }
+  private def t13lFixtureSql: String =
+    binValuesSql("wigt", "wb, wv", t13lWig) + "\n" + t13FrameSql(boxFlSql(half = 45360000000L),
+      yTerm = "CAST(wv AS DOUBLE) * CAST(1e-9 AS DOUBLE)", join = " JOIN wigt ON wigt.wb = bnr.b")
+
+  /** The LD fixtures' phase layer (ldPhase restated): ap(ener, ph, r,
+    * `aph`) with the distance from phase 0 folded at 3.5 d, plus the
+    * `extra` columns over phd (t13e's second planet). */
+  private def ldApSql(aph: String = "aph", extra: String = ""): String =
+    s"""ap AS (SELECT ener, ph, r,
+       |    CASE WHEN phd < 3.5 THEN phd ELSE 7.0 - phd END AS $aph$extra
+       |  FROM (SELECT ener, ph, r, CAST(ph AS DOUBLE) / 86400e6 AS phd
+       |        FROM gn) pd)""".stripMargin
 
   /** t13d's fixture: t13's grid + noise with the box dip replaced by
     * the injected limb-darkened transit — the LD layers are the SAME
     * per-layer SQL strings the Spark fixture names as columns
     * (model/LimbDark.scala), so both engines spell one arithmetic
-    * DAG. */
-  private def t13dFixtureSql: String = {
-    import graft.model.LimbDark
+    * DAG. t13g passes its injected coefficients `u` = (u1, u2). */
+  private def t13dFixtureSql(u: Option[(String, String)] = None): String = {
     val PT = LimbDark.D(0.15); val TT = LimbDark.D(1.0)
-    s"""e0 AS (SELECT min(epoch_us(ts)) AS t0 FROM events),
-       |gn AS (SELECT en.ener AS ener, ii.i AS i,
-       |    (i % 65536 * 1103515245 + 12345) % 2147483648 AS r,
-       |    (ii.i * 648000000) % 604800000000 AS ph
-       |  FROM e0, eners en, (SELECT unnest(range(0, 4000)) AS i) ii),
-       |ap AS (SELECT ener, ph, r,
-       |    CASE WHEN phd < 3.5 THEN phd ELSE 7.0 - phd END AS aph
-       |  FROM (SELECT ener, ph, r, CAST(ph AS DOUBLE) / 86400e6 AS phd
-       |        FROM gn) pd),
-       |l1 AS (SELECT ener, ph, r, ${LimbDark.huSql("aph", TT)} AS hu FROM ap),
-       |l2 AS (SELECT ener, ph, r, hu, ${LimbDark.zSql("hu", PT)} AS z FROM l1),
-       |l3 AS (SELECT ener, ph, r, hu,
-       |    ${LimbDark.lamSql("z", PT)} AS lam,
-       |    ${LimbDark.muSql("z", PT)} AS mu FROM l2),
-       |l4 AS (SELECT ener, ph, r, hu, lam, ${LimbDark.izSql("mu")} AS iz FROM l3),
-       |fl AS (SELECT ener, ph,
-       |    ${LimbDark.fluxSql("hu", PT, "iz", "lam")}
-       |      + (CAST(r AS DOUBLE) / 2147483648.0 - 0.5) * 0.004 AS flux
-       |  FROM l4),
-       |bnr AS (SELECT ener, (ph * 200) // 604800000000 AS b, count(*) AS n,
-       |    CAST(sum(CAST(round(flux * 1e6) AS BIGINT)) AS BIGINT) AS sv
-       |  FROM fl GROUP BY 1, 2),
-       |bins AS MATERIALIZED (SELECT ener, b,
-       |    (CAST(b AS DOUBLE) + 0.5) * 7.0 / 200 AS tb,
-       |    CAST(sv AS DOUBLE) / n / 1e6 AS y,
-       |    CAST(round(CAST(sv AS DOUBLE) / n / 1e6 * 1e9) AS BIGINT) AS yq
-       |  FROM bnr)""".stripMargin
+    val (iz, flux) = u match {
+      case None => (s"${LimbDark.izSql("mu")} AS iz", LimbDark.fluxSql("hu", PT, "iz", "lam"))
+      case Some((u1, u2)) => (
+        s"${LimbDark.izSqlU("mu", u1, u2)} AS iz, ${LimbDark.om4SqlU(u1, u2)} AS om4",
+        LimbDark.fluxSqlU("hu", PT, "iz", "lam", "om4"))
+    }
+    t13FrameSql(
+      s"""${ldApSql()},
+         |l1 AS (SELECT ener, ph, r, ${LimbDark.huSql("aph", TT)} AS hu FROM ap),
+         |l2 AS (SELECT ener, ph, r, hu, ${LimbDark.zSql("hu", PT)} AS z FROM l1),
+         |l3 AS (SELECT ener, ph, r, hu,
+         |    ${LimbDark.lamSql("z", PT)} AS lam,
+         |    ${LimbDark.muSql("z", PT)} AS mu FROM l2),
+         |l4 AS (SELECT ener, ph, r, hu, lam, $iz FROM l3),
+         |fl AS (SELECT ener, ph,
+         |    $flux
+         |      + $unitSql * 0.004 AS flux
+         |  FROM l4)""".stripMargin)
   }
 
   /** t13g's fixture: t13d's shape with the INJECTED LD coefficients
     * (u1=0.6, u2=0.1) spelled through the parametrized layer strings
     * — identical per-layer SQL to the Spark fixture columns. */
-  private def t13gFixtureSql: String = {
-    import graft.model.LimbDark
-    val PT = LimbDark.D(0.15); val TT = LimbDark.D(1.0)
-    val U1I = LimbDark.D(0.6); val U2I = LimbDark.D(0.1)
-    s"""e0 AS (SELECT min(epoch_us(ts)) AS t0 FROM events),
-       |gn AS (SELECT en.ener AS ener, ii.i AS i,
-       |    (i % 65536 * 1103515245 + 12345) % 2147483648 AS r,
-       |    (ii.i * 648000000) % 604800000000 AS ph
-       |  FROM e0, eners en, (SELECT unnest(range(0, 4000)) AS i) ii),
-       |ap AS (SELECT ener, ph, r,
-       |    CASE WHEN phd < 3.5 THEN phd ELSE 7.0 - phd END AS aph
-       |  FROM (SELECT ener, ph, r, CAST(ph AS DOUBLE) / 86400e6 AS phd
-       |        FROM gn) pd),
-       |l1 AS (SELECT ener, ph, r, ${LimbDark.huSql("aph", TT)} AS hu FROM ap),
-       |l2 AS (SELECT ener, ph, r, hu, ${LimbDark.zSql("hu", PT)} AS z FROM l1),
-       |l3 AS (SELECT ener, ph, r, hu,
-       |    ${LimbDark.lamSql("z", PT)} AS lam,
-       |    ${LimbDark.muSql("z", PT)} AS mu FROM l2),
-       |l4 AS (SELECT ener, ph, r, hu, lam,
-       |    ${LimbDark.izSqlU("mu", U1I, U2I)} AS iz,
-       |    ${LimbDark.om4SqlU(U1I, U2I)} AS om4 FROM l3),
-       |fl AS (SELECT ener, ph,
-       |    ${LimbDark.fluxSqlU("hu", PT, "iz", "lam", "om4")}
-       |      + (CAST(r AS DOUBLE) / 2147483648.0 - 0.5) * 0.004 AS flux
-       |  FROM l4),
-       |bnr AS (SELECT ener, (ph * 200) // 604800000000 AS b, count(*) AS n,
-       |    CAST(sum(CAST(round(flux * 1e6) AS BIGINT)) AS BIGINT) AS sv
-       |  FROM fl GROUP BY 1, 2),
-       |bins AS MATERIALIZED (SELECT ener, b,
-       |    (CAST(b AS DOUBLE) + 0.5) * 7.0 / 200 AS tb,
-       |    CAST(sv AS DOUBLE) / n / 1e6 AS y,
-       |    CAST(round(CAST(sv AS DOUBLE) / n / 1e6 * 1e9) AS BIGINT) AS yq
-       |  FROM bnr)""".stripMargin
-  }
+  private def t13gFixtureSql: String =
+    t13dFixtureSql(Some((LimbDark.D(0.6), LimbDark.D(0.1))))
 
   /** t13e's fixture: t13's grid + noise with BOTH planets' LD dips
     * (additive, commensurate periods) — layer strings shared with the
     * Spark fixture columns. */
   private def t13eFixtureSql: String = {
-    import graft.model.LimbDark
     val PA = LimbDark.D(0.15); val TA = LimbDark.D(1.0)
     val PB = LimbDark.D(0.11); val TB = LimbDark.D(0.5)
-    s"""e0 AS (SELECT min(epoch_us(ts)) AS t0 FROM events),
-       |gn AS (SELECT en.ener AS ener, ii.i AS i,
-       |    (i % 65536 * 1103515245 + 12345) % 2147483648 AS r,
-       |    (ii.i * 648000000) % 604800000000 AS ph
-       |  FROM e0, eners en, (SELECT unnest(range(0, 4000)) AS i) ii),
-       |ap AS (SELECT ener, ph, r,
-       |    CASE WHEN phd < 3.5 THEN phd ELSE 7.0 - phd END AS aph_a,
-       |    abs((phd - 1.2 + 1.75) % 3.5 - 1.75) AS aph_b
-       |  FROM (SELECT ener, ph, r, CAST(ph AS DOUBLE) / 86400e6 AS phd
-       |        FROM gn) pd),
-       |l1 AS (SELECT ener, ph, r,
-       |    ${LimbDark.huSql("aph_a", TA)} AS hu_a,
-       |    ${LimbDark.huSql("aph_b", TB)} AS hu_b FROM ap),
-       |l2 AS (SELECT ener, ph, r, hu_a, hu_b,
-       |    ${LimbDark.zSql("hu_a", PA)} AS z_a,
-       |    ${LimbDark.zSql("hu_b", PB)} AS z_b FROM l1),
-       |l3 AS (SELECT ener, ph, r, hu_a, hu_b,
-       |    ${LimbDark.lamSql("z_a", PA)} AS lam_a,
-       |    ${LimbDark.muSql("z_a", PA)} AS mu_a,
-       |    ${LimbDark.lamSql("z_b", PB)} AS lam_b,
-       |    ${LimbDark.muSql("z_b", PB)} AS mu_b FROM l2),
-       |l4 AS (SELECT ener, ph, r, hu_a, hu_b, lam_a, lam_b,
-       |    ${LimbDark.izSql("mu_a")} AS iz_a,
-       |    ${LimbDark.izSql("mu_b")} AS iz_b FROM l3),
-       |fl AS (SELECT ener, ph,
-       |    ${LimbDark.fluxSql("hu_a", PA, "iz_a", "lam_a")}
-       |      + ${LimbDark.fluxSql("hu_b", PB, "iz_b", "lam_b")} - 1.0
-       |      + (CAST(r AS DOUBLE) / 2147483648.0 - 0.5) * 0.004 AS flux
-       |  FROM l4),
-       |bnr AS (SELECT ener, (ph * 200) // 604800000000 AS b, count(*) AS n,
-       |    CAST(sum(CAST(round(flux * 1e6) AS BIGINT)) AS BIGINT) AS sv
-       |  FROM fl GROUP BY 1, 2),
-       |bins AS MATERIALIZED (SELECT ener, b,
-       |    (CAST(b AS DOUBLE) + 0.5) * 7.0 / 200 AS tb,
-       |    CAST(sv AS DOUBLE) / n / 1e6 AS y,
-       |    CAST(round(CAST(sv AS DOUBLE) / n / 1e6 * 1e9) AS BIGINT) AS yq
-       |  FROM bnr)""".stripMargin
+    t13FrameSql(
+      s"""${ldApSql("aph_a", ", abs((phd - 1.2 + 1.75) % 3.5 - 1.75) AS aph_b")},
+         |l1 AS (SELECT ener, ph, r,
+         |    ${LimbDark.huSql("aph_a", TA)} AS hu_a,
+         |    ${LimbDark.huSql("aph_b", TB)} AS hu_b FROM ap),
+         |l2 AS (SELECT ener, ph, r, hu_a, hu_b,
+         |    ${LimbDark.zSql("hu_a", PA)} AS z_a,
+         |    ${LimbDark.zSql("hu_b", PB)} AS z_b FROM l1),
+         |l3 AS (SELECT ener, ph, r, hu_a, hu_b,
+         |    ${LimbDark.lamSql("z_a", PA)} AS lam_a,
+         |    ${LimbDark.muSql("z_a", PA)} AS mu_a,
+         |    ${LimbDark.lamSql("z_b", PB)} AS lam_b,
+         |    ${LimbDark.muSql("z_b", PB)} AS mu_b FROM l2),
+         |l4 AS (SELECT ener, ph, r, hu_a, hu_b, lam_a, lam_b,
+         |    ${LimbDark.izSql("mu_a")} AS iz_a,
+         |    ${LimbDark.izSql("mu_b")} AS iz_b FROM l3),
+         |fl AS (SELECT ener, ph,
+         |    ${LimbDark.fluxSql("hu_a", PA, "iz_a", "lam_a")}
+         |      + ${LimbDark.fluxSql("hu_b", PB, "iz_b", "lam_b")} - 1.0
+         |      + $unitSql * 0.004 AS flux
+         |  FROM l4)""".stripMargin)
   }
 
   /** t13f's fixture: the t13 grid with an injected linear-harmonic RV
     * curve (γ + A·s + B·c from the shared rvb basis literals) + t13's
     * LCG noise at ±2 m/s, quantized at 1e3 (mm/s) into 200 fold
     * bins. */
-  private def t13fFixtureSql: String =
-    s"""e0 AS (SELECT min(epoch_us(ts)) AS t0 FROM events),
-       |gn AS (SELECT en.ener AS ener, ii.i AS i,
-       |    (i % 65536 * 1103515245 + 12345) % 2147483648 AS r,
-       |    (ii.i * 648000000) % 604800000000 AS ph
-       |  FROM e0, eners en, (SELECT unnest(range(0, 4000)) AS i) ii),
-       |rv AS (SELECT ener, ph,
+  private def t13fFixtureSql: String = t13FrameSql(
+    s"""rv AS (SELECT ener, ph,
        |    CAST(12.5 AS DOUBLE) + CAST(8.0 AS DOUBLE) * (w.sq / 1e6)
        |      + CAST(-5.0 AS DOUBLE) * (w.cq / 1e6)
-       |      + (CAST(r AS DOUBLE) / 2147483648.0 - 0.5) * 4.0 AS v
-       |  FROM gn JOIN rvb w ON w.b = (ph * 200) // 604800000000),
-       |bnr AS (SELECT ener, (ph * 200) // 604800000000 AS b, count(*) AS n,
-       |    CAST(sum(CAST(round(v * 1e3) AS BIGINT)) AS BIGINT) AS sv
-       |  FROM rv GROUP BY 1, 2),
-       |bins AS MATERIALIZED (SELECT ener, b,
-       |    CAST(sv AS DOUBLE) / n / 1e3 AS y,
-       |    CAST(round(CAST(sv AS DOUBLE) / n / 1e3 * 1e9) AS BIGINT) AS yq
-       |  FROM bnr)""".stripMargin
+       |      + $unitSql * 4.0 AS v
+       |  FROM gn JOIN rvb w ON w.b = (ph * 200) // 604800000000)""".stripMargin,
+    rv = true, tb = false)
 
   /** t13h's fixture: t13f's grid + noise with the injected ECCENTRIC
     * curve joined from the t13hTrue literals (the fixture is data —
     * quantized; the fit model is raw-double). `bins` carries tb so
     * the llq derives each bin's mean anomaly in-place. */
-  private def t13hFixtureSql: String = {
-    val vals = t13hTrue.map { case (b, vq) => s"($b, $vq)" }.mkString(", ")
-    s"""e0 AS (SELECT min(epoch_us(ts)) AS t0 FROM events),
-       |rvt AS (SELECT * FROM (VALUES $vals) AS t(b, vq)),
-       |gn AS (SELECT en.ener AS ener, ii.i AS i,
-       |    (i % 65536 * 1103515245 + 12345) % 2147483648 AS r,
-       |    (ii.i * 648000000) % 604800000000 AS ph
-       |  FROM e0, eners en, (SELECT unnest(range(0, 4000)) AS i) ii),
-       |rv AS (SELECT ener, ph,
-       |    w.vq / 1e6 + (CAST(r AS DOUBLE) / 2147483648.0 - 0.5) * 4.0 AS v
-       |  FROM gn JOIN rvt w ON w.b = (ph * 200) // 604800000000),
-       |bnr AS (SELECT ener, (ph * 200) // 604800000000 AS b, count(*) AS n,
-       |    CAST(sum(CAST(round(v * 1e3) AS BIGINT)) AS BIGINT) AS sv
-       |  FROM rv GROUP BY 1, 2),
-       |bins AS MATERIALIZED (SELECT ener, b,
-       |    (CAST(b AS DOUBLE) + 0.5) * 7.0 / 200 AS tb,
-       |    CAST(sv AS DOUBLE) / n / 1e3 AS y,
-       |    CAST(round(CAST(sv AS DOUBLE) / n / 1e3 * 1e9) AS BIGINT) AS yq
-       |  FROM bnr)""".stripMargin
-  }
+  private def t13hFixtureSql: String = t13FrameSql(
+    s"""rv AS (SELECT ener, ph,
+       |    w.vq / 1e6 + $unitSql * 4.0 AS v
+       |  FROM gn JOIN rvt w ON w.b = (ph * 200) // 604800000000)""".stripMargin,
+    rv = true, lits = "\n" + binValuesSql("rvt", "b, vq", t13hTrue))
 
-  /** t13i's fixture: t13's grid + noise with the injected EXACT-model
-    * curve joined from the t13iTrue literals (the fixture is data —
-    * quantized at 1e9; the FIT models stay raw-double). */
-  private def t13iFixtureSql: String = literalCurveFixtureSql(t13iTrue)
-
-  /** t13k's fixture: same data-literal shape over the injected flare
-    * curve. */
-  private def t13kFixtureSql: String = literalCurveFixtureSql(t13kTrue)
-
-  /** Shared "fixture is data" flux fixture: a 1e9-quantized true
-    * curve at the 200 fold-bin centers joined onto t13's grid + LCG
+  /** t13i's and t13k's "fixture is data" flux fixture: a 1e9-quantized
+    * true curve (t13iTrue: the EXACT occultation; t13kTrue: the
+    * flare) at the 200 fold-bin centers joined onto t13's grid + LCG
     * noise, binned with t13's 1e6 flux quantization. */
-  private def literalCurveFixtureSql(trueVals: Seq[(Long, Long)]): String = {
-    val vals = trueVals.map { case (b, q) => s"($b, $q)" }.mkString(", ")
-    s"""e0 AS (SELECT min(epoch_us(ts)) AS t0 FROM events),
-       |ftr AS (SELECT * FROM (VALUES $vals) AS t(b, fxq)),
-       |gn AS (SELECT en.ener AS ener, ii.i AS i,
-       |    (i % 65536 * 1103515245 + 12345) % 2147483648 AS r,
-       |    (ii.i * 648000000) % 604800000000 AS ph
-       |  FROM e0, eners en, (SELECT unnest(range(0, 4000)) AS i) ii),
-       |fl AS (SELECT ener, ph,
-       |    w.fxq / 1e9 + (CAST(r AS DOUBLE) / 2147483648.0 - 0.5) * 0.004 AS flux
-       |  FROM gn JOIN ftr w ON w.b = (ph * 200) // 604800000000),
-       |bnr AS (SELECT ener, (ph * 200) // 604800000000 AS b, count(*) AS n,
-       |    CAST(sum(CAST(round(flux * 1e6) AS BIGINT)) AS BIGINT) AS sv
-       |  FROM fl GROUP BY 1, 2),
-       |bins AS MATERIALIZED (SELECT ener, b,
-       |    (CAST(b AS DOUBLE) + 0.5) * 7.0 / 200 AS tb,
-       |    CAST(sv AS DOUBLE) / n / 1e6 AS y,
-       |    CAST(round(CAST(sv AS DOUBLE) / n / 1e6 * 1e9) AS BIGINT) AS yq
-       |  FROM bnr)""".stripMargin
-  }
-
-  private def t13FixtureSql(perEner: Boolean): String = {
-    val rExpr =
-      if (perEner) "((i + ener * 7919) % 65536 * 1103515245 + 12345) % 2147483648"
-      else "(i % 65536 * 1103515245 + 12345) % 2147483648"
-    val depthExpr =
-      if (perEner) "CAST(0.015 AS DOUBLE) + ener * CAST(0.003 AS DOUBLE)"
-      else "CAST(0.03 AS DOUBLE)"
-    s"""e0 AS (SELECT min(epoch_us(ts)) AS t0 FROM events),
-       |gn AS (SELECT en.ener AS ener, ii.i AS i,
-       |    $rExpr AS r,
-       |    (ii.i * 648000000) % 604800000000 AS ph
-       |  FROM e0, eners en, (SELECT unnest(range(0, 4000)) AS i) ii),
-       |fl AS (SELECT ener, ph,
-       |    1.0 - (CASE WHEN ph < 43200000000 OR ph > 561600000000
-       |                THEN $depthExpr ELSE CAST(0.0 AS DOUBLE) END)
-       |        + (CAST(r AS DOUBLE) / 2147483648.0 - 0.5) * 0.004 AS flux
-       |  FROM gn),
-       |bnr AS (SELECT ener, (ph * 200) // 604800000000 AS b, count(*) AS n,
-       |    CAST(sum(CAST(round(flux * 1e6) AS BIGINT)) AS BIGINT) AS sv
-       |  FROM fl GROUP BY 1, 2),
-       |bins AS MATERIALIZED (SELECT ener, b,
-       |    (CAST(b AS DOUBLE) + 0.5) * 7.0 / 200 AS tb,
-       |    CAST(sv AS DOUBLE) / n / 1e6 AS y,
-       |    CAST(round(CAST(sv AS DOUBLE) / n / 1e6 * 1e9) AS BIGINT) AS yq
-       |  FROM bnr)""".stripMargin
-  }
+  private def literalCurveFixtureSql(trueVals: Seq[(Long, Long)]): String = t13FrameSql(
+    s"""fl AS (SELECT ener, ph,
+       |    w.fxq / 1e9 + $unitSql * 0.004 AS flux
+       |  FROM gn JOIN ftr w ON w.b = (ph * 200) // 604800000000)""".stripMargin,
+    lits = "\n" + binValuesSql("ftr", "b, fxq", trueVals))
 
   /** t13m's injected per-transit timing offsets (µs), k = 1..4:
     * round(A·sin(2πk/5)) with A = 3 780 000 000 µs = 63 min — one
@@ -2018,23 +1710,8 @@ object Advanced {
 
   val oracle: Map[String, String] = Map(
     "t13_mcmc_fit" ->
-      s"""${mcmcSamplerSql("SELECT CAST(0 AS BIGINT) AS ener",
-                           t13FixtureSql(perEner = false), 42L)}
-         |SELECT * FROM (
-         |  SELECT 'acceptance' AS param, a AS p16, a AS p50, a AS p84 FROM accr
-         |  UNION ALL
-         |  SELECT 'depth', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc0
-         |  UNION ALL
-         |  SELECT 'dur', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc2
-         |  UNION ALL
-         |  SELECT 'epoch', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc1
-         |) ORDER BY param""".stripMargin,
+      s"""${mcmcSamplerSql(t13FixtureSql(perEner = false))}
+         |${posteriorSql(Seq("depth" -> 0, "dur" -> 2, "epoch" -> 1))}""".stripMargin,
 
     // The GP walk replay: same recursive sampler CTE, the likelihood
     // subquery swapped for the steady-state innovation filter — the
@@ -2044,15 +1721,11 @@ object Advanced {
     // join+aggregate.
     "t13c_mcmc_gp" -> {
       val (cq, scale) = t13cGp
-      def D(x: Double) = s"CAST($x AS DOUBLE)"
       val wtsVals = cq.zipWithIndex
         .map { case (c, i) => s"(${i + 1}, $c)" }.mkString(", ")
       val gpLlq: (String, String) => String = (al, p) => {
-        def mdl2(ba: String) =
-          s"(1.0 - $al.${p}0 * (CASE WHEN abs(fmod($ba.tb - $al.${p}1 + 3.5, 7.0) - 3.5)" +
-          s" < $al.${p}2 / 2 THEN ${D(1.0)} ELSE ${D(0.0)} END))"
         def rq(ba: String) =
-          s"CAST(round(($ba.y - ${mdl2(ba)}) * 1e8) AS BIGINT)"
+          s"CAST(round(($ba.y - ${boxMdlSql(al, p, ba)}) * 1e8) AS BIGINT)"
         s"(SELECT CAST(-sum(CAST(round((CAST(nuq AS DOUBLE) / 1e14)" +
         s" * (CAST(nuq AS DOUBLE) / 1e14) * ${D(scale)}) AS BIGINT)) AS BIGINT)" +
         s" FROM (SELECT max(${rq("bb")}) * 1000000" +
@@ -2061,68 +1734,22 @@ object Advanced {
         s" LEFT JOIN bins b2 ON b2.ener = bb.ener AND b2.b = bb.b - w.l" +
         s" WHERE bb.ener = $al.ener GROUP BY bb.b) nn)"
       }
-      s"""${mcmcSamplerSql("SELECT CAST(0 AS BIGINT) AS ener",
-                           t13cFixtureSql, 42L, nW = 50, nSteps = 60,
-                           llqGen = Some(gpLlq),
+      s"""${mcmcSamplerSql(t13cFixtureSql, nW = 50, nSteps = 60, llq = gpLlq,
                            extraCte = s"""
 wts AS (SELECT * FROM (VALUES $wtsVals) AS t(l, cq)),""")}
-         |SELECT * FROM (
-         |  SELECT 'acceptance' AS param, a AS p16, a AS p50, a AS p84 FROM accr
-         |  UNION ALL
-         |  SELECT 'depth', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc0
-         |  UNION ALL
-         |  SELECT 'dur', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc2
-         |  UNION ALL
-         |  SELECT 'epoch', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc1
-         |) ORDER BY param""".stripMargin
+         |${posteriorSql(Seq("depth" -> 0, "dur" -> 2, "epoch" -> 1))}""".stripMargin
     },
 
     // The LD walk replay: same recursive sampler CTE; the likelihood
-    // subquery evaluates the full limb-darkened model INLINE (the
-    // same per-layer strings composed by substitution —
-    // LimbDark.fluxInlineSql — so the arithmetic DAG matches the
-    // engine's layered columns and Ensemble.ldBoxLlq bit-for-bit);
-    // the guess converts window depth to a radius ratio with the
-    // identical √/max shape the Scala side applies after boxGuessQ.
-    "t13d_mcmc_ld" -> {
-      import graft.model.LimbDark
-      val ldLlq: (String, String) => String = (al, p) => {
-        val aph = s"abs(fmod(bb.tb - $al.${p}1 + 3.5, 7.0) - 3.5)"
-        s"(SELECT CAST(-sum(CAST(round((yy - mm) * (yy - mm) * 3.125e12)" +
-        s" AS BIGINT)) AS BIGINT) FROM (SELECT bb.y AS yy, " +
-        LimbDark.fluxInlineSql(aph, s"$al.${p}0", s"$al.${p}2") +
-        s" AS mm FROM bins bb WHERE bb.ener = $al.ener) qq)"
-      }
-      val g0 = s"sqrt(GREATEST($mcmcDepthG0 * ${LimbDark.D(LimbDark.KK)}, " +
-        s"${LimbDark.D(4e-4)}))"
-      s"""${mcmcSamplerSql("SELECT CAST(0 AS BIGINT) AS ener",
-                           t13dFixtureSql, 42L,
-                           llqGen = Some(ldLlq),
-                           los = Seq(0.02, -3.5, 0.2),
-                           his = Seq(0.45, 3.5, 2.0),
-                           g0Sql = Some(g0))}
-         |SELECT * FROM (
-         |  SELECT 'acceptance' AS param, a AS p16, a AS p50, a AS p84 FROM accr
-         |  UNION ALL
-         |  SELECT 'dur', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc2
-         |  UNION ALL
-         |  SELECT 'epoch', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc1
-         |  UNION ALL
-         |  SELECT 'rrat', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc0
-         |) ORDER BY param""".stripMargin
-    },
+    // subquery evaluates the full limb-darkened model INLINE
+    // (ldLlqSql — Ensemble.ldBoxLlq bit-for-bit); the guess converts
+    // window depth to a radius ratio with the identical √/max shape
+    // the Scala side applies after boxGuessQ.
+    "t13d_mcmc_ld" ->
+      s"""${mcmcSamplerSql(t13dFixtureSql(), llq = ldLlq,
+                           los = Seq(0.02, -3.5, 0.2), his = Seq(0.45, 3.5, 2.0),
+                           gxBlockSql = Some(boxGxSql(ldG0Sql)))}
+         |${posteriorSql(Seq("dur" -> 2, "epoch" -> 1, "rrat" -> 0))}""".stripMargin,
 
     // The 5-dimensional LD-coefficient walk replay (r9): the same
     // recursive sampler with the PARAMETRIZED limb-darkened model
@@ -2130,8 +1757,7 @@ wts AS (SELECT * FROM (VALUES $wtsVals) AS t(l, cq)),""")}
     // and a gx block seeding the coefficients at the mid-prior
     // constants.
     "t13g_mcmc_ldfit" -> {
-      import graft.model.LimbDark
-      val ldLlq: (String, String) => String = (al, p) => {
+      val ldLlqU: (String, String) => String = (al, p) => {
         val aph = s"abs(fmod(bb.tb - $al.${p}1 + 3.5, 7.0) - 3.5)"
         s"(SELECT CAST(-sum(CAST(round((yy - mm) * (yy - mm) * 3.125e12)" +
         s" AS BIGINT)) AS BIGINT) FROM (SELECT bb.y AS yy, " +
@@ -2139,56 +1765,13 @@ wts AS (SELECT * FROM (VALUES $wtsVals) AS t(l, cq)),""")}
           s"$al.${p}3", s"$al.${p}4") +
         s" AS mm FROM bins bb WHERE bb.ener = $al.ener) qq)"
       }
-      val gxBlock =
-        s"""gw AS (SELECT c.ener AS ener, c.b AS c, CAST(sum(b2.yq) AS BIGINT) AS w
-           |  FROM bins c
-           |  CROSS JOIN (SELECT unnest(range(-14, 15)) AS kk) o
-           |  JOIN bins b2 ON b2.ener = c.ener
-           |    AND b2.b = ((c.b + o.kk) % 200 + 200) % 200
-           |  GROUP BY 1, 2),
-           |best AS (SELECT ener, c, w FROM (
-           |    SELECT ener, c, w,
-           |      row_number() OVER (PARTITION BY ener ORDER BY w ASC, c ASC) AS rw
-           |    FROM gw) WHERE rw = 1),
-           |sall AS (SELECT ener, CAST(sum(yq) AS BIGINT) AS sa FROM bins GROUP BY 1),
-           |gx AS (SELECT best.ener AS ener,
-           |    sqrt(GREATEST($mcmcDepthG0 * ${LimbDark.D(LimbDark.KK)}, ${LimbDark.D(4e-4)})) AS g0,
-           |    CASE WHEN (CAST(c AS DOUBLE) + 0.5) * 7.0 / 200 >= 3.5
-           |         THEN (CAST(c AS DOUBLE) + 0.5) * 7.0 / 200 - 7.0
-           |         ELSE (CAST(c AS DOUBLE) + 0.5) * 7.0 / 200 END AS g1,
-           |    ${LimbDark.D(1.0)} AS g2,
-           |    ${LimbDark.D(LimbDark.U1)} AS g3,
-           |    ${LimbDark.D(LimbDark.U2)} AS g4
-           |  FROM best JOIN sall ON sall.ener = best.ener)""".stripMargin
-      s"""${mcmcSamplerSql("SELECT CAST(0 AS BIGINT) AS ener",
-                           t13gFixtureSql, 42L, nW = 50, nSteps = 300,
-                           llqGen = Some(ldLlq),
+      val gxBlock = boxGxSql(ldG0Sql,
+        s"${D(1.0)} AS g2, ${D(LimbDark.U1)} AS g3, ${D(LimbDark.U2)} AS g4")
+      s"""${mcmcSamplerSql(t13gFixtureSql, nW = 50, nSteps = 300, llq = ldLlqU,
                            los = Seq(0.02, -3.5, 0.2, 0.0, -0.3),
                            his = Seq(0.45, 3.5, 2.0, 1.2, 0.7),
                            gxBlockSql = Some(gxBlock))}
-         |SELECT * FROM (
-         |  SELECT 'acceptance' AS param, a AS p16, a AS p50, a AS p84 FROM accr
-         |  UNION ALL
-         |  SELECT 'dur', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc2
-         |  UNION ALL
-         |  SELECT 'epoch', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc1
-         |  UNION ALL
-         |  SELECT 'rrat', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc0
-         |  UNION ALL
-         |  SELECT 'u1', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc3
-         |  UNION ALL
-         |  SELECT 'u2', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc4
-         |) ORDER BY param""".stripMargin
+         |${posteriorSql(Seq("dur" -> 2, "epoch" -> 1, "rrat" -> 0, "u1" -> 3, "u2" -> 4))}""".stripMargin
     },
 
     // The 4-dimensional two-planet walk replay: the nd-generalized
@@ -2196,7 +1779,6 @@ wts AS (SELECT * FROM (VALUES $wtsVals) AS t(l, cq)),""")}
     // custom two-window gx block (deepest window = planet a; deepest
     // window at circular distance > 28 bins = planet b).
     "t13e_mcmc_ld2" -> {
-      import graft.model.LimbDark
       val ld2: (String, String) => String = (al, p) => {
         val aphA = s"abs(fmod(bb.tb - $al.${p}1 + 3.5, 7.0) - 3.5)"
         val aphB = s"abs(fmod(bb.tb - $al.${p}3 + 1.75, 3.5) - 1.75)"
@@ -2206,10 +1788,6 @@ wts AS (SELECT * FROM (VALUES $wtsVals) AS t(l, cq)),""")}
         s" AS BIGINT)) AS BIGINT) FROM (SELECT bb.y AS yy, " +
         s"$fa + $fb - 1.0 AS mm FROM bins bb WHERE bb.ener = $al.ener) qq)"
       }
-      def dep(w: String) =
-        s"(CAST(sa AS DOUBLE) / 200 - CAST($w AS DOUBLE) / 29) / 1e9"
-      def rr(w: String) =
-        s"sqrt(GREATEST(${dep(w)} * ${LimbDark.D(LimbDark.KK)}, ${LimbDark.D(4e-4)}))"
       val gxBlock =
         s"""gw AS (SELECT c.ener AS ener, c.b AS c, CAST(sum(b2.yq) AS BIGINT) AS w
            |  FROM bins c
@@ -2227,41 +1805,21 @@ wts AS (SELECT * FROM (VALUES $wtsVals) AS t(l, cq)),""")}
            |    FROM gw g JOIN b1 ON b1.ener = g.ener
            |    WHERE LEAST(abs(g.c - b1.c), 200 - abs(g.c - b1.c)) > 28)
            |  WHERE rw = 1),
-           |sall AS (SELECT ener, CAST(sum(yq) AS BIGINT) AS sa FROM bins GROUP BY 1),
+           |$sallSql,
            |gx AS (SELECT b1.ener AS ener,
-           |    ${rr("b1.w")} AS g0,
+           |    ${ldG0Sql(windowDepthSql("b1.w"))} AS g0,
            |    CASE WHEN (CAST(b1.c AS DOUBLE) + 0.5) * 7.0 / 200 >= 3.5
            |         THEN (CAST(b1.c AS DOUBLE) + 0.5) * 7.0 / 200 - 7.0
            |         ELSE (CAST(b1.c AS DOUBLE) + 0.5) * 7.0 / 200 END AS g1,
-           |    ${rr("b2w.w")} AS g2,
+           |    ${ldG0Sql(windowDepthSql("b2w.w"))} AS g2,
            |    fmod((CAST(b2w.c AS DOUBLE) + 0.5) * 7.0 / 200 + 1.75, 3.5) - 1.75 AS g3
            |  FROM b1 JOIN b2w ON b2w.ener = b1.ener
            |  JOIN sall ON sall.ener = b1.ener)""".stripMargin
-      s"""${mcmcSamplerSql("SELECT CAST(0 AS BIGINT) AS ener",
-                           t13eFixtureSql, 42L, nW = 50, nSteps = 300,
-                           llqGen = Some(ld2),
+      s"""${mcmcSamplerSql(t13eFixtureSql, nW = 50, nSteps = 300, llq = ld2,
                            los = Seq(0.02, -3.5, 0.02, -1.75),
                            his = Seq(0.45, 3.5, 0.45, 1.75),
                            gxBlockSql = Some(gxBlock))}
-         |SELECT * FROM (
-         |  SELECT 'acceptance' AS param, a AS p16, a AS p50, a AS p84 FROM accr
-         |  UNION ALL
-         |  SELECT 'epoch_a', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc1
-         |  UNION ALL
-         |  SELECT 'epoch_b', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc3
-         |  UNION ALL
-         |  SELECT 'rrat_a', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc0
-         |  UNION ALL
-         |  SELECT 'rrat_b', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc2
-         |) ORDER BY param""".stripMargin
+         |${posteriorSql(Seq("epoch_a" -> 1, "epoch_b" -> 3, "rrat_a" -> 0, "rrat_b" -> 2))}""".stripMargin
     },
 
     // The RV walk replay: the same recursive sampler CTE with the
@@ -2269,48 +1827,24 @@ wts AS (SELECT * FROM (VALUES $wtsVals) AS t(l, cq)),""")}
     // literals the engine derived) and the exact Fourier-projection
     // gx block.
     "t13f_mcmc_rv" -> {
-      val rvbVals = rvBasis
-        .map { case (b, sq, cq) => s"($b, $sq, $cq)" }.mkString(", ")
       val rvLlq: (String, String) => String = (al, p) =>
         s"(SELECT CAST(-sum(CAST(round((yy - mm) * (yy - mm) * 7.4e6)" +
         s" AS BIGINT)) AS BIGINT) FROM (SELECT bb.y AS yy, " +
         s"$al.${p}0 + $al.${p}1 * (w.sq / 1e6) + $al.${p}2 * (w.cq / 1e6) AS mm" +
         s" FROM bins bb JOIN rvb w ON w.b = bb.b WHERE bb.ener = $al.ener) qq)"
       val gxBlock =
-        """sall AS (SELECT ener, CAST(sum(yq) AS BIGINT) AS sa, count(*) AS nb
-          |  FROM bins GROUP BY 1),
-          |proj AS (SELECT bb.ener AS ener,
-          |    CAST(sum(bb.yq * w.sq) AS BIGINT) AS ps,
-          |    CAST(sum(bb.yq * w.cq) AS BIGINT) AS pc
-          |  FROM bins bb JOIN rvb w ON w.b = bb.b GROUP BY 1),
-          |gx AS (SELECT sall.ener AS ener,
-          |    CAST(sa AS DOUBLE) / 200 / 1e9 AS g0,
-          |    2.0 * (CAST(ps AS DOUBLE) / 200 / 1e15) AS g1,
-          |    2.0 * (CAST(pc AS DOUBLE) / 200 / 1e15) AS g2
-          |  FROM sall JOIN proj ON proj.ener = sall.ener)""".stripMargin
-      s"""${mcmcSamplerSql("SELECT CAST(0 AS BIGINT) AS ener",
-                           t13fFixtureSql, 42L,
-                           llqGen = Some(rvLlq),
-                           extraCte = s"""
-rvb AS (SELECT * FROM (VALUES $rvbVals) AS t(b, sq, cq)),""",
-                           los = Seq(0.0, -15.0, -15.0),
-                           his = Seq(25.0, 15.0, 15.0),
+        s"""sall AS (SELECT ener, CAST(sum(yq) AS BIGINT) AS sa, count(*) AS nb
+           |  FROM bins GROUP BY 1),
+           |$rvProjSql,
+           |gx AS (SELECT sall.ener AS ener,
+           |    CAST(sa AS DOUBLE) / 200 / 1e9 AS g0,
+           |    2.0 * (CAST(ps AS DOUBLE) / 200 / 1e15) AS g1,
+           |    2.0 * (CAST(pc AS DOUBLE) / 200 / 1e15) AS g2
+           |  FROM sall JOIN proj ON proj.ener = sall.ener)""".stripMargin
+      s"""${mcmcSamplerSql(t13fFixtureSql, llq = rvLlq, extraCte = rvbSql,
+                           los = Seq(0.0, -15.0, -15.0), his = Seq(25.0, 15.0, 15.0),
                            gxBlockSql = Some(gxBlock))}
-         |SELECT * FROM (
-         |  SELECT 'acceptance' AS param, a AS p16, a AS p50, a AS p84 FROM accr
-         |  UNION ALL
-         |  SELECT 'amp_cos', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc2
-         |  UNION ALL
-         |  SELECT 'amp_sin', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc1
-         |  UNION ALL
-         |  SELECT 'gamma', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc0
-         |) ORDER BY param""".stripMargin
+         |${posteriorSql(Seq("amp_cos" -> 2, "amp_sin" -> 1, "gamma" -> 0))}""".stripMargin
     },
 
     // The eccentric-RV walk replay (r9): the nd sampler with the
@@ -2326,7 +1860,7 @@ rvb AS (SELECT * FROM (VALUES $rvbVals) AS t(b, sq, cq)),""",
         // the correlation is one level deep and every Newton layer
         // references plain columns — kind to the optimizer
         val inner = s"SELECT bb.y AS yy, " +
-          s"${Kepler.D(Kepler.TWOPI)} * (bb.tb / 7.0) AS m, " +
+          s"${D(Kepler.TWOPI)} * (bb.tb / 7.0) AS m, " +
           s"$gamma AS pg, $kAmp AS pk, $e AS pe, $omega AS po " +
           s"FROM bins bb WHERE bb.ener = $ener"
         val nested = Kepler.rvNestedSql(inner, "m",
@@ -2337,13 +1871,10 @@ rvb AS (SELECT * FROM (VALUES $rvbVals) AS t(b, sq, cq)),""",
       val eccLlq: (String, String) => String = (al, p) =>
         modelLlq(s"$al.${p}0", s"$al.${p}1", s"$al.${p}2", s"$al.${p}3",
           s"$al.ener")
-      val wVals = t13hOmegaGrid.map(w => s"(${Kepler.D(w)})").mkString(", ")
+      val wVals = t13hOmegaGrid.map(w => s"(${D(w)})").mkString(", ")
       val gxBlock =
-        s"""sall AS (SELECT ener, CAST(sum(yq) AS BIGINT) AS sa FROM bins GROUP BY 1),
-           |proj AS (SELECT bb.ener AS ener,
-           |    CAST(sum(bb.yq * w.sq) AS BIGINT) AS ps,
-           |    CAST(sum(bb.yq * w.cq) AS BIGINT) AS pc
-           |  FROM bins bb JOIN rvb w ON w.b = bb.b GROUP BY 1),
+        s"""$sallSql,
+           |$rvProjSql,
            |g0a AS (SELECT sall.ener AS ener,
            |    CAST(sa AS DOUBLE) / 200 / 1e9 AS gg,
            |    2.0 * (CAST(pc AS DOUBLE) / 200 / 1e15) AS ac,
@@ -2352,43 +1883,21 @@ rvb AS (SELECT * FROM (VALUES $rvbVals) AS t(b, sq, cq)),""",
            |g0k AS (SELECT ener, gg, sqrt(ac * ac + asq * asq) AS kk FROM g0a),
            |wc AS (SELECT * FROM (VALUES $wVals) AS t(w)),
            |wll AS (SELECT g.ener AS ener, wc.w AS w,
-           |    ${modelLlq("g.gg", "g.kk", Kepler.D(0.1), "wc.w", "g.ener")} AS ll
+           |    ${modelLlq("g.gg", "g.kk", D(0.1), "wc.w", "g.ener")} AS ll
            |  FROM g0k g, wc),
            |wbest AS (SELECT ener, w FROM (
            |    SELECT ener, w, ll,
            |      row_number() OVER (PARTITION BY ener ORDER BY ll DESC, w ASC) AS rw
            |    FROM wll) WHERE rw = 1),
            |gx AS (SELECT g.ener AS ener, g.gg AS g0, g.kk AS g1,
-           |    ${Kepler.D(0.1)} AS g2, wbest.w AS g3
+           |    ${D(0.1)} AS g2, wbest.w AS g3
            |  FROM g0k g JOIN wbest ON wbest.ener = g.ener)""".stripMargin
-      s"""${mcmcSamplerSql("SELECT CAST(0 AS BIGINT) AS ener",
-                           t13hFixtureSql, 42L, nW = 50, nSteps = 300,
-                           llqGen = Some(eccLlq),
-                           extraCte = s"""
-rvb AS (SELECT * FROM (VALUES ${rvBasis
-        .map { case (b, sq, cq) => s"($b, $sq, $cq)" }.mkString(", ")}) AS t(b, sq, cq)),""",
+      s"""${mcmcSamplerSql(t13hFixtureSql, nW = 50, nSteps = 300, llq = eccLlq,
+                           extraCte = rvbSql,
                            los = Seq(0.0, 0.0, 0.0, -Kepler.PI),
                            his = Seq(25.0, 20.0, 0.6, Kepler.PI),
                            gxBlockSql = Some(gxBlock))}
-         |SELECT * FROM (
-         |  SELECT 'acceptance' AS param, a AS p16, a AS p50, a AS p84 FROM accr
-         |  UNION ALL
-         |  SELECT 'ecc', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc2
-         |  UNION ALL
-         |  SELECT 'gamma', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc0
-         |  UNION ALL
-         |  SELECT 'k_amp', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc1
-         |  UNION ALL
-         |  SELECT 'omega', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc3
-         |) ORDER BY param""".stripMargin
+         |${posteriorSql(Seq("ecc" -> 2, "gamma" -> 0, "k_amp" -> 1, "omega" -> 3))}""".stripMargin
     },
 
     // The exact-occultation walk replay (r10): TWO complete sampler
@@ -2402,7 +1911,7 @@ rvb AS (SELECT * FROM (VALUES ${rvBasis
     // is the bit-identical double chain Ensemble.ldxLlq runs on the
     // driver. The approx block is byte-for-byte t13d's inline llq.
     "t13i_mcmc_ldx" -> {
-      import graft.model.{LimbDark, LimbDarkExact => LX}
+      import graft.model.{LimbDarkExact => LX}
       val nodesCte = s"""
 nodes AS (SELECT unnest(range(0, $t13iNFit)) AS j),"""
       val ldxLlq: (String, String) => String = (al, p) => {
@@ -2429,44 +1938,19 @@ nodes AS (SELECT unnest(range(0, $t13iNFit)) AS j),"""
         q = s"SELECT yy, ${LX.fluxSql("hu", "ain", "sq")} AS fx FROM ($q) x16"
         s"(SELECT CAST(-sum(CAST(round((yy - fx) * (yy - fx) * 3.125e12) AS BIGINT)) AS BIGINT) FROM ($q) x17)"
       }
-      val ldaLlq: (String, String) => String = (al, p) => {
-        val aph = s"abs(fmod(bb.tb - $al.${p}1 + 3.5, 7.0) - 3.5)"
-        s"(SELECT CAST(-sum(CAST(round((yy - mm) * (yy - mm) * 3.125e12)" +
-        s" AS BIGINT)) AS BIGINT) FROM (SELECT bb.y AS yy, " +
-        LimbDark.fluxInlineSql(aph, s"$al.${p}0", s"$al.${p}2") +
-        s" AS mm FROM bins bb WHERE bb.ener = $al.ener) qq)"
-      }
-      val g0 = s"sqrt(GREATEST($mcmcDepthG0 * ${LimbDark.D(LimbDark.KK)}, " +
-        s"${LimbDark.D(4e-4)}))"
-      def rowsFor(sfx: String) =
-        s"""SELECT 'acceptance_$sfx' AS param, a AS p16, a AS p50, a AS p84 FROM accr
-           |UNION ALL
-           |SELECT 'dur_$sfx', max(CASE WHEN q < 0.3 THEN v END),
-           |    max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-           |    max(CASE WHEN q > 0.7 THEN v END) FROM pc2
-           |UNION ALL
-           |SELECT 'epoch_$sfx', max(CASE WHEN q < 0.3 THEN v END),
-           |    max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-           |    max(CASE WHEN q > 0.7 THEN v END) FROM pc1
-           |UNION ALL
-           |SELECT 'rrat_$sfx', max(CASE WHEN q < 0.3 THEN v END),
-           |    max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-           |    max(CASE WHEN q > 0.7 THEN v END) FROM pc0""".stripMargin
       def block(llq: (String, String) => String, extra: String, sfx: String) =
-        s"""${mcmcSamplerSql("SELECT CAST(0 AS BIGINT) AS ener",
-                             t13iFixtureSql, 42L, nW = 50, nSteps = 150,
-                             llqGen = Some(llq), extraCte = extra,
-                             los = Seq(0.02, -3.5, 0.2),
-                             his = Seq(0.45, 3.5, 2.0),
-                             g0Sql = Some(g0))}
-           |${rowsFor(sfx)}""".stripMargin
+        s"""${mcmcSamplerSql(literalCurveFixtureSql(t13iTrue), nW = 50, nSteps = 150,
+                             llq = llq, extraCte = extra,
+                             los = Seq(0.02, -3.5, 0.2), his = Seq(0.45, 3.5, 2.0),
+                             gxBlockSql = Some(boxGxSql(ldG0Sql)))}
+           |${posteriorRowsSql(Seq("dur" -> 2, "epoch" -> 1, "rrat" -> 0), sfx)}""".stripMargin
       s"""SELECT * FROM (
          |SELECT * FROM (
-         |${block(ldxLlq, nodesCte, "exact")}
+         |${block(ldxLlq, nodesCte, "_exact")}
          |) qx
          |UNION ALL
          |SELECT * FROM (
-         |${block(ldaLlq, "", "approx")}
+         |${block(ldLlq, "", "_approx")}
          |) qa
          |) ORDER BY param""".stripMargin
     },
@@ -2480,22 +1964,11 @@ nodes AS (SELECT unnest(range(0, $t13iNFit)) AS j),"""
     // sorted lists from 4 per-position rows — op-for-op
     // Ensemble.nelderMeadQ.
     "t13j_opti" -> {
-      import graft.model.LimbDark
       val dims = 0 until 3
       val los = Seq(0.02, -3.5, 0.2); val his = Seq(0.45, 3.5, 2.0)
       val nIter = 120
-      def D(x: Double) = s"CAST($x AS DOUBLE)"
       def clampD(d: Int, v: String) =
         s"LEAST(${D(his(d))}, GREATEST(${D(los(d))}, $v))"
-      def llqAt(a: String, c0: String, c1: String, c2: String) = {
-        val aph = s"abs(fmod(bb.tb - $a.$c1 + 3.5, 7.0) - 3.5)"
-        s"(SELECT CAST(-sum(CAST(round((yy - mm) * (yy - mm) * 3.125e12)" +
-        s" AS BIGINT)) AS BIGINT) FROM (SELECT bb.y AS yy, " +
-        LimbDark.fluxInlineSql(aph, s"$a.$c0", s"$a.$c2") +
-        s" AS mm FROM bins bb WHERE bb.ener = $a.ener) qq)"
-      }
-      val g0 = s"sqrt(GREATEST($mcmcDepthG0 * ${LimbDark.D(LimbDark.KK)}, " +
-        s"${LimbDark.D(4e-4)}))"
       // initial simplex: vertex k displaces coordinate k−1 by
       // 0.05·(hi−lo), clamped; others sit at the guess
       def v0(d: Int) =
@@ -2522,30 +1995,13 @@ nodes AS (SELECT unnest(range(0, $t13iNFit)) AS j),"""
         s" WHEN l7.npos <= 3 THEN l7.w${d}s[l7.npos] ELSE l7.nv$d END AS o$d"
       s"""WITH RECURSIVE
          |eners AS (SELECT CAST(0 AS BIGINT) AS ener),
-         |${t13dFixtureSql},
-         |gw AS (SELECT c.ener AS ener, c.b AS c, CAST(sum(b2.yq) AS BIGINT) AS w
-         |  FROM bins c
-         |  CROSS JOIN (SELECT unnest(range(-14, 15)) AS kk) o
-         |  JOIN bins b2 ON b2.ener = c.ener
-         |    AND b2.b = ((c.b + o.kk) % 200 + 200) % 200
-         |  GROUP BY 1, 2),
-         |best AS (SELECT ener, c, w FROM (
-         |    SELECT ener, c, w,
-         |      row_number() OVER (PARTITION BY ener ORDER BY w ASC, c ASC) AS rw
-         |    FROM gw) WHERE rw = 1),
-         |sall AS (SELECT ener, CAST(sum(yq) AS BIGINT) AS sa FROM bins GROUP BY 1),
-         |gx AS (SELECT best.ener AS ener,
-         |    $g0 AS g0,
-         |    CASE WHEN (CAST(c AS DOUBLE) + 0.5) * 7.0 / 200 >= 3.5
-         |         THEN (CAST(c AS DOUBLE) + 0.5) * 7.0 / 200 - 7.0
-         |         ELSE (CAST(c AS DOUBLE) + 0.5) * 7.0 / 200 END AS g1,
-         |    ${D(1.0)} AS g2
-         |  FROM best JOIN sall ON sall.ener = best.ener),
+         |${t13dFixtureSql()},
+         |${boxGxSql(ldG0Sql)},
          |sim0 AS (SELECT gx.ener AS ener, p.k AS pos,
          |    ${dims.map(d => s"${v0(d)} AS v$d").mkString(",\n    ")}
          |  FROM gx CROSS JOIN (SELECT unnest(range(0, 4)) AS k) p),
          |sim0l AS (SELECT ener, pos, v0, v1, v2,
-         |    ${llqAt("s0", "v0", "v1", "v2")} AS ll
+         |    ${ldLlqSql("s0", "v0", "v1", "v2")} AS ll
          |  FROM sim0 s0),
          |nm AS (
          |  SELECT ener, 0 AS step,
@@ -2562,7 +2018,7 @@ nodes AS (SELECT unnest(range(0, $t13iNFit)) AS j),"""
          |        CASE WHEN l7.shrink THEN (CASE WHEN l7.npos = 1 THEN l7.ll1 ELSE l7.sll END)
          |             WHEN l7.npos <= 3 THEN l7.lls[l7.npos] ELSE l7.nll END AS oll
          |    FROM (
-         |      SELECT l6.*, ${llqAt("l6", "sv0", "sv1", "sv2")} AS sll
+         |      SELECT l6.*, ${ldLlqSql("l6", "sv0", "sv1", "sv2")} AS sll
          |      FROM (
          |        SELECT l5.ener AS ener, l5.step AS step, pp.k AS npos,
          |            ${dims.map(d => s"l5.w${d}s AS w${d}s").mkString(", ")}, l5.lls AS lls,
@@ -2577,10 +2033,10 @@ nodes AS (SELECT unnest(range(0, $t13iNFit)) AS j),"""
          |              CASE WHEN llr > ll1 AND lle > llr THEN lle WHEN llr > ll1 THEN llr
          |                   WHEN llr > ll3 THEN llr WHEN llr > llw THEN llco ELSE llci END AS nll
          |          FROM (
-         |            SELECT l3.*, ${llqAt("l3", "xr0", "xr1", "xr2")} AS llr,
-         |                ${llqAt("l3", "xe0", "xe1", "xe2")} AS lle,
-         |                ${llqAt("l3", "xco0", "xco1", "xco2")} AS llco,
-         |                ${llqAt("l3", "xci0", "xci1", "xci2")} AS llci
+         |            SELECT l3.*, ${ldLlqSql("l3", "xr0", "xr1", "xr2")} AS llr,
+         |                ${ldLlqSql("l3", "xe0", "xe1", "xe2")} AS lle,
+         |                ${ldLlqSql("l3", "xco0", "xco1", "xco2")} AS llco,
+         |                ${ldLlqSql("l3", "xci0", "xci1", "xci2")} AS llci
          |            FROM (
          |              SELECT l2.*,
          |                  $l3cols
@@ -2632,33 +2088,16 @@ nodes AS (SELECT unnest(range(0, $t13iNFit)) AS j),"""
            |    row_number() OVER (PARTITION BY ener ORDER BY yq DESC, b ASC) AS rw
            |  FROM bins),
            |pk AS (SELECT ener, b, yq FROM mx WHERE rw = 1),
-           |sall AS (SELECT ener, CAST(sum(yq) AS BIGINT) AS sa FROM bins GROUP BY 1),
+           |$sallSql,
            |gx AS (SELECT pk.ener AS ener,
            |    (CAST(pk.yq AS DOUBLE) - CAST(sa AS DOUBLE) / 200) / 1e9 AS g0,
            |    (CAST(pk.b AS DOUBLE) + 0.5) * 7.0 / 200 AS g1,
            |    CAST(0.3 AS DOUBLE) AS g2
            |  FROM pk JOIN sall ON sall.ener = pk.ener)""".stripMargin
-      s"""${mcmcSamplerSql("SELECT CAST(0 AS BIGINT) AS ener",
-                           t13kFixtureSql, 42L, nW = 100, nSteps = 100,
-                           llqGen = Some(flareLlq),
-                           los = Seq(0.005, 0.5, 0.05),
-                           his = Seq(0.15, 6.0, 1.0),
+      s"""${mcmcSamplerSql(literalCurveFixtureSql(t13kTrue), llq = flareLlq,
+                           los = Seq(0.005, 0.5, 0.05), his = Seq(0.15, 6.0, 1.0),
                            gxBlockSql = Some(gxBlock))}
-         |SELECT * FROM (
-         |  SELECT 'acceptance' AS param, a AS p16, a AS p50, a AS p84 FROM accr
-         |  UNION ALL
-         |  SELECT 'amp', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc0
-         |  UNION ALL
-         |  SELECT 't0', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc1
-         |  UNION ALL
-         |  SELECT 'tau', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc2
-         |) ORDER BY param""".stripMargin
+         |${posteriorSql(Seq("amp" -> 0, "t0" -> 1, "tau" -> 2))}""".stripMargin
     },
 
     // The GP-hyperparameter walk replay: same recursive sampler CTE;
@@ -2671,14 +2110,10 @@ nodes AS (SELECT unnest(range(0, $t13iNFit)) AS j),"""
     // 100·round(ln(sinn)·1e6) — the same lnQ6 discipline as the
     // sampler's own accept draws.
     "t13l_mcmc_gphyper" -> {
-      import graft.model.{GpHyper, Sql}
-      import Sql.D
+      import graft.model.GpHyper
       val gpLlq: (String, String) => String = (al, p) => {
-        def mdl2(ba: String) =
-          s"(1.0 - $al.${p}0 * (CASE WHEN abs(fmod($ba.tb - $al.${p}1 + 3.5, 7.0) - 3.5)" +
-          s" < $al.${p}2 / 2 THEN ${D(1.0)} ELSE ${D(0.0)} END))"
         def rq(ba: String) =
-          s"CAST(round(($ba.y - ${mdl2(ba)}) * 1e8) AS BIGINT)"
+          s"CAST(round(($ba.y - ${boxMdlSql(al, p, ba)}) * 1e8) AS BIGINT)"
         val hp = GpHyper.chainSql(
           s"SELECT $al.${p}3 AS sg, $al.${p}4 AS rho", Seq.empty)
         val wcase = (1 to GpHyper.NLags)
@@ -2697,112 +2132,31 @@ nodes AS (SELECT unnest(range(0, $t13iNFit)) AS j),"""
         s" + 100 * CAST(round(ln(hp.sinn) * 1e6) AS BIGINT)) AS BIGINT)" +
         s" FROM ($hp) hp)"
       }
-      val gxBlock =
-        s"""gw AS (SELECT c.ener AS ener, c.b AS c, CAST(sum(b2.yq) AS BIGINT) AS w
-           |  FROM bins c
-           |  CROSS JOIN (SELECT unnest(range(-15, 16)) AS kk) o
-           |  JOIN bins b2 ON b2.ener = c.ener
-           |    AND b2.b = ((c.b + o.kk) % 200 + 200) % 200
-           |  GROUP BY 1, 2),
-           |best AS (SELECT ener, c, w FROM (
-           |    SELECT ener, c, w,
-           |      row_number() OVER (PARTITION BY ener ORDER BY w ASC, c ASC) AS rw
-           |    FROM gw) WHERE rw = 1),
-           |sall AS (SELECT ener, CAST(sum(yq) AS BIGINT) AS sa FROM bins GROUP BY 1),
-           |gx AS (SELECT best.ener AS ener,
-           |    (CAST(sa AS DOUBLE) / 200 - CAST(w AS DOUBLE) / 31) / 1e9 AS g0,
-           |    CASE WHEN (CAST(c AS DOUBLE) + 0.5) * 7.0 / 200 >= 3.5
-           |         THEN (CAST(c AS DOUBLE) + 0.5) * 7.0 / 200 - 7.0
-           |         ELSE (CAST(c AS DOUBLE) + 0.5) * 7.0 / 200 END AS g1,
-           |    ${D(1.05)} AS g2, ${D(1.5e-3)} AS g3, ${D(0.3)} AS g4
-           |  FROM best JOIN sall ON sall.ener = best.ener)""".stripMargin
-      s"""${mcmcSamplerSql("SELECT CAST(0 AS BIGINT) AS ener",
-                           t13lFixtureSql, 42L, nW = 50, nSteps = 150,
-                           llqGen = Some(gpLlq),
+      val gxBlock = boxGxSql(h = 15,
+        rest = s"${D(1.05)} AS g2, ${D(1.5e-3)} AS g3, ${D(0.3)} AS g4")
+      s"""${mcmcSamplerSql(t13lFixtureSql, nW = 50, nSteps = 150, llq = gpLlq,
                            los = Seq(-0.2, -3.5, 0.2, 2e-4, 0.06),
                            his = Seq(0.2, 3.5, 2.0, 6e-3, 1.2),
                            gxBlockSql = Some(gxBlock))}
-         |SELECT * FROM (
-         |  SELECT 'acceptance' AS param, a AS p16, a AS p50, a AS p84 FROM accr
-         |  UNION ALL
-         |  SELECT 'depth', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc0
-         |  UNION ALL
-         |  SELECT 'dur', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc2
-         |  UNION ALL
-         |  SELECT 'epoch', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc1
-         |  UNION ALL
-         |  SELECT 'rho', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc4
-         |  UNION ALL
-         |  SELECT 'sigma', max(CASE WHEN q < 0.3 THEN v END),
-         |      max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END),
-         |      max(CASE WHEN q > 0.7 THEN v END) FROM pc3
-         |) ORDER BY param""".stripMargin
+         |${posteriorSql(Seq("depth" -> 0, "dur" -> 2, "epoch" -> 1, "rho" -> 4, "sigma" -> 3))}""".stripMargin
     },
 
     "t13b_mcmc_perener" ->
-      s"""${mcmcSamplerSql("SELECT unnest(range(0, 8)) AS ener",
-                           t13FixtureSql(perEner = true), 42L)}
-         |SELECT p.ener AS ener,
-         |    max(CASE WHEN q < 0.3 THEN v END) AS depth_p16,
-         |    max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END) AS depth_p50,
-         |    max(CASE WHEN q > 0.7 THEN v END) AS depth_p84,
-         |    max(a) AS acceptance
-         |FROM pc0 p JOIN accr ON accr.ener = p.ener
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+      s"""${mcmcSamplerSql(t13FixtureSql(perEner = true),
+                           enersSql = "SELECT unnest(range(0, 8)) AS ener")}
+         |${perKeySql("ener", "depth", 0)}""".stripMargin,
 
     // t13m: the t13b replay shape per TRANSIT — 4 groups through one
-    // recursive-CTE sampler. gxBlock = gxDefault re-derived for 500
+    // recursive-CTE sampler. gxBlock = boxGxSql re-derived for 500
     // bins (window half-width h = round(500·1/7)/2 = 35, width 71 —
     // the same integer arithmetic boxGuessQ runs); llq = the default
     // white-noise box llq at the matched 2-point-bin scale 7.5e11.
-    "t13m_mcmc_ttv" -> {
-      val gxBlock =
-        s"""gw AS (SELECT c.ener AS ener, c.b AS c, CAST(sum(b2.yq) AS BIGINT) AS w
-           |  FROM bins c
-           |  CROSS JOIN (SELECT unnest(range(-35, 36)) AS kk) o
-           |  JOIN bins b2 ON b2.ener = c.ener
-           |    AND b2.b = ((c.b + o.kk) % 500 + 500) % 500
-           |  GROUP BY 1, 2),
-           |best AS (SELECT ener, c, w FROM (
-           |    SELECT ener, c, w,
-           |      row_number() OVER (PARTITION BY ener ORDER BY w ASC, c ASC) AS rw
-           |    FROM gw) WHERE rw = 1),
-           |sall AS (SELECT ener, CAST(sum(yq) AS BIGINT) AS sa FROM bins GROUP BY 1),
-           |gx AS (SELECT best.ener AS ener,
-           |    (CAST(sa AS DOUBLE) / 500 - CAST(w AS DOUBLE) / 71) / 1e9 AS g0,
-           |    CASE WHEN (CAST(c AS DOUBLE) + 0.5) * 7.0 / 500 >= 3.5
-           |         THEN (CAST(c AS DOUBLE) + 0.5) * 7.0 / 500 - 7.0
-           |         ELSE (CAST(c AS DOUBLE) + 0.5) * 7.0 / 500 END AS g1,
-           |    CAST(1.0 AS DOUBLE) AS g2
-           |  FROM best JOIN sall ON sall.ener = best.ener)""".stripMargin
-      def mdlT(al: String, p: String) =
-        s"(1.0 - $al.${p}0 * (CASE WHEN abs(fmod(bb.tb - $al.${p}1 + 3.5, 7.0) - 3.5) < $al.${p}2 / 2" +
-        s" THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END))"
-      val llqT = (al: String, p: String) =>
-        s"(SELECT CAST(-sum(CAST(round((bb.y - ${mdlT(al, p)}) * (bb.y - ${mdlT(al, p)}) * 7.5e11)" +
-        s" AS BIGINT)) AS BIGINT) FROM bins bb WHERE bb.ener = $al.ener)"
-      s"""${mcmcSamplerSql("SELECT unnest(range(1, 5)) AS ener",
-                           t13mFixtureSql, 42L,
-                           llqGen = Some(llqT),
-                           gxBlockSql = Some(gxBlock))}
-         |SELECT p.ener AS tran,
-         |    max(CASE WHEN q < 0.3 THEN v END) AS epoch_p16,
-         |    max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END) AS epoch_p50,
-         |    max(CASE WHEN q > 0.7 THEN v END) AS epoch_p84,
-         |    (max(CASE WHEN q > 0.3 AND q < 0.7 THEN v END)
-         |      - CAST(1.75 AS DOUBLE)) * CAST(1440 AS DOUBLE) AS oc_min,
-         |    max(a) AS acceptance
-         |FROM pc1 p JOIN accr ON accr.ener = p.ener
-         |GROUP BY 1 ORDER BY 1""".stripMargin
-    },
+    "t13m_mcmc_ttv" ->
+      s"""${mcmcSamplerSql(t13mFixtureSql, enersSql = "SELECT unnest(range(1, 5)) AS ener",
+                           llq = boxLlqSql("7.5e11"),
+                           gxBlockSql = Some(boxGxSql(h = 35, nb = 500)))}
+         |${perKeySql("tran", "epoch", 1,
+        Seq(s"(${pctSql(1)} - CAST(1.75 AS DOUBLE)) * CAST(1440 AS DOUBLE) AS oc_min"))}""".stripMargin,
 
     // The oracle recomputes what the kernel DECODES from the real
     // PNG/WAV/AVI payloads, from the same closed-form generation

@@ -1406,7 +1406,6 @@ object TextQueries {
       // shared with d23: build-once symmetrized band-star edges + the
       // signature node list, eagerly checkpointed (see simGraph)
       val (sym, sigNodes) = simGraph(s, d)
-      val dbg = sys.env.contains("SPARK_GRAFT_D15_DEBUG")
       // canonical undirected edges (a > b), deduped.
       // checkpointReset per round, not bare localCheckpoint: the
       // per-round checkpoint must reset STATS along with lineage or
@@ -1452,8 +1451,6 @@ object TextQueries {
         // returned plan reads it lazily after this builder returns)
         unpersistCheckpointed(edges)
         edges = next; prevSig = nextSig; iter += 1
-        if (dbg) System.err.println(
-          s"[d15] round $iter edges ${nextSig._1} converged $converged")
       }
       if (!converged) throw new IllegalStateException(
         s"d15_components: star alternation did not converge in $iter rounds ($nNodes nodes)")

@@ -108,6 +108,16 @@ class GpHyperSpec extends SparkSpec {
     assert(math.abs(pct(2)(1) - DurInj) < 0.1)
   }
 
+  test("fixture replica and joint walk equal the shipped t13l rows") {
+    val (pct, acc) = joint(150)
+    val rows = graft.queries.Advanced.queries("t13l_mcmc_gphyper")(spark, sf).collect()
+      .map(r => r.getString(0) -> Seq(r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
+    val dims = Seq("depth" -> 0, "epoch" -> 1, "dur" -> 2, "sigma" -> 3, "rho" -> 4)
+    assert(rows.keySet == dims.map(_._1).toSet + "acceptance")
+    assert(rows("acceptance") == Seq(acc, acc, acc))
+    for ((p, d) <- dims) assert(rows(p) == pct(d).toSeq, p)
+  }
+
   test("fixed-wrong hyperparameters vs the joint fit") {
     val (pj, _) = joint(150)
     val (pf, accF) = fixedWrong(150)

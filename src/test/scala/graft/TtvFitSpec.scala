@@ -1,14 +1,14 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import graft.expr.VecExprs.roundHalfAway
 
 /** t13m — the TTV FIT mode (PlanetarySystemWithTTVs with
   * typemodlttvr='indilineuser', ref main.py:12284–12316: one fit per
   * transit, numbiterfitt = numbtran at 12286–12290, that transit's
   * mid-time free). Pure-Scala fidelity tests over the t13m fixture
-  * (the oracle gate covers the Spark/DuckDB plumbing; these encode
-  * what the numbers must MEAN):
+  * (the oracle gate covers the Spark/DuckDB plumbing; one test pins
+  * the replica to the shipped query; the rest encode what the numbers
+  * must MEAN):
   *
   *   - the injected sinusoid ttv_k = A·sin(2πk/5), A = 63 min, is
   *     recovered BOTH by the per-transit MCMC epoch fits and by the
@@ -19,7 +19,7 @@ import graft.expr.VecExprs.roundHalfAway
   *     step function of epoch) — tolerances encode that, while the
   *     continuous weighted measurement resolves ~1 min.
   */
-class TtvFitSpec extends AnyFunSuite {
+class TtvFitSpec extends SparkSpec {
 
   val PDAY = 86400000000L; val P7 = 7L * PDAY; val HP = P7 / 2
   val Step = 604800000L; val N = 4500; val Nb = 500
@@ -108,6 +108,15 @@ class TtvFitSpec extends AnyFunSuite {
     // the sinusoid's shape: positive half then negative half
     assert(fittedOcMin(1) > fittedOcMin(2) && fittedOcMin(2) > 0)
     assert(0 > fittedOcMin(3) && fittedOcMin(3) > fittedOcMin(4))
+  }
+
+  test("replicated fits equal the shipped t13m oc_min") {
+    val rows = graft.queries.Advanced.queries("t13m_mcmc_ttv")(spark, sf).collect()
+    assert(rows.map(_.getLong(0)).toSeq == (1L to 4L))
+    for (r <- rows) {
+      val k = r.getLong(0).toInt
+      assert(r.getAs[Double]("oc_min") == fittedOcMin(k), s"k=$k")
+    }
   }
 
   test("fit and measurement agree on every transit") {

@@ -117,7 +117,7 @@ object Bench {
     // the engine configuration this run used: without it a reader of
     // the line cannot tell a local[4] run from a local[32] one
     val conf = s""""cpus":${Session.cpus},"shuffle_partitions":${Session.shufflePartitions},""" +
-      s""""stream_parts":${Session.streamParts}"""
+      s""""stream_parts":${Session.streamParts},"stream_sink":"${Session.streamSink}""""
     val line = s"""{"metric":"total","value":${d2(total)},"unit":"sec","queries":${qmap(top)},"n_queries":${results.size},"errors":$errs,"triage_n":${triage.size},"triage_regressions":$regressions,"sf":"$sfDir",$conf,"full":"BENCH_SELF.json"}"""
     println(line)
     val full = s"""{"metric":"total","value":${d2(total)},"unit":"sec","queries":${qmap(results)},"errors":$errs,"triage":$triageJson,"triage_regressions":$regressions,"triage_skipped":$triageSkipped,"sf":"$sfDir",$conf}"""

@@ -21,7 +21,7 @@ object PlanDump {
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val names =
       if (args.length > 3) args.drop(3).toSeq
-      else SparkEntry.queries.keys.filterNot(_.startsWith("st")).toSeq.sorted
+      else SparkEntry.queries.keys.filterNot(_.matches("st\\d.*")).toSeq.sorted
     val spark = graft.core.Session.build()
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>

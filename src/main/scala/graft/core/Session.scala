@@ -18,10 +18,11 @@ object Session {
   val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
   val shufflePartitions: Int =
     sys.env.get("SPARK_GRAFT_PARTS").map(_.toInt).getOrElse(cpus)
-  /** State-store partitions of the streaming queries' child session
-    * (`TimeSeries.streamSession`): `SPARK_GRAFT_STREAM_PARTS`, the
-    * sizing knob a deployment sets per stream (r10 rule: ∝ per-batch
-    * row volume; the ×1000 dumps set 64, the ×1000 st7 replay 256).
+  /** State-store partitions of the stream harness's child session
+    * ([[graft.streaming.StreamOps.streamSession]]):
+    * `SPARK_GRAFT_STREAM_PARTS`, the sizing knob a deployment sets per
+    * stream (r10 rule: ∝ per-batch row volume; the ×1000 dumps set 64,
+    * the ×1000 st7 replay 256).
     * Default 2 = the gate-fixture optimum by the same volume rule (r17
     * probe: per-batch state here is a few thousand rows, and each state
     * store pays a per-batch commit — delta file + maintenance —
@@ -29,6 +30,12 @@ object Session {
     * 2/4/8/16 stores). Volume sizing, the opposite direction of
     * matching the local core count. */
   val streamParts: Int = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "2").toInt
+  /** Sink of the append-mode streams ([[graft.streaming.StreamOps.drain]]):
+    * "memory" by default, "file" when `SPARK_GRAFT_STREAM_SINK=file`
+    * (the executor-side parquet sink the ×1000 runs need — the memory
+    * sink returns every output row through the driver). */
+  val streamSink: String =
+    if (sys.env.get("SPARK_GRAFT_STREAM_SINK").contains("file")) "file" else "memory"
 
   def build(): SparkSession = {
     val spark = SparkSession.builder()

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.core.Tables
 import graft.core.Tables._
 import graft.ops.TsOps
+import graft.streaming.StreamOps
 
 /** Time-series operator surface (SURVEY.md §2.9 T1–T12, §2.4 A1/A4–A6/
   * A10/A13, §2.5 W2, §2.2 F2/F3/F6, §2.3 J4/J8) exercised on the
@@ -93,9 +94,11 @@ object TimeSeries {
         col("t_us"), col("vq"))
 
   /** Three-micro-batch arrival fixture shared by the append-mode
-    * streaming queries (st4/st5): batch files [E, E+10d), [E+10d,
-    * E+20d), then the on-time tail PLUS late duplicates of the first
-    * day — a full watermark behind, which the engine must DROP.
+    * streaming queries st4, st5, st8, st10 and st14, returned as the
+    * file stream over its three batch files on `ss` (one file per
+    * micro-batch): [E, E+10d), [E+10d, E+20d), then the on-time tail
+    * PLUS late duplicates of the first day — a full watermark behind,
+    * which the engine must DROP.
     * `withLate = false` omits the day-one replays, giving three
     * time-disjoint ascending batches — with maxFilesPerTrigger=1 the
     * per-batch processing order then equals the global (t, id) order,
@@ -104,14 +107,14 @@ object TimeSeries {
     * pure function of `d` (testdata is immutable), so an existing
     * complete fixture is reused — the rebuild otherwise costs three
     * passes over events per call. */
-  private def arrivalFixture(s: SparkSession, d: String, prefix: String,
+  private def arrivalFixture(ss: SparkSession, d: String, prefix: String,
       project: DataFrame => DataFrame,
-      withLate: Boolean = true): java.io.File = {
+      withLate: Boolean = true): DataFrame = {
     val C1 = E + 10 * PDAY; val C2 = E + 20 * PDAY
     // the fixture tag encodes the projected schema and every cut
     // constant, not just the data dir: changing the projection or the
     // batch boundaries must force a rebuild, never silently reuse
-    val schemaTag = project(events(s, d)).schema
+    val schemaTag = project(events(ss, d)).schema
       .map(f => s"${f.name}:${f.dataType.simpleString}").mkString(",")
     // content token of the SOURCE files (r8, found by the sf1 sweep):
     // the scale corpora are rebuilt in place across fixture versions,
@@ -129,7 +132,7 @@ object TimeSeries {
     if (!complete) {
       org.apache.commons.io.FileUtils.deleteQuietly(root)
       dataDir.mkdirs()
-      val src = project(events(s, d))
+      val src = project(events(ss, d))
         .withColumn("t_us", unix_micros(col("ts")))
       val tail = src.filter(col("t_us") >= C2)
       val batches = Seq(
@@ -162,28 +165,19 @@ object TimeSeries {
         s"arrivalFixture: non-increasing mtimes ${stamped.mkString(",")} — " +
         "the file source would reorder batches")
     }
-    dataDir
+    val dir = dataDir.toString
+    StreamOps.fileStream(ss, dir, "*.parquet", ss.read.parquet(dir).schema, Some(1L))
   }
 
-  /** Isolated child session for the streaming queries: the state-store
-    * partition count is fixed from spark.sql.shuffle.partitions at the
-    * first micro-batch, and the shared session's core-sized count is
-    * more state stores than these small aggregates need — every
-    * instance pays its own per-batch commit (delta file write +
-    * maintenance). A child session pins `Session.streamParts` (default
-    * 2) without mutating the shared session's conf mid-suite. (At real
-    * cluster scale the state partition count is a sizing decision per
-    * stream — this helper is where it lives.) */
-  private def streamSession(s: SparkSession): SparkSession = {
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", graft.core.Session.streamParts.toString)
-    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // StreamingQueryManager is per-session: carry the caller's
-    // listeners over so progress observers (metrics assertions,
-    // monitoring) keep seeing these queries
-    s.streams.listListeners().foreach(ss.streams.addListener)
-    ss
-  }
+  /** The stored schema of the events parquet (nanosAsLong is set on a
+    * stream session: `ts` arrives as the file stores it, for
+    * [[Tables.normalizeTs]] to map). */
+  private def eventSchema(ss: SparkSession, d: String) =
+    ss.read.parquet(s"$d/events.parquet").schema
+
+  /** The events parquet as a file stream on `ss`. */
+  private def eventStream(ss: SparkSession, d: String): DataFrame =
+    StreamOps.fileStream(ss, d, "events*.parquet", eventSchema(ss, d))
 
   case class StRow(user_id: Long, t_us: Long, ts: java.sql.Timestamp)
   case class StSess(s_us: Long, e_us: Long, n: Long)
@@ -321,7 +315,7 @@ object TimeSeries {
     }),
 
     // §2.10 — Spark's native session_window in batch mode: the same
-    // operator StreamOps.sessionWindows uses on the stream, verified
+    // operator st3_stream_session runs on the stream, verified
     // here against the gaps-and-islands oracle. Spark merges two
     // events when their [ts, ts+gap) ranges overlap, so a new session
     // starts at gap >= 30 min (strictly-greater would be wrong).
@@ -343,14 +337,8 @@ object TimeSeries {
     // a plain GROUP BY oracle. At scale the same query runs unbounded
     // with the watermark dropping late state.
     "st2_stream_tumbling" -> ((s, d) => {
-      val ss = streamSession(s)
-      val schema = ss.read.parquet(s"$d/events.parquet").schema
-      // Glob path: FileStreamSource force-sets basePath to the literal
-      // path for non-glob paths, and basePath must be a directory —
-      // the glob keeps our explicit directory basePath in force.
-      val stream = ss.readStream.schema(schema)
-        .option("basePath", d)
-        .parquet(s"$d/events*.parquet")
+      val ss = StreamOps.streamSession(s)
+      val stream = eventStream(ss, d)
         .transform(graft.core.Tables.normalizeTs)
         // No watermark: complete mode never evicts state, so declaring
         // one would be inert and misleading. This query is the
@@ -360,40 +348,25 @@ object TimeSeries {
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(graft.core.Tables.cents(col("value"))).as("sc"))
-      val q = stream.writeStream
-        .format("memory").queryName("st2_sink")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table("st2_sink")
+      StreamOps.drain(ss, stream, "st2", "complete")
         .select(unix_micros(col("w.start")).as("w_us"), col("event_type"),
           col("n"), (col("sc").cast("long") / 100.0).as("sum_value"))
         .orderBy("w_us", "event_type")
     }),
 
     // §2.10 — streaming SESSION windows through the micro-batch
-    // engine: same readStream/AvailableNow/memory-sink harness as
-    // st2, but with the merging stateful session_window operator —
-    // the streaming form of A10. Checked bit-exact against the same
-    // gaps-and-islands SQL as the batch st_session_window.
+    // engine: same StreamOps harness as st2, but with the merging
+    // stateful session_window operator — the streaming form of A10.
+    // Checked bit-exact against the same gaps-and-islands SQL as the
+    // batch st_session_window.
     "st3_stream_session" -> ((s, d) => {
-      val ss = streamSession(s)
-      val schema = ss.read.parquet(s"$d/events.parquet").schema
-      val stream = ss.readStream.schema(schema)
-        .option("basePath", d)
-        .parquet(s"$d/events*.parquet")
+      val ss = StreamOps.streamSession(s)
+      val stream = eventStream(ss, d)
         .transform(graft.core.Tables.normalizeTs)
         // No watermark — complete mode, finite replay only (see st2).
         .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
         .agg(count(lit(1)).as("n"))
-      val q = stream.writeStream
-        .format("memory").queryName("st3_sink")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table("st3_sink")
+      StreamOps.drain(ss, stream, "st3", "complete")
         .select(col("user_id"), unix_micros(col("w.start")).as("s_us"),
           unix_micros(col("w.end")).as("e_us"), col("n"))
         .orderBy("user_id", "s_us")
@@ -413,25 +386,14 @@ object TimeSeries {
     // plain SQL, ms-truncating the max event time the way the
     // engine's per-batch stats do.
     "st4_stream_append" -> ((s, d) => {
-      val ss = streamSession(s)
-      val dataDir = arrivalFixture(s, d, "graft_st4",
+      val ss = StreamOps.streamSession(s)
+      val stream = arrivalFixture(ss, d, "graft_st4",
         df => df.select(col("ts"), col("event_type"), col("value")))
-      val schema = ss.read.parquet(dataDir.toString).schema
-      val stream = ss.readStream.schema(schema)
-        .option("basePath", dataDir.toString)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$dataDir/*.parquet")
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(graft.core.Tables.cents(col("value"))).as("sc"))
-      val q = stream.writeStream
-        .format("memory").queryName("st4_sink")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table("st4_sink")
+      StreamOps.drain(ss, stream, "st4")
         .select(unix_micros(col("w.start")).as("w_us"), col("event_type"),
           col("n"), (col("sc").cast("long") / 100.0).as("sum_value"))
         .orderBy("w_us", "event_type")
@@ -458,15 +420,10 @@ object TimeSeries {
     // sessions over on-time rows, emitted iff not the user's last
     // session OR closed by the final watermark.
     "st5_stateful_session" -> ((s, d) => {
-      val ss = streamSession(s)
+      val ss = StreamOps.streamSession(s)
       import ss.implicits._
-      val dataDir = arrivalFixture(s, d, "graft_st5",
+      val stream = arrivalFixture(ss, d, "graft_st5",
         df => df.select(col("ts"), col("user_id")))
-      val schema = ss.read.parquet(dataDir.toString).schema
-      val stream = ss.readStream.schema(schema)
-        .option("basePath", dataDir.toString)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$dataDir/*.parquet")
         .withWatermark("ts", "1 hour")
         // ts itself must survive the projection: the event-time-timeout
         // analyzer looks for the watermarked column in the kernel input
@@ -477,13 +434,7 @@ object TimeSeries {
           org.apache.spark.sql.streaming.OutputMode.Append(),
           org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout)(
           sessionKernel)
-      val q = stream.writeStream
-        .format("memory").queryName("st5_sink")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table("st5_sink").orderBy("user_id", "s_us")
+      StreamOps.drain(ss, stream.toDF(), "st5").orderBy("user_id", "s_us")
     }),
 
     // §2.10 — streaming INGEST DEDUP: dropDuplicates through the
@@ -494,20 +445,11 @@ object TimeSeries {
     // 100 TB the dropDuplicatesWithinWatermark variant caps state by
     // the watermark horizon instead. Oracle: plain SELECT DISTINCT.
     "st6_stream_dedup" -> ((s, d) => {
-      val ss = streamSession(s)
-      val schema = ss.read.parquet(s"$d/events.parquet").schema
-      val stream = ss.readStream.schema(schema)
-        .option("basePath", d)
-        .parquet(s"$d/events*.parquet")
+      val ss = StreamOps.streamSession(s)
+      val stream = eventStream(ss, d)
         .select(col("user_id"), col("event_type"))
         .dropDuplicates("user_id", "event_type")
-      val q = stream.writeStream
-        .format("memory").queryName("st6_sink")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table("st6_sink").orderBy("user_id", "event_type")
+      StreamOps.drain(ss, stream, "st6").orderBy("user_id", "event_type")
     }),
 
     // §2.10 — state-BOUNDED streaming dedup: dropDuplicatesWithinWatermark
@@ -521,32 +463,17 @@ object TimeSeries {
     // than re-emitted from evicted state. All three outcomes collapse
     // to one SQL statement: DISTINCT over the logical table.
     "st8_stream_dedup_wm" -> ((s, d) => {
-      val ss = streamSession(s)
-      val dataDir = arrivalFixture(s, d, "graft_st8", df => {
+      val ss = StreamOps.streamSession(s)
+      val stream = arrivalFixture(ss, d, "graft_st8", df => {
         val base = df.select(col("ts"), col("user_id"), col("event_id"))
         base.unionByName(base.filter(col("event_id") % 50 === 0))
       })
-      val schema = ss.read.parquet(dataDir.toString).schema
-      val stream = ss.readStream.schema(schema)
-        .option("basePath", dataDir.toString)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$dataDir/*.parquet")
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("user_id", "event_id")
         .select(col("user_id"), col("event_id"))
-      val q = stream.writeStream
-        .format("memory").queryName("st8_sink")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table("st8_sink").orderBy("user_id", "event_id")
+      StreamOps.drain(ss, stream, "st8").orderBy("user_id", "event_id")
     }),
 
-    // §2.10 — STREAM-STREAM inner join through the micro-batch engine:
-    // click→purchase attribution within 6 h per user — the funnel
-    // query. Both sides carry watermarks and the join condition
-    // bounds purchase time to [click, click+6h], which is what lets
     // §2.10 — STREAM-STATIC enrichment join, the remaining core
     // Structured Streaming join shape (st7 covers stream-stream): the
     // static dimension is re-read and BROADCAST per micro-batch — no
@@ -555,13 +482,10 @@ object TimeSeries {
     // operator is the downstream tumbling-day aggregation. nation is
     // the enrichment dim, keyed off user_id % 25.
     "st9_stream_static_join" -> ((s, d) => {
-      val ss = streamSession(s)
-      val schema = ss.read.parquet(s"$d/events.parquet").schema
+      val ss = StreamOps.streamSession(s)
       val dim = ss.read.parquet(s"$d/nation.parquet")
         .select(col("n_nationkey"), col("n_name"))
-      val stream = ss.readStream.schema(schema)
-        .option("basePath", d)
-        .parquet(s"$d/events*.parquet")
+      val stream = eventStream(ss, d)
         .transform(graft.core.Tables.normalizeTs)
         .withColumn("nk", col("user_id") % 25)
         .join(broadcast(dim), col("nk") === col("n_nationkey"))
@@ -569,13 +493,7 @@ object TimeSeries {
         .groupBy(window(col("ts"), "1 day").as("w"), col("n_name"))
         .agg(count(lit(1)).as("n"),
           sum(graft.core.Tables.cents(col("value"))).as("sc"))
-      val q = stream.writeStream
-        .format("memory").queryName("st9_sink")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table("st9_sink")
+      StreamOps.drain(ss, stream, "st9", "complete")
         .select(unix_micros(col("w.start")).as("w_us"), col("n_name"),
           col("n"), (col("sc").cast("long") / 100.0).as("sum_value"))
         .orderBy("w_us", "n_name")
@@ -599,24 +517,18 @@ object TimeSeries {
     // ELEMENT of the buffer (upper median, index n/2), not an
     // interpolation, so no float formula can diverge.
     "st10_stream_flare" -> ((s, d) => {
-      val ss = streamSession(s)
+      val ss = StreamOps.streamSession(s)
       import ss.implicits._
-      val dataDir = arrivalFixture(s, d, "graft_st10",
+      val stream = arrivalFixture(ss, d, "graft_st10",
         df => df.select(col("ts"), col("user_id"), col("event_id"),
           col("value")),
         withLate = false)
-      val schema = ss.read.parquet(dataDir.toString).schema
-      val stream = ss.readStream.schema(schema)
-        .option("basePath", dataDir.toString)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$dataDir/*.parquet")
         .select(col("user_id"), col("event_id"),
           unix_micros(col("ts")).as("tUs"), col("value"))
-        .as[graft.streaming.StreamOps.Ev]
-      val hits = graft.streaming.StreamOps.flareTrigger(
+        .as[StreamOps.Ev]
+      val hits = StreamOps.flareTrigger(
         stream, thr = 0.45, horizonUs = 4L * PDAY)
-      // drain: see st14 — file-sink twin for the ≥×1000 decade runs
-      graft.streaming.StreamOps.drain(ss, hits.toDF(), "st10")
+      StreamOps.drain(ss, hits.toDF(), "st10")
         .select(col("user_id"), col("event_id"), col("tUs").as("t_us"),
           col("z"))
         .orderBy("user_id", "event_id")
@@ -632,27 +544,18 @@ object TimeSeries {
     // truncates the horizon to stay a window; the streaming form
     // keeps the exact infinite-horizon recurrence with O(keys) state.
     "st14_stream_ewma" -> ((s, d) => {
-      val ss = streamSession(s)
+      val ss = StreamOps.streamSession(s)
       import ss.implicits._
-      val dataDir = arrivalFixture(s, d, "graft_st14",
+      val stream = arrivalFixture(ss, d, "graft_st14",
         df => df.select(col("ts"), col("user_id"), col("event_id"),
           col("value")),
         withLate = false)
-      val schema = ss.read.parquet(dataDir.toString).schema
-      val stream = ss.readStream.schema(schema)
-        .option("basePath", dataDir.toString)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$dataDir/*.parquet")
         .select(col("user_id"), col("event_id"),
           unix_micros(col("ts")).as("tUs"),
           cents(col("value")).as("vc"))
-        .as[graft.streaming.StreamOps.EvC]
-      val out = graft.streaming.StreamOps.streamEwma(stream)
-      // drain: memory sink at the driver gate; the parquet file-sink
-      // twin under SPARK_GRAFT_STREAM_SINK=file for the ≥×1000 decade
-      // runs (the memory sink's driver maxResultSize is the measured
-      // ×1000 wall — 100 M OUTPUT rows; engine state stays 1 500 rows)
-      graft.streaming.StreamOps.drain(ss, out.toDF(), "st14")
+        .as[StreamOps.EvC]
+      val out = StreamOps.streamEwma(stream)
+      StreamOps.drain(ss, out.toDF(), "st14")
         .withColumn("ewma", col("efp") / lit(1048576.0) / lit(100.0))
         .select(col("user_id"), col("event_id"), col("tUs").as("t_us"),
           col("vc"), col("efp"), col("ewma"))
@@ -672,27 +575,18 @@ object TimeSeries {
     // post-processing on the memory sink reuses d30's exact-integer
     // estimator and the oracle replays it over the full table.
     "st11_stream_hll" -> ((s, d) => {
-      val ss = streamSession(s)
-      val schema = ss.read.parquet(s"$d/events.parquet").schema
+      val ss = StreamOps.streamSession(s)
       import graft.text.TextOps
-      val stream = ss.readStream.schema(schema)
-        .option("basePath", d)
-        .parquet(s"$d/events*.parquet")
+      val stream = eventStream(ss, d)
         .withColumn("h", expr(TextOps.md5Hash32Fast("CAST(user_id AS STRING)")))
         .withColumn("reg", col("h") % 64)
         .withColumn("rho", expr(TextOps.hllRho(TextOps.hllW("h"))))
         .groupBy(col("event_type"), col("reg"))
         .agg(max(col("rho")).as("m"))
-      val q = stream.writeStream
-        .format("memory").queryName("st11_sink")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
       // estimate from the drained register state (batch post-process,
       // identical estimator to d30: grid-complete, Z, zero count, two
       // branches with shared precomputed constants)
-      val regs = ss.table("st11_sink")
+      val regs = StreamOps.drain(ss, stream, "st11", "complete")
       // fresh attribute ids (et/rg) — grid derives from the same memory
       // table as regs, and a Seq-key self-join would see conflicting
       // attributes
@@ -727,28 +621,19 @@ object TimeSeries {
     // drained sink reuses d29's estimator — top-20 exact counts ride
     // along to ground the estimates (est ≥ true by construction).
     "st12_stream_cms" -> ((s, d) => {
-      val ss = streamSession(s)
+      val ss = StreamOps.streamSession(s)
       import graft.text.TextOps
       val depth = 4; val width = 64
       val hhash = TextOps.md5Hash32Fast("CAST(user_id AS STRING)")
       def rowBuckets = explode(array((0 until depth).map(i =>
         struct(lit(i.toLong).as("rw"),
           (expr(TextOps.minhashExpr("h", i)) % width).as("bucket"))): _*)).as("c")
-      val schema = ss.read.parquet(s"$d/events.parquet").schema
-      val stream = ss.readStream.schema(schema)
-        .option("basePath", d)
-        .parquet(s"$d/events*.parquet")
+      val stream = eventStream(ss, d)
         .withColumn("h", expr(hhash))
         .select(rowBuckets)
         .groupBy(col("c.rw").as("rw"), col("c.bucket").as("bucket"))
         .agg(count(lit(1)).as("cell"))
-      val q = stream.writeStream
-        .format("memory").queryName("st12_sink")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val cells = ss.table("st12_sink")
+      val cells = StreamOps.drain(ss, stream, "st12", "complete")
       val top = graft.core.Tables.events(ss, d)
         .groupBy("user_id").agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("user_id")).limit(20)
@@ -775,22 +660,13 @@ object TimeSeries {
     // within one 2.50 bin of exact by construction. All targets are
     // exact integer arithmetic (ceil via (n·q+99) div 100).
     "st13_stream_quantile" -> ((s, d) => {
-      val ss = streamSession(s)
-      val schema = ss.read.parquet(s"$d/events.parquet").schema
-      val stream = ss.readStream.schema(schema)
-        .option("basePath", d)
-        .parquet(s"$d/events*.parquet")
+      val ss = StreamOps.streamSession(s)
+      val stream = eventStream(ss, d)
         .withColumn("vc", cents(col("value")))
         .withColumn("bin", least(greatest(expr("vc div 250"), lit(0L)), lit(255L)))
         .groupBy(col("event_type"), col("bin"))
         .agg(count(lit(1)).as("cnt"))
-      val q = stream.writeStream
-        .format("memory").queryName("st13_sink")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val hist = ss.table("st13_sink")
+      val hist = StreamOps.drain(ss, stream, "st13", "complete")
       val qs1 = broadcast(ss.createDataFrame(Seq(Tuple1(50), Tuple1(90),
         Tuple1(99))).toDF("q"))
       val qs2 = broadcast(ss.createDataFrame(Seq(Tuple1(50), Tuple1(90),
@@ -830,12 +706,15 @@ object TimeSeries {
         .orderBy("event_type", "q")
     }),
 
+    // §2.10 — STREAM-STREAM inner join through the micro-batch engine:
+    // click→purchase attribution within 6 h per user — the funnel
+    // query. Both sides carry watermarks and the join condition
+    // bounds purchase time to [click, click+6h], which is what lets
     // the engine evict click state once the purchase-side watermark
     // passes click+6h — bounded state on an unbounded stream. The
     // oracle is the identical range join in plain SQL.
     "st7_stream_join" -> ((s, d) => {
-      val ss = streamSession(s)
-      val schema = ss.read.parquet(s"$d/events.parquet").schema
+      val ss = StreamOps.streamSession(s)
       // bounded batches: with ONE AvailableNow batch the watermark
       // never advances mid-batch, so a stream-stream join buffers
       // BOTH full streams in the state store before any eviction —
@@ -862,10 +741,8 @@ object TimeSeries {
       val totalRows = evFrame.count()
       val rowsPerFile = math.max(1L, totalRows / nFiles)
       val mfpt = math.max(1L, 2500000L / rowsPerFile)
-      def src = ss.readStream.schema(schema)
-        .option("basePath", d)
-        .option("maxFilesPerTrigger", mfpt.toString)
-        .parquet(s"$d/events*.parquet")
+      val schema = eventSchema(ss, d)
+      def src = StreamOps.fileStream(ss, d, "events*.parquet", schema, Some(mfpt))
         .transform(graft.core.Tables.normalizeTs)
       val clicks = src.filter(col("event_type") === "click")
         .select(col("user_id"), col("event_id").as("click_id"),
@@ -879,8 +756,7 @@ object TimeSeries {
         col("user_id") === col("b_user") &&
         col("b_ts") >= col("c_ts") &&
         col("b_ts") <= col("c_ts") + expr("INTERVAL 6 HOURS"))
-      // drain: see st14 — file-sink twin for the ≥×1000 decade runs
-      graft.streaming.StreamOps.drain(ss, joined, "st7")
+      StreamOps.drain(ss, joined, "st7")
         .select(col("user_id"), col("click_id"), col("buy_id"),
           (unix_micros(col("b_ts")) - unix_micros(col("c_ts"))).as("lag_us"))
         .orderBy("user_id", "click_id", "buy_id")
@@ -1598,6 +1474,23 @@ object TimeSeries {
   val oracle: Map[String, String] = {
     val refErr =
       """  count(*) AS n, sum(vc) AS _s, sum(vc*vc) AS _q""".stripMargin
+    // gaps-and-islands sessions (a new one at gap >= 30 min), shared by
+    // st3_stream_session and st_session_window: the streaming query
+    // must produce the same sessions as the batch operator
+    val sessionWindowSql =
+      s"""WITH $baseSql,
+         |flagged AS (SELECT user_id, t_us,
+         |  sum(CASE WHEN gap >= 1800000000 THEN 1 ELSE 0 END)
+         |    OVER (PARTITION BY user_id ORDER BY t_us, event_id
+         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session
+         |  FROM (SELECT user_id, event_id, t_us,
+         |          t_us - lag(t_us, 1) OVER (PARTITION BY user_id
+         |                                    ORDER BY t_us, event_id) AS gap
+         |        FROM base))
+         |SELECT user_id, min(t_us) AS s_us,
+         |  max(t_us) + 1800000000 AS e_us, count(*) AS n
+         |FROM flagged GROUP BY user_id, session
+         |ORDER BY user_id, s_us""".stripMargin
     Map(
       "t1_fold" ->
         s"""WITH $baseSql
@@ -1921,38 +1814,8 @@ object TimeSeries {
            |WHERE sess < last_sess OR (e_us // 1000) + 1800000 < wm_ms
            |ORDER BY user_id, s_us""".stripMargin,
 
-      // identical gaps-and-islands oracle as st_session_window — the
-      // streaming query must produce the same sessions as the batch
-      // operator.
-      "st3_stream_session" ->
-        s"""WITH $baseSql,
-           |flagged AS (SELECT user_id, t_us,
-           |  sum(CASE WHEN gap >= 1800000000 THEN 1 ELSE 0 END)
-           |    OVER (PARTITION BY user_id ORDER BY t_us, event_id
-           |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session
-           |  FROM (SELECT user_id, event_id, t_us,
-           |          t_us - lag(t_us, 1) OVER (PARTITION BY user_id
-           |                                    ORDER BY t_us, event_id) AS gap
-           |        FROM base))
-           |SELECT user_id, min(t_us) AS s_us,
-           |  max(t_us) + 1800000000 AS e_us, count(*) AS n
-           |FROM flagged GROUP BY user_id, session
-           |ORDER BY user_id, s_us""".stripMargin,
-
-      "st_session_window" ->
-        s"""WITH $baseSql,
-           |flagged AS (SELECT user_id, t_us,
-           |  sum(CASE WHEN gap >= 1800000000 THEN 1 ELSE 0 END)
-           |    OVER (PARTITION BY user_id ORDER BY t_us, event_id
-           |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session
-           |  FROM (SELECT user_id, event_id, t_us,
-           |          t_us - lag(t_us, 1) OVER (PARTITION BY user_id
-           |                                    ORDER BY t_us, event_id) AS gap
-           |        FROM base))
-           |SELECT user_id, min(t_us) AS s_us,
-           |  max(t_us) + 1800000000 AS e_us, count(*) AS n
-           |FROM flagged GROUP BY user_id, session
-           |ORDER BY user_id, s_us""".stripMargin,
+      "st3_stream_session" -> sessionWindowSql,
+      "st_session_window" -> sessionWindowSql,
 
       "a10_sessionize" ->
         s"""WITH $baseSql,

@@ -1,51 +1,57 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.StructType
 
-/** §2.10 — streaming variants of the batch kernels. The reference is
-  * batch-only (file-existence memoization is its only incrementality,
-  * main.py:5375–5405); its per-window/per-session kernels map directly
-  * onto Structured Streaming:
+/** The stream harness: how a declared §2.10 query is driven to
+  * completion — its child session ([[streamSession]]), its file source
+  * ([[fileStream]]) and its AvailableNow memory-or-file sink
+  * ([[drain]]) — plus the stateful kernels the st* queries run. The
+  * reference is batch-only (file-existence memoization is its only
+  * incrementality, main.py:5375–5405); its per-window/per-session
+  * kernels map directly onto Structured Streaming:
   *
-  *  - tumbling/sliding windowed aggregation  ← A1 rebin
-  *  - session windows                        ← A10 sessionization
-  *  - watermark + late-data drop             ← (no analog: reference
+  *  - tumbling windowed aggregation    ← A1 rebin (st2, st4, st9)
+  *  - session windows                  ← A10 sessionization (st3, st5)
+  *  - watermark + late-data drop       ← (no analog: reference
   *    re-sorts after union, main.py:7401; we declare the contract)
-  *  - stateful flare trigger                 ← T9 rolling robust z
+  *  - stateful flare trigger           ← T9 rolling robust z (st10)
+  *  - stateful EWMA                    ← W8 (st14)
   */
 object StreamOps {
 
-  /** Tumbling/sliding window aggregation over an event stream with
-    * a watermark: counts + exact-cents sums per (window, event_type). */
-  def windowedAgg(events: DataFrame, slide: Option[String] = None,
-                  width: String = "10 minutes",
-                  watermark: String = "30 minutes"): DataFrame = {
-    val win = slide match {
-      case Some(s) => window(col("ts"), width, s)
-      case None => window(col("ts"), width)
-    }
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(win.as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        (sum(graft.core.Tables.cents(col("value"))).cast("long") / 100.0).as("sum_value"))
-      .select(col("w.start").as("w_start"), col("w.end").as("w_end"),
-        col("event_type"), col("n"), col("sum_value"))
+  /** Isolated child session for the streaming queries: the state-store
+    * partition count is fixed from spark.sql.shuffle.partitions at the
+    * first micro-batch, and the shared session's core-sized count is
+    * more state stores than these small aggregates need — every
+    * instance pays its own per-batch commit (delta file write +
+    * maintenance). A child session pins `Session.streamParts` (default
+    * 2) without mutating the shared session's conf mid-suite. (At real
+    * cluster scale the state partition count is a sizing decision per
+    * stream — this helper is where it lives.) */
+  def streamSession(s: SparkSession): SparkSession = {
+    val ss = s.newSession()
+    ss.conf.set("spark.sql.shuffle.partitions", graft.core.Session.streamParts.toString)
+    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // StreamingQueryManager is per-session: carry the caller's
+    // listeners over so progress observers (metrics assertions,
+    // monitoring) keep seeing these queries
+    s.streams.listListeners().foreach(ss.streams.addListener)
+    ss
   }
 
-  /** Session windows per user (30-min inactivity gap), the streaming
-    * form of A10. */
-  def sessionAgg(events: DataFrame, gap: String = "30 minutes",
-                 watermark: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap).as("w"), col("user_id"))
-      .agg(count(lit(1)).as("n"),
-        (sum(graft.core.Tables.cents(col("value"))).cast("long") / 100.0).as("sum_value"))
-      .select(col("w.start").as("s_start"), col("w.end").as("s_end"),
-        col("user_id"), col("n"), col("sum_value"))
+  /** Parquet file stream over `dir/glob` on `ss` with an explicit
+    * `schema`. `glob` must be a glob: FileStreamSource force-sets
+    * basePath to the literal path for non-glob paths, and basePath must
+    * be a directory — the glob keeps the explicit directory basePath in
+    * force. */
+  def fileStream(ss: SparkSession, dir: String, glob: String, schema: StructType,
+                 maxFilesPerTrigger: Option[Long] = None): DataFrame = {
+    val reader = ss.readStream.schema(schema).option("basePath", dir)
+    maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n.toString))
+      .parquet(s"$dir/$glob")
+  }
 
   case class Ev(user_id: Long, event_id: Long, tUs: Long, value: Double)
   case class FlareHit(user_id: Long, event_id: Long, tUs: Long, z: Double)
@@ -121,48 +127,24 @@ object StreamOps {
         })
   }
 
-  /** The file stream source requires a DIRECTORY; stage the single
-    * events.parquet file behind a symlink in a temp dir. */
-  private def stagedDir(dir: String): String = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_")
-    java.nio.file.Files.createSymbolicLink(
-      tmp.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
-    tmp.toFile.deleteOnExit()
-    tmp.toString
-  }
-
-  /** Drive a streaming DataFrame derived from `build(stream)` over the
-    * events parquet synchronously (memory sink) — used by tests and
-    * the pipeline to validate streaming plans against batch results. */
-  def runOnce(spark: SparkSession, dir: String, name: String,
-              build: DataFrame => DataFrame, outputMode: String = "append"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // The file's own schema (nanosAsLong already set): ts arrives as
-    // LongType (ns fixtures) or TimestampNTZType (us fixtures);
-    // normalizeTs maps either to session-TZ TIMESTAMP.
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val raw = spark.readStream.schema(schema).parquet(stagedDir(dir))
-    val events = graft.core.Tables.normalizeTs(raw)
-    val q = build(events).writeStream
-      .format("memory").queryName(name).outputMode(outputMode).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
-  }
-
-  /** Drain an append-mode streaming frame through the declared sink
-    * and return the drained output. Memory sink by default (the
-    * driver-gate shape: rows come back for the oracle compare);
-    * `SPARK_GRAFT_STREAM_SINK=file` switches to a parquet FILE sink —
-    * the memory sink serializes EVERY output row back through the
-    * driver (`spark.driver.maxResultSize` caps it at ~2 GiB: the
-    * measured ×1000 wall — st14 emits 100 M rows while its engine
-    * state is 1 row × 1 500 users at every scale), whereas the file
-    * sink is executor-side and scales with the cluster, which is the
-    * sink a production deployment uses. The transform chain, trigger
-    * and state path are IDENTICAL either way — only the sink differs,
-    * and the read-back frame carries the same rows.
+  /** Drive a streaming frame to completion (Trigger.AvailableNow: the
+    * micro-batch engine drains every available file, then stops) and
+    * return the drained output. `outputMode` is the query's own
+    * semantics: "append" for streams that emit finalized rows,
+    * "complete" for the finite-replay aggregates whose result is the
+    * final state table.
+    *
+    * Memory sink `${name}_sink` by default (the driver-gate shape: rows
+    * come back for the oracle compare); `SPARK_GRAFT_STREAM_SINK=file`
+    * ([[graft.core.Session.streamSink]]) switches append-mode streams
+    * to a parquet FILE sink — the memory sink serializes EVERY output
+    * row back through the driver (`spark.driver.maxResultSize` caps it
+    * at ~2 GiB: the measured ×1000 wall — st14 emits 100 M rows while
+    * its engine state is 1 row × 1 500 users at every scale), whereas
+    * the file sink is executor-side and scales with the cluster, which
+    * is the sink a production deployment uses. The transform chain,
+    * trigger and state path are IDENTICAL either way — only the sink
+    * differs, and the read-back frame carries the same rows.
     *
     * Concurrency contract (r16, making the FileSinkDirs invariant
     * explicit at the public entry point): at most ONE in-flight drain
@@ -173,9 +155,13 @@ object StreamOps {
     * read-back frame), but a THIRD concurrent drain of one name would
     * delete the first's dir while it may still be live. Distinct
     * names never interact. */
-  def drain(ss: SparkSession, out: DataFrame, name: String): DataFrame = {
-    val trig = org.apache.spark.sql.streaming.Trigger.AvailableNow()
-    if (sys.env.get("SPARK_GRAFT_STREAM_SINK").contains("file")) {
+  def drain(ss: SparkSession, out: DataFrame, name: String,
+            outputMode: String = "append"): DataFrame = {
+    val w = out.writeStream.outputMode(outputMode)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    // complete mode always drains to memory: Spark's file sink is
+    // append-only, and complete-mode output is the bounded state table
+    if (graft.core.Session.streamSink == "file" && outputMode == "append") {
       // deleteOnExit removes only EMPTY directories — the parquet
       // output (up to 100 M rows at ×1000) and the checkpoint dir
       // would leak per run (r12 advice). The read-back frame below is
@@ -187,16 +173,13 @@ object StreamOps {
       // eagerly deletes that name's PREVIOUS dir, whose read-back
       // frame it supersedes.
       val dir = FileSinkDirs.replace(name)
-      val q = out.writeStream.format("parquet")
+      w.format("parquet")
         .option("path", s"$dir/out")
         .option("checkpointLocation", s"$dir/ckpt")
-        .outputMode("append").trigger(trig).start()
-      q.awaitTermination()
+        .start().awaitTermination()
       ss.read.schema(out.schema).parquet(s"$dir/out")
     } else {
-      val q = out.writeStream.format("memory").queryName(s"${name}_sink")
-        .outputMode("append").trigger(trig).start()
-      q.awaitTermination()
+      w.format("memory").queryName(s"${name}_sink").start().awaitTermination()
       ss.table(s"${name}_sink")
     }
   }

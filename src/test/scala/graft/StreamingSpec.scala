@@ -3,17 +3,15 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.streaming.StreamOps
 
-/** §2.10 — streaming variants agree with their batch counterparts when
-  * driven to completion over the same fixture (memory sink). */
+/** §2.10 — the declared streaming queries agree with their batch
+  * counterparts when driven to completion over the same fixture. */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
   test("tumbling windowed aggregation matches batch groupBy") {
-    // complete mode: append would hold back the last (unfinalized)
-    // window — watermark semantics, not a bug.
-    val streamed = StreamOps.runOnce(spark, sf, "win_agg",
-      ev => StreamOps.windowedAgg(ev, width = "1 hour", watermark = "0 seconds"),
-      outputMode = "complete")
+    // the shipped st2: complete mode, because append would hold back
+    // the last (unfinalized) window — watermark semantics, not a bug.
+    val streamed = SparkEntry.queries("st2_stream_tumbling")(spark, sf)
     val batch = graft.core.Tables.events(spark, sf)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"))
@@ -23,9 +21,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("session windows produce the same session count as gaps-and-islands") {
-    val streamed = StreamOps.runOnce(spark, sf, "sess_agg",
-      ev => StreamOps.sessionAgg(ev, gap = "30 minutes", watermark = "0 seconds"),
-      outputMode = "complete")
+    val streamed = SparkEntry.queries("st3_stream_session")(spark, sf)
     val batchSessions = graft.ops.TsOps.sessionize(
       graft.core.Tables.events(spark, sf)
         .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("t_us")),
@@ -68,20 +64,27 @@ class StreamingSpec extends SparkSpec {
     // first day in its third micro-batch; the engine must drop them —
     // proven two ways: the micro-batch engine's own
     // numRowsDroppedByWatermark metric, and bit-equality of the early
-    // windows against a batch aggregation WITHOUT the duplicates.
+    // windows against a batch aggregation WITHOUT the duplicates. The
+    // state store also runs at the stream harness's partition count.
     val dropped = new java.util.concurrent.atomic.AtomicLong(0)
+    val stateParts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
       import org.apache.spark.sql.streaming.StreamingQueryListener._
       override def onQueryStarted(e: QueryStartedEvent): Unit = ()
       override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
       override def onQueryProgress(e: QueryProgressEvent): Unit =
-        e.progress.stateOperators.foreach(s => dropped.addAndGet(s.numRowsDroppedByWatermark))
+        e.progress.stateOperators.foreach { s =>
+          dropped.addAndGet(s.numRowsDroppedByWatermark)
+          stateParts.add(s.numShufflePartitions)
+        }
     }
     spark.streams.addListener(listener)
     val out =
       try SparkEntry.queries("st4_stream_append")(spark, sf).collect()
       finally spark.streams.removeListener(listener)
     assert(dropped.get() > 0, "watermark dropped no rows — late fixture not exercised")
+    assert(!stateParts.isEmpty)
+    stateParts.forEach(n => assert(n === graft.core.Session.streamParts.toLong))
     val batch = graft.core.Tables.events(spark, sf)
       .select(unix_micros(col("ts")).as("t_us"), col("event_type"),
         graft.core.Tables.cents(col("value")).as("vc"))

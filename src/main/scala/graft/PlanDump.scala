@@ -3,16 +3,15 @@ package graft
 import java.nio.file.{Files, Paths}
 
 /** Full (untruncated) `.explain("formatted")` dump of named queries to
-  * one file per query — the per-round plan-evidence artifact
-  * (plans/rNN/<query>_{before,after}.txt). Unlike Explain/PLANS.md
-  * (80-line excerpts + property greps) this writes the whole plan so a
-  * reviewer can diff the exact physical tree across commits.
+  * one file per query (`<outDir>/<query>_<suffix>.txt`), so two commits'
+  * physical trees can be diffed. The checked plan shapes live in the
+  * test suite (`PlanShapes`, asserted by QueriesSmokeSpec).
   *
   * Run: `runMain graft.PlanDump <outDir> <suffix> [sfDir] [query ...]`
   * — no query args = every non-streaming declared query (streaming
   * queries execute their micro-batch run at construction time and
-  * their batch plan is just the drained memory sink, so plan evidence
-  * for st* lives in PLANS.md's state-operator telemetry instead).
+  * their batch plan is just the drained memory sink, so their state
+  * contracts are asserted from progress telemetry in StreamingSpec).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

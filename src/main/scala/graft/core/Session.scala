@@ -2,9 +2,9 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** The one Spark session factory: Bench, TimeOne, Verify, PlanDump,
-  * Explain and the test suites all run on this configuration, so
-  * timings, oracle dumps, plan evidence and tests share one engine.
+/** The one Spark session factory: Bench, TimeOne, Verify, PlanDump
+  * and the test suites all run on this configuration, so timings,
+  * oracle dumps, plan evidence and tests share one engine.
   *
   * `SPARK_GRAFT_CPUS` (default 4) sets `local[cpus]`: single-shot
   * timings at sf0.1 are dominated by per-plan fixed cost, so a small

@@ -1,9 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec
 import graft.queries.TextQueries.simhashPairs
 
 /** r17 (verdict #2): d4b's post-multiprobe floor is Σ bucket² on the
@@ -27,16 +25,6 @@ import graft.queries.TextQueries.simhashPairs
   * proof. Documented in OPTIMIZATION_r17.md.
   */
 class D4bSkewSpec extends SparkSpec {
-
-  private def collectAll[T](p: SparkPlan)(pf: PartialFunction[SparkPlan, T]): Seq[T] = {
-    val here = p match {
-      case a: AdaptiveSparkPlanExec => collectAll(a.executedPlan)(pf)
-      case q: QueryStageExec => collectAll(q.plan)(pf)
-      case r: ReusedExchangeExec => collectAll(r.child)(pf)
-      case _ => p.children.flatMap(c => collectAll(c)(pf))
-    }
-    (pf.lift(p).toSeq ++ here) ++ p.subqueries.flatMap(s => collectAll(s)(pf))
-  }
 
   private def withConf[A](kv: (String, String)*)(body: => A): A = {
     val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-import org.apache.spark.sql.execution.{ExpandExec, FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{ExpandExec, FileSourceScanExec}
 import org.apache.spark.sql.functions._
 
 /** g1/g2 contracts (round 6): the OLAP report shapes must keep their
@@ -18,16 +16,6 @@ import org.apache.spark.sql.functions._
   *   one conditional aggregation over one scan of events.
   */
 class GroupingSpec extends SparkSpec {
-
-  private def collectAll[T](p: SparkPlan)(pf: PartialFunction[SparkPlan, T]): Seq[T] = {
-    val here = p match {
-      case a: AdaptiveSparkPlanExec => collectAll(a.executedPlan)(pf)
-      case q: QueryStageExec => collectAll(q.plan)(pf)
-      case r: ReusedExchangeExec => collectAll(r.child)(pf)
-      case _ => p.children.flatMap(c => collectAll(c)(pf))
-    }
-    (pf.lift(p).toSeq ++ here) ++ p.subqueries.flatMap(s => collectAll(s)(pf))
-  }
 
   test("g1: rollup is ONE Expand + one customer scan (no per-level re-aggregation)") {
     val df = SparkEntry.queries("g1_rollup")(spark, sf)

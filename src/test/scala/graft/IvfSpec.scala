@@ -57,18 +57,7 @@ class IvfSpec extends SparkSpec {
   }
 
   test("r16: row-local centroid assignment — zero exchanges, identical to the retired aggregated argmin") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
-    def collectAll[T](p: SparkPlan)(pf: PartialFunction[SparkPlan, T]): Seq[T] = {
-      val here = p match {
-        case a: AdaptiveSparkPlanExec => collectAll(a.executedPlan)(pf)
-        case q: QueryStageExec => collectAll(q.plan)(pf)
-        case r: ReusedExchangeExec => collectAll(r.child)(pf)
-        case _ => p.children.flatMap(c => collectAll(c)(pf))
-      }
-      (pf.lift(p).toSeq ++ here) ++ p.subqueries.flatMap(s => collectAll(s)(pf))
-    }
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val emb = graft.core.Tables.embeddings(spark, sf)
     val cents = Ivf.train(emb, k = 8, iters = 1)
     val a = Ivf.assign(emb, cents)

@@ -21,18 +21,6 @@ class JoinScaleSpec extends SparkSpec {
     df.queryExecution.executedPlan
   }
 
-  private def collectAll[T](p: SparkPlan)(pf: PartialFunction[SparkPlan, T]): Seq[T] = {
-    // QueryStageExec is a LeafExecNode — the finalized stage tree is
-    // reachable only through .plan (and ReusedExchange through .child)
-    val here = p match {
-      case a: AdaptiveSparkPlanExec => collectAll(a.executedPlan)(pf)
-      case q: QueryStageExec => collectAll(q.plan)(pf)
-      case r: ReusedExchangeExec => collectAll(r.child)(pf)
-      case _ => p.children.flatMap(c => collectAll(c)(pf))
-    }
-    (pf.lift(p).toSeq ++ here) ++ (p.subqueries.flatMap(s => collectAll(s)(pf)))
-  }
-
   test("b1: sort-merge join over bucketed tables has no Exchange on either side") {
     val plan = executed("b1_bucketed_join")
     val smjs = collectAll(plan) { case j: SortMergeJoinExec => j }
@@ -102,10 +90,10 @@ class JoinScaleSpec extends SparkSpec {
   }
 
   test("d15: pointer-jump rounds EXECUTE as shuffle_hash joins (r16, verdict #4)") {
-    // The shuffle_hash hints live in ccLargeStar/ccSmallStar, and
-    // PLANS.md's d15 snapshot prints the INITIAL AdaptiveSparkPlan
-    // (whose static guess is SortMergeJoin) — only the AQE-finalized
-    // executed plan proves the runtime claim in Explain.scala. The
+    // The shuffle_hash hints live in ccLargeStar/ccSmallStar, and a
+    // plan printed before execution shows only the INITIAL
+    // AdaptiveSparkPlan (whose static guess is SortMergeJoin) — only
+    // the AQE-finalized executed plan proves the runtime strategy. The
     // round inputs in d15 are checkpoint-truncated frames with reset
     // stats, reproduced here by checkpointReset over a generated edge
     // set; if AQE ever demotes the hinted join back to SMJ, this fails.

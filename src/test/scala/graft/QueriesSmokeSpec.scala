@@ -1,7 +1,8 @@
 package graft
 
-/** Driver-contract smoke: every declared query runs at sf0.001 and the
-  * flagship entry returns rows. The duckdb hash-match itself is the
+/** Driver-contract smoke: every declared query runs at sf0.001, its
+  * executed plan keeps the shape [[PlanShapes]] declares for it, and
+  * the flagship entry returns rows. The duckdb hash-match itself is the
   * external gate (tools/verify_local.py / driver CORRECTNESS). */
 class QueriesSmokeSpec extends SparkSpec {
 
@@ -14,6 +15,13 @@ class QueriesSmokeSpec extends SparkSpec {
     assert(missing.isEmpty, s"oracle without query: $missing")
   }
 
+  test("every plan-shape row names a declared query and checks something") {
+    val unknown = PlanShapes.rows.keySet diff SparkEntry.queries.keySet
+    assert(unknown.isEmpty, s"plan shapes for undeclared queries: $unknown")
+    val empty = PlanShapes.rows.collect { case (name, checks) if checks.isEmpty => name }
+    assert(empty.isEmpty, s"plan-shape rows without checks: $empty")
+  }
+
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"query $name runs at sf0.001") {
       val df = fn(spark, sf)
@@ -21,6 +29,13 @@ class QueriesSmokeSpec extends SparkSpec {
       // the full plan must run: count() lets Catalyst prune Sorts,
       // Windows and whole join chains (core/Exec.scala)
       graft.core.Exec.runCount(df)
+      // after execution, executedPlan is the AQE-final plan
+      PlanShapes.rows.get(name).foreach { checks =>
+        val plan = df.queryExecution.executedPlan
+        val nodes = collectAll(plan) { case p => p }
+        val failed = checks.filterNot(_.holds(nodes)).map(_.name)
+        assert(failed.isEmpty, s"$name plan shape: ${failed.mkString("; ")}\n$plan")
+      }
     }
   }
 

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Round-6 scale evidence: the heavy dedup/ANN/BLS/join/stream set run
   * on a 1× and a 10× corpus from the SAME seeded generator, asserting
-  * the claims PLANS.md/VERDICT previously made only as design
-  * arguments:
+  * the claims the plan audit and VERDICT previously made only as
+  * design arguments:
   *
   *  (a) d2's dual-strategy gate CUTS OVER: the driver fixture
   *      (31-token vocab, 5 k docs) takes the dense bitmap arm, both

@@ -1,12 +1,44 @@
 package graft
 
+import java.util.UUID
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, TimeUnit}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
+import org.apache.spark.sql.streaming.StreamingQueryListener._
 import graft.streaming.StreamOps
 
 /** §2.10 — the declared streaming queries agree with their batch
   * counterparts when driven to completion over the same fixture. */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Runs `body` with a listener on the shared session (the stream
+    * harness's child session inherits it) and returns its result with
+    * the progress of every stream query `body` started, in batch order.
+    * Listener delivery is asynchronous, so the progress is read only
+    * after each started query's QueryTerminatedEvent has arrived
+    * (bounded wait); QueryStartedEvent is delivered synchronously by
+    * `start()`. */
+  private def withProgress[A](body: => A): (A, Seq[StreamingQueryProgress]) = {
+    val started = ConcurrentHashMap.newKeySet[UUID]()
+    val ended = ConcurrentHashMap.newKeySet[UUID]()
+    val progress = new ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.add(e.id)
+      override def onQueryProgress(e: QueryProgressEvent): Unit = progress.add(e.progress)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ended.add(e.id)
+    }
+    spark.streams.addListener(listener)
+    try {
+      val out = body
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
+      def done = !started.isEmpty && ended.containsAll(started)
+      while (!done && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(done, s"${started.size} stream(s) started, ${ended.size} termination event(s) within 30 s")
+      (out, progress.asScala.toSeq.sortBy(_.batchId))
+    } finally spark.streams.removeListener(listener)
+  }
 
   test("tumbling windowed aggregation matches batch groupBy") {
     // the shipped st2: complete mode, because append would hold back
@@ -66,25 +98,12 @@ class StreamingSpec extends SparkSpec {
     // numRowsDroppedByWatermark metric, and bit-equality of the early
     // windows against a batch aggregation WITHOUT the duplicates. The
     // state store also runs at the stream harness's partition count.
-    val dropped = new java.util.concurrent.atomic.AtomicLong(0)
-    val stateParts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        e.progress.stateOperators.foreach { s =>
-          dropped.addAndGet(s.numRowsDroppedByWatermark)
-          stateParts.add(s.numShufflePartitions)
-        }
-    }
-    spark.streams.addListener(listener)
-    val out =
-      try SparkEntry.queries("st4_stream_append")(spark, sf).collect()
-      finally spark.streams.removeListener(listener)
-    assert(dropped.get() > 0, "watermark dropped no rows — late fixture not exercised")
-    assert(!stateParts.isEmpty)
-    stateParts.forEach(n => assert(n === graft.core.Session.streamParts.toLong))
+    val (out, progress) =
+      withProgress(SparkEntry.queries("st4_stream_append")(spark, sf).collect())
+    val ops = progress.flatMap(_.stateOperators)
+    assert(ops.map(_.numRowsDroppedByWatermark).sum > 0,
+      "watermark dropped no rows — late fixture not exercised")
+    ops.foreach(s => assert(s.numShufflePartitions === graft.core.Session.streamParts.toLong))
     val batch = graft.core.Tables.events(spark, sf)
       .select(unix_micros(col("ts")).as("t_us"), col("event_type"),
         graft.core.Tables.cents(col("value")).as("vc"))
@@ -99,6 +118,33 @@ class StreamingSpec extends SparkSpec {
     }
     assert(out.nonEmpty && out.length < batch.size,
       "append mode must emit only closed windows")
+  }
+
+  test("declared streams keep their state contracts (engine progress telemetry)") {
+    // the boundedness evidence of §2.10, read from the micro-batch
+    // engine's own stateOperators progress at sf0.001
+    val progress = Seq("st5_stateful_session", "st7_stream_join", "st8_stream_dedup_wm",
+      "st9_stream_static_join", "st10_stream_flare", "st11_stream_hll", "st12_stream_cms",
+      "st13_stream_quantile", "st14_stream_ewma")
+      .map(q => q -> withProgress(SparkEntry.queries(q)(spark, sf))._2).toMap
+    def ops(q: String) = progress(q).flatMap(_.stateOperators)
+    // watermark / timeout eviction: state drains instead of growing
+    for (q <- Seq("st5_stateful_session", "st7_stream_join", "st8_stream_dedup_wm"))
+      assert(ops(q).map(_.numRowsRemoved).sum > 0, s"$q evicted no state")
+    assert(ops("st8_stream_dedup_wm").map(_.numRowsDroppedByWatermark).sum > 0,
+      "st8 dropped no late rows")
+    // sketch state is bounded by the sketch shape, not the stream length
+    for ((q, bound) <- Seq("st11_stream_hll" -> 5 * 64, "st12_stream_cms" -> 4 * 64,
+                           "st13_stream_quantile" -> 5 * 256)) {
+      val rows = progress(q).last.stateOperators.map(_.numRowsTotal).sum
+      assert(rows > 0 && rows <= bound, s"$q final state rows $rows, bound $bound")
+    }
+    // stream-static join holds no join state: the only state operator
+    // is the downstream aggregate
+    assert(ops("st9_stream_static_join").map(_.operatorName).distinct === Seq("stateStoreSave"))
+    // the three-file arrival fixture drives three micro-batches
+    for (q <- Seq("st10_stream_flare", "st14_stream_ewma"))
+      assert(progress(q).map(_.batchId).distinct.size === 3, s"$q micro-batches")
   }
 
   test("st10: flare hits score against prior-micro-batch state (cross-batch buffer)") {

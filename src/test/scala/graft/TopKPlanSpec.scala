@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 
@@ -11,16 +10,6 @@ import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
   * row_number over an unpartitioned Window would sort every scored doc
   * through one partition: the 100 TB scale-killer this spec pins out. */
 class TopKPlanSpec extends SparkSpec {
-
-  private def collectAll[T](p: SparkPlan)(pf: PartialFunction[SparkPlan, T]): Seq[T] = {
-    val here = p match {
-      case a: AdaptiveSparkPlanExec => collectAll(a.executedPlan)(pf)
-      case q: QueryStageExec => collectAll(q.plan)(pf)
-      case r: ReusedExchangeExec => collectAll(r.child)(pf)
-      case _ => p.children.flatMap(c => collectAll(c)(pf))
-    }
-    (pf.lift(p).toSeq ++ here) ++ p.subqueries.flatMap(s => collectAll(s)(pf))
-  }
 
   test("d12: top-20 is TakeOrderedAndProject; no single-partition exchange below it") {
     val df = SparkEntry.queries("d12_bm25")(spark, sf)

@@ -91,7 +91,7 @@ object TsOps {
     * the raise IS the contract — callers quantize so vq ≤ 1.2e9
     * (e.g. the /200 cents→micro scaling the declared events queries
     * apply; raw events values genuinely trip the guard at ~6 600
-    * rows/user, BASELINE.md §r14). Widening to decimal/float would
+    * rows/user, BASELINE.md §r14 at commit eeea311). Widening to decimal/float would
     * silently trade the exact-integer oracle contract for rounding;
     * a loud raise with the offending maxima is the correct failure. */
   def withRegionDisc(df: DataFrame, parts: Seq[String], tUs: String, id: String,

@@ -690,7 +690,7 @@ object TimeSeries {
       // statistic off it. The previous row_number() form sorted the
       // FULL corpus per event_type (100 M rows through 8 partitions at
       // ×1000 — 5.5× the whole query's remaining cost; measured by
-      // StreamKnobSweep, recorded in BASELINE §r13).
+      // StreamKnobSweep, recorded in BASELINE.md §r13 at commit eeea311).
       val freq = ev.groupBy("event_type", "vc").agg(count(lit(1)).as("c"))
       val wV = Window.partitionBy("event_type").orderBy("vc")
       val exact = freq

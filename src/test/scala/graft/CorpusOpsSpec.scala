@@ -111,9 +111,14 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("u5: merge partitions the key space exactly") {
-    val out = SparkEntry.queries("u5_merge_upsert")(spark, sf).collect()
+    // sf0.01: at sf0.001 every o_orderkey is below the change batch's
+    // 8000 floor, so nothing is updated or inserted and the merge is
+    // never exercised (10 000 base, 4 000 change, 2 000 overlap rows here)
+    val big = sf.replace("sf0.001", "sf0.01")
+    val out = SparkEntry.queries("u5_merge_upsert")(spark, big).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val orders = graft.core.Tables.orders(spark, sf)
+    Seq("updated", "inserted", "kept").foreach(k => assert(out.getOrElse(k, 0L) > 0, k))
+    val orders = graft.core.Tables.orders(spark, big)
     val nBase = orders.filter(col("o_orderkey") < 10000).count()
     val nUpd = orders.filter(col("o_orderkey") >= 8000 && col("o_orderkey") < 12000).count()
     assert(out.getOrElse("updated", 0L) + out.getOrElse("kept", 0L) === nBase)

@@ -22,7 +22,7 @@ import graft.queries.TextQueries.simhashPairs
   * space shrinks 32× (2^11 vs 2^16 values) and Σ bucket² GROWS — the
   * trade is strictly worse than the landed 2×16 multiprobe unless the
   * flip set also shrinks, and a reduced flip set has no exactness
-  * proof. Documented in OPTIMIZATION_r17.md.
+  * proof. Documented in the r17 optimization notes at commit eeea311.
   */
 class D4bSkewSpec extends SparkSpec {
 

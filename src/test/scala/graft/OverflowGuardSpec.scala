@@ -5,9 +5,9 @@ import graft.ops.TsOps
 
 /** The withRegionDisc int64 overflow envelope (ops/TsOps.scala, r13
   * advice, ENFORCED in-plan r14, SPECCED r15 — the guard is
-  * load-bearing: BASELINE.md §r14 records that RAW events `value`s
-  * genuinely overflow Σ(Δvq²) at ~6 600 rows/user, so the raise path
-  * is reachable in production shapes).
+  * load-bearing: BASELINE.md §r14 (at commit eeea311) records that
+  * RAW events `value`s genuinely overflow Σ(Δvq²) at ~6 600 rows/user,
+  * so the raise path is reachable in production shapes).
   *
   * Measured layering (this spec's own finding, r15): Spark 4 runs
   * ANSI mode by DEFAULT, so a GROSS overflow raises

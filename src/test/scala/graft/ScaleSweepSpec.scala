@@ -31,7 +31,8 @@ import org.apache.spark.sql.functions._
   * proportionally: every 10th doc is a ~86%-token copy of its
   * predecessor.
   *
-  * Numbers from this spec are recorded in BASELINE.md §scale.
+  * Numbers from this spec are recorded in BASELINE.md §scale at
+  * commit eeea311.
   */
 class ScaleSweepSpec extends SparkSpec {
 

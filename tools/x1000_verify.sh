@@ -5,7 +5,7 @@
 # answer-volume-bound outputs, validated numpy/union-find mirrors
 # (hybrid_sweep) where the monolithic SQL replay is disk/volume-bound.
 # Engine dumps come from `graft.Verify /tmp/graft_scale_x1000 /tmp/vx1000`.
-# Results recorded in COVERAGE.md §×1000 + BASELINE.md.
+# Results recorded in COVERAGE.md §×1000 + BASELINE.md (at commit eeea311).
 set -u
 SD=${1:-/tmp/graft_scale_x1000}
 OD=${2:-/tmp/vx1000}

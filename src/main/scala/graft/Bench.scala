@@ -21,13 +21,14 @@ object Bench {
     Seq("t1_fold", "a12_conditional_agg", "j1_equi_join_agg", "w1_lag_diff",
         "d1_exact_dedup", "e2_lsh_ann", "d4_simhash", "st2_stream_tumbling")
 
-  /** Untimed warmup: touch every table once so file listing warms
-    * (events via the loader — its ns timestamps need normalizing), then
-    * run [[warmupQueries]] so the JIT compiles the common generated-code
-    * infrastructure once instead of inside every measured query. */
+  /** Untimed warmup: touch six tables once through the loaders, so file
+    * listing warms and [[graft.core.Tables.schemaOf]]'s memo holds their
+    * schemas, then run [[warmupQueries]] so the JIT compiles the common
+    * generated-code infrastructure once instead of inside every measured
+    * query. */
   def warmup(spark: org.apache.spark.sql.SparkSession, sfDir: String): Unit = {
     Seq("lineitem", "orders", "customer", "documents", "embeddings")
-      .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
+      .foreach(t => graft.core.Tables.load(spark, sfDir, t).count())
     graft.core.Tables.events(spark, sfDir).count()
     warmupQueries.foreach { q =>
       try graft.core.Exec.runCount(SparkEntry.queries(q)(spark, sfDir))

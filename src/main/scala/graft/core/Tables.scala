@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Fixture-table loaders + numeric helpers shared by every query.
   *
@@ -11,6 +12,15 @@ import org.apache.spark.sql.functions._
   * integers (money in cents, timestamps in microseconds) and the
   * final floating value is derived from those exact sums with a
   * single, identical formula on both sides.
+  *
+  * Schema memo: Spark's Parquet schema inference runs one Spark job
+  * per read, at DataFrame construction. [[schemaOf]] reads a file's
+  * schema once per JVM and every loader reads with it. The memo key is
+  * the canonical path, the [[Digest.fileToken]] of the file or
+  * directory (`name:length:mtime` of every file under it, so a file
+  * rewritten in place is read again) and the session's conf entries
+  * whose key contains `parquet` (`nanosAsLong` and
+  * `inferTimestampNTZ.enabled` change the inferred `ts` type).
   */
 object Tables {
   def region(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "region")
@@ -55,9 +65,30 @@ object Tables {
     * TIMESTAMP — sessions run UTC, so the cast is identity on the
     * stored micros and matches what duckdb reads from the same file. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val raw = spark.read.schema(schemaOf(spark, path)).parquet(path)
     raw.schema.fields.filter(_.dataType == org.apache.spark.sql.types.TimestampNTZType)
       .foldLeft(raw)((df, f) => df.withColumn(f.name, col(f.name).cast("timestamp")))
+  }
+
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, String, Seq[(String, String)]), StructType]()
+
+  /** The inferred schema of the parquet file or directory at `path`,
+    * memoized per JVM (see the object scaladoc for the key). A missing
+    * path is not memoized: Spark's own read raises its error. */
+  def schemaOf(spark: SparkSession, path: String): StructType = {
+    val f = new java.io.File(path)
+    if (!f.exists()) spark.read.parquet(path).schema
+    else {
+      val confs = spark.conf.getAll.filter(_._1.contains("parquet")).toSeq.sorted
+      val key = (f.getCanonicalPath, Digest.fileToken(f), confs)
+      Option(schemas.get(key)).getOrElse {
+        val schema = spark.read.parquet(path).schema
+        schemas.putIfAbsent(key, schema)
+        schema
+      }
+    }
   }
 
   /** Half-away-from-zero integer rounding of a double, PRIMITIVE form

@@ -1,5 +1,6 @@
 package graft.model
 
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 /** T13 — inference driver (ref proc_modl main.py:3928–4170; tdpy.samp
@@ -10,9 +11,48 @@ import scala.util.Random
   * small (it was collect()ed after Spark-side cleaning/folding), so
   * the walker loop runs on the driver; Spark parallelizes ACROSS fits
   * (per energy bin / per target, ref main.py:12301–12316) — not per
-  * step, where task latency would dominate.
+  * step, where task latency would dominate. Within one [[sampleQ]]
+  * step the walkers' likelihoods run on one pool of `Session.cpus`
+  * daemon threads that this object owns (emcee's thread boundary,
+  * Foreman-Mackey et al., PASP 2013): the proposals are independent
+  * given the previous step, so they are built serially, evaluated on
+  * the pool, and accepted serially in walker order. Fits inside
+  * executor tasks (`fitPerKey`) share the same pool, so the CPU in
+  * use stays at `Session.cpus`.
   */
 object Ensemble {
+
+  /** The walker pool: a fixed `Session.cpus` daemon threads, so a JVM
+    * that still holds it exits on its own. */
+  private lazy val pool: java.util.concurrent.ExecutorService = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    java.util.concurrent.Executors.newFixedThreadPool(graft.core.Session.cpus, r => {
+      val t = new Thread(r, s"ensemble-walker-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
+  }
+
+  /** `llq` of every vector in `ps`, evaluated on [[pool]]: at most
+    * `Session.cpus` workers claim the next unevaluated index until none
+    * is left, so a worker on a busy core holds no fixed share. A failing
+    * evaluation rethrows its own exception, the lowest failing index's,
+    * as a serial loop would. */
+  private def evalAll(llq: Array[Double] => Long, ps: Array[Array[Double]]): Array[Long] = {
+    val out = new Array[Long](ps.length)
+    val failed = new Array[Throwable](ps.length)
+    val next = new java.util.concurrent.atomic.AtomicInteger()
+    val worker: java.util.concurrent.Callable[Unit] = () => {
+      var k = next.getAndIncrement()
+      while (k < ps.length) {
+        try out(k) = llq(ps(k)) catch { case e: Throwable => failed(k) = e }
+        k = next.getAndIncrement()
+      }
+    }
+    pool.invokeAll(Seq.fill(math.min(graft.core.Session.cpus, ps.length))(worker).asJava)
+    failed.find(_ != null).foreach(e => throw e)
+    out
+  }
 
   /** Affine-invariant "stretch move" ensemble sampler (Goodman & Weare
     * 2010, the algorithm under emcee). Deterministic under `seed`.
@@ -388,8 +428,10 @@ object Ensemble {
     * comparison. Walkers all move from the PREVIOUS ensemble state
     * (within a step, proposals are independent given step s−1), which
     * is what lets the SQL replay advance one whole step per recursion
-    * round. Returns (post-burn samples flattened across walkers,
-    * acceptance rate). */
+    * round, and what lets each step's `llq` evaluations run on the
+    * walker pool (see the object scaladoc) with bit-identical samples.
+    * Returns (post-burn samples flattened across walkers, acceptance
+    * rate). */
   def sampleQ(llq: Array[Double] => Long,
               lo: Array[Double], hi: Array[Double],
               nWalkers: Int = 100, nSteps: Int = 100, burnFrac: Double = 0.3,
@@ -405,25 +447,29 @@ object Ensemble {
         clamp(init(d) + (2 * u - 1) * ballFrac * (hi(d) - lo(d)), d)
       }
     }
-    var lls = walkers.map(llq)
+    var lls = evalAll(llq, walkers)
     val burn = (nSteps * burnFrac).toInt
     val out = Array.newBuilder[Array[Double]]
     var accepted = 0L; var proposed = 0L
     for (step <- 0 until nSteps) {
       val next = walkers.map(_.clone); val nextLl = lls.clone
-      for (k <- 0 until nWalkers) {
+      val zs = Array.tabulate(nWalkers) { k =>
+        val u1 = uni(seed, stepIdx(step, k, 1, nWalkers))
+        (u1 + 1) * (u1 + 1) / 2 // stretch g(z) ∝ 1/√z, a = 2
+      }
+      val props = Array.tabulate(nWalkers) { k =>
         val rj = draw(seed, stepIdx(step, k, 0, nWalkers))
         val j0 = (rj % (nWalkers - 1)).toInt
         val j = if (j0 >= k) j0 + 1 else j0
-        val u1 = uni(seed, stepIdx(step, k, 1, nWalkers))
-        val z = (u1 + 1) * (u1 + 1) / 2 // stretch g(z) ∝ 1/√z, a = 2
-        val prop = Array.tabulate(nd)(d =>
-          clamp(walkers(j)(d) + z * (walkers(k)(d) - walkers(j)(d)), d))
-        val llp = llq(prop)
+        Array.tabulate(nd)(d =>
+          clamp(walkers(j)(d) + zs(k) * (walkers(k)(d) - walkers(j)(d)), d))
+      }
+      val llps = evalAll(llq, props)
+      for (k <- 0 until nWalkers) {
         proposed += 1
         val u2 = uni(seed, stepIdx(step, k, 2, nWalkers))
-        if (lnQ6(u2) < (nd - 1) * lnQ6(z) + (llp - lls(k))) {
-          next(k) = prop; nextLl(k) = llp; accepted += 1
+        if (lnQ6(u2) < (nd - 1) * lnQ6(zs(k)) + (llps(k) - lls(k))) {
+          next(k) = props(k); nextLl(k) = llps(k); accepted += 1
         }
       }
       walkers = next; lls = nextLl

@@ -166,14 +166,14 @@ object TimeSeries {
         "the file source would reorder batches")
     }
     val dir = dataDir.toString
-    StreamOps.fileStream(ss, dir, "*.parquet", ss.read.parquet(dir).schema, Some(1L))
+    StreamOps.fileStream(ss, dir, "*.parquet", Tables.schemaOf(ss, dir), Some(1L))
   }
 
   /** The stored schema of the events parquet (nanosAsLong is set on a
     * stream session: `ts` arrives as the file stores it, for
     * [[Tables.normalizeTs]] to map). */
   private def eventSchema(ss: SparkSession, d: String) =
-    ss.read.parquet(s"$d/events.parquet").schema
+    Tables.schemaOf(ss, s"$d/events.parquet")
 
   /** The events parquet as a file stream on `ss`. */
   private def eventStream(ss: SparkSession, d: String): DataFrame =
@@ -483,7 +483,7 @@ object TimeSeries {
     // the enrichment dim, keyed off user_id % 25.
     "st9_stream_static_join" -> ((s, d) => {
       val ss = StreamOps.streamSession(s)
-      val dim = ss.read.parquet(s"$d/nation.parquet")
+      val dim = Tables.nation(ss, d)
         .select(col("n_nationkey"), col("n_name"))
       val stream = eventStream(ss, d)
         .transform(graft.core.Tables.normalizeTs)

@@ -231,4 +231,49 @@ class EnsembleSpec extends AnyFunSuite {
     assert(l1 == l2 && v1.zip(v2).forall { case (a, b) =>
       java.lang.Double.doubleToLongBits(a) == java.lang.Double.doubleToLongBits(b) })
   }
+
+  /** A t13-volume box fit (the fixture of the sampleQ recovery test). */
+  private def boxFit(seed: Long, llq: Array[Double] => Long) =
+    Ensemble.sampleQ(llq, lo = Array(-0.2, -3.5, 0.2), hi = Array(0.2, 3.5, 2.0),
+      nWalkers = 50, nSteps = 60, seed = seed, init = Array(0.03, 0.0, 1.0))
+  private lazy val boxLlq = {
+    val nb = 200; val period = 7.0
+    val t = Array.tabulate(nb)(b => (b + 0.5) * period / nb)
+    val box = Ensemble.boxModel(t, 0.0, period, 1.0, 0.03)
+    val y = Array.tabulate(nb)(i =>
+      box(i) + ((Ensemble.draw(99L, i) + 1).toDouble / 2147483649.0 - 0.5) * 0.0008)
+    Ensemble.boxLlq(t, y, scale = 3.125e12, period = period) _
+  }
+
+  test("sampleQ from 4 threads at once (the fitPerKey shape) equals a single call") {
+    val seeds = Seq(42L, 43L, 44L, 45L)
+    val single = seeds.map(s => boxFit(s, boxLlq))
+    val ex = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val concurrent = seeds.map(s => ex.submit(() => boxFit(s, boxLlq))).map(_.get())
+      single.zip(concurrent).foreach { case ((s1, a1), (s2, a2)) =>
+        assert(a1 == a2)
+        assert(s1.length == s2.length && s1.zip(s2).forall { case (x, y) =>
+          x.map(java.lang.Double.doubleToLongBits).sameElements(
+            y.map(java.lang.Double.doubleToLongBits)) })
+      }
+    } finally ex.shutdown()
+  }
+
+  test("a throwing llq surfaces its own exception type and message") {
+    val calls = new java.util.concurrent.atomic.AtomicInteger()
+    val e = intercept[IllegalArgumentException](boxFit(42L, p => {
+      require(calls.incrementAndGet() < 120, s"llq gave up at depth ${p(0)}")
+      boxLlq(p)
+    }))
+    assert(e.getMessage.startsWith("requirement failed: llq gave up at depth"))
+  }
+
+  test("the walker pool runs on at most Session.cpus daemon threads") {
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Thread]()
+    boxFit(42L, p => { seen.add(Thread.currentThread()); boxLlq(p) })
+    assert(!seen.isEmpty && !seen.contains(Thread.currentThread()))
+    seen.forEach(t => assert(t.isDaemon, s"${t.getName} is not a daemon thread"))
+    assert(seen.size <= graft.core.Session.cpus)
+  }
 }

@@ -2,12 +2,12 @@ package graft.core
 
 /** Full-width content digests for fixture/cache tokens (r9 advice).
   *
-  * The derived-fixture caches (simGraph, arrivalFixture, the /tmp
-  * fixture dirs) key on a listing of `name:length:mtime` entries of
-  * their SOURCE files. A 32-bit `String.hashCode` of that listing
-  * collides silently — and a collision serves a STALE checkpointed
-  * graph or arrival batch, the exact staleness class the r8 sweep
-  * fixed twice. SHA-256 makes an accidental collision impossible in
+  * The derived-fixture store ([[Fixtures]]), the schema memo
+  * ([[Tables.schemaOf]]) and the simGraph cache key on a listing of
+  * `name:length:mtime` entries of their SOURCE files. A 32-bit
+  * `String.hashCode` of that listing collides silently — and a
+  * collision serves a STALE checkpointed graph or arrival batch, the
+  * exact staleness class the r8 sweep fixed twice. SHA-256 makes an accidental collision impossible in
   * practice; the hex form stays filesystem-name-safe.
   */
 object Digest {

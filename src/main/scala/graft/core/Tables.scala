@@ -32,20 +32,15 @@ object Tables {
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
   /** `events.ts` arrives in fixture-generation-dependent layouts:
     * TIMESTAMP(NANOS) (pre-r6 fixtures; Spark 4 rejects it as a
-    * timestamp, so read nanos as long and truncate to micros — the
+    * timestamp, so read nanos as long — `nanosAsLong`, set on every
+    * session by [[Session.build]] — and truncate to micros — the
     * same ns→us truncation duckdb applies) or TIMESTAMP(MICROS,
     * isAdjustedToUTC=false) (r6 fixtures; surfaces as TIMESTAMP_NTZ).
     * Both normalize to session-TZ TIMESTAMP — sessions here run UTC,
     * so the NTZ→LTZ cast is identity on the stored micros and both
     * engines see identical instants either way. */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    // Session-level conf mutation at plan-build time: a no-op on
-    // sessions from core.Session (set at session build), but racy if a
-    // shared session built elsewhere plans other queries concurrently
-    // — such a caller should set it once at session construction too.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def events(spark: SparkSession, dir: String): DataFrame =
     normalizeTs(load(spark, dir, "events"))
-  }
 
   /** Normalize a raw events frame's `ts` to session-TZ TIMESTAMP
     * whichever physical layout the fixture generation produced (see

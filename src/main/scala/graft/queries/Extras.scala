@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.Tables
+import graft.core.{Fixtures, Tables}
 import graft.core.Tables._
 
 /** Remaining SURVEY §2 items: J2 nearest-neighbor crossmatch, J5/A14
@@ -24,53 +24,6 @@ object Extras {
       unix_micros(col("ts")).as("t_us"),
       Tables.cents(col("value")).as("vc"))
 
-  /** Build-once derived fixture in the shared tmp dir, published
-    * ATOMICALLY: the layout is built in a per-process staging dir, the
-    * manifest is written INTO it, and the directory is renamed into
-    * place — so a concurrent driver (Verify and Bench overlap) can
-    * never observe a half-built layout. Publish order matters: the
-    * atomic move is tried FIRST (it fails if the target exists), so a
-    * CURRENT published dir is never deleted out from under a reader
-    * whose lazy DataFrame still holds its file listing; only a dir
-    * whose manifest is STALE (version bump) is deleted before one
-    * retry. After any fallback the manifest is re-verified — a stale
-    * fixture fails loudly instead of being silently served. Losers of
-    * a same-version race discard their staging copy and read the
-    * winner's (fixtures are pure functions of the immutable testdata,
-    * so any winner is equivalent). */
-  private def derivedFixture(name: String, d: String, version: String)
-                            (build: java.io.File => Unit): java.io.File = {
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      s"${name}_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-    val expect = s"$version|$d"
-    def ok: Boolean = {
-      val mf = new java.io.File(dir, "_graft_manifest")
-      mf.exists() &&
-        new String(java.nio.file.Files.readAllBytes(mf.toPath), "UTF-8") == expect
-    }
-    if (!ok) {
-      val tmp = new java.io.File(dir.getParentFile,
-        dir.getName + ".build." + ProcessHandle.current().pid())
-      org.apache.commons.io.FileUtils.deleteQuietly(tmp)
-      build(tmp)
-      java.nio.file.Files.write(
-        new java.io.File(tmp, "_graft_manifest").toPath, expect.getBytes("UTF-8"))
-      def tryMove(): Boolean =
-        try { java.nio.file.Files.move(tmp.toPath, dir.toPath,
-                java.nio.file.StandardCopyOption.ATOMIC_MOVE); true }
-        catch { case _: java.io.IOException => false }
-      if (!tryMove()) {
-        // Target exists. Current manifest → a concurrent publisher won;
-        // use theirs. Stale manifest → version bump: replace it, once.
-        if (!ok) { org.apache.commons.io.FileUtils.deleteQuietly(dir); tryMove() }
-        org.apache.commons.io.FileUtils.deleteQuietly(tmp)
-      }
-      require(ok, s"derivedFixture $name: publish failed and $dir's " +
-        s"manifest does not match '$expect' — refusing to serve a stale fixture")
-    }
-    dir
-  }
-
   /** Scale multiplier of a data dir (r8): scale corpora (ScaleFixture)
     * carry a `_scale_mult` marker that multiplies the derived FITS/
     * HDF5 fixture FILE COUNTS, so the ingest queries' measured decades
@@ -90,6 +43,22 @@ object Extras {
       new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").trim.toInt
     else 1
   }
+
+  /** The s14/px FITS fixture: `8 × scaleMult(d)` single-sector TESS
+    * light curves, a pure function of the file count. */
+  private def fitsDir(d: String): java.io.File = {
+    val nf = 8 * scaleMult(d)
+    Fixtures.dir("graft_fits", Seq(s"graft-fits-v2-n$nf"), Nil) { tmp =>
+      (1 to nf).foreach { k =>
+        java.nio.file.Files.write(
+          new java.io.File(tmp, f"tess-s$k%04d-lc.fits").toPath,
+          graft.sources.Fits.fixtureFile(k))
+      }
+    }
+  }
+
+  /** A fixture table's file, as a derived fixture's source. */
+  private def src(d: String, table: String) = new java.io.File(d, s"$table.parquet")
 
   private val baseSql =
     """base AS (SELECT event_id, user_id, event_type, value,
@@ -119,15 +88,7 @@ object Extras {
     // (broadcast back) and the output sort.
     "s14_fits_scan" -> ((s, d) => {
       import org.apache.spark.sql.types._
-      val nf = 8 * scaleMult(d)
-      val dir = derivedFixture("graft_fits", d, s"graft-fits-v2-n$nf") { tmp =>
-        tmp.mkdirs()
-        (1 to nf).foreach { k =>
-          java.nio.file.Files.write(
-            new java.io.File(tmp, f"tess-s$k%04d-lc.fits").toPath,
-            graft.sources.Fits.fixtureFile(k))
-        }
-      }
+      val dir = fitsDir(d)
       val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(
         StructType(Seq(
           StructField("sector", LongType), StructField("camera", LongType),
@@ -182,8 +143,7 @@ object Extras {
       import org.apache.spark.sql.types._
       val nf = 8 * scaleMult(d)
       // v3: superblock leaf-K now derived from the widest SNOD (r9)
-      val dir = derivedFixture("graft_hdf5", d, s"graft-hdf5-v3-n$nf") { tmp =>
-        tmp.mkdirs()
+      val dir = Fixtures.dir("graft_hdf5", Seq(s"graft-hdf5-v3-n$nf"), Nil) { tmp =>
         (1 to nf).foreach { k =>
           java.nio.file.Files.write(
             new java.io.File(tmp, f"qlp-orbit-$k%03d.h5").toPath,
@@ -245,15 +205,7 @@ object Extras {
     // the fold runs on the exact integer milliday grid; bin means
     // are floor-divided integers (the t16 'mb' form).
     "px_lightcurve_pipeline" -> ((s, d) => {
-      val nf = 8 * scaleMult(d)
-      val dir = derivedFixture("graft_fits", d, s"graft-fits-v2-n$nf") { tmp =>
-        tmp.mkdirs()
-        (1 to nf).foreach { k =>
-          java.nio.file.Files.write(
-            new java.io.File(tmp, f"tess-s$k%04d-lc.fits").toPath,
-            graft.sources.Fits.fixtureFile(k))
-        }
-      }
+      val dir = fitsDir(d)
       import org.apache.spark.sql.types._
       val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(
         StructType(Seq(
@@ -326,8 +278,7 @@ object Extras {
     "px2_multi_target" -> ((s, d) => {
       import org.apache.spark.sql.types._
       val nt = 12 * scaleMult(d)
-      val dir = derivedFixture("graft_fits_mt", d, s"graft-fits-mt-v2-n$nt") { tmp =>
-        tmp.mkdirs()
+      val dir = Fixtures.dir("graft_fits_mt", Seq(s"graft-fits-mt-v2-n$nt"), Nil) { tmp =>
         (1 to nt).foreach { t =>
           (1 to (1 + t % 4)).foreach { sec =>
             java.nio.file.Files.write(
@@ -447,11 +398,12 @@ object Extras {
     // mergeSchema so old files surface the new column as NULL — the
     // schema-drift reality of a 100 TB ingest that accretes columns
     // over years. The derived two-generation fixture is written once
-    // (manifest-gated, pure derivation of the immutable orders
-    // fixture); the oracle reconstructs the same merge in SQL by
-    // NULLing the column on even (v1) keys.
+    // through the fixture store, keyed on the orders source; the
+    // oracle reconstructs the same merge in SQL by NULLing the column
+    // on even (v1) keys.
     "s6_schema_evolution" -> ((s, d) => {
-      val dir = derivedFixture("graft_schemadrift", d, "graft-drift-v1") { tmp =>
+      val dir = Fixtures.dir("graft_schemadrift", Seq("graft-drift-v1"),
+          Seq(src(d, "orders"))) { tmp =>
         val o = orders(s, d)
         o.filter(col("o_orderkey") % 2 === 0)
           .select("o_orderkey", "o_totalprice")
@@ -473,11 +425,12 @@ object Extras {
     // predicate on the partition column — the scan must touch ONLY the
     // matching directories (PartitionFilters, zero data rows read from
     // the other 3/5 partitions). At 100 TB this is the first and
-    // biggest data-skipping lever; the derived layout is
-    // manifest-gated like b1/s6. The oracle states the same aggregate
-    // over the logical table.
+    // biggest data-skipping lever; the derived layout is written once
+    // through the fixture store like b1/s6. The oracle states the same
+    // aggregate over the logical table.
     "s7_partition_pruning" -> ((s, d) => {
-      val dir = derivedFixture("graft_partbytype", d, "graft-partbytype-v1") { tmp =>
+      val dir = Fixtures.dir("graft_partbytype", Seq("graft-partbytype-v1"),
+          Seq(src(d, "events"))) { tmp =>
         events(s, d).select(col("event_id"), col("user_id"),
             col("value"), col("event_type"))
           .write.mode("overwrite").partitionBy("event_type").parquet(tmp.toString)
@@ -496,8 +449,8 @@ object Extras {
     // pushed filter + pruned columns and aggregated. The fixture is a
     // pure function of orders, so the oracle states the same SQL over
     // the parquet original — any encode/decode or pushdown defect
-    // surfaces as a hash mismatch. Derived layout is manifest-gated
-    // like s6/s7 (Spark ignores the _graft_manifest underscore file).
+    // surfaces as a hash mismatch. Derived layout is written once
+    // through the fixture store like s6/s7.
     // S13 — CUSTOM DataSource V2 (sources.GridSource): the synthetic
     // light-curve grid generator exposed through the connector API —
     // a real table to Catalyst, so the chunk predicate pushes into
@@ -528,7 +481,8 @@ object Extras {
     // the round-trip with an exact per-lang aggregate the oracle
     // states over the parquet original. Map-only until the rollup.
     "s11_text_scan" -> ((s, d) => {
-      val dir = derivedFixture("graft_textlines", d, "graft-text-v1") { tmp =>
+      val dir = Fixtures.dir("graft_textlines", Seq("graft-text-v1"),
+          Seq(src(d, "documents"))) { tmp =>
         documents(s, d).select(concat_ws("\t",
             col("doc_id"), col("lang"), col("text")).as("value"))
           .write.mode("overwrite").text(tmp.toString)
@@ -556,8 +510,8 @@ object Extras {
     // documents table, so file write → binaryFile scan → PNG decode
     // is verified end to end. The only Exchange is the output sort.
     "s10_binary_scan" -> ((s, d) => {
-      val dir = derivedFixture("graft_pngfiles", d, "graft-png-v1") { tmp =>
-        tmp.mkdirs()
+      val dir = Fixtures.dir("graft_pngfiles", Seq("graft-png-v1"),
+          Seq(src(d, "documents"))) { tmp =>
         documents(s, d).filter(col("doc_id") % 3 === 0)
           .select("doc_id").collect().map(_.getLong(0)).foreach { id =>
             java.nio.file.Files.write(
@@ -577,7 +531,7 @@ object Extras {
     }),
 
     "s8_orc_roundtrip" -> ((s, d) => {
-      val dir = derivedFixture("graft_orc", d, "graft-orc-v1") { tmp =>
+      val dir = Fixtures.dir("graft_orc", Seq("graft-orc-v1"), Seq(src(d, "orders"))) { tmp =>
         orders(s, d).write.mode("overwrite").orc(tmp.toString)
       }
       s.read.orc(dir.toString)
@@ -602,7 +556,7 @@ object Extras {
     // bit-for-bit.
     "s9_json_scan" -> ((s, d) => {
       val cust = Tables.customer(s, d)
-      val dir = derivedFixture("graft_json", d, "graft-json-v1") { tmp =>
+      val dir = Fixtures.dir("graft_json", Seq("graft-json-v1"), Seq(src(d, "customer"))) { tmp =>
         cust.write.mode("overwrite").json(tmp.toString)
       }
       s.read.schema(cust.schema).json(dir.toString)

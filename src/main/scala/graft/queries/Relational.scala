@@ -914,59 +914,37 @@ object Relational {
     // needs NO Exchange on either side — at 100 TB this is the
     // difference between re-shuffling every query and shuffling once
     // at ingest (the reference's CSV-stage memoization, SURVEY §4,
-    // recast as a physical-layout property). The bucketed tables are
-    // written once per (session, sf) and memoized via the catalog;
-    // JoinScaleSpec asserts the join stage is Exchange-free.
+    // recast as a physical-layout property). The bucketed files are
+    // the INGEST-ONCE artifact this operator exists to demonstrate:
+    // they are written once through the fixture store, keyed on the
+    // source table, so the write cost is paid once, not once per
+    // session, and every session registers the published directory as
+    // an external bucketed table named after it (a changed source gets
+    // a new directory and so a new table). JoinScaleSpec asserts the
+    // join stage is Exchange-free.
     "b1_bucketed_join" -> ((s, d) => {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val lt = s"graft_li_bkt$tag"; val ot = s"graft_or_bkt$tag"
-      val base = sys.props("java.io.tmpdir") + "/graft_bucketed"
-      // The bucketed layout is the INGEST-ONCE artifact this operator
-      // exists to demonstrate, so honor it across sessions too: if a
-      // prior session already wrote the files (fixtures are
-      // immutable), register them as an external bucketed table via
-      // DDL instead of rewriting — the write cost is paid once, not
-      // once per session.
-      // A stale or foreign directory in world-writable /tmp must not be
-      // trusted: reuse only when the manifest this code wrote alongside
-      // the data matches the exact schema/key/bucket-count/fixture this
-      // version expects — anything else is rebuilt from scratch.
-      def ensure(name: String, cols: String, key: String, srcTable: String,
-          write: => Unit): Unit =
-        if (!s.catalog.tableExists(name)) {
-          val dir = new java.io.File(s"$base/$name")
-          val mf = new java.io.File(dir, "_graft_manifest")
-          // r9: the manifest folds in a content token of the SOURCE
-          // table — the scale corpora are rebuilt in place across
-          // fixture versions, and a path-only manifest would serve a
-          // stale bucketed layout (the arrivalFixture staleness class)
-          val srcTok = graft.core.Digest.fileToken(
-            new java.io.File(d, s"$srcTable.parquet"))
-          val expect = s"graft-bucketed-v2|$cols|$key|8|$d|$srcTok"
-          val reusable = new java.io.File(dir, "_SUCCESS").exists() &&
-            mf.exists() && new String(java.nio.file.Files.readAllBytes(
-              mf.toPath), "UTF-8") == expect
-          if (reusable)
-            s.sql(s"""CREATE TABLE $name ($cols) USING parquet
-                     |CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS
-                     |LOCATION '${dir.getAbsolutePath}'""".stripMargin)
-          else {
-            write
-            java.nio.file.Files.write(mf.toPath, expect.getBytes("UTF-8"))
-          }
+      def bucketed(table: String, key: String, cols: String*): String = {
+        val src = load(s, d, table).select(cols.map(col): _*)
+        val ddl = src.schema.toDDL
+        val dir = graft.core.Fixtures.dir(s"graft_bkt_$table",
+            Seq("graft-bucketed-v3", ddl, key, "8"),
+            Seq(new java.io.File(d, s"$table.parquet"))) { tmp =>
+          // only saveAsTable writes a bucket spec: write through a
+          // throwaway external table and drop it — its files stay
+          val scratch = "graft_bkt_build_" +
+            java.util.UUID.randomUUID().toString.replace("-", "")
+          src.write.bucketBy(8, key).sortBy(key)
+            .option("path", tmp.toString).mode("overwrite").saveAsTable(scratch)
+          s.sql(s"DROP TABLE $scratch")
         }
-      ensure(lt, "l_orderkey BIGINT, l_extendedprice DOUBLE, l_discount DOUBLE",
-        "l_orderkey", "lineitem", {
-          lineitem(s, d).select("l_orderkey", "l_extendedprice", "l_discount")
-            .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-            .option("path", s"$base/$lt").mode("overwrite").saveAsTable(lt)
-        })
-      ensure(ot, "o_orderkey BIGINT, o_orderpriority STRING",
-        "o_orderkey", "orders", {
-          orders(s, d).select("o_orderkey", "o_orderpriority")
-            .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-            .option("path", s"$base/$ot").mode("overwrite").saveAsTable(ot)
-        })
+        val name = dir.getName
+        s.sql(s"""CREATE TABLE IF NOT EXISTS $name ($ddl) USING parquet
+                 |CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS
+                 |LOCATION '${dir.getAbsolutePath}'""".stripMargin)
+        name
+      }
+      val lt = bucketed("lineitem", "l_orderkey", "l_orderkey", "l_extendedprice", "l_discount")
+      val ot = bucketed("orders", "o_orderkey", "o_orderkey", "o_orderpriority")
       s.table(lt).join(s.table(ot).hint("merge"),
           col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderpriority"))

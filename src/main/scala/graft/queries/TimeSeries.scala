@@ -103,35 +103,17 @@ object TimeSeries {
     * time-disjoint ascending batches — with maxFilesPerTrigger=1 the
     * per-batch processing order then equals the global (t, id) order,
     * which is what lets an order-sensitive stateful kernel (st10) be
-    * replayed exactly by a batch SQL oracle. Fixture content is a
-    * pure function of `d` (testdata is immutable), so an existing
-    * complete fixture is reused — the rebuild otherwise costs three
-    * passes over events per call. */
+    * replayed exactly by a batch SQL oracle. The batch files are
+    * written once through the fixture store, keyed on the projected
+    * schema, the cut constants and the events source. */
   private def arrivalFixture(ss: SparkSession, d: String, prefix: String,
       project: DataFrame => DataFrame,
       withLate: Boolean = true): DataFrame = {
     val C1 = E + 10 * PDAY; val C2 = E + 20 * PDAY
-    // the fixture tag encodes the projected schema and every cut
-    // constant, not just the data dir: changing the projection or the
-    // batch boundaries must force a rebuild, never silently reuse
     val schemaTag = project(events(ss, d)).schema
       .map(f => s"${f.name}:${f.dataType.simpleString}").mkString(",")
-    // content token of the SOURCE files (r8, found by the sf1 sweep):
-    // the scale corpora are rebuilt in place across fixture versions,
-    // and a path-only hash served STALE batches to the engine while
-    // the oracle read the current events — the simGraphCache staleness
-    // class, closed the same way
-    // r9: full-width SHA-256 tokens (a 32-bit hashCode collision would
-    // silently reuse a stale fixture — the staleness class r8 fixed)
-    val srcTok = graft.core.Digest.fileToken(new java.io.File(d, "events.parquet"))
-    val root = new java.io.File(s"/tmp/${prefix}_" + graft.core.Digest.sha256Hex(
-      d + "|" + schemaTag + s"|$E|$C1|$C2|$withLate|$srcTok").take(32))
-    val dataDir = new java.io.File(root, "data")
-    val complete = Option(dataDir.listFiles())
-      .exists(_.count(_.getName.endsWith(".parquet")) == 3)
-    if (!complete) {
-      org.apache.commons.io.FileUtils.deleteQuietly(root)
-      dataDir.mkdirs()
+    val dir = graft.core.Fixtures.dir(prefix, Seq(schemaTag, s"$E|$C1|$C2|$withLate"),
+        Seq(new java.io.File(d, "events.parquet"))) { root =>
       val src = project(events(ss, d))
         .withColumn("t_us", unix_micros(col("ts")))
       val tail = src.filter(col("t_us") >= C2)
@@ -141,13 +123,12 @@ object TimeSeries {
         if (withLate) tail.unionByName(src.filter(col("t_us") < E + PDAY))
         else tail)
       batches.zipWithIndex.foreach { case (b, i) =>
-        val stage = new java.io.File(root, s"w$i").toString
-        b.drop("t_us").coalesce(1).write.mode("overwrite").parquet(stage)
-        val part = new java.io.File(stage).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(dataDir, f"b$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        val stage = new java.io.File(root, s"w$i")
+        b.drop("t_us").coalesce(1).write.mode("overwrite").parquet(stage.toString)
+        val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
+        val dst = new java.io.File(root, f"b$i%02d.parquet")
+        java.nio.file.Files.move(part.toPath, dst.toPath)
+        org.apache.commons.io.FileUtils.deleteDirectory(stage)
         // batch order is CONTRACTUAL (cross-batch rows are late vs the
         // watermark if batches reorder): fail the build loudly if the
         // filesystem refuses the stamp rather than let the source pick
@@ -159,13 +140,12 @@ object TimeSeries {
       // defense in depth against coarse mtime granularity: the stamps
       // are 60 s apart, so any rounding that still yields a strictly
       // increasing sequence preserves order; anything else fails here
-      val stamped = dataDir.listFiles().filter(_.getName.endsWith(".parquet"))
+      val stamped = root.listFiles().filter(_.getName.endsWith(".parquet"))
         .sortBy(_.getName).map(_.lastModified)
       require(stamped.sliding(2).forall(w => w.length < 2 || w(0) < w(1)),
         s"arrivalFixture: non-increasing mtimes ${stamped.mkString(",")} — " +
         "the file source would reorder batches")
-    }
-    val dir = dataDir.toString
+    }.toString
     StreamOps.fileStream(ss, dir, "*.parquet", Tables.schemaOf(ss, dir), Some(1L))
   }
 

@@ -1,7 +1,8 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.Files
+import graft.core.Fixtures
 
 /** S5 user-CSV ingest fixture (ref np.loadtxt path, main.py:10222–10233:
   * comma-delimited with a header row, sorted by time AFTER load, sanity
@@ -14,27 +15,31 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * identical double in Spark and DuckDB), every 97th row an out-of-
   * range 2e6 flux for the sanity filter, every 113th an empty flux
   * (NULL). Pure-JVM writer — no Spark job runs at plan construction;
-  * idempotent via atomic rename.
+  * written once through the fixture store, which [[path]] names.
   */
 object CsvFixture {
-  val path = "/tmp/graft_s5_input.csv"
   private val E = 1704067200000000L
+  private val Name = "graft_s5"
+  private val Key = Seq("graft-s5-v1")
 
-  def ensure(): String = synchronized {
-    val sb = new StringBuilder("t_us,flux\n")
-    (0 until 2000).foreach { i =>
-      val k = i * 797 % 2000 // permuted write order (797 ⊥ 2000)
-      val t = E + k.toLong * 300000000L
-      val flux =
-        if (k % 97 == 0) "2000000.0"
-        else if (k % 113 == 0) ""
-        else f"${0.9 + 0.2 * ((k * 1103515245L + 12345L) % 2147483648L).toDouble / 2147483648.0}%.6f"
-      sb.append(t).append(',').append(flux).append('\n')
+  /** The fixture file's path, built or not (the s5 oracle reads it). */
+  def path: String = new java.io.File(Fixtures.path(Name, Key, Nil), "input.csv").toString
+
+  def ensure(): String = {
+    Fixtures.dir(Name, Key, Nil) { tmp =>
+      val sb = new StringBuilder("t_us,flux\n")
+      (0 until 2000).foreach { i =>
+        val k = i * 797 % 2000 // permuted write order (797 ⊥ 2000)
+        val t = E + k.toLong * 300000000L
+        val flux =
+          if (k % 97 == 0) "2000000.0"
+          else if (k % 113 == 0) ""
+          else f"${0.9 + 0.2 * ((k * 1103515245L + 12345L) % 2147483648L).toDouble / 2147483648.0}%.6f"
+        sb.append(t).append(',').append(flux).append('\n')
+      }
+      Files.write(new java.io.File(tmp, "input.csv").toPath,
+        sb.toString.getBytes(StandardCharsets.UTF_8))
     }
-    val tmp = Paths.get(path + ".tmp")
-    Files.write(tmp, sb.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(path), StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
     path
   }
 }

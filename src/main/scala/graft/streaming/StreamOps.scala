@@ -33,7 +33,6 @@ object StreamOps {
   def streamSession(s: SparkSession): SparkSession = {
     val ss = s.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", graft.core.Session.streamParts.toString)
-    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // StreamingQueryManager is per-session: carry the caller's
     // listeners over so progress observers (metrics assertions,
     // monitoring) keep seeing these queries

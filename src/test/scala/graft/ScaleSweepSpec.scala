@@ -293,25 +293,21 @@ object ScaleFixture {
                              // driver sf0.1 tables tiled ×mult with
                              // key-stride offsets (see tile() note)
 
-  def dir(spark: SparkSession, mult: Int): String = {
-    val d = new java.io.File(sys.props("java.io.tmpdir"), s"graft_scale_x$mult")
-    val mf = new java.io.File(d, "_manifest")
-    val expect = s"$Version|$mult"
-    val ok = mf.exists() &&
-      new String(java.nio.file.Files.readAllBytes(mf.toPath), "UTF-8") == expect
-    if (!ok) {
-      org.apache.commons.io.FileUtils.deleteQuietly(d)
-      build(spark, d, mult)
-      java.nio.file.Files.write(mf.toPath, expect.getBytes("UTF-8"))
-    }
-    // scale marker (r8): derived-fixture queries (s14/s15/px/px2) read
-    // this to scale their FILE COUNTS with the corpus — the sf dirs
-    // carry no marker, so the oracle contract stays pinned at ×1
-    val sm = new java.io.File(d, "_scale_mult")
-    if (!sm.exists())
-      java.nio.file.Files.write(sm.toPath, mult.toString.getBytes("UTF-8"))
-    d.getAbsolutePath
-  }
+  /** The ×`mult` corpus, built once through the fixture store. */
+  def dir(spark: SparkSession, mult: Int): String =
+    graft.core.Fixtures.dir(s"graft_scale_x$mult", Seq(Version, mult.toString),
+        Tiled.map(t => new java.io.File(sf01Table(t)))) { out =>
+      build(spark, out, mult)
+      // scale marker (r8): derived-fixture queries (s14/s15/px/px2) read
+      // this to scale their FILE COUNTS with the corpus — the sf dirs
+      // carry no marker, so the oracle contract stays pinned at ×1
+      java.nio.file.Files.write(new java.io.File(out, "_scale_mult").toPath,
+        mult.toString.getBytes("UTF-8"))
+    }.getAbsolutePath
+
+  /** The sf0.1 tables the corpus copies (see tile() below). */
+  private val Tiled = Seq("lineitem", "orders", "customer", "supplier", "part", "nation", "region")
+  private def sf01Table(name: String) = s"/root/testdata/sf0.1/$name.parquet"
 
   private def build(spark: SparkSession, out: java.io.File, mult: Int): Unit = {
     val nd = 5000L * mult; val vocab = 1000L * mult
@@ -423,7 +419,7 @@ object ScaleFixture {
       "o_orderkey" -> 150000L, "o_custkey" -> 15000L,
       "l_orderkey" -> 150000L, "l_partkey" -> 20000L, "l_suppkey" -> 1000L)
     def tile(name: String, parts: Int): Unit = {
-      val src = spark.read.parquet(s"/root/testdata/sf0.1/$name.parquet")
+      val src = spark.read.parquet(sf01Table(name))
       val cols = src.columns.map { c =>
         strides.get(c) match {
           case Some(st) => (col(c) + col("_k") * st).as(c)
@@ -436,7 +432,7 @@ object ScaleFixture {
     Seq("lineitem" -> math.max(2, mult), "orders" -> math.max(1, mult / 2),
       "customer" -> math.max(1, mult / 10), "supplier" -> math.max(1, mult / 10),
       "part" -> math.max(1, mult / 10)).foreach { case (t, p) => tile(t, p) }
-    write(spark.read.parquet("/root/testdata/sf0.1/nation.parquet"), "nation", 1)
-    write(spark.read.parquet("/root/testdata/sf0.1/region.parquet"), "region", 1)
+    write(spark.read.parquet(sf01Table("nation")), "nation", 1)
+    write(spark.read.parquet(sf01Table("region")), "region", 1)
   }
 }

@@ -19,4 +19,11 @@ class SessionSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
     assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
   }
+
+  test("child sessions inherit nanosAsLong from the session build") {
+    // Tables.events and the stream harness rely on it: neither sets it
+    assert(spark.newSession().conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    assert(graft.streaming.StreamOps.streamSession(spark)
+      .conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+  }
 }

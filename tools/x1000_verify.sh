@@ -4,10 +4,12 @@
 # small outputs, DuckDB EXCEPT-ALL set-difference (bigcompare) for
 # answer-volume-bound outputs, validated numpy/union-find mirrors
 # (hybrid_sweep) where the monolithic SQL replay is disk/volume-bound.
-# Engine dumps come from `graft.Verify /tmp/graft_scale_x1000 /tmp/vx1000`.
+# Engine dumps come from `graft.Verify <corpus> /tmp/vx1000`, where the
+# corpus is `ScaleFixture.dir(spark, 1000)`: /tmp/graft_scale_x1000_<hash>
+# (graft.core.Fixtures), the default below.
 # Results recorded in COVERAGE.md §×1000 + BASELINE.md (at commit eeea311).
 set -u
-SD=${1:-/tmp/graft_scale_x1000}
+SD=${1:-$(ls -d /tmp/graft_scale_x1000_* 2>/dev/null | head -1)}
 OD=${2:-/tmp/vx1000}
 cd /root/repo
 # Final r14 method map (COVERAGE.md §×1000). Excluded with reasons:

@@ -1,6 +1,7 @@
 package graft
 
 import graft.core.Session
+import org.apache.spark.sql.internal.SQLConf
 
 /** Benchmark main (driver contract): runs every declared query against
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line ([[line]]) with the total
@@ -50,10 +51,13 @@ object Bench {
   private def errs(rs: Seq[Result]): String =
     rs.filterNot(_._3).map("\"" + _._1 + "\"").mkString("[", ",", "]")
   // the engine configuration this run used: without it a reader of
-  // the line cannot tell a local[4] run from a local[32] one
+  // the line cannot tell a local[4] run from a local[32] one. The
+  // small-exchange bound is the active session's (Spark's defaults
+  // when none is active).
   private def conf: String =
     s""""cpus":${Session.cpus},"shuffle_partitions":${Session.shufflePartitions},""" +
-      s""""stream_parts":${Session.streamParts},"stream_sink":"${Session.streamSink}""""
+      s""""stream_parts":${Session.streamParts},"stream_sink":"${Session.streamSink}",""" +
+      s""""small_exchange_bytes":${graft.core.SmallExchange.bound(SQLConf.get)}"""
 
   /** The stdout line. It is tail-parsed from sbt stdout in a ~2.5 KB
     * window and the full 196-query map is ~4.3 KB, so the line carries

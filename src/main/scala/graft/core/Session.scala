@@ -13,7 +13,9 @@ import org.apache.spark.sql.SparkSession
   * `SPARK_GRAFT_CPUS=32`. `SPARK_GRAFT_PARTS` (default `cpus`) sets
   * the shuffle partitions — ×1000-corpus runs scale it past the core
   * count so per-task hash state fits executor memory. nanosAsLong lets
-  * pre-r6 TIMESTAMP(NANOS) fixtures load (see [[Tables.events]]). */
+  * pre-r6 TIMESTAMP(NANOS) fixtures load (see [[Tables.events]]).
+  * AQE runs with [[SmallExchange]], whose size bound is AQE's own
+  * one-partition target. */
 object Session {
   val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
   val shufflePartitions: Int =
@@ -37,9 +39,17 @@ object Session {
   val streamSink: String =
     if (sys.env.get("SPARK_GRAFT_STREAM_SINK").contains("file")) "file" else "memory"
 
+  /** The session extensions provider, [[graft.plans.GraftExtensions]]. */
+  val extensions: String = classOf[graft.plans.GraftExtensions].getName
+
+  /** Builds (or returns the running) session and writes the
+    * size-dependent settings it runs with to stderr. The extensions
+    * setting replaces the one the build's forked JVM options give (the
+    * same provider), so the provider is applied once. */
   def build(): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
+      .config("spark.sql.extensions", extensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -47,6 +57,9 @@ object Session {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    System.err.println(s"graft session: cpus=$cpus shuffle_partitions=$shufflePartitions " +
+      s"stream_parts=$streamParts stream_sink=$streamSink " +
+      s"small_exchange_bytes=${SmallExchange.bound(spark.sessionState.conf)}")
     spark
   }
 }

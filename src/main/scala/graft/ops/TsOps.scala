@@ -235,9 +235,11 @@ object TsOps {
 
   /** F4/T4 iterative sigma clip (ref main.py:10989–11002, scipy
     * sigmaclip semantics: keep mean−kσ < x < mean+kσ, POPULATION σ,
-    * iterate). Loops in the driver over cached frames; all thresholds
-    * derive from exact integer sums so the surviving row-set is
-    * reproducible. Returns the clipped frame. */
+    * iterate). The `iters` rounds unroll into one plan that runs no job
+    * while it is built: each round aggregates per-`parts` stats (a hash
+    * exchange on `parts`) and broadcast-hash-joins them back as the
+    * filter. All thresholds derive from exact integer sums so the
+    * surviving row-set is reproducible. Returns the clipped frame. */
   def sigmaClip(df: DataFrame, parts: Seq[String], vCents: String,
                 k: Double, iters: Int): DataFrame = {
     var cur = df

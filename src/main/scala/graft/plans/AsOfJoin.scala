@@ -140,10 +140,15 @@ object AsOfJoin {
   }
 }
 
-/** Session-build-time registration:
-  * `--conf spark.sql.extensions=graft.plans.GraftExtensions` installs
-  * the as-of strategy and the phase-fold SQL function. */
+/** The program's session extensions, installed at session build by
+  * `spark.sql.extensions=graft.plans.GraftExtensions`
+  * ([[graft.core.Session.build]] and the build's forked JVM options set
+  * it): the as-of strategy and the [[graft.core.SmallExchange]] AQE
+  * rule. Every session of the context, `newSession()` children
+  * included, gets them. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
+  override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => AsOfJoin.AsOfJoinStrategy)
+    e.injectQueryStagePrepRule(_ => graft.core.SmallExchange)
+  }
 }

@@ -742,7 +742,9 @@ object Relational {
         .orderBy("p_partkey")
     }),
 
-    // §2.8 JSON scalar functions over events.props.
+    // §2.8 JSON scalar functions over events.props, then a keyed count
+    // aggregation on the extracted key (a partial aggregate and an
+    // exchange hashed on k): not map-only.
     "sc_json" -> ((s, d) => {
       events(s, d)
         .withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
@@ -789,7 +791,9 @@ object Relational {
         .orderBy("p_partkey")
     }),
 
-    // §2.8 date/time parts.
+    // §2.8 date/time parts, then a keyed count/sum aggregation on
+    // (yr, mo) (a partial aggregate and an exchange hashed on the
+    // parts): not map-only.
     "sc_datetime" -> ((s, d) => {
       orders(s, d)
         .withColumn("yr", year(col("o_orderdate")))

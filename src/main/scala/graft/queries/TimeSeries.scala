@@ -837,7 +837,9 @@ object TimeSeries {
         .orderBy("event_id")
     }),
 
-    // J4 — broadcast interval join: samples × literal windows.
+    // J4 — interval join of the samples against 3 literal windows: a
+    // BroadcastNestedLoopJoin on t_us >= lo_us AND t_us < hi_us over the
+    // broadcast windows (no equi key, no shuffle but the output sort).
     "j4_interval_join" -> ((s, d) => {
       val wins = s.createDataFrame(Seq(
         (0, E + 2 * PDAY, E + 3 * PDAY),
@@ -1026,7 +1028,9 @@ object TimeSeries {
     }),
 
     // F4/T4 — iterative sigma clip, 3 rounds of 2.5σ per event_type
-    // (scipy sigmaclip semantics, ref main.py:10989–11002).
+    // (scipy sigmaclip semantics, ref main.py:10989–11002). One plan, no
+    // window: each round's per-event_type stats aggregate (an exchange
+    // hashed on event_type) is broadcast-hash-joined back as the filter.
     "t4_sigma_clip" -> ((s, d) => {
       TsOps.sigmaClip(base(s, d), Seq("event_type"), "vc", 2.5, 3)
         .groupBy("event_type")

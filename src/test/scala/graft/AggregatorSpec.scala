@@ -42,17 +42,18 @@ class AggregatorSpec extends SparkSpec {
   }
 
   test("S5 csv reader path: schema round-trip preserves rows and values") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_csv_").toString
-    val src = graft.core.Tables.events(spark, sf)
-      .select(col("event_id"), unix_micros(col("ts")).as("t_us"), col("value"))
-      .orderBy("event_id")
-    src.write.mode("overwrite").option("header", "true").csv(tmp)
-    val back = spark.read
-      .schema("event_id LONG, t_us LONG, value DOUBLE")
-      .option("header", "true").csv(tmp)
-    assert(back.count() === src.count())
-    val sHash = src.agg(sum(col("t_us")), sum(round(col("value") * 100).cast("long"))).head
-    val bHash = back.agg(sum(col("t_us")), sum(round(col("value") * 100).cast("long"))).head
-    assert(sHash === bHash)
+    withTempDir("graft_csv_") { tmp =>
+      val src = graft.core.Tables.events(spark, sf)
+        .select(col("event_id"), unix_micros(col("ts")).as("t_us"), col("value"))
+        .orderBy("event_id")
+      src.write.mode("overwrite").option("header", "true").csv(tmp)
+      val back = spark.read
+        .schema("event_id LONG, t_us LONG, value DOUBLE")
+        .option("header", "true").csv(tmp)
+      assert(back.count() === src.count())
+      val sHash = src.agg(sum(col("t_us")), sum(round(col("value") * 100).cast("long"))).head
+      val bHash = back.agg(sum(col("t_us")), sum(round(col("value") * 100).cast("long"))).head
+      assert(sHash === bHash)
+    }
   }
 }

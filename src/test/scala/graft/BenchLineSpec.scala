@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class BenchLineSpec extends AnyFunSuite {
 
   private val lineKeys = Seq("metric", "value", "unit", "queries", "n_queries", "errors",
-    "sf", "cpus", "shuffle_partitions", "stream_parts", "stream_sink", "full")
+    "sf", "cpus", "shuffle_partitions", "stream_parts", "stream_sink", "small_exchange_bytes", "full")
 
   private val sfDir = "/data/testdata/sf0.1"
 

@@ -26,15 +26,6 @@ import graft.queries.TextQueries.simhashPairs
   */
 class D4bSkewSpec extends SparkSpec {
 
-  private def withConf[A](kv: (String, String)*)(body: => A): A = {
-    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("hot simhash bucket: AQE splits the skewed candidate-join partition; results unchanged") {
     // 16k synthetic docs; the first 4k share the lower half 0x1234 (one
     // degenerate bucket = 25% of the corpus) with injectively-spread

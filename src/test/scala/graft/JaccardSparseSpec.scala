@@ -26,38 +26,39 @@ class JaccardSparseSpec extends SparkSpec {
     }
     val docs = (0 until 100).map(i => (i.toLong, tokens(i).mkString(" "), "s0"))
       .toDF("doc_id", "text", "source")
-    val dir = java.nio.file.Files.createTempDirectory("graft_sparse").toString
-    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    withTempDir("graft_sparse") { dir =>
+      docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
-    val out = SparkEntry.queries("d2_ngram_jaccard")(spark, dir)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3)))
-      .toMap
+      val out = SparkEntry.queries("d2_ngram_jaccard")(spark, dir)
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3)))
+        .toMap
 
-    // brute-force oracle in plain Scala
-    def bigrams(doc: Int): Set[String] =
-      tokens(doc).sliding(2).map(_.mkString(" ")).toSet
-    val expected = (for {
-      a <- 0 until 100; b <- a + 1 until 100
-      ba = bigrams(a); bb = bigrams(b)
-      inter = (ba intersect bb).size
-      j = inter.toDouble / (ba.size + bb.size - inter)
-      if j > 0.4
-    } yield (a.toLong, b.toLong) -> ((inter.toLong, math.rint(j * 1e6) / 1e6))).toMap
+      // brute-force oracle in plain Scala
+      def bigrams(doc: Int): Set[String] =
+        tokens(doc).sliding(2).map(_.mkString(" ")).toSet
+      val expected = (for {
+        a <- 0 until 100; b <- a + 1 until 100
+        ba = bigrams(a); bb = bigrams(b)
+        inter = (ba intersect bb).size
+        j = inter.toDouble / (ba.size + bb.size - inter)
+        if j > 0.4
+      } yield (a.toLong, b.toLong) -> ((inter.toLong, math.rint(j * 1e6) / 1e6))).toMap
 
-    assert(expected.nonEmpty, "fixture produced no near-dup pairs")
-    assert(out.keySet === expected.keySet,
-      s"pair sets differ: extra=${out.keySet diff expected.keySet} missing=${expected.keySet diff out.keySet}")
-    out.foreach { case (k, v) => assert(v === expected(k), s"pair $k differs") }
+      assert(expected.nonEmpty, "fixture produced no near-dup pairs")
+      assert(out.keySet === expected.keySet,
+        s"pair sets differ: extra=${out.keySet diff expected.keySet} missing=${expected.keySet diff out.keySet}")
+      out.foreach { case (k, v) => assert(v === expected(k), s"pair $k differs") }
 
-    // and the gate really chose sparse: the universe exceeds the gate
-    val nu = docs.select(explode(expr(
-      """array_distinct(zip_with(
-        |  slice(split(text, ' '), 1, size(split(text, ' ')) - 1),
-        |  slice(split(text, ' '), 2, size(split(text, ' ')) - 1),
-        |  (x, y) -> concat(x, ' ', y)))""".stripMargin)).as("bg"))
-      .agg(countDistinct("bg")).head.getLong(0)
-    assert(nu > 4096, s"fixture universe $nu does not force the sparse gate")
+      // and the gate really chose sparse: the universe exceeds the gate
+      val nu = docs.select(explode(expr(
+        """array_distinct(zip_with(
+          |  slice(split(text, ' '), 1, size(split(text, ' ')) - 1),
+          |  slice(split(text, ' '), 2, size(split(text, ' ')) - 1),
+          |  (x, y) -> concat(x, ' ', y)))""".stripMargin)).as("bg"))
+        .agg(countDistinct("bg")).head.getLong(0)
+      assert(nu > 4096, s"fixture universe $nu does not force the sparse gate")
+    }
   }
 
   test("prefix filter: skewed-df vocabulary cuts candidates >=10x and the output stays exact (r17)") {
@@ -79,64 +80,65 @@ class JaccardSparseSpec extends SparkSpec {
     }
     val docs = (0 until nDocs).map(i => (i.toLong, tokens(i).mkString(" "), "s0"))
       .toDF("doc_id", "text", "source")
-    val dir = java.nio.file.Files.createTempDirectory("graft_skewdf").toString
-    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    withTempDir("graft_skewdf") { dir =>
+      docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
-    // shared bigram stream, exactly the query's kernel
-    val bg = graft.core.Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(expr(
-        """array_distinct(zip_with(
-          |  slice(split(text, ' '), 1, size(split(text, ' ')) - 1),
-          |  slice(split(text, ' '), 2, size(split(text, ' ')) - 1),
-          |  (x, y) -> concat(x, ' ', y)))""".stripMargin)).as("bg"))
-      .localCheckpoint()
-    val dfStats = bg.groupBy("bg").agg(count(lit(1)).as("dfc"))
-      .agg(max("dfc"), count(lit(1))).head
-    info(s"bigram df: max=${dfStats.getLong(0)} over ${dfStats.getLong(1)} distinct values")
-    assert(dfStats.getLong(0) > nDocs / 2,
-      "fixture lost its hot tail — the skew this test exists to model")
+      // shared bigram stream, exactly the query's kernel
+      val bg = graft.core.Tables.documents(spark, dir)
+        .select(col("doc_id"), explode(expr(
+          """array_distinct(zip_with(
+            |  slice(split(text, ' '), 1, size(split(text, ' ')) - 1),
+            |  slice(split(text, ' '), 2, size(split(text, ' ')) - 1),
+            |  (x, y) -> concat(x, ' ', y)))""".stripMargin)).as("bg"))
+        .localCheckpoint()
+      val dfStats = bg.groupBy("bg").agg(count(lit(1)).as("dfc"))
+        .agg(max("dfc"), count(lit(1))).head
+      info(s"bigram df: max=${dfStats.getLong(0)} over ${dfStats.getLong(1)} distinct values")
+      assert(dfStats.getLong(0) > nDocs / 2,
+        "fixture lost its hot tail — the skew this test exists to model")
 
-    // TELEMETRY — candidate volume, retired full-stream join vs the
-    // landed prefix join (identical length filter on both):
-    val sz = bg.groupBy("doc_id").agg(count(lit(1)).as("nb"))
-    val szd = bg.join(sz, "doc_id")
-    def lenFilter = col("b.nb") >= ceil(col("a.nb") * 0.4) &&
-      col("b.nb") <= floor(col("a.nb") / 0.4)
-    val oldCand = szd.as("a").join(szd.as("b"),
-      col("a.bg") === col("b.bg") && col("a.doc_id") < col("b.doc_id") && lenFilter).count()
-    val dfT = bg.groupBy("bg").agg(count(lit(1)).as("dfc"))
-    val pre = bg.join(dfT, "bg").groupBy("doc_id")
-      .agg(sort_array(collect_list(struct(col("dfc"), col("bg")))).as("sets"))
-      .select(col("doc_id"),
-        size(col("sets")).cast("long").as("nb"),
-        explode(expr(
-          "slice(transform(sets, x -> x.bg), 1, size(sets) - CAST((2 * size(sets)) DIV 5 AS INT))")).as("bg"))
-    val newCand = pre.as("a").join(pre.as("b"),
-      col("a.bg") === col("b.bg") && col("a.doc_id") < col("b.doc_id") && lenFilter).count()
-    info(s"candidates: full-stream join $oldCand -> prefix join $newCand " +
-      f"(cut x${oldCand.toDouble / math.max(1L, newCand)}%.1f)")
-    assert(newCand * 10 <= oldCand,
-      s"prefix filter should cut candidates >=10x on a skewed vocabulary " +
-      s"(old=$oldCand new=$newCand)")
+      // TELEMETRY — candidate volume, retired full-stream join vs the
+      // landed prefix join (identical length filter on both):
+      val sz = bg.groupBy("doc_id").agg(count(lit(1)).as("nb"))
+      val szd = bg.join(sz, "doc_id")
+      def lenFilter = col("b.nb") >= ceil(col("a.nb") * 0.4) &&
+        col("b.nb") <= floor(col("a.nb") / 0.4)
+      val oldCand = szd.as("a").join(szd.as("b"),
+        col("a.bg") === col("b.bg") && col("a.doc_id") < col("b.doc_id") && lenFilter).count()
+      val dfT = bg.groupBy("bg").agg(count(lit(1)).as("dfc"))
+      val pre = bg.join(dfT, "bg").groupBy("doc_id")
+        .agg(sort_array(collect_list(struct(col("dfc"), col("bg")))).as("sets"))
+        .select(col("doc_id"),
+          size(col("sets")).cast("long").as("nb"),
+          explode(expr(
+            "slice(transform(sets, x -> x.bg), 1, size(sets) - CAST((2 * size(sets)) DIV 5 AS INT))")).as("bg"))
+      val newCand = pre.as("a").join(pre.as("b"),
+        col("a.bg") === col("b.bg") && col("a.doc_id") < col("b.doc_id") && lenFilter).count()
+      info(s"candidates: full-stream join $oldCand -> prefix join $newCand " +
+        f"(cut x${oldCand.toDouble / math.max(1L, newCand)}%.1f)")
+      assert(newCand * 10 <= oldCand,
+        s"prefix filter should cut candidates >=10x on a skewed vocabulary " +
+        s"(old=$oldCand new=$newCand)")
 
-    // EXACTNESS — the declared query against brute force over the same
-    // fixture (the prefix stage must lose no qualifying pair)
-    val out = SparkEntry.queries("d2_ngram_jaccard")(spark, dir)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3)))
-      .toMap
-    def bigrams(doc: Int): Set[String] =
-      tokens(doc).sliding(2).map(_.mkString(" ")).toSet
-    val sets = (0 until nDocs).map(bigrams)
-    val expected = (for {
-      a <- 0 until nDocs; b <- a + 1 until nDocs
-      inter = (sets(a) intersect sets(b)).size
-      j = inter.toDouble / (sets(a).size + sets(b).size - inter)
-      if j > 0.4
-    } yield (a.toLong, b.toLong) -> ((inter.toLong, math.rint(j * 1e6) / 1e6))).toMap
-    assert(expected.nonEmpty, "fixture produced no near-dup pairs")
-    assert(out.keySet === expected.keySet,
-      s"pair sets differ: extra=${out.keySet diff expected.keySet} missing=${expected.keySet diff out.keySet}")
-    out.foreach { case (k, v) => assert(v === expected(k), s"pair $k differs") }
+      // EXACTNESS — the declared query against brute force over the same
+      // fixture (the prefix stage must lose no qualifying pair)
+      val out = SparkEntry.queries("d2_ngram_jaccard")(spark, dir)
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3)))
+        .toMap
+      def bigrams(doc: Int): Set[String] =
+        tokens(doc).sliding(2).map(_.mkString(" ")).toSet
+      val sets = (0 until nDocs).map(bigrams)
+      val expected = (for {
+        a <- 0 until nDocs; b <- a + 1 until nDocs
+        inter = (sets(a) intersect sets(b)).size
+        j = inter.toDouble / (sets(a).size + sets(b).size - inter)
+        if j > 0.4
+      } yield (a.toLong, b.toLong) -> ((inter.toLong, math.rint(j * 1e6) / 1e6))).toMap
+      assert(expected.nonEmpty, "fixture produced no near-dup pairs")
+      assert(out.keySet === expected.keySet,
+        s"pair sets differ: extra=${out.keySet diff expected.keySet} missing=${expected.keySet diff out.keySet}")
+      out.foreach { case (k, v) => assert(v === expected(k), s"pair $k differs") }
+    }
   }
 }

@@ -2,8 +2,9 @@ package graft
 
 import scala.reflect.ClassTag
 import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
-import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning, SinglePartition}
 import org.apache.spark.sql.execution._
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec, MergingSessionsExec, ObjectHashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
@@ -42,6 +43,49 @@ object PlanShapes {
       case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[RangePartitioning]
       case _ => true
     })
+
+  private def isRange(p: SparkPlan): Boolean = p match {
+    case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[RangePartitioning]
+    case _ => false
+  }
+
+  /** A one-partition hand-off in either form: an `Exchange
+    * SinglePartition` gather, or the one-task coalesce that
+    * [[graft.core.SmallExchange]] puts in its place when the input is
+    * under AQE's one-partition target (as nearly every sf0.001 input
+    * is). */
+  def isGather(p: SparkPlan): Boolean = p match {
+    case e: ShuffleExchangeExec => e.outputPartitioning == SinglePartition
+    case c: CoalesceExec => c.numPartitions == 1
+    case _ => false
+  }
+
+  /** A sort input that is the output sort's range exchange (looked for
+    * through codegen input, shuffle reads and query stages) or the
+    * one-task coalesce in its place. */
+  private def rangeOrCoalesce(p: SparkPlan): Boolean = p match {
+    case i: InputAdapter => rangeOrCoalesce(i.child)
+    case r: AQEShuffleReadExec => rangeOrCoalesce(r.child)
+    case q: ShuffleQueryStageExec => rangeOrCoalesce(q.plan)
+    case c: CoalesceExec => c.numPartitions == 1
+    case e => isRange(e)
+  }
+
+  /** `n` shuffles before the output sort, and the output sort in
+    * either form: a global sort over its range exchange, or over a
+    * one-task coalesce. */
+  def shufflesThenSort(n: Int): Check =
+    Check(s"exactly $n ShuffleExchangeExec before a global sort over a range exchange or a one-task coalesce",
+      nodes => nodes.count(p => p.isInstanceOf[ShuffleExchangeExec] && !isRange(p)) == n &&
+        nodes.count(isRange) <= 1 && nodes.exists {
+          case s: SortExec => s.global && rangeOrCoalesce(s.child)
+          case _ => false
+        })
+
+  /** The plan's only exchange is one gather, in either form. */
+  val gatherOnly: Check = Check("the only exchange is one SinglePartition gather or one-task coalesce",
+    nodes => nodes.count(isGather) == 1 &&
+      nodes.forall(p => !p.isInstanceOf[ShuffleExchangeExec] || isGather(p)))
 
   /** Every hash shuffle partitions on exactly the columns `keys`. */
   def hashOn(keys: String*): Check =
@@ -85,26 +129,26 @@ object PlanShapes {
 
   val rows: Map[String, Seq[Check]] = Map(
     // one Exchange serves the gap/island window chain and the rollup
-    "a10_sessionize" -> Seq(hashOn("user_id"), globalWindows(0), noJoin, exactly[Exchange](2)),
+    "a10_sessionize" -> Seq(hashOn("user_id"), globalWindows(0), noJoin, shufflesThenSort(1)),
     "a12_conditional_agg" -> Seq(exactly[FileSourceScanExec](1), exactly[HashAggregateExec](2), noJoin),
     "a13_rms_binwidth" -> Seq(has[BNLJ], partialAgg),
-    "a14_mc_explode" -> Seq(has[GenerateExec], partialAgg, exactly[Exchange](2)),
+    "a14_mc_explode" -> Seq(has[GenerateExec], partialAgg, shufflesThenSort(1)),
     // per-stage filters sit in the scans; every keyed shuffle is on user_id
     "a15_funnel" -> Seq(hashOn("user_id"), pushed("EqualTo(event_type,view)"),
       pushed("EqualTo(event_type,click)"), pushed("EqualTo(event_type,purchase)")),
     "a16_cohort_retention" -> Seq(lacks[WindowExec], partialAgg, has[BHJ]),
     "a17_corr_matrix" -> Seq(has[BHJ], lacks[BNLJ], partialAgg),
-    "a1_rebin_time" -> Seq(partialAgg, exactly[Exchange](2)),
-    "a1b_rebin_edges" -> Seq(has[BNLJ], has[BHJ], partialAgg, exactly[Exchange](2)),
+    "a1_rebin_time" -> Seq(partialAgg, shufflesThenSort(1)),
+    "a1b_rebin_edges" -> Seq(has[BNLJ], has[BHJ], partialAgg, shufflesThenSort(1)),
     "a2_median_norm" -> Seq(has[ObjectHashAggregateExec], partialAgg, has[BHJ], lacks[WindowExec]),
     "a3_percentiles" -> Seq(has[ObjectHashAggregateExec], partialAgg, hashOn("l_returnflag"),
-      exactly[Exchange](2)),
+      shufflesThenSort(1)),
     // frame-max multiplicity via an exploded-offset equi-join
     "a4_peakcut_std" -> Seq(has[GenerateExec], has[BHJ], lacks[BNLJ], lacks[Cartesian], globalWindows(0)),
     // trials broadcast-routed by level, no sample x trial expansion
     "a8_bls_snr" -> Seq(has[BHJ], lacks[BNLJ], lacks[Cartesian], partialAgg),
     // sort-merge join straight over the bucketed scans
-    "b1_bucketed_join" -> Seq(has[SMJ], exactly[Exchange](2)),
+    "b1_bucketed_join" -> Seq(has[SMJ], shufflesThenSort(1)),
     // the Bloom filter is a plan-internal subquery aggregate
     "b2_bloom_semi_join" -> Seq(has[ObjectHashAggregateExec], has[SubqueryExec]),
     "d10_corpus_pipeline" -> Seq(has[BHJ], partialAgg, lacks[SMJ]),
@@ -119,10 +163,10 @@ object PlanShapes {
     "d17_token_entropy" -> Seq(partialAgg, globalWindows(0)),
     "d18_pii_scrub" -> Seq(sortExchangeOnly),
     "d19_decontaminate" -> Seq(has[BHJ], lacks[SMJ], lacks[SHJ]),
-    "d1_exact_dedup" -> Seq(partialAgg, exactly[Exchange](2)),
+    "d1_exact_dedup" -> Seq(partialAgg, shufflesThenSort(1)),
     "d20_stratified_sample" -> Seq(has[FilterExec], globalWindows(0), hashOn("lang")),
-    "d21_seq_packing" -> Seq(hashOn("source"), exactly[Exchange](2), globalWindows(0)),
-    "d22_winnowing" -> Seq(hashOn("doc_id"), exactly[Exchange](2), globalWindows(0)),
+    "d21_seq_packing" -> Seq(hashOn("source"), shufflesThenSort(1), globalWindows(0)),
+    "d22_winnowing" -> Seq(hashOn("doc_id"), shufflesThenSort(1), globalWindows(0)),
     // the returned plan is the static rounds over checkpointed edges, not a driver loop's result
     "d23_pagerank" -> Seq(has[RDDScanExec], partialAgg, lacks[LocalTableScanExec]),
     "d24_quality_lr" -> Seq(has[BHJ], lacks[SMJ], hashOn("doc_id")),
@@ -153,8 +197,8 @@ object PlanShapes {
     "d4b_simhash_pairs" -> Seq(lacks[BNLJ], lacks[Cartesian], lacks[ObjectHashAggregateExec]),
     "d5_langid" -> Seq(has[BHJ], globalWindows(0)),
     "d6_quality" -> Seq(partialAgg, has[BHJ]),
-    "d7_token_count" -> Seq(partialAgg, exactly[Exchange](2)),
-    "d8_fingerprint" -> Seq(lacks[WindowExec], partialAgg, exactly[Exchange](2)),
+    "d7_token_count" -> Seq(partialAgg, shufflesThenSort(1)),
+    "d8_fingerprint" -> Seq(lacks[WindowExec], partialAgg, shufflesThenSort(1)),
     "d9_embed_neardup" -> Seq(has[BHJ], lacks[SMJ], lacks[Cartesian]),
     "e10_sq8_ann" -> Seq(has[BHJ], lacks[SMJ], partialAgg, globalWindows(0)),
     "e12_recall_eval" -> Seq(exactly[WindowExec](2), globalWindows(0)),
@@ -221,10 +265,10 @@ object PlanShapes {
     "px2_multi_target" -> Seq(has[BHJ], globalWindows(0), lacks[SMJ]),
     "px_lightcurve_pipeline" -> Seq(has[MapPartitionsExec], has[BHJ], has[TopK], lacks[SMJ]),
     "s10_binary_scan" -> Seq(has[MapPartitionsExec], sortExchangeOnly),
-    "s11_text_scan" -> Seq(hashOn("lang"), exactly[Exchange](2)),
+    "s11_text_scan" -> Seq(hashOn("lang"), shufflesThenSort(1)),
     "s12_dedup_first" -> Seq(globalWindows(0), hashOn("user_id", "event_type")),
     "s13_dsv2_source" -> Seq(has[BatchScanExec]),
-    "s14_fits_scan" -> Seq(has[MapPartitionsExec], has[BHJ], exactly[Exchange](2), hashOn("sector")),
+    "s14_fits_scan" -> Seq(has[MapPartitionsExec], has[BHJ], shufflesThenSort(1), hashOn("sector")),
     "s15_hdf5_scan" -> Seq(has[MapPartitionsExec], has[BHJ], hashOn("orbit")),
     "s3_mag2flux" -> Seq(has[BHJ], has[ObjectHashAggregateExec], lacks[WindowExec]),
     "s5_csv_scan" -> Seq(pushed("LessThan(flux"), sortExchangeOnly),
@@ -239,15 +283,15 @@ object PlanShapes {
     "st_session_window" -> Seq(has[MergingSessionsExec], hashOn("user_id")),
     "t10_transit_stats" -> Seq(noJoin, hashOn("k"), partialAgg),
     "t10b_ineg_secondary" -> Seq(hashOn("k"), partialAgg),
-    // generated off a one-row bounds/anchor aggregate: its gather is the only Exchange
-    "t11_time_grid" -> Seq(has[GenerateExec], exactly[Exchange](1)),
-    "t12_model_eval" -> Seq(exactly[Exchange](1)),
-    "t12d_model_ld" -> Seq(exactly[Exchange](1)),
-    "t12e_model_ldx" -> Seq(exactly[Exchange](1), partialAgg),
+    // generated off a one-row bounds/anchor aggregate: its gather is the only exchange
+    "t11_time_grid" -> Seq(has[GenerateExec], gatherOnly),
+    "t12_model_eval" -> Seq(gatherOnly),
+    "t12d_model_ld" -> Seq(gatherOnly),
+    "t12e_model_ldx" -> Seq(gatherOnly, partialAgg),
     // fit output is checkpointed: the returned plan never re-runs the fit stage
     "t13b_mcmc_perener" -> Seq(has[RDDScanExec], lacks[MapGroupsExec]),
     "t13m_mcmc_ttv" -> Seq(has[RDDScanExec], lacks[MapGroupsExec]),
-    "t14_injection" -> Seq(exactly[Exchange](1), partialAgg),
+    "t14_injection" -> Seq(gatherOnly, partialAgg),
     "t15_visibility" -> Seq(has[GenerateExec], sortExchangeOnly),
     // lag correlation as an equi-join on (event_type, bin + lag)
     "t16_acf" -> Seq(globalWindows(0), has[BHJ], lacks[SMJ], lacks[Cartesian]),
@@ -258,12 +302,12 @@ object PlanShapes {
     "t20_oddeven" -> Seq(partialAgg, has[BNLJ], exactly[FileSourceScanExec](2)),
     "t21_ttv" -> Seq(has[BNLJ], partialAgg),
     "t2_phase_bin" -> Seq(hashOn("bin"), partialAgg, lacks[WindowExec]),
-    "t3_detrend_median" -> Seq(globalWindows(0), hashOn("user_id"), exactly[Exchange](2)),
+    "t3_detrend_median" -> Seq(globalWindows(0), hashOn("user_id"), shufflesThenSort(1)),
     "t3b_detrend_spline" -> Seq(has[MapGroupsExec]),
     "t3c_detrend_gp" -> Seq(has[MapGroupsExec]),
     "t4b_detrend_clip" -> Seq(hashOn("user_id"), globalWindows(0), lacks[SMJ], lacks[SHJ]),
     // trig sums inside one aggregate pass, no rows x nFreq expansion join
-    "t5_lombscargle" -> Seq(noJoin, has[ObjectHashAggregateExec], exactly[Exchange](1)),
+    "t5_lombscargle" -> Seq(noJoin, has[ObjectHashAggregateExec], gatherOnly),
     "t6_bls" -> Seq(has[BHJ], partialAgg, globalWindows(0)),
     "t7_outlperi" -> Seq(exactly[TopK](2), lacks[Cartesian]),
     "t8_matched_filter" -> Seq(hashOn("user_id"), globalWindows(0)),
@@ -276,11 +320,11 @@ object PlanShapes {
     "u2_except" -> Seq(has[BHJ], lacks[SMJ], pushed("EqualTo(o_orderstatus,F)")),
     "u5_merge_upsert" -> Seq(pushed("LessThan(o_orderkey,10000)")),
     // lag, row_number and lead share one business-key Exchange, no self-join
-    "u6_scd2" -> Seq(hashOn("user_id"), exactly[Exchange](2), noJoin),
+    "u6_scd2" -> Seq(hashOn("user_id"), shufflesThenSort(1), noJoin),
     "u7_snapshot_diff" -> Seq(exactly[SMJ](1)),
     "w1_lag_diff" -> Seq(exactly[WindowExec](1), globalWindows(0), hashOn("user_id"), noJoin),
-    "w2_gap_segment" -> Seq(hashOn("user_id"), exactly[Exchange](2), globalWindows(0)),
-    "w2b_disc_segment" -> Seq(exactly[Exchange](1), globalWindows(0), noJoin),
+    "w2_gap_segment" -> Seq(hashOn("user_id"), shufflesThenSort(1), globalWindows(0)),
+    "w2b_disc_segment" -> Seq(gatherOnly, globalWindows(0), noJoin),
     "w5_argmax" -> Seq(globalWindows(0), noJoin, hashOn("event_type")),
     "w6_sequence" -> Seq(has[GenerateExec], sortExchangeOnly),
     "w7_rank_surface" -> Seq(partialAgg, globalWindows(0)),

@@ -20,6 +20,23 @@ class SessionSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
   }
 
+  private def smallExchangeRules(s: org.apache.spark.sql.SparkSession): Int =
+    s.sessionState.adaptiveRulesHolder.queryStagePrepRules.count(_ eq graft.core.SmallExchange)
+
+  test("a newSession() child carries the SmallExchange rule") {
+    assert(smallExchangeRules(spark) === 1)
+    assert(smallExchangeRules(spark.newSession()) === 1)
+    assert(smallExchangeRules(graft.streaming.StreamOps.streamSession(spark)) === 1)
+  }
+
+  test("a second Session.build() in the same JVM injects no second copy") {
+    val again = graft.core.Session.build()
+    // the forked test JVM's options name the provider too
+    assert(again.sparkContext.getConf.get("spark.sql.extensions") === graft.core.Session.extensions)
+    assert(smallExchangeRules(again) === 1)
+    assert(smallExchangeRules(again.newSession()) === 1)
+  }
+
   test("child sessions inherit nanosAsLong from the session build") {
     // Tables.events and the stream harness rely on it: neither sets it
     assert(spark.newSession().conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 import org.scalatest.BeforeAndAfterAll
@@ -17,39 +16,12 @@ class TablesSpec extends SparkSpec with BeforeAndAfterAll {
   override def afterAll(): Unit =
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir)): Unit
 
-  /** Spark jobs started while `body` runs. Listener events arrive
-    * asynchronously but in order, so `body` is bracketed by two marker
-    * jobs and the count is taken once the closing marker is seen. */
-  private def jobsDuring(body: => Unit): Int = {
-    val starts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        starts.add(Option(e.properties).map(_.getProperty("spark.job.description"))
-          .flatMap(Option(_)).getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    def marker(name: String): Unit = {
-      sc.setJobDescription(name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("tables-spec-open"); body; marker("tables-spec-close")
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!starts.contains("tables-spec-close") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      val seen = starts.toArray(Array.empty[String]).toSeq
-      assert(seen.contains("tables-spec-close"), "closing marker job never seen")
-      seen.indexOf("tables-spec-close") - seen.indexOf("tables-spec-open") - 1
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("a repeat load of an unchanged file starts no Spark job") {
     spark.range(10).selectExpr("id", "id * 2 AS v").write.mode("overwrite")
       .parquet(s"$dir/repeat.parquet")
-    val first = jobsDuring(Tables.load(spark, dir, "repeat"))
+    val first = jobsDuring(Tables.load(spark, dir, "repeat")).size
     assert(first > 0, "the first load infers the schema with a Spark job")
-    val again = jobsDuring(Tables.load(spark, dir, "repeat"))
+    val again = jobsDuring(Tables.load(spark, dir, "repeat")).size
     assert(again == 0, s"a repeat load started $again jobs")
     assert(Tables.load(spark, dir, "repeat").count() == 10)
   }

@@ -12,10 +12,10 @@ import org.apache.spark.sql.graftshim.ofRows
 
 /** J8 as-of join as a WHOLE-OPERATOR extension — the §2.11(c) tier:
   * a custom `LogicalPlan` node planned by a custom `SparkStrategy`
-  * into a custom `SparkPlan`, registered either per-session via
-  * `spark.experimental.extraStrategies` (what [[AsOfJoin.asof]] does)
-  * or at session build via [[GraftExtensions]]
-  * (`spark.sql.extensions=graft.plans.GraftExtensions`).
+  * into a custom `SparkPlan`, registered at session build by
+  * [[GraftExtensions]] (`spark.sql.extensions=graft.plans.GraftExtensions`),
+  * so every session of the context, `newSession()` children included,
+  * can plan it.
   *
   * Semantics: for every left row, join the LAST right row of the same
   * part key with rightTime ≤ leftTime (inner — unmatched left rows
@@ -123,16 +123,13 @@ object AsOfJoin {
     p.output.find(_.name == name).getOrElse(
       sys.error(s"asof: column $name not in ${p.output.map(_.name)}"))
 
-  /** DataFrame-level entry point; registers the strategy in the
-    * session on first use (idempotent). Requires a LongType time
-    * column on both sides. */
+  /** DataFrame-level entry point; the session plans it through the
+    * strategy that [[GraftExtensions]] injected. Requires a LongType
+    * time column on both sides. */
   def asof(left: DataFrame, right: DataFrame,
            lPart: String, lTime: String,
            rPart: String, rTime: String): DataFrame = {
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     ofRows(spark, AsOfJoinNode(lPlan, rPlan,

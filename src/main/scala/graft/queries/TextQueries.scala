@@ -30,6 +30,22 @@ object TextQueries {
     documents(s, d).select(col("doc_id"),
       explode(array_distinct(split(col("text"), " "))).as("tok"))
 
+  /** d2's bigram kernel: each document's distinct adjacent-token
+    * bigrams, built row-locally (zip_with over the two offset token
+    * slices, array_distinct before explode), as `(doc_id, bg)`. */
+  private[graft] def bigramStream(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), explode(expr(
+      """array_distinct(zip_with(
+        |  slice(split(text, ' '), 1, size(split(text, ' ')) - 1),
+        |  slice(split(text, ' '), 2, size(split(text, ' ')) - 1),
+        |  (x, y) -> concat(x, ' ', y)))""".stripMargin)).as("bg"))
+
+  /** d2's strategy choice from its corpus counts: the dense bitmap arm
+    * for a non-empty bigram universe of at most 4096 over at most
+    * 20000 docs, the sparse prefix-filter arm otherwise. */
+  private[graft] def d2Dense(nu: Long, nd: Long): Boolean =
+    0 < nu && nu <= 4096 && nd <= 20000
+
   /** d4b's candidate stage over a `(doc_id, simhash)` frame of 32-bit
     * simhashes: 2×16-bit halves, the probe side emitting each half's
     * exact value plus its 16 one-bit flips, one plain equi-join on
@@ -223,14 +239,6 @@ object TextQueries {
     ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
   }
 
-  /** Drop (and free) every cached graph of `s` — call when a session's
-    * run completes or its fixture dirs are about to regenerate. */
-  def clearSimGraph(s: SparkSession): Unit =
-    simGraphCache.keys.filter(_._1 == s).foreach {
-      simGraphCache.remove(_).foreach { case (e, n) =>
-        unpersistCheckpointed(e); unpersistCheckpointed(n) }
-    }
-
   private def simGraph(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val token = docsToken(d)
     // evict graphs built from a previous generation of this dir — and
@@ -298,72 +306,46 @@ object TextQueries {
 
     // D2 — n-gram (bigram) Jaccard near-dup: exact |∩|/|∪| over per-doc
     // distinct-bigram sets, pairs with jaccard > 0.4. The bigram set is
-    // built row-locally (zip_with over adjacent-token slices +
-    // array_distinct) — no self-join, no distinct shuffle. Two
-    // candidate strategies, BOTH present in one static plan, each
-    // gated by a one-row corpus-stats frame crossJoined at its source:
+    // built row-locally by `bigramStream` — no self-join, no distinct
+    // shuffle. Construction checkpoints the bigram stream (its one
+    // localCheckpoint) and reads the corpus counts nu (distinct
+    // bigrams) and nd (docs) off it with one head(); `d2Dense` then
+    // picks ONE candidate strategy on the driver and only that arm is
+    // built:
     //  • dense (universe ≤4096 AND docs ≤2e4 — where a shared-bigram
     //    bucket join degenerates to ~n² pair rows with per-row shuffle
     //    cost): pack each doc's set into a bitmap of the global bigram
     //    index and intersect via popcount(x & y) over a length-filtered
     //    broadcast nested-loop self-join;
-    //  • sparse (real corpora): rarest-first PREFIX-filtered bucket
-    //    join (AllPairs/PPJoin, r17) — candidates only where two docs
-    //    share a bigram inside their first |A|−⌊0.4·|A|⌋ rarest
-    //    bigrams, pruned further by the Jaccard length filter
+    //  • sparse (real corpora, or an empty universe, which yields no
+    //    rows): rarest-first PREFIX-filtered bucket join
+    //    (AllPairs/PPJoin, r17) — candidates only where two docs share
+    //    a bigram inside their first |A|−⌊0.4·|A|⌋ rarest bigrams,
+    //    pruned further by the Jaccard length filter
     //    0.4·|A| ≤ |B| ≤ |A|/0.4, then verified exactly row-locally.
-    // THREE eager localCheckpoint() jobs run at plan CONSTRUCTION (the
-    // shared bigram stream, and the dense + sparse `docs` frames — the
-    // gated-off branch's frame executes too, but as a near-empty job
-    // after AQE's empty-relation propagation has pruned the gated-off
-    // branch upstream of it). Everything else is
-    // plan-internal: the stats aggregate is a stage, and re-optimization
-    // replaces Join(x, empty) with an empty relation, so the pruned
-    // branch's expensive stages never execute. nu == 0 (no doc with ≥2
-    // tokens) empties BOTH gates → empty result, so the zero-width
-    // bitmap is never built.
+    // Everything after the head() is plan-internal.
     "d2_ngram_jaccard" -> ((s, d) => {
-      // The bigram stream feeds FIVE consumers (corpus stats, the
-      // dense index, the dense bitmap build, and both sides of the
-      // sparse join); checkpointing it once replaces four re-parses of
-      // the corpus (split/zip_with/array_distinct/explode ≈ 0.35 s
-      // each at sf0.1) and keeps every downstream plan constant-size.
-      val bg = documents(s, d)
-        .select(col("doc_id"), explode(expr(
-          """array_distinct(zip_with(
-            |  slice(split(text, ' '), 1, size(split(text, ' ')) - 1),
-            |  slice(split(text, ' '), 2, size(split(text, ' ')) - 1),
-            |  (x, y) -> concat(x, ' ', y)))""".stripMargin)).as("bg"))
-        .localCheckpoint()
-      val stats = bg.agg(countDistinct(col("bg")).as("nu"),
-        countDistinct(col("doc_id")).as("nd"))
-      val denseOn = col("nu") > 0 && col("nu") <= 4096 && col("nd") <= 20000
-      val gateDense = broadcast(stats.filter(denseOn)
-        .select(expr("CAST((nu + 63) DIV 64 AS INT)").as("nwords")))
-      val gateSparse = broadcast(stats.filter(col("nu") > 0 && !denseOn)
-        .select(lit(1).as("_gate")))
-      val dense = {
-        // Bitmap width travels as a column from the gate frame, so the
-        // packing kernel needs no plan-time literal. Per-row length
-        // bounds are precomputed so the 25M-pair BNLJ condition is
-        // three comparisons, no arithmetic.
-        val bgD = bg.crossJoin(gateDense)
-        val idx = bgD.select("bg").distinct()
+      // The bigram stream feeds the counts and then several consumers
+      // of either arm (dense: index + bitmap build; sparse: df table +
+      // per-doc sets); checkpointing it once replaces re-parses of the
+      // corpus (split/zip_with/array_distinct/explode ≈ 0.35 s each at
+      // sf0.1) and keeps every downstream plan constant-size.
+      val bg = bigramStream(documents(s, d)).localCheckpoint()
+      val n = bg.agg(countDistinct(col("bg")), countDistinct(col("doc_id"))).head()
+      val (nu, nd) = (n.getLong(0), n.getLong(1))
+      val pairs = if (d2Dense(nu, nd)) {
+        // Per-row length bounds are precomputed so the 25M-pair BNLJ
+        // condition is three comparisons, no arithmetic.
+        val nwords = ((nu + 63) / 64).toInt
+        val idx = bg.select("bg").distinct()
           .withColumn("i", row_number().over(Window.orderBy("bg")) - 1)
-        val docs = bgD.join(broadcast(idx), "bg")
-          .groupBy("doc_id", "nwords")
+        val docs = bg.join(broadcast(idx), "bg")
+          .groupBy("doc_id")
           .agg(sort_array(collect_list(col("i"))).as("idxs"))
           .select(col("doc_id"), size(col("idxs")).as("nb"),
-            bitmap_from_indices(col("idxs"), col("nwords")).as("words"))
+            bitmap_from_indices(col("idxs"), lit(nwords)).as("words"))
           .withColumn("lo", ceil(col("nb") * 0.4))
           .withColumn("hi", floor(col("nb") / 0.4))
-          // localCheckpoint, not persist: the builder can't unpersist
-          // after the caller's action, and a bare persist() leaks
-          // catalog cache for library embedders (d15 lifecycle
-          // discipline). Blocks are released by the ContextCleaner
-          // when this frame is collected. When the dense gate is off,
-          // AQE's empty-relation propagation makes this an empty job.
-          .localCheckpoint()
         docs.as("a").join(broadcast(docs.as("b")),
             col("a.doc_id") < col("b.doc_id") &&
             col("b.nb") >= col("a.lo") && col("b.nb") <= col("a.hi"))
@@ -371,8 +353,7 @@ object TextQueries {
             col("a.nb").as("na"), col("b.nb").as("nbb"),
             bitmap_and_count(col("a.words"), col("b.words")).as("inter"))
           .filter(col("inter") > 0)
-      }
-      val sparse = {
+      } else {
         // AllPairs/PPJoin prefix filter under a rarest-first global
         // order (r17; Chaudhuri et al. ICDE'06, Bayardo et al. WWW'07).
         // The retired form joined the FULL bigram streams on the shared
@@ -393,12 +374,11 @@ object TextQueries {
         // array_intersect over the full per-doc sets — nothing
         // approximate reaches the output (JaccardSparseSpec pins both
         // the equality and the skewed-vocab candidate-count drop).
-        val bgS = bg.crossJoin(gateSparse).select("doc_id", "bg")
         // df build and df attach share one Exchange(bg) subtree (AQE
         // reuse); while the vocab fits the broadcast threshold AQE
-        // broadcasts dfT instead and bgS is not shuffled at all here.
-        val dfT = bgS.groupBy("bg").agg(count(lit(1)).as("dfc"))
-        val docs = bgS.join(dfT, "bg")
+        // broadcasts dfT instead and bg is not shuffled at all here.
+        val dfT = bg.groupBy("bg").agg(count(lit(1)).as("dfc"))
+        val docs = bg.join(dfT, "bg")
           .groupBy("doc_id")
           .agg(sort_array(collect_list(struct(col("dfc"), col("bg")))).as("sets"))
           .select(col("doc_id"),
@@ -408,9 +388,6 @@ object TextQueries {
           // boundary can shorten a prefix.
           .withColumn("pref",
             expr("slice(arr, 1, size(arr) - CAST((2 * size(arr)) DIV 5 AS INT))"))
-          // localCheckpoint, not persist: four consumers (both prefix
-          // join sides, both verify joins) — the bg lifecycle above.
-          .localCheckpoint()
         val pre = docs.select(col("doc_id"), col("nb"), explode(col("pref")).as("bg"))
         val cand = pre.as("a").join(pre.as("b"),
             col("a.bg") === col("b.bg") && col("a.doc_id") < col("b.doc_id") &&
@@ -427,7 +404,7 @@ object TextQueries {
             size(array_intersect(col("arr_a"), col("arr_b"))).cast("long").as("inter"),
             col("na"), col("nbb"))
       }
-      dense.unionByName(sparse)
+      pairs
         .withColumn("jaccard", col("inter").cast("double") /
           (col("na") + col("nbb") - col("inter")))
         .filter(col("jaccard") > 0.4)
@@ -462,7 +439,8 @@ object TextQueries {
         .withColumn("gid", struct(col("p0"), col("p1"), col("p2"), col("p3")))
         // localCheckpoint, not persist: shared by the bucket explosion
         // and the within-signature pair stream; a bare persist() would
-        // leak catalog cache for library callers (see d2). Signature
+        // leak catalog cache for library callers (the builder cannot
+        // unpersist after the caller's action). Signature
         // rows are distinct-signature only — tiny at any corpus size.
         .localCheckpoint()
       // Candidate signature pairs WITHOUT a self-join: group the

@@ -1,16 +1,33 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import org.apache.spark.sql.functions._
+import graft.queries.TextQueries
 
-/** d2's dense/sparse strategy gate: the fixtures' small bigram
-  * universe always selects the dense bitmap path, so the sparse
-  * shared-bigram bucket join — the 100 TB shape — would otherwise
-  * ship untested. A synthetic corpus with >4096 distinct bigrams
-  * forces the sparse gate through the REAL plan (AQE empty-relation
-  * pruning of the dense branch), checked against brute-force Jaccard
-  * computed in Scala. */
+/** d2's dense/sparse strategy choice: the fixtures' small bigram
+  * universe always selects the dense bitmap arm, so the sparse
+  * prefix-filtered bucket join — the 100 TB shape — would otherwise
+  * ship untested. Synthetic corpora with >4096 distinct bigrams make
+  * the shipped predicate [[graft.queries.TextQueries.d2Dense]] choose
+  * the sparse arm, and the query's output is checked against
+  * brute-force Jaccard computed in Scala. */
 class JaccardSparseSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Asserts that d2 chose the sparse arm for `dir`: the shipped
+    * predicate rejects the dense arm on the corpus counts, and `out`,
+    * d2's executed frame there, holds none of the dense arm's
+    * nested-loop join. */
+  private def assertSparse(dir: String, out: DataFrame): Unit = {
+    val r = TextQueries.bigramStream(graft.core.Tables.documents(spark, dir))
+      .agg(countDistinct("bg"), countDistinct("doc_id")).head()
+    val (nu, nd) = (r.getLong(0), r.getLong(1))
+    assert(!TextQueries.d2Dense(nu, nd), s"fixture (nu=$nu, nd=$nd) selects the dense arm")
+    val plan = out.queryExecution.executedPlan
+    assert(collectAll(plan) { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
+      s"d2 ran the dense arm's nested-loop join:\n$plan")
+  }
 
   test("sparse bucket-join path activates past the universe gate and matches brute force") {
     // 100 docs, each 120 tokens drawn from a per-doc-salted LCG over a
@@ -29,10 +46,11 @@ class JaccardSparseSpec extends SparkSpec {
     withTempDir("graft_sparse") { dir =>
       docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
-      val out = SparkEntry.queries("d2_ngram_jaccard")(spark, dir)
-        .collect()
+      val q = SparkEntry.queries("d2_ngram_jaccard")(spark, dir)
+      val out = q.collect()
         .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3)))
         .toMap
+      assertSparse(dir, q)
 
       // brute-force oracle in plain Scala
       def bigrams(doc: Int): Set[String] =
@@ -49,15 +67,6 @@ class JaccardSparseSpec extends SparkSpec {
       assert(out.keySet === expected.keySet,
         s"pair sets differ: extra=${out.keySet diff expected.keySet} missing=${expected.keySet diff out.keySet}")
       out.foreach { case (k, v) => assert(v === expected(k), s"pair $k differs") }
-
-      // and the gate really chose sparse: the universe exceeds the gate
-      val nu = docs.select(explode(expr(
-        """array_distinct(zip_with(
-          |  slice(split(text, ' '), 1, size(split(text, ' ')) - 1),
-          |  slice(split(text, ' '), 2, size(split(text, ' ')) - 1),
-          |  (x, y) -> concat(x, ' ', y)))""".stripMargin)).as("bg"))
-        .agg(countDistinct("bg")).head.getLong(0)
-      assert(nu > 4096, s"fixture universe $nu does not force the sparse gate")
     }
   }
 
@@ -84,12 +93,7 @@ class JaccardSparseSpec extends SparkSpec {
       docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
       // shared bigram stream, exactly the query's kernel
-      val bg = graft.core.Tables.documents(spark, dir)
-        .select(col("doc_id"), explode(expr(
-          """array_distinct(zip_with(
-            |  slice(split(text, ' '), 1, size(split(text, ' ')) - 1),
-            |  slice(split(text, ' '), 2, size(split(text, ' ')) - 1),
-            |  (x, y) -> concat(x, ' ', y)))""".stripMargin)).as("bg"))
+      val bg = TextQueries.bigramStream(graft.core.Tables.documents(spark, dir))
         .localCheckpoint()
       val dfStats = bg.groupBy("bg").agg(count(lit(1)).as("dfc"))
         .agg(max("dfc"), count(lit(1))).head
@@ -122,10 +126,11 @@ class JaccardSparseSpec extends SparkSpec {
 
       // EXACTNESS — the declared query against brute force over the same
       // fixture (the prefix stage must lose no qualifying pair)
-      val out = SparkEntry.queries("d2_ngram_jaccard")(spark, dir)
-        .collect()
+      val q = SparkEntry.queries("d2_ngram_jaccard")(spark, dir)
+      val out = q.collect()
         .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3)))
         .toMap
+      assertSparse(dir, q)
       def bigrams(doc: Int): Set[String] =
         tokens(doc).sliding(2).map(_.mkString(" ")).toSet
       val sets = (0 until nDocs).map(bigrams)
@@ -140,5 +145,18 @@ class JaccardSparseSpec extends SparkSpec {
         s"pair sets differ: extra=${out.keySet diff expected.keySet} missing=${expected.keySet diff out.keySet}")
       out.foreach { case (k, v) => assert(v === expected(k), s"pair $k differs") }
     }
+  }
+
+  test("d2 runs the same construction jobs in 6 fresh sessions, at most 3") {
+    val dir = "/root/testdata/sf0.01"
+    // the first build reads the fixture's schema; later builds reuse it
+    SparkEntry.queries("d2_ngram_jaccard")(spark, dir)
+    val jobs = (1 to 6).map { _ =>
+      val fresh = spark.newSession()
+      jobsDuring(SparkEntry.queries("d2_ngram_jaccard")(fresh, dir)).size
+    }
+    info(s"construction jobs per session: ${jobs.mkString(", ")}")
+    assert(jobs.distinct.size === 1 && jobs.head <= 3,
+      s"construction jobs per session: ${jobs.mkString(", ")}")
   }
 }

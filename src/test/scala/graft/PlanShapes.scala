@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution._
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec, MergingSessionsExec, ObjectHashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins._
 import org.apache.spark.sql.execution.window.WindowExec
 import graft.plans.AsOfJoin.AsOfJoinExec
@@ -175,6 +175,11 @@ object PlanShapes {
     "d27_bpe_encode" -> Seq(has[BHJ], lacks[SMJ], partialAgg),
     "d28_bigram_lm" -> Seq(has[RDDScanExec], has[BHJ], lacks[SMJ]),
     "d29_cms_heavy" -> Seq(partialAgg, has[BHJ], lacks[SMJ]),
+    // the dense arm alone: the bitmap nested-loop join, whose two sides
+    // share one reused doc-bitmap exchange, so the bigram index's global
+    // window and broadcast attach count once per side; no prefix explode
+    "d2_ngram_jaccard" -> Seq(has[BNLJ], exactly[ReusedExchangeExec](1), globalWindows(2),
+      exactly[BHJ](2), lacks[GenerateExec]),
     "d30_hll_cardinality" -> Seq(lacks[WindowExec], partialAgg),
     "d31_knn_triangles" -> Seq(has[RDDScanExec], lacks[BNLJ], lacks[Cartesian]),
     // delta keys probe a BloomFilterAggregate subquery; one window on the key

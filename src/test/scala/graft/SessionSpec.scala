@@ -23,10 +23,26 @@ class SessionSpec extends SparkSpec {
   private def smallExchangeRules(s: org.apache.spark.sql.SparkSession): Int =
     s.sessionState.adaptiveRulesHolder.queryStagePrepRules.count(_ eq graft.core.SmallExchange)
 
+  /** Copies of the as-of strategy in `s`'s planner, counted after `s`
+    * has planned one as-of join through it. */
+  private def asOfStrategies(s: org.apache.spark.sql.SparkSession): Int = {
+    val t = s.range(4).selectExpr("id % 2 AS p", "id AS t")
+    val plan = graft.plans.AsOfJoin.asof(t, t.toDF("q", "u"), "p", "t", "q", "u")
+      .queryExecution.executedPlan
+    assert(collectAll(plan) { case j: graft.plans.AsOfJoin.AsOfJoinExec => j }.nonEmpty, plan.toString)
+    s.sessionState.planner.strategies.count(_ eq graft.plans.AsOfJoin.AsOfJoinStrategy)
+  }
+
   test("a newSession() child carries the SmallExchange rule") {
     assert(smallExchangeRules(spark) === 1)
     assert(smallExchangeRules(spark.newSession()) === 1)
     assert(smallExchangeRules(graft.streaming.StreamOps.streamSession(spark)) === 1)
+  }
+
+  test("every session plans an as-of join through exactly one strategy copy") {
+    assert(asOfStrategies(spark) === 1)
+    assert(asOfStrategies(spark.newSession()) === 1)
+    assert(asOfStrategies(graft.streaming.StreamOps.streamSession(spark)) === 1)
   }
 
   test("a second Session.build() in the same JVM injects no second copy") {

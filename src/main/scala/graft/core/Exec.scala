@@ -1,6 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark/timing ACTION for declared queries (r15).
   *
@@ -24,7 +25,41 @@ import org.apache.spark.sql.DataFrame
   * Correctness dumps (Verify) always materialized via parquet writes
   * and are unaffected; kernel paths (flatMapGroups) were never
   * prunable. The row count returned is identical to df.count().
+  *
+  * [[jobsDuring]] lists the Spark jobs a block starts: TimeOne's
+  * construct/execute split and the specs' job counts use it.
   */
 object Exec {
   def runCount(df: DataFrame): Long = df.queryExecution.toRdd.count()
+
+  /** The Spark jobs started while `body` runs, in order (each event
+    * lists its stages and their task counts). Listener events arrive
+    * asynchronously but in order, so `body` is bracketed by two marker
+    * jobs and the events are taken once the closing marker is seen. */
+  def jobsDuring(spark: SparkSession)(body: => Unit): Seq[SparkListenerJobStart] = {
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkListenerJobStart)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.add(Option(e.properties).map(_.getProperty("spark.job.description"))
+          .flatMap(Option(_)).getOrElse("") -> e)
+    }
+    val sc = spark.sparkContext
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    def seen = starts.toArray(Array.empty[(String, SparkListenerJobStart)]).toSeq
+    sc.addSparkListener(listener)
+    try {
+      marker("graft-jobs-open"); body; marker("graft-jobs-close")
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!seen.exists(_._1 == "graft-jobs-close") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      val all = seen
+      val names = all.map(_._1)
+      if (!names.contains("graft-jobs-close"))
+        throw new IllegalStateException("closing marker job never seen")
+      all.slice(names.indexOf("graft-jobs-open") + 1, names.indexOf("graft-jobs-close")).map(_._2)
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -203,12 +203,12 @@ object Advanced {
     * fits too. `bins` holds (key, b, n, sv) over `nb` bins; `row` maps
     * (key, percentiles, acceptance) onto an output row named `cols`.
     *
-    * The localCheckpoint before the orderBy (r17): the fits sit in the
-    * stage that FEEDS the sort's range exchange, and that stage runs
-    * TWICE — once for the RangePartitioner's sampling pass, once for
-    * the real shuffle write (two ~1.5 s stages per run). Checkpointing
-    * the fit rows makes the fits run once; the sort then samples the
-    * materialized rows. Paid inside the timed region. */
+    * The fit rows are gathered into one partition before the output
+    * sort: a range exchange over the fits would run the fit stage twice,
+    * once for the RangePartitioner's sampling pass and once for the
+    * shuffle write (two ~1.5 s stages per run). The sort of `nKeys` rows
+    * then reads one partition, so the fits run once and nothing runs
+    * while the frame is built. */
   private def fitPerKey[T <: Product : Encoder](
       bins: Dataset[(Long, Long, Long, Long)], key: String, nKeys: Int, nb: Int,
       scale: Double, cols: String*)(row: (Long, Array[Array[Double]], Double) => T): DataFrame =
@@ -226,7 +226,7 @@ object Advanced {
           row(k, Ensemble.percentiles(samples), acc)
         })
       .toDF(cols: _*)
-      .localCheckpoint()
+      .repartition(1)
       .orderBy(cols.head)
 
   /** The a8 spectrum re-derived through the PRE-BINNED multi-resolution
@@ -246,7 +246,7 @@ object Advanced {
     val trials = (2L to 31L)
       .flatMap(kp => Seq(20L, 40L).map(m => (baseline / kp, m))).distinct
     graft.search.Bls.spectrumPrebinnedTrials(b, "t_us", "vc", trials, levels = 5,
-        stats = Some((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))))
+        stats = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .select(col("p_us"), round(col("depth") * 1e6).cast("long").as("dc"))
   }
 

@@ -56,7 +56,7 @@ object Search {
       val trials = Bls.referenceTrials(r.getLong(1) - r.getLong(0), r.getLong(2),
         nFreq = 300, osamp = 10)
       Bls.spectrumPrebinnedTrials(b, "t_us", "vc", trials, levels = 5,
-          stats = Some((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))))
+          stats = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .orderBy("p_us")
     }),
 

@@ -112,9 +112,9 @@ object TextQueries {
     * (sim DESC NULLS LAST, v ASC). Extracted from the d31 block (the
     * m6 machinery move, r14) so D31RecallSpec audits the PRODUCTION
     * candidate path against all-pairs truth. Returns (u, v) edges,
-    * eagerly localCheckpoint-ed — d31 feeds it to six self-join arms
-    * (the d3 lifecycle); without the cut each arm re-runs the bucket
-    * join. */
+    * eagerly localCheckpoint-ed — d31 feeds it to six self-join arms;
+    * without the cut each arm re-runs the bucket join (measured at
+    * sf0.1: d31 0.63 → 1.17 s and 4 more jobs without it). */
   private[graft] def knnDirected(emb: DataFrame): DataFrame = {
     val nv = emb.agg(count(lit(1)).as("n_vec"))
     val wb0 = emb.crossJoin(broadcast(nv))
@@ -188,17 +188,6 @@ object TextQueries {
     }
   }
 
-  /** localCheckpoint that also RESETS plan statistics. A checkpoint
-    * truncates LINEAGE but copies the estimated sizeInBytes into the
-    * checkpointed LogicalRDD (`rewriteStatsAndConstraints`), so in an
-    * iterative loop the size-only join estimate COMPOUNDS
-    * multiplicatively across rounds — the exponent grows geometrically
-    * until `SizeInBytesOnlyStatsPlanVisitor` overflows BigInteger
-    * ("BigInteger would overflow supported range"; measured: d15 at
-    * the ×1000 corpus, ~20 propagation rounds). Rebuilding the frame
-    * from the checkpointed RDD gives a leaf with DEFAULT stats each
-    * round — bounded per-round products, identical rows (the rebuild
-    * only re-wraps the same materialized blocks). */
   /** One LARGE-STAR round of d15's alternating connected-components
     * loop (Kiveris et al., SoCC'14): per node x over the FULL
     * neighborhood, m = min(N(x) ∪ {x}); larger neighbors re-attach to
@@ -234,6 +223,30 @@ object TextQueries {
       .distinct()
   }
 
+  /** The fixpoint test of the star alternation: true when the
+    * canonical (a > b), distinct edges `e` form a star forest — every
+    * `a` has exactly one `b` and no `b` is also an `a`. Both star steps
+    * leave a star forest unchanged, and each star is one component
+    * centred on its minimum, so the loop can stop here. One shuffle of
+    * 2|E| rows keyed on the node. */
+  private[graft] def ccConverged(e: DataFrame): Boolean =
+    e.select(col("a").as("n"), lit(1).as("na"), lit(0).as("nb"))
+      .unionAll(e.select(col("b").as("n"), lit(0).as("na"), lit(1).as("nb")))
+      .groupBy("n").agg(sum(col("na")).as("na"), sum(col("nb")).as("nb"))
+      .filter(col("na") > 1 || (col("na") > 0 && col("nb") > 0))
+      .isEmpty
+
+  /** localCheckpoint that also RESETS plan statistics. A checkpoint
+    * truncates LINEAGE but copies the estimated sizeInBytes into the
+    * checkpointed LogicalRDD (`rewriteStatsAndConstraints`), so in an
+    * iterative loop the size-only join estimate COMPOUNDS
+    * multiplicatively across rounds — the exponent grows geometrically
+    * until `SizeInBytesOnlyStatsPlanVisitor` overflows BigInteger
+    * ("BigInteger would overflow supported range"; measured: d15 at
+    * the ×1000 corpus, ~20 propagation rounds). Rebuilding the frame
+    * from the checkpointed RDD gives a leaf with DEFAULT stats each
+    * round — bounded per-round products, identical rows (the rebuild
+    * only re-wraps the same materialized blocks). */
   private[graft] def checkpointReset(df: DataFrame): DataFrame = {
     val ck = df.localCheckpoint(true)
     ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
@@ -423,7 +436,6 @@ object TextQueries {
     "d3_minhash_lsh" -> ((s, d) => {
       val toks = distinctToks(s, d).withColumn("h", expr(H))
       val mh = (0 until 8).map(k => min(expr(TextOps.minhashExpr("h", k))).as(s"m$k"))
-      val sigCols = (0 until 8).map(k => col(s"m$k"))
       val sig = toks.groupBy("doc_id").agg(mh.head, mh.tail: _*)
       // Each minhash is < 2^31 (mod 2147483647), so a band's two rows
       // pack LOSSLESSLY into one long: p_b = m_{2b}·2^31 + m_{2b+1}.
@@ -433,16 +445,14 @@ object TextQueries {
       // raw 8-tuple, so signature shuffles stay cheap.
       val packs = (0 until 4).map(b =>
         (col(s"m${2 * b}") * 2147483648L + col(s"m${2 * b + 1}")).as(s"p$b"))
+      // Shared by the bucket explosion and the within-signature pair
+      // stream with no checkpoint: both read the same shuffle of the
+      // signature aggregate (the executed plan reuses the exchange), so
+      // the query runs no job while it is built.
       val sigs = sig.select(col("doc_id") +: packs: _*)
         .groupBy("p0", "p1", "p2", "p3")
         .agg(collect_list(col("doc_id")).as("ids"))
         .withColumn("gid", struct(col("p0"), col("p1"), col("p2"), col("p3")))
-        // localCheckpoint, not persist: shared by the bucket explosion
-        // and the within-signature pair stream; a bare persist() would
-        // leak catalog cache for library callers (the builder cannot
-        // unpersist after the caller's action). Signature
-        // rows are distinct-signature only — tiny at any corpus size.
-        .localCheckpoint()
       // Candidate signature pairs WITHOUT a self-join: group the
       // signatures sharing a band bucket (shuffle key = (band, bh)),
       // then explode the i<j member pairs map-side — one shuffle and
@@ -1028,26 +1038,26 @@ object TextQueries {
       // One Lloyd round: per-(m, c) integer component sums → mean →
       // FLOAT quantization (both engines round-to-nearest-even), so
       // the refined codebook is reproducible bit-for-bit. Empty
-      // clusters simply drop out (effective K ≤ 16). localCheckpoint:
-      // the 64-row codebook is reused by encode + LUT; recomputing it
-      // would re-run the assignment pass twice.
+      // clusters simply drop out (effective K ≤ 16). The 64-row
+      // codebook is collected once: encode assigns with those rows and
+      // the LUT join broadcasts the same rows as a local frame, so the
+      // assignment pass runs once.
       val sums = (0 until 8).map(j =>
         sum(roundAway(element_at(col("sub"), j + 1).cast("double") * 1e6)
           .cast("long")).as(s"s$j"))
-      val codeDf = subs.withColumn("c", assignCol(cb0))
+      val cb = collectCb(subs.withColumn("c", assignCol(cb0))
         .groupBy("m", "c")
         .agg(count(lit(1)).as("n"), sums: _*)
         .select(col("m"), col("c"),
           array((0 until 8).map(j =>
             (col(s"s$j") / 1e6 / col("n")).cast("float")): _*).as("cvec"))
-        .withColumn("nrmc", dot_i12(col("cvec"), col("cvec")))
-        .localCheckpoint()
+        .withColumn("nrmc", dot_i12(col("cvec"), col("cvec"))))
       val codes = subs
-        .select(col("vec_id"), col("m"), assignCol(collectCb(codeDf)).as("c"))
+        .select(col("vec_id"), col("m"), assignCol(cb).as("c"))
       val lut = subs.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("m"),
           col("sub").as("qsub"), col("nrm_s").as("qn"))
-        .join(broadcast(codeDf), "m")
+        .join(broadcast(s.createDataFrame(cb).toDF("m", "c", "cvec", "nrmc")), "m")
         .withColumn("qdist",
           col("qn") - lit(2) * dot_i12(col("qsub"), col("cvec")) + col("nrmc"))
         .select("q_id", "m", "c", "qdist")
@@ -1391,47 +1401,30 @@ object TextQueries {
       // overflow at the ×1000 corpus (see checkpointReset's doc).
       var edges = checkpointReset(sym.filter(col("src") > col("dst"))
         .select(col("src").as("a"), col("dst").as("b")).distinct())
-      def largeStar(e: DataFrame): DataFrame = ccLargeStar(e)
-      def smallStar(e: DataFrame): DataFrame = ccSmallStar(e)
       val nNodes = sigNodes.count()
       // backstop only — two-phase is O(log n) rounds in practice
       // (O(log² n) worst case); hitting the cap is a bug, not an
       // accepted outcome
       val maxIter = 16 + 4 * (64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, nNodes)))
-      var iter = 0; var converged = false
-      // fixpoint ⇔ one full large+small round is a set-level no-op.
-      // Cheap per-round signature (count + order-free keyed checksum
-      // in exact decimal) gates the exact except-based equality check,
-      // so the two extra set-difference shuffles run only on candidate
-      // rounds — a signature match alone never declares convergence.
-      def sig(e: DataFrame): (Long, java.math.BigDecimal) = {
-        val r = e.agg(count(lit(1)),
-          sum((col("a") * 2654435761L + col("b")).cast("decimal(38,0)"))).head
-        (r.getLong(0), r.getDecimal(1))
-      }
-      var prevSig = sig(edges)
-      while (!converged && iter < maxIter) {
-        val mid = checkpointReset(largeStar(edges))
-        val next = checkpointReset(smallStar(mid))
+      // fixpoint ⇔ the edges form a star forest (see ccConverged),
+      // tested before the first round and after each round
+      var iter = 0
+      while (!ccConverged(edges)) {
+        if (iter >= maxIter) throw new IllegalStateException(
+          s"d15_components: star alternation did not converge in $iter rounds ($nNodes nodes)")
+        val mid = checkpointReset(ccLargeStar(edges))
+        val next = checkpointReset(ccSmallStar(mid))
         // next is materialized (localCheckpoint(true) is eager): the
-        // intermediate large-star frame is consumed — free its blocks
-        // now rather than pinning ~2 checkpoints/round for the session
-        // lifetime (r12 advice; ~9 rounds × 2 at the ×1000 corpus)
+        // intermediate large-star frame and the previous round's edge
+        // set are consumed — free their blocks now rather than pinning
+        // ~2 checkpoints/round for the session lifetime (r12 advice;
+        // ~9 rounds × 2 at the ×1000 corpus). The FINAL frame stays
+        // persisted: the returned plan reads it lazily after this
+        // function returns.
         unpersistCheckpointed(mid)
-        val nextSig = sig(next)
-        converged = nextSig._1 == prevSig._1 &&
-          ((nextSig._2 == null && prevSig._2 == null) ||
-            (nextSig._2 != null && prevSig._2 != null &&
-              nextSig._2.compareTo(prevSig._2) == 0)) &&
-          next.except(edges).isEmpty
-        // the previous round's edge set is superseded once the except
-        // gate above has read it; the FINAL frame stays persisted (the
-        // returned plan reads it lazily after this builder returns)
         unpersistCheckpointed(edges)
-        edges = next; prevSig = nextSig; iter += 1
+        edges = next; iter += 1
       }
-      if (!converged) throw new IllegalStateException(
-        s"d15_components: star alternation did not converge in $iter rounds ($nNodes nodes)")
       // at the star fixpoint every non-center node carries exactly its
       // (node, center) edge; centers/singletons label themselves
       val centers = edges.groupBy(col("a").as("node")).agg(min(col("b")).as("comp0"))
@@ -2076,9 +2069,10 @@ object TextQueries {
     // order-free exact integers.
     "d36_dsir" -> ((s, d) => {
       // the doc×bucket count frame feeds both the LM build and the
-      // score join; ONE eager localCheckpoint job at construction (the
-      // d2/d3 lifecycle, no cache leak) pays the md5-explode — the
-      // dominant cost — once instead of once per consumer. Both LMs
+      // score join; ONE eager localCheckpoint job at construction (a
+      // checkpoint, not a persist: no cache leak) pays the md5-explode
+      // — the dominant cost — once instead of once per consumer
+      // (measured at sf0.1: 0.55 → 0.71 s without it). Both LMs
       // come from a SINGLE bucket aggregation and the corpus totals
       // from the 1024-row LM table, so the corpus is scanned exactly
       // once end to end.
@@ -2292,7 +2286,8 @@ object TextQueries {
       val votes = (0 until 16).map(j =>
         sum(expr(s"2 * ((h div ${1L << j}) % 2) - 1")).as(s"s$j"))
       // keys computed once (at 100 TB they'd be materialized at
-      // ingest); localCheckpoint = the d3 lifecycle, no cache leak
+      // ingest); a localCheckpoint, not a persist, so no cache leaks
+      // (measured at sf0.1: 0.33 → 0.55 s without it)
       val keyed = toks.groupBy("doc_id").agg(votes.head, votes.tail: _*)
         .withColumn("k", (0 until 16).map(j =>
           when(col(s"s$j") > 0, lit(1L << j)).otherwise(0L)).reduce(_ + _))

@@ -28,10 +28,6 @@ import org.apache.spark.sql.expressions.Window
   */
 object Bls {
 
-  /** Integer period ladder from the frequency grid 1/baseline,
-    * k = 0..nPeriods-1 → P = baseline div (k+2)  (micros). */
-  def periodLadder(nPeriods: Int): Seq[Int] = 2 to (nPeriods + 1)
-
   /** r8 overflow-guarded epoch-index product, shared by every spectrum
     * shape (r9: extracted — the r8 fix had to be applied three times
     * verbatim, which is how divergence bugs start). phase_us < p_us ≤
@@ -104,61 +100,6 @@ object Bls {
         graft.core.Tables.round6(col("box_mean")).as("box_mean"), graft.core.Tables.round6(col("depth")).as("depth"))
   }
 
-  /** Multi-resolution pre-binning (the reference's load-bearing perf
-    * trick, main.py:5586–5605): pre-aggregate samples into fixed time
-    * bins at `levels` resolutions; each (period, duty) trial is routed
-    * to the coarsest level whose bin width ≤ box duration / 4, so long
-    * periods score over far fewer rows. Bins carry (n, Σcents) partial
-    * sums — box means stay exact up to bin-edge quantization. */
-  def spectrumPrebinned(df: DataFrame, tUs: String, vc: String,
-                        nPeriods: Int, dutyM: Seq[Int],
-                        levels: Int = 4): DataFrame = {
-    val mm = df.agg(
-      min(col(tUs)).as("t0"), max(col(tUs)).as("t1"),
-      count(lit(1)).as("nall"), sum(col(vc)).as("sall"))
-    val mmRow = mm.collect()(0)
-    val t0 = mmRow.getLong(0); val t1 = mmRow.getLong(1)
-    val nall = mmRow.getLong(2); val sall = mmRow.getLong(3)
-    val gmean = sall.toDouble / nall / 100.0
-    val baseline = t1 - t0
-    val minDur = (baseline / (nPeriods + 1)) / dutyM.max / 2  // finest box/4
-    // bin widths: minDur/4 × 4^level
-    val widths = (0 until levels).map(l => math.max(1L, minDur / 4 * (1L << (2 * l))))
-    val binned = widths.zipWithIndex.map { case (w, l) =>
-      // exact integer bin index (a double-division + cast would
-      // truncate in Spark but round in a DuckDB CAST — `div` is
-      // engine-neutral)
-      df.groupBy(expr(s"($tUs - $t0) div $w").as("bin"))
-        .agg(count(lit(1)).as("n"), sum(col(vc)).as("s"))
-        .withColumn("tmid", lit(t0) + col("bin") * w + w / 2)
-        .withColumn("lvl", lit(l))
-    }.reduce(_ unionByName _)
-    val trials = (2 to nPeriods + 1).flatMap { kp =>
-      val p = baseline / kp
-      dutyM.map { m =>
-        val dur = p / m * 2
-        val lvl = widths.lastIndexWhere(_ <= math.max(1L, dur / 4)) max 0
-        (p, m, lvl)
-      }
-    }
-    val trialsDf = df.sparkSession.createDataFrame(trials).toDF("p_us", "m_steps", "lvl")
-    val w = Window.partitionBy("p_us")
-      .orderBy(col("box_mean").asc, col("m_steps").asc, col("m").asc)
-    binned.join(broadcast(trialsDf), "lvl")
-      .withColumn("phase_us", pmod(col("tmid") - t0, col("p_us")))
-      .withColumn("m1", expr(phaseIdxSql))
-      .withColumn("d", explode(array(lit(0), lit(1))))
-      .withColumn("m", pmod(col("m1") - col("d") + col("m_steps"), col("m_steps")))
-      .groupBy("p_us", "m_steps", "m")
-      .agg(sum(col("n")).as("n_in"), sum(col("s")).as("s_in"))
-      .withColumn("box_mean", col("s_in").cast("double") / col("n_in") / 100.0)
-      .withColumn("depth", lit(gmean) - col("box_mean"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("p_us"), col("m_steps"), col("m"), col("n_in"),
-        graft.core.Tables.round6(col("box_mean")).as("box_mean"), graft.core.Tables.round6(col("depth")).as("depth"))
-  }
-
   /** Reference-density trial grid (srch_boxsperi defaults
     * main.py:5307–5320: factosam=10, deltlogtdcyc=0.1; grid build
     * 5471–5529): the frequency grid is uniform at deltfreq =
@@ -193,27 +134,24 @@ object Bls {
   }
 
   /** Pre-binned spectrum over an EXPLICIT (p_us, m_steps) trial list —
-    * the reference-density path (t6). Same multi-resolution scheme as
-    * [[spectrumPrebinned]], but the finest bin width derives from the
-    * shortest trial box and each trial routes to the coarsest level
-    * whose width ≤ its box duration / 4.
+    * the multi-resolution pre-binning of the reference (its
+    * load-bearing perf trick, main.py:5586–5605) on the
+    * reference-density path (t6, a8). Samples pre-aggregate into fixed
+    * time bins at `levels` resolutions, the finest bin width derived
+    * from the shortest trial box, and each trial routes to the coarsest
+    * level whose width ≤ its box duration / 4, so long periods score
+    * over far fewer rows. Bins carry (n, Σcents) partial sums — box
+    * means stay exact up to bin-edge quantization.
     *
-    * `stats` = pre-collected (t0, t1, nall, Σcents): callers that
-    * already ran a driver stats pass to derive the trial grid pass it
-    * here, so trial derivation + spectrum cost ONE full-data driver
-    * job at query-construction time instead of two (the d2/b2
-    * no-job-at-plan-construction discipline, weakened to one-job for
-    * the driver-derived trial grids). */
+    * `stats` = (t0, t1, nall, Σcents) of `df`: every caller collects
+    * these once to derive its trial grid and passes them here, so
+    * trial derivation + spectrum cost ONE full-data job at
+    * query-construction time. */
   def spectrumPrebinnedTrials(df: DataFrame, tUs: String, vc: String,
                               trials: Seq[(Long, Long)],
-                              levels: Int = 5,
-                              stats: Option[(Long, Long, Long, Long)] = None): DataFrame = {
-    val (t0, t1, nall, sall) = stats.getOrElse {
-      val mmRow = df.agg(
-        min(col(tUs)).as("t0"), max(col(tUs)).as("t1"),
-        count(lit(1)).as("nall"), sum(col(vc)).as("sall")).collect()(0)
-      (mmRow.getLong(0), mmRow.getLong(1), mmRow.getLong(2), mmRow.getLong(3))
-    }
+                              stats: (Long, Long, Long, Long),
+                              levels: Int = 5): DataFrame = {
+    val (t0, _, nall, sall) = stats
     val gmean = sall.toDouble / nall / 100.0
     val minDur = trials.map { case (p, m) => p / m * 2 }.min
     val widths = (0 until levels).map(l => math.max(1L, minDur / 4 * (1L << (2 * l))))

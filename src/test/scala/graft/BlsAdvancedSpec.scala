@@ -49,7 +49,10 @@ class BlsAdvancedSpec extends SparkSpec {
     val df = twoPlanets(6000)
     val exact = Bls.spectrum(df, "t_us", "vc", 30, Seq(20, 40))
       .select(col("p_us"), col("depth").as("d_exact"))
-    val fast = Bls.spectrumPrebinned(df, "t_us", "vc", 30, Seq(20, 40), levels = 4)
+    val r = df.agg(min(col("t_us")), max(col("t_us")), count(lit(1)), sum(col("vc"))).head()
+    val stats = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+    val trials = (2L to 31L).flatMap(kp => Seq(20L, 40L).map(m => ((stats._2 - stats._1) / kp, m)))
+    val fast = Bls.spectrumPrebinnedTrials(df, "t_us", "vc", trials, stats, levels = 4)
       .select(col("p_us"), col("depth").as("d_fast"))
     val joined = exact.join(fast, "p_us").collect()
     assert(joined.length >= 25, s"only ${joined.length} shared periods")

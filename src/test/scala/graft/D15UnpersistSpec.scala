@@ -3,8 +3,9 @@ package graft
 /** r13 verdict #7 — the d15 unpersist lifecycle, promoted from a
   * comment-guarded contract to a spec. The star-alternation loop
   * frees each round's superseded localCheckpoint frames (`mid` and
-  * the previous `edges`) the moment its except-gate has consumed
-  * them; the invariants that make that safe are
+  * the previous `edges`) as soon as the round's new edge set is
+  * materialized (the star-forest test `ccConverged` reads only the
+  * current edges); the invariants that make that safe are
   *
   *  1. the RETURNED plan is still fully readable after the loop (it
   *     reads only the FINAL checkpoint + the cached sim graph — a

@@ -60,6 +60,16 @@ class JoinScaleSpec extends SparkSpec {
     assert(hasProbe.nonEmpty, s"expected BloomFilterMightContain in\n$plan")
   }
 
+  test("d3, t13b and t13m start no Spark job while they are built") {
+    // the first build fills the per-JVM schema memo (a schema read may
+    // run a job); the second build must run nothing at all
+    for (q <- Seq("d3_minhash_lsh", "t13b_mcmc_perener", "t13m_mcmc_ttv")) {
+      SparkEntry.queries(q)(spark, sf)
+      val jobs = jobsDuring(SparkEntry.queries(q)(spark, sf)).size
+      assert(jobs === 0, s"$q ran $jobs Spark jobs while it was built")
+    }
+  }
+
   test("o8: z-order files bound BOTH dimensions tighter than the full span") {
     import org.apache.spark.sql.functions._
     val out = SparkEntry.queries("o8_zorder_layout")(spark, sf).collect()

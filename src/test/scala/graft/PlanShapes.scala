@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution._
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec, MergingSessionsExec, ObjectHashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, REPARTITION_BY_NUM, ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins._
 import org.apache.spark.sql.execution.window.WindowExec
 import graft.plans.AsOfJoin.AsOfJoinExec
@@ -60,13 +60,18 @@ object PlanShapes {
     case _ => false
   }
 
-  /** A sort input that is the output sort's range exchange (looked for
-    * through codegen input, shuffle reads and query stages) or the
+  /** Whether the node a sort reads, looked for through codegen input,
+    * shuffle reads and query stages, satisfies `pred`. */
+  private def sortReads(p: SparkPlan)(pred: SparkPlan => Boolean): Boolean = p match {
+    case i: InputAdapter => sortReads(i.child)(pred)
+    case r: AQEShuffleReadExec => sortReads(r.child)(pred)
+    case q: ShuffleQueryStageExec => sortReads(q.plan)(pred)
+    case e => pred(e)
+  }
+
+  /** A sort input that is the output sort's range exchange or the
     * one-task coalesce in its place. */
-  private def rangeOrCoalesce(p: SparkPlan): Boolean = p match {
-    case i: InputAdapter => rangeOrCoalesce(i.child)
-    case r: AQEShuffleReadExec => rangeOrCoalesce(r.child)
-    case q: ShuffleQueryStageExec => rangeOrCoalesce(q.plan)
+  private def rangeOrCoalesce(p: SparkPlan): Boolean = sortReads(p) {
     case c: CoalesceExec => c.numPartitions == 1
     case e => isRange(e)
   }
@@ -81,6 +86,21 @@ object PlanShapes {
           case s: SortExec => s.global && rangeOrCoalesce(s.child)
           case _ => false
         })
+
+  /** A per-key fan-out, then a gathered sort: the output sort reads an
+    * `Exchange SinglePartition`, and the plan's only range exchange is
+    * the `repartitionByRange(n)` fan-out (not a sort's). */
+  val fanOutThenGatheredSort: Check = Check(
+    "a global sort over a SinglePartition exchange; the only range exchange is the fan-out",
+    nodes => nodes.exists {
+      case s: SortExec => s.global && sortReads(s.child) {
+        case e: ShuffleExchangeExec => e.outputPartitioning == SinglePartition
+        case _ => false
+      }
+      case _ => false
+    } && nodes.collect {
+      case e: ShuffleExchangeExec if isRange(e) => e.shuffleOrigin
+    } == Seq(REPARTITION_BY_NUM))
 
   /** The plan's only exchange is one gather, in either form. */
   val gatherOnly: Check = Check("the only exchange is one SinglePartition gather or one-task coalesce",
@@ -195,8 +215,10 @@ object PlanShapes {
     // the one unpartitioned window runs over the bucket offsets, not the scores
     "d38_classifier_auc" -> Seq(globalWindows(1), has[BHJ]),
     "d39_filter_reasons" -> Seq(partialAgg, lacks[WindowExec]),
-    // bucket-grouped pairs: no self-join, no corpus broadcast
-    "d3_minhash_lsh" -> Seq(noJoin, lacks[BroadcastExchangeExec], has[GenerateExec]),
+    // bucket-grouped pairs: no self-join, no corpus broadcast; both
+    // signature consumers read one shuffle, nothing is checkpointed
+    "d3_minhash_lsh" -> Seq(noJoin, lacks[BroadcastExchangeExec], has[GenerateExec],
+      has[ReusedExchangeExec], lacks[RDDScanExec]),
     "d4_simhash" -> Seq(hashOn("doc_id"), noJoin),
     // plain equi-join candidates, no per-bucket arrays
     "d4b_simhash_pairs" -> Seq(lacks[BNLJ], lacks[Cartesian], lacks[ObjectHashAggregateExec]),
@@ -293,9 +315,9 @@ object PlanShapes {
     "t12_model_eval" -> Seq(gatherOnly),
     "t12d_model_ld" -> Seq(gatherOnly),
     "t12e_model_ldx" -> Seq(gatherOnly, partialAgg),
-    // fit output is checkpointed: the returned plan never re-runs the fit stage
-    "t13b_mcmc_perener" -> Seq(has[RDDScanExec], lacks[MapGroupsExec]),
-    "t13m_mcmc_ttv" -> Seq(has[RDDScanExec], lacks[MapGroupsExec]),
+    // one fit per key, gathered before the sort: no range sort re-runs the fit stage
+    "t13b_mcmc_perener" -> Seq(lacks[RDDScanExec], lacks[MapGroupsExec], fanOutThenGatheredSort),
+    "t13m_mcmc_ttv" -> Seq(lacks[RDDScanExec], lacks[MapGroupsExec], fanOutThenGatheredSort),
     "t14_injection" -> Seq(gatherOnly, partialAgg),
     "t15_visibility" -> Seq(has[GenerateExec], sortExchangeOnly),
     // lag correlation as an equi-join on (event_type, bin + lag)

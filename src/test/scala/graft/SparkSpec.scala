@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.SparkListenerJobStart
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -47,33 +47,8 @@ trait SparkSpec extends AnyFunSuite {
     try body(dir.toString) finally org.apache.commons.io.FileUtils.deleteQuietly(dir): Unit
   }
 
-  /** The Spark jobs started while `body` runs, in order (each event
-    * lists its stages and their task counts). Listener events arrive
-    * asynchronously but in order, so `body` is bracketed by two marker
-    * jobs and the events are taken once the closing marker is seen. */
-  def jobsDuring(body: => Unit): Seq[SparkListenerJobStart] = {
-    val starts = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkListenerJobStart)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        starts.add(Option(e.properties).map(_.getProperty("spark.job.description"))
-          .flatMap(Option(_)).getOrElse("") -> e)
-    }
-    val sc = spark.sparkContext
-    def marker(name: String): Unit = {
-      sc.setJobDescription(name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    def seen = starts.toArray(Array.empty[(String, SparkListenerJobStart)]).toSeq
-    sc.addSparkListener(listener)
-    try {
-      marker("spark-spec-open"); body; marker("spark-spec-close")
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!seen.exists(_._1 == "spark-spec-close") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      val all = seen
-      val names = all.map(_._1)
-      assert(names.contains("spark-spec-close"), "closing marker job never seen")
-      all.slice(names.indexOf("spark-spec-open") + 1, names.indexOf("spark-spec-close")).map(_._2)
-    } finally sc.removeSparkListener(listener)
-  }
+  /** The Spark jobs started while `body` runs, in order
+    * ([[graft.core.Exec.jobsDuring]] on the shared session). */
+  def jobsDuring(body: => Unit): Seq[SparkListenerJobStart] =
+    graft.core.Exec.jobsDuring(spark)(body)
 }

@@ -62,12 +62,7 @@ class WindowCensusSpec extends SparkSpec {
 
   test("d2 dense vocab window input is gate-bounded (<= 4096) on the driver fixtures") {
     sfs.foreach { d =>
-      val nu = graft.core.Tables.documents(spark, d)
-        .select(explode(expr(
-          """array_distinct(zip_with(
-            |  slice(split(text, ' '), 1, size(split(text, ' ')) - 1),
-            |  slice(split(text, ' '), 2, size(split(text, ' ')) - 1),
-            |  (x, y) -> concat(x, ' ', y)))""".stripMargin)).as("bg"))
+      val nu = graft.queries.TextQueries.bigramStream(graft.core.Tables.documents(spark, d))
         .agg(countDistinct("bg")).head.getLong(0)
       assert(nu <= 4096, s"$d: dense gate admits nu=$nu > 4096 — the gate predicate bounds this window")
     }

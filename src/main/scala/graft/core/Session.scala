@@ -15,7 +15,17 @@ import org.apache.spark.sql.SparkSession
   * count so per-task hash state fits executor memory. nanosAsLong lets
   * pre-r6 TIMESTAMP(NANOS) fixtures load (see [[Tables.events]]).
   * AQE runs with [[SmallExchange]], whose size bound is AQE's own
-  * one-partition target. */
+  * one-partition target.
+  *
+  * Artifact isolation is off (`spark.sql.artifact.isolation.enabled`,
+  * also set in the build's forked JVM options): no code path adds a
+  * jar, file or class artifact to a session, so every session — each
+  * `newSession()` child, each stream's child session — runs its tasks
+  * on the one default class loader. Spark's generated-code cache is
+  * keyed on the class loader, so a code body is compiled once per JVM
+  * instead of once per session; with isolation on, every task of a new
+  * session compiles its classes again, and each class-name miss of
+  * that compile asks the driver's class server and scans the jars. */
 object Session {
   val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
   val shufflePartitions: Int =
@@ -50,6 +60,7 @@ object Session {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.extensions", extensions)
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

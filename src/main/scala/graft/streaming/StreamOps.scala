@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import scala.collection.mutable
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.state.{StateStore, StateStoreProviderId}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
 /** The stream harness: how a declared §2.10 query is driven to
@@ -153,7 +155,16 @@ object StreamOps {
     * and the parent dir survives one more cycle for the lazy
     * read-back frame), but a THIRD concurrent drain of one name would
     * delete the first's dir while it may still be live. Distinct
-    * names never interact. */
+    * names never interact.
+    *
+    * A finished drain releases what it holds in the JVM: the memory
+    * sink's `${name}_sink` temp view is dropped once the read-back
+    * frame has been analysed, and the state-store providers of the
+    * stream's run are closed. Only the read-back frame (and every
+    * frame derived from it) then holds the memory sink's rows, so they
+    * can be collected once the caller drops it; the child session does
+    * not keep them. Progress telemetry is posted before the query
+    * terminates and is not touched. */
   def drain(ss: SparkSession, out: DataFrame, name: String,
             outputMode: String = "append"): DataFrame = {
     val w = out.writeStream.outputMode(outputMode)
@@ -172,16 +183,46 @@ object StreamOps {
       // eagerly deletes that name's PREVIOUS dir, whose read-back
       // frame it supersedes.
       val dir = FileSinkDirs.replace(name)
-      w.format("parquet")
+      run(w.format("parquet")
         .option("path", s"$dir/out")
-        .option("checkpointLocation", s"$dir/ckpt")
-        .start().awaitTermination()
+        .option("checkpointLocation", s"$dir/ckpt"))
       ss.read.schema(out.schema).parquet(s"$dir/out")
     } else {
-      w.format("memory").queryName(s"${name}_sink").start().awaitTermination()
-      ss.table(s"${name}_sink")
+      val view = s"${name}_sink"
+      run(w.format("memory").queryName(view))
+      // the analysed frame holds the sink's plan; the view is not needed
+      val back = ss.table(view)
+      ss.catalog.dropTempView(view)
+      back
     }
   }
+
+  /** Starts `w`, waits for the AvailableNow run to end, and closes the
+    * state stores the run loaded. */
+  private def run(w: DataStreamWriter[Row]): Unit = {
+    val q = w.start()
+    try q.awaitTermination() finally closeStateStores(q.runId)
+  }
+
+  /** The state-store providers loaded in this JVM (local mode: the
+    * executors' too). `StateStore.loadedProviders` is private; it is
+    * read the way the maintenance task reads it, under its own lock. */
+  private[graft] def loadedStateStores: Seq[StateStoreProviderId] =
+    loadedProviders.synchronized(loadedProviders.keys.toList)
+
+  private lazy val loadedProviders: mutable.HashMap[StateStoreProviderId, _] = {
+    val m = StateStore.getClass.getDeclaredMethod("loadedProviders")
+    m.setAccessible(true)
+    m.invoke(StateStore).asInstanceOf[mutable.HashMap[StateStoreProviderId, _]]
+  }
+
+  /** Closes the state-store providers of the stream run `runId`. Left
+    * loaded, each keeps its cached state maps and its checkpoint file
+    * manager's thread pool until Spark's maintenance task (every 60 s
+    * by default) notices that the run has ended. */
+  private def closeStateStores(runId: java.util.UUID): Unit =
+    loadedStateStores.filter(_.queryRunId == runId)
+      .foreach(StateStore.removeFromLoadedProvidersAndClose(_))
 }
 
 /** File-sink temp-dir registry (r13 advice): one JVM-wide shutdown

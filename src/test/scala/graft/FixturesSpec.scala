@@ -104,4 +104,37 @@ class FixturesSpec extends SparkSpec {
       assert(Fixtures.path(name, key :+ "v2", src) !== dir)
     } finally FileUtils.deleteQuietly(dir)
   }
+
+  test("a publish evicts same-name siblings idle for over a day, except those this JVM served") {
+    val name = "graft_fixtures_spec_evict"
+    val day = Fixtures.maxIdleMs
+    val now = System.currentTimeMillis()
+    def key = Seq(java.util.UUID.randomUUID().toString)
+    def mark(f: File) = Files.write(new File(f, "f").toPath, Array[Byte](0))
+    // a fixture another process published, last used `idleMs` ago
+    def published(dir: File, idleMs: Long): File = {
+      dir.mkdirs(); mark(dir); dir.setLastModified(now - idleMs)
+      dir
+    }
+    val (hitKey, freshKey) = (key, key)
+    // published first: a publish evicts the idle siblings below
+    val held = Fixtures.dir(name, key, Nil)(mark)
+    held.setLastModified(now - 2 * day)
+    val stale = published(Fixtures.path(name, key, Nil), 2 * day)
+    val recent = published(Fixtures.path(name, key, Nil), day / 2)
+    val hit = published(Fixtures.path(name, hitKey, Nil), 2 * day)
+    val otherName = published(Fixtures.path(name + "x", key, Nil), 2 * day)
+    val fresh = Fixtures.path(name, freshKey, Nil)
+    try {
+      // a hit touches the use mark
+      assert(Fixtures.dir(name, hitKey, Nil)(_ => fail("a hit must not rebuild")) === hit)
+      assert(hit.lastModified() >= now - 1000)
+      assert(Fixtures.dir(name, freshKey, Nil)(mark) === fresh)
+      assert(!stale.exists(), "an idle sibling is evicted")
+      assert(recent.exists(), "a sibling used within the day is kept")
+      assert(held.exists(), "a sibling this JVM served is kept")
+      assert(hit.exists() && fresh.exists())
+      assert(otherName.exists(), "another name's fixture is not a sibling")
+    } finally Seq(stale, recent, hit, otherName, held, fresh).foreach(f => FileUtils.deleteQuietly(f): Unit)
+  }
 }

@@ -59,4 +59,12 @@ class SessionSpec extends SparkSpec {
     assert(graft.streaming.StreamOps.streamSession(spark)
       .conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
   }
+
+  test("child sessions run with artifact isolation off") {
+    // one class loader, so one generated-code cache, for every session
+    val key = "spark.sql.artifact.isolation.enabled"
+    assert(spark.conf.get(key) === "false")
+    assert(spark.newSession().conf.get(key) === "false")
+    assert(graft.streaming.StreamOps.streamSession(spark).conf.get(key) === "false")
+  }
 }

@@ -26,14 +26,14 @@ object Bench {
     * listing warms and [[graft.core.Tables.schemaOf]]'s memo holds their
     * schemas, then run [[warmupQueries]] so the JIT compiles the common
     * generated-code infrastructure once instead of inside every measured
-    * query. */
+    * query. A failing warmup query is reported on stderr and skipped. */
   def warmup(spark: org.apache.spark.sql.SparkSession, sfDir: String): Unit = {
     Seq("lineitem", "orders", "customer", "documents", "embeddings")
       .foreach(t => graft.core.Tables.load(spark, sfDir, t).count())
     graft.core.Tables.events(spark, sfDir).count()
     warmupQueries.foreach { q =>
       try graft.core.Exec.runCount(SparkEntry.queries(q)(spark, sfDir))
-      catch { case _: Throwable => () }
+      catch { case e: Throwable => System.err.println(s"[warmup] $q failed: ${e.getMessage}") }
       spark.catalog.clearCache()
     }
   }

@@ -46,8 +46,18 @@ object Session {
     * "memory" by default, "file" when `SPARK_GRAFT_STREAM_SINK=file`
     * (the executor-side parquet sink the ×1000 runs need — the memory
     * sink returns every output row through the driver). */
-  val streamSink: String =
-    if (sys.env.get("SPARK_GRAFT_STREAM_SINK").contains("file")) "file" else "memory"
+  val streamSink: String = parseStreamSink(sys.env.get("SPARK_GRAFT_STREAM_SINK"))
+
+  /** The sink a `SPARK_GRAFT_STREAM_SINK` value names: unset or
+    * "memory" → "memory", "file" → "file". Any other value throws: a
+    * misspelt "file" falling back to the memory sink would only show
+    * deep into a large run, at the memory sink's driver-result limit. */
+  def parseStreamSink(value: Option[String]): String = value match {
+    case None | Some("memory") => "memory"
+    case Some("file") => "file"
+    case Some(other) => throw new IllegalArgumentException(
+      s"SPARK_GRAFT_STREAM_SINK=$other: expected memory or file (or unset)")
+  }
 
   /** The session extensions provider, [[graft.plans.GraftExtensions]]. */
   val extensions: String = classOf[graft.plans.GraftExtensions].getName

@@ -128,10 +128,6 @@ object Tables {
   /** Scaled exact integer for arbitrary doubles (scale = 10^k). */
   def scaled(c: Column, scale: Long): Column = roundAway(c * lit(scale)).cast("long")
 
-  /** Positive modulus via explicit floor arithmetic — identical formula
-    * on the duckdb side (avoids engine-specific mod sign conventions). */
-  def pmodPos(x: Column, p: Column): Column = x - floor(x / p) * p
-
   /** Quantize a transcendental-derived double to BIGINT with a
     * runtime boundary-margin proof (the t13 `lnQ6` discipline, moved
     * IN-PLAN for values computed distributed): the generated SQL
@@ -153,9 +149,21 @@ object Tables {
       "rounding boundary - cross-engine exactness unprovable')) " +
       "AS BIGINT) END"
 
+  /** The events frame every light-curve query starts from: `value` plus
+    * exact integer time `t_us` (micros) and flux `vc` (cents). Mirrors
+    * the oracle's [[baseSql]] CTE column for column. */
+  def base(s: SparkSession, d: String): DataFrame =
+    events(s, d).select(
+      col("event_id"), col("user_id"), col("event_type"), col("value"),
+      unix_micros(col("ts")).as("t_us"),
+      cents(col("value")).as("vc"))
+
+  /** DuckDB `base` CTE for the oracles of queries built on [[base]]. */
+  val baseSql: String =
+    """base AS (SELECT event_id, user_id, event_type, value,
+      |  epoch_us(ts) AS t_us, CAST(round(value*100) AS BIGINT) AS vc
+      |  FROM events)""".stripMargin
+
   /** Event time in microseconds since epoch (exact long). */
   def tUs(ts: Column): Column = unix_micros(ts)
-
-  /** Event time in (double) seconds — single exact-int division. */
-  def tSec(ts: Column): Column = unix_micros(ts) / lit(1000000.0)
 }

@@ -1,7 +1,6 @@
 package graft.model
 
 import scala.jdk.CollectionConverters._
-import scala.util.Random
 
 /** T13 — inference driver (ref proc_modl main.py:3928–4170; tdpy.samp
   * is an emcee-style affine-invariant ensemble sampler, 100 walkers ×
@@ -54,83 +53,22 @@ object Ensemble {
     out
   }
 
-  /** Affine-invariant "stretch move" ensemble sampler (Goodman & Weare
-    * 2010, the algorithm under emcee). Deterministic under `seed`.
-    *
-    * @param logLik  log-likelihood of a parameter vector
-    * @param lo,hi   per-parameter uniform prior bounds
-    * @param init    optional walker-initialization center: walkers
-    *                start in a ±ballFrac·(hi−lo) ball around it (the
-    *                emcee/tdpy.samp pattern — the reference seeds
-    *                walkers around the prior parameter means,
-    *                meangauspara main.py:12128; a sharply peaked
-    *                likelihood is never found from uniform init).
-    *                None → uniform over the prior box.
-    * @return (samples, acceptance rate): samples after burn-in,
-    *         flattened across walkers, each row one parameter vector.
-    */
-  def sample(logLik: Array[Double] => Double,
-             lo: Array[Double], hi: Array[Double],
-             nWalkers: Int = 32, nSteps: Int = 200, burnFrac: Double = 0.3,
-             seed: Long = 42L, a: Double = 2.0,
-             init: Option[Array[Double]] = None,
-             ballFrac: Double = 0.02): (Array[Array[Double]], Double) = {
-    require(lo.length == hi.length)
-    val nd = lo.length
-    val rng = new Random(seed)
-    def clamp(v: Double, d: Int): Double = math.min(hi(d), math.max(lo(d), v))
-
-    var walkers = Array.fill(nWalkers) {
-      init match {
-        case Some(c) => Array.tabulate(nd)(d => clamp(
-          c(d) + (2 * rng.nextDouble() - 1) * ballFrac * (hi(d) - lo(d)), d))
-        case None =>
-          Array.tabulate(nd)(d => lo(d) + rng.nextDouble() * (hi(d) - lo(d)))
-      }
-    }
-    var lls = walkers.map(logLik)
-    val burn = (nSteps * burnFrac).toInt
-    val out = Array.newBuilder[Array[Double]]
-    var accepted = 0L; var proposed = 0L
-
-    for (step <- 0 until nSteps) {
-      val next = walkers.map(_.clone); val nextLl = lls.clone
-      for (k <- 0 until nWalkers) {
-        val j = { var x = rng.nextInt(nWalkers - 1); if (x >= k) x += 1; x }
-        // stretch move: z ~ g(z) ∝ 1/√z on [1/a, a]
-        val z = math.pow((a - 1.0) * rng.nextDouble() + 1.0, 2) / a
-        val prop = Array.tabulate(nd)(d =>
-          clamp(walkers(j)(d) + z * (walkers(k)(d) - walkers(j)(d)), d))
-        val ll = logLik(prop)
-        proposed += 1
-        val logAccept = (nd - 1) * math.log(z) + ll - lls(k)
-        if (math.log(rng.nextDouble()) < logAccept) {
-          next(k) = prop; nextLl(k) = ll; accepted += 1
-        }
-      }
-      walkers = next; lls = nextLl
-      if (step >= burn) walkers.foreach(w => out += w.clone)
-    }
-    (out.result(), accepted.toDouble / proposed)
-  }
-
   // ---------------------------------------------------------------
   // Cross-engine-exact sampler (the t13 oracle path)
   // ---------------------------------------------------------------
-  // [[sample]] above is the general API; [[sampleQ]] below is the
-  // bit-reproducible variant whose ENTIRE walk a SQL engine can
-  // replay: every draw is a stateless integer hash (order-free —
-  // each (step, walker, channel) indexes its own draw, so SQL needs
-  // no sequential RNG state), every float op is plain IEEE +−×÷ /
-  // min/max/fmod (bit-identical across engines), the likelihood is
-  // an order-free INTEGER sum, and the accept/reject comparison is
-  // pure integer arithmetic over ln-values quantized at 1e6
-  // ("micro-nats"). ln is the ONE transcendental; Java vs C libm may
-  // differ in the last ulp, so lnQ6 asserts every evaluation sits
+  // [[sampleQ]] below is a bit-reproducible ensemble sampler whose
+  // ENTIRE walk a SQL engine can replay: every draw is a stateless
+  // integer hash (order-free — each (step, walker, channel) indexes its
+  // own draw, so SQL needs no sequential RNG state), every float op is
+  // plain IEEE +−×÷ / min/max/fmod (bit-identical across engines), the
+  // likelihood is an order-free INTEGER sum, and the accept/reject
+  // comparison is pure integer arithmetic over ln-values quantized at
+  // 1e6 ("micro-nats"). ln is the ONE transcendental; Java vs C libm
+  // may differ in the last ulp, so lnQ6 asserts every evaluation sits
   // ≥1e-7 quanta away from a rounding boundary (worst-case libm
   // disagreement moves the scaled value by ~5e-9 quanta — 20× margin),
-  // turning "empirically exact" into a runtime-verified guarantee
-  // (the t3c/expQ lesson, hardened).
+  // turning "empirically exact" into a runtime-verified guarantee (the
+  // t3c/expQ lesson, hardened).
 
   private val M31 = 2147483648L // 2^31
 
@@ -391,11 +329,16 @@ object Ensemble {
     -s
   }
 
-  /** [[boxGuess]] over PRE-QUANTIZED flux (yq = round(y·1e9)): window
-    * sums are integer (order-free), argmin is an integer compare with
-    * first-index tiebreak — the SQL replay is a window-sum aggregate
-    * plus ORDER BY (sum, index) LIMIT 1. Returns the same
-    * (depth0, epoch0, durGuess) triple as [[boxGuess]]. */
+  /** Walker-ball center for a box fit on a phase-binned curve of
+    * PRE-QUANTIZED flux (yq = round(y·1e9)): slide a `durGuess`-wide
+    * CIRCULAR window over the bins (a mini-BLS) and take the deepest
+    * window's center as the epoch and its deficit below the global
+    * mean as the depth — robust where the single deepest bin sits on a
+    * transit edge (which strands the ball in a no-overlap local
+    * optimum). Window sums are integer (order-free), argmin is an
+    * integer compare with first-index tiebreak — the SQL replay is a
+    * window-sum aggregate plus ORDER BY (sum, index) LIMIT 1. Returns
+    * Array(depth0, epoch0 ∈ [−P/2, P/2), durGuess). */
   def boxGuessQ(t: Array[Double], yq: Array[Long],
                 period: Double, durGuess: Double): Array[Double] = {
     val nb = yq.length
@@ -421,10 +364,11 @@ object Ensemble {
     (step.toLong * nWalkers + k) * 3L + c
   private[graft] val InitIdxBase = 1000000L
 
-  /** Affine-invariant stretch move (same algorithm as [[sample]],
-    * a = 2) made cross-engine-exact: indexed integer draws, integer
-    * likelihood `llq` (micro-nats, see [[boxLlq]]), and the accept
-    * rule lnQ6(u) < (nd−1)·lnQ6(z) + (llq_prop − llq_k) — an integer
+  /** Affine-invariant "stretch move" ensemble sampler (Goodman & Weare
+    * 2010, the algorithm under emcee; a = 2) made cross-engine-exact:
+    * indexed integer draws, integer likelihood `llq` (micro-nats, see
+    * [[boxLlq]]), and the accept rule
+    * lnQ6(u) < (nd−1)·lnQ6(z) + (llq_prop − llq_k) — an integer
     * comparison. Walkers all move from the PREVIOUS ensemble state
     * (within a step, proposals are independent given step s−1), which
     * is what lets the SQL replay advance one whole step per recursion
@@ -566,28 +510,6 @@ object Ensemble {
     (verts(0), lls(0))
   }
 
-  /** Walker-ball center for a box fit on a phase-binned curve: slide a
-    * `durGuess`-wide CIRCULAR window over the bins (a mini-BLS) and
-    * take the deepest window's center as the epoch and its deficit
-    * below the global mean as the depth — robust where the single
-    * deepest bin sits on a transit edge (which strands the ball in a
-    * no-overlap local optimum). Deterministic: first index wins ties.
-    * Returns Array(depth0, epoch0 ∈ [−P/2, P/2), durGuess). */
-  def boxGuess(t: Array[Double], y: Array[Double],
-               period: Double, durGuess: Double): Array[Double] = {
-    val nb = y.length
-    val h = math.max(1, math.rint(nb * durGuess / period).toInt / 2)
-    def winMean(c: Int): Double = {
-      var s = 0.0; var k = -h
-      while (k <= h) { s += y(((c + k) % nb + nb) % nb); k += 1 }
-      s / (2 * h + 1)
-    }
-    val best = (0 until nb).minBy(winMean)
-    val eRaw = t(best)
-    val epoch0 = if (eRaw >= period / 2) eRaw - period else eRaw
-    Array(y.sum / nb - winMean(best), epoch0, durGuess)
-  }
-
   /** Posterior 16/50/84 percentiles per parameter (ref A3,
     * main.py:1558–1571), linear interpolation. */
   def percentiles(samples: Array[Array[Double]], qs: Seq[Double] = Seq(0.16, 0.5, 0.84))
@@ -620,18 +542,5 @@ object Ensemble {
       i += 1
     }
     out
-  }
-
-  /** Gaussian log-likelihood of data vs model (ref retr_llik_mile
-    * main.py:735–850, white-noise branch). */
-  def gaussianLogLik(y: Array[Double], yerr: Array[Double], model: Array[Double]): Double = {
-    var s = 0.0
-    var i = 0
-    while (i < y.length) {
-      val r = (y(i) - model(i)) / yerr(i)
-      s += -0.5 * r * r - math.log(yerr(i))
-      i += 1
-    }
-    s
   }
 }

@@ -242,42 +242,6 @@ object Multimodal {
     }(enc)
   }
 
-  /** Format-agnostic byte features (float): payload bytes folded into
-    * a fixed-dim vector. Plumbing-shape path (schema/batching/UDF
-    * signature) — NOT a decoder; the decode path is [[decodeSums]]. */
-  def byteFeatures(payload: Array[Byte], dim: Int): Array[Float] = {
-    val out = new Array[Float](dim)
-    if (payload == null) return out
-    var i = 0
-    while (i < payload.length) {
-      out(i % dim) += (payload(i) & 0xff) / 255.0f
-      i += 1
-    }
-    out
-  }
-
-  /** Batched feature extraction: one partition-local pass, kernel
-    * invoked per row batch (mapPartitions = JVM `mapInPandas`). The
-    * output keeps (media_id, kind) + fixed-dim byte features. */
-  def extractFeatures(media: DataFrame, dim: Int = 16): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("kind", StringType),
-      StructField("n_bytes", IntegerType),
-      StructField("features", ArrayType(FloatType))))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    media.select("media_id", "kind", "payload").mapPartitions { it =>
-      it.grouped(64).flatMap { batch =>           // batch shape like Arrow batches
-        batch.map { r =>
-          val payload = r.getAs[Array[Byte]]("payload")
-          Row(r.getAs[Long]("media_id"), r.getAs[String]("kind"),
-            if (payload == null) 0 else payload.length,
-            byteFeatures(payload, dim).toSeq)
-        }
-      }
-    }(enc)
-  }
-
   /** REAL decode + integer feature sums. Images decode via ImageIO
     * (raw raster samples — no color conversion), audio via
     * AudioSystem (16-bit LE PCM frames), video via the hand-rolled
@@ -328,9 +292,10 @@ object Multimodal {
     }
   }
 
-  /** Batched decoded-feature extraction — same partition-local batch
-    * shape as [[extractFeatures]], exact long sums per residue class
-    * over DECODED units (see [[decodeSums]]). */
+  /** Batched decoded-feature extraction: one partition-local pass,
+    * kernel invoked per 64-row batch (mapPartitions = JVM
+    * `mapInPandas`), exact long sums per residue class over DECODED
+    * units (see [[decodeSums]]). */
   def extractSums(media: DataFrame, dim: Int = 8): DataFrame = {
     val schema = StructType(Seq(
       StructField("media_id", LongType),
@@ -481,14 +446,6 @@ object Multimodal {
         }
       }(enc)
   }
-
-  /** Frame sampling for video-kind rows: explode n_frames into a
-    * bounded sample of frame indices. */
-  def sampleFrames(media: DataFrame, every: Int = 30): DataFrame =
-    media.filter(col("kind") === "video")
-      .withColumn("frame_idx",
-        explode(sequence(lit(0), col("meta.n_frames") - 1, lit(every))))
-      .select("media_id", "frame_idx")
 
   /** Frame-sample + resize: decode video payloads (real AVI parse),
     * keep every `every`-th frame, and average-pool each kept frame

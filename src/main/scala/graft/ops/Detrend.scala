@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -309,7 +309,6 @@ object Detrend {
   def detrend(df: DataFrame, parts: Seq[String], tUs: String, id: String,
               value: String, err: String, gapUs: Long, mode: String,
               timescaleDays: Double, discBreaks: Boolean = true): DataFrame = {
-    val spark = df.sparkSession
     val withReg =
       if (discBreaks)
         TsOps.withRegionDisc(

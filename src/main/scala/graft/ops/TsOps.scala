@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** Core time-series operators (SURVEY.md §2.9 T1–T11, §2.4 A1/A4–A6/A10,
-  * §2.5 W2, §2.2 F2/F3).
+/** Core time-series operators the declared queries share (SURVEY.md
+  * §2.9 T1/T4/T10, §2.4 A10, §2.5 W2, §2.2 F3).
   *
   * Conventions:
   *  - `t` is an exact integer time column (microseconds since epoch) —
@@ -14,10 +14,6 @@ import org.apache.spark.sql.expressions.Window
   *  - every op partitions by the caller's chunk/instrument columns
   *    (`parts`) so nothing funnels through a single partition at scale;
   *    ordering inside a partition is always (t, tie-break id).
-  *  - "exact" rolling statistics are computed from a bounded range
-  *    self-join (frame explosion) + integer sums, which distributes and
-  *    is reproducible; approximate large-window variants can use
-  *    percentile_approx over window frames instead.
   */
 object TsOps {
 
@@ -155,83 +151,6 @@ object TsOps {
   def sessionize(df: DataFrame, parts: Seq[String], tUs: String, id: String,
                  gapUs: Long): DataFrame =
     withRegion(df, parts, tUs, id, gapUs, "session")
-
-  /** A1 `rebn_tser` (ref main.py:3755–3818): fixed-count binning of an
-    * integer x column over [min,max], bin = (x-min)*nb div (max-min)
-    * clamped to nb-1 — exact integer arithmetic. Value statistics use
-    * the reference's error model: err_bin = sqrt((sqrt(Σe²)/n)² + std²)
-    * with POPULATION std (np.std), all derived from exact integer sums
-    * of `vCents` (scaled value) and unit errors. */
-  def rebinFixed(df: DataFrame, parts: Seq[String], xUs: String,
-                 vCents: String, nb: Int): DataFrame = {
-    val pc = parts.map(col)
-    val mm = df.groupBy(pc: _*)
-      .agg(min(col(xUs)).as("_xmin"), max(col(xUs)).as("_xmax"))
-    val joined = if (parts.isEmpty) df.crossJoin(broadcast(mm)) else df.join(broadcast(mm), parts)
-    joined
-      .withColumn("bin",
-        least(((col(xUs) - col("_xmin")) * nb).cast("long") / (col("_xmax") - col("_xmin")), lit(nb - 1))
-          .cast("long"))
-      .groupBy((pc :+ col("bin")): _*)
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col(vCents)).as("_s"),
-        sum(col(vCents) * col(vCents)).as("_q"),
-        first(col("_xmin")).as("_xmin"), first(col("_xmax")).as("_xmax"))
-      .withColumn("vmean", col("_s") / 100.0 / col("n"))
-      .withColumn("vvar",
-        (col("_q") - col("_s").cast("double") * col("_s") / col("n")) / col("n") / 10000.0)
-      .withColumn("verr", sqrt(lit(1.0) / col("n") + greatest(col("vvar"), lit(0.0))))
-      .drop("_s", "_q")
-  }
-
-  /** Bounded-frame self-join ("pairs") backing exact rolling stats that
-    * window frames can't express (e.g. count-of-frame-max for A4): each
-    * anchor row joined to rows within `h` positions in its partition.
-    * Distributes as a shuffle on `parts`; the ×(2h+1) blowup stays
-    * partition-local at scale. Output: parts ++ (_aid,_arn,_brn,_bt,_bv). */
-  def rollingPairs(df: DataFrame, parts: Seq[String], tUs: String, id: String,
-                   v: String, h: Int): DataFrame = {
-    val w = Window.partitionBy(parts.map(col): _*).orderBy(col(tUs), col(id))
-    val rn = df.withColumn("_rn", row_number().over(w))
-    val a = rn.select(parts.map(col) ++ Seq(col(id).as("_aid"), col("_rn").as("_arn")): _*)
-    val b = rn.select(parts.map(col) ++ Seq(col("_rn").as("_brn"),
-      col(tUs).as("_bt"), col(v).as("_bv")): _*)
-    a.join(b, parts)
-      .filter(col("_brn") >= col("_arn") - h && col("_brn") <= col("_arn") + h)
-  }
-
-  /** J8 as-of / linear-interpolation join (ref main.py:6286): bracket
-    * each grid point between consecutive samples via lead(), then
-    * interpolate. `samples` needs (parts, tUs, v); `grid` (parts, gUs). */
-  def interpOntoGrid(samples: DataFrame, grid: DataFrame, parts: Seq[String],
-                     tUs: String, v: String, gUs: String): DataFrame = {
-    val w = Window.partitionBy(parts.map(col): _*).orderBy(col(tUs))
-    val seg = samples
-      .withColumn("_t1", lead(col(tUs), 1).over(w))
-      .withColumn("_v1", lead(col(v), 1).over(w))
-      .filter(col("_t1").isNotNull)
-    val cond = parts.map(p => seg(p) === grid(p))
-      .foldLeft(grid(gUs) >= seg(tUs) && grid(gUs) < seg("_t1"))(_ && _)
-    grid.join(seg, cond)
-      .withColumn("interp",
-        col(v) + (col("_v1") - col(v)) * (col(gUs) - col(tUs)) / (col("_t1") - col(tUs)))
-      .select((parts.map(grid(_)) :+ grid(gUs).as(gUs) :+ col("interp")): _*)
-  }
-
-  /** T11 uniform evaluation grid (ref setp_time main.py:7505–7554):
-    * integer grid at `stepUs` from each partition's min to max, capped. */
-  def timeGrid(df: DataFrame, parts: Seq[String], tUs: String,
-               stepUs: Long, maxPoints: Int): DataFrame = {
-    val pc = parts.map(col)
-    df.groupBy(pc: _*)
-      .agg(min(col(tUs)).as("_t0"), max(col(tUs)).as("_t1"))
-      .withColumn("_n",
-        least(((col("_t1") - col("_t0")) / stepUs).cast("long"), lit(maxPoints.toLong)))
-      .withColumn("i", explode(sequence(lit(0L), col("_n"))))
-      .withColumn("grid_us", col("_t0") + col("i") * stepUs)
-      .drop("_t0", "_t1", "_n")
-  }
 
   /** F4/T4 iterative sigma clip (ref main.py:10989–11002, scipy
     * sigmaclip semantics: keep mean−kσ < x < mean+kσ, POPULATION σ,

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.Tables
 import graft.core.Tables._
 import graft.expr.VecExprs
 import graft.model.{Ensemble, LimbDark}
@@ -22,17 +21,6 @@ import graft.model.Sql.D
   */
 object Advanced {
   type Q = (SparkSession, String) => DataFrame
-
-  private def base(s: SparkSession, d: String): DataFrame =
-    events(s, d).select(
-      col("event_id"), col("user_id"), col("value"),
-      unix_micros(col("ts")).as("t_us"),
-      Tables.cents(col("value")).as("vc"))
-
-  private val baseSql =
-    """base AS (SELECT event_id, user_id, value,
-      |  epoch_us(ts) AS t_us, CAST(round(value*100) AS BIGINT) AS vc
-      |  FROM events)""".stripMargin
 
   /** t3b's synthetic lightcurve value — ONE expression string shared
     * verbatim between the Spark builder (expr) and the DuckDB oracle,

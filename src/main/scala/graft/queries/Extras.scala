@@ -18,12 +18,6 @@ object Extras {
   private val PDAY = 86400000000L
   private val P7 = 7L * PDAY
 
-  private def base(s: SparkSession, d: String): DataFrame =
-    events(s, d).select(
-      col("event_id"), col("user_id"), col("event_type"), col("value"),
-      unix_micros(col("ts")).as("t_us"),
-      Tables.cents(col("value")).as("vc"))
-
   /** Scale multiplier of a data dir (r8): scale corpora (ScaleFixture)
     * carry a `_scale_mult` marker that multiplies the derived FITS/
     * HDF5 fixture FILE COUNTS, so the ingest queries' measured decades
@@ -59,11 +53,6 @@ object Extras {
 
   /** A fixture table's file, as a derived fixture's source. */
   private def src(d: String, table: String) = new java.io.File(d, s"$table.parquet")
-
-  private val baseSql =
-    """base AS (SELECT event_id, user_id, event_type, value,
-      |  epoch_us(ts) AS t_us, CAST(round(value*100) AS BIGINT) AS vc
-      |  FROM events)""".stripMargin
 
   val queries: Map[String, Q] = Map(
     // S14 — REAL FITS ingest (the reference's actual front door,

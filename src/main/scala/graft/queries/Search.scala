@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.Tables
 import graft.core.Tables._
 import graft.search.{Bls, LombScargle, MatchedFilter}
 
@@ -14,17 +13,6 @@ import graft.search.{Bls, LombScargle, MatchedFilter}
   */
 object Search {
   type Q = (SparkSession, String) => DataFrame
-
-  private def base(s: SparkSession, d: String): DataFrame =
-    events(s, d).select(
-      col("event_id"), col("user_id"), col("event_type"), col("value"),
-      unix_micros(col("ts")).as("t_us"),
-      Tables.cents(col("value")).as("vc"))
-
-  private val baseSql =
-    """base AS (SELECT event_id, user_id, event_type, value,
-      |  epoch_us(ts) AS t_us, CAST(round(value*100) AS BIGINT) AS vc
-      |  FROM events)""".stripMargin
 
   val queries: Map[String, Q] = Map(
     // T5 — Lomb–Scargle periodogram at the reference grid density

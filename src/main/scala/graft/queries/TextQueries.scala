@@ -22,7 +22,6 @@ object TextQueries {
   type Q = (SparkSession, String) => DataFrame
 
   private val H = TextOps.md5Hash32Fast("tok")
-  private val P31 = 2147483647L
 
   /** Distinct tokens per document, deduplicated row-locally
     * (array_distinct before explode) so no shuffle is spent on it. */
@@ -2549,7 +2548,7 @@ object TextQueries {
          |ORDER BY d.doc_id""".stripMargin,
 
     // Same 4×64 grid, same md5-based affine hash family
-    // (((2i+3)·h + i²+1) mod P31 mod 64 — minhashExpr's constants
+    // (((2i+3)·h + i²+1) mod 2147483647 mod 64 — minhashExpr's constants
     // written generically over the row index), same min-of-rows
     // estimate. CMS soundness (est ≥ cnt) is implied by the match.
     "d29_cms_heavy" ->

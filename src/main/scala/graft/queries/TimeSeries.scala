@@ -35,13 +35,6 @@ object TimeSeries {
       (k.toLong, E + lo * 3600000000L, E + hi * 3600000000L)
     }.toSeq
 
-  /** events + (t_us, vc) — shared prep; mirrors the SQL `base` CTE. */
-  private def base(s: SparkSession, d: String): DataFrame =
-    events(s, d).select(
-      col("event_id"), col("user_id"), col("event_type"), col("value"),
-      unix_micros(col("ts")).as("t_us"),
-      Tables.cents(col("value")).as("vc"))
-
   /** t18's quantized trig basis at the 24 phase-bin centers:
     * (k, round(cos·100), round(sin·100)). Computed ONCE here and
     * injected as literals into BOTH the Spark plan and the DuckDB
@@ -53,11 +46,6 @@ object TimeSeries {
       val th = 2.0 * math.Pi * (k + 0.5) / 24.0
       (k, math.round(math.cos(th) * 100), math.round(math.sin(th) * 100))
     }
-
-  private val baseSql =
-    """base AS (SELECT event_id, user_id, event_type, value,
-      |  epoch_us(ts) AS t_us, CAST(round(value*100) AS BIGINT) AS vc
-      |  FROM events)""".stripMargin
 
   /** w2b's synthetic lightcurve in integer MICRO-units — ONE expression
     * string shared verbatim between the Spark builder and the DuckDB

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.plans.AsOfJoin
 
 /** The custom as-of operator (LogicalPlan + Strategy + SparkPlan) must
@@ -12,7 +11,7 @@ class AsOfJoinSpec extends SparkSpec {
   private def fixture() = {
     val rng = new scala.util.Random(53)
     val parts = Seq("p0", "p1", "p2", "p3", "p4")
-    val samples = for (p <- parts; i <- 0 until 200) yield
+    val samples = for (p <- parts; _ <- 0 until 200) yield
       (p, rng.nextInt(100000).toLong, rng.nextInt(1000).toLong)
     // dedup (part, t) so the as-of pick is unique
     val s = samples.groupBy(t => (t._1, t._2)).map(_._2.head).toSeq

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 
 /** Pins WHY the benchmark action is `Exec.runCount` and not `count()`
   * (r15 finding, core/Exec.scala): Catalyst prunes

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
 
 /** Structural gate for the default-ON disc-break scan (r14 verdict

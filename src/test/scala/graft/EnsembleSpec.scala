@@ -8,69 +8,6 @@ import graft.model.Ensemble
   * on a collected fit window). Driver-side only: no Spark needed. */
 class EnsembleSpec extends AnyFunSuite {
 
-  test("stretch-move sampler recovers injected depth and epoch") {
-    val rng = new scala.util.Random(23)
-    val n = 1500
-    val t = Array.tabulate(n)(i => i * 10.0 / n)     // 10 days
-    val trueDepth = 0.02; val trueEpoch = 1.3; val period = 2.7; val dur = 0.2
-    val model = Ensemble.boxModel(t, trueEpoch, period, dur, trueDepth)
-    val y = model.map(_ + 0.004 * rng.nextGaussian())
-    val yerr = Array.fill(n)(0.004)
-
-    def ll(p: Array[Double]): Double = {
-      val m = Ensemble.boxModel(t, p(1), period, dur, p(0))
-      Ensemble.gaussianLogLik(y, yerr, m)
-    }
-    val (samples, acc) = Ensemble.sample(ll,
-      lo = Array(0.0, 1.0), hi = Array(0.1, 1.6),
-      nWalkers = 24, nSteps = 300, seed = 42L)
-    assert(acc > 0.1 && acc < 0.9, s"acceptance $acc out of healthy range")
-    val pct = Ensemble.percentiles(samples)
-    val depthMed = pct(0)(1); val epochMed = pct(1)(1)
-    assert(math.abs(depthMed - trueDepth) < 0.005, s"depth $depthMed vs $trueDepth")
-    assert(math.abs(epochMed - trueEpoch) < 0.05, s"epoch $epochMed vs $trueEpoch")
-    // 16/84 interval should bracket the truth
-    assert(pct(0)(0) <= trueDepth + 0.003 && pct(0)(2) >= trueDepth - 0.003)
-  }
-
-  test("sampler is deterministic under a fixed seed") {
-    def ll(p: Array[Double]): Double = -0.5 * (p(0) - 3.0) * (p(0) - 3.0)
-    val (s1, _) = Ensemble.sample(ll, Array(0.0), Array(10.0), 8, 50, seed = 7L)
-    val (s2, _) = Ensemble.sample(ll, Array(0.0), Array(10.0), 8, 50, seed = 7L)
-    assert(s1.map(_.toSeq) sameElements s2.map(_.toSeq))
-  }
-
-  test("GP likelihood fit at reference volume (100x100, ball init) beats the white-noise trap") {
-    // 200-bin folded curve with correlated baseline wiggle + 1-day box:
-    // the Matérn-3/2 marginal likelihood must recover the depth the
-    // white-noise likelihood biases (baseline wiggle leaks into depth).
-    val nb = 200; val period = 7.0
-    val t = Array.tabulate(nb)(b => (b + 0.5) * period / nb)
-    val trueDepth = 0.021
-    val wiggle = t.map(ti => 0.002 * math.sin(2 * math.Pi * ti / 3.1))
-    val box = Ensemble.boxModel(t, 0.0, period, 1.0, trueDepth)
-    val rng = new scala.util.Random(5)
-    val y = Array.tabulate(nb)(i => box(i) + wiggle(i) + 0.0004 * rng.nextGaussian())
-    val yerr = Array.fill(nb)(0.0004)
-    def ll(p: Array[Double]): Double = {
-      val m = Ensemble.boxModel(t, p(1), period, p(2), p(0))
-      val resid = Array.tabulate(nb)(i => y(i) - m(i))
-      graft.ops.Detrend.gpLogLik(t, resid, yerr, sigma = 0.002, rho = 5.0)
-    }
-    val guess = Ensemble.boxGuess(t, y, period, 1.0)
-    assert(math.abs(guess(1)) < 0.5, s"mini-BLS epoch guess off: ${guess(1)}")
-    val (samples, acc) = Ensemble.sample(ll,
-      lo = Array(-0.2, -3.5, 0.2), hi = Array(0.2, 3.5, 2.0),
-      nWalkers = 100, nSteps = 100, burnFrac = 0.3, seed = 42L,
-      init = Some(guess), ballFrac = 0.005)
-    assert(acc > 0.1 && acc < 0.9, s"acceptance $acc unhealthy")
-    val pct = Ensemble.percentiles(samples)
-    assert(math.abs(pct(0)(1) - trueDepth) < 0.003,
-      s"GP-likelihood depth ${pct(0)(1)} vs $trueDepth")
-    assert(math.abs(pct(1)(1)) < 0.2, s"epoch ${pct(1)(1)} not near 0")
-    assert(math.abs(pct(2)(1) - 1.0) < 0.3, s"dur ${pct(2)(1)} not near 1")
-  }
-
   test("sampleQ (cross-engine-exact path) recovers an injected box at t13 volume") {
     val nb = 200; val period = 7.0
     val t = Array.tabulate(nb)(b => (b + 0.5) * period / nb)
@@ -101,12 +38,34 @@ class EnsembleSpec extends AnyFunSuite {
       case (a, b) => a.sameElements(b) })
   }
 
+  /** Walker-ball center for a box fit on a phase-binned curve: slide a
+    * `durGuess`-wide CIRCULAR window over the bins (a mini-BLS) and
+    * take the deepest window's center as the epoch and its deficit
+    * below the global mean as the depth — robust where the single
+    * deepest bin sits on a transit edge (which strands the ball in a
+    * no-overlap local optimum). Deterministic: first index wins ties.
+    * Returns Array(depth0, epoch0 ∈ [−P/2, P/2), durGuess). */
+  private def boxGuess(t: Array[Double], y: Array[Double],
+                       period: Double, durGuess: Double): Array[Double] = {
+    val nb = y.length
+    val h = math.max(1, math.rint(nb * durGuess / period).toInt / 2)
+    def winMean(c: Int): Double = {
+      var s = 0.0; var k = -h
+      while (k <= h) { s += y(((c + k) % nb + nb) % nb); k += 1 }
+      s / (2 * h + 1)
+    }
+    val best = (0 until nb).minBy(winMean)
+    val eRaw = t(best)
+    val epoch0 = if (eRaw >= period / 2) eRaw - period else eRaw
+    Array(y.sum / nb - winMean(best), epoch0, durGuess)
+  }
+
   test("boxGuessQ matches boxGuess semantics on integer-quantized flux") {
     val nb = 200; val period = 7.0
     val t = Array.tabulate(nb)(b => (b + 0.5) * period / nb)
     val box = Ensemble.boxModel(t, 0.5, period, 1.0, 0.02)
     val y = box.clone(); y(30) -= 0.004
-    val g = Ensemble.boxGuess(t, y, period, 1.0)
+    val g = boxGuess(t, y, period, 1.0)
     val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
     val gq = Ensemble.boxGuessQ(t, yq, period, 1.0)
     // same window argmin (integer vs float sums agree off the
@@ -135,7 +94,8 @@ class EnsembleSpec extends AnyFunSuite {
     val box = Ensemble.boxModel(t, 0.0, period, 1.0, 0.02)
     val y = box.clone()
     y(nb - 15) -= 0.005 // spike near the trailing edge
-    val g = Ensemble.boxGuess(t, y, period, 1.0)
+    val yq = y.map(v => graft.expr.VecExprs.roundHalfAway(v * 1e9))
+    val g = Ensemble.boxGuessQ(t, yq, period, 1.0)
     assert(math.abs(g(1)) < 0.3, s"epoch guess ${g(1)} should be ~0")
     assert(g(0) > 0.01 && g(0) < 0.03, s"depth guess ${g(0)}")
   }

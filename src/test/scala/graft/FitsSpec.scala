@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.sources.Fits
 
 /** The hand-rolled FITS codec behind s14_fits_scan: writer/reader

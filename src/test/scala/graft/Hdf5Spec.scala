@@ -1,6 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Hdf5
 import graft.sources.Hdf5.{Grp, DsetF64, DsetI32, DsetI64}
 

@@ -6,7 +6,6 @@ import graft.ann.Ivf
 /** IVF ANN must find a healthy fraction of the exact top-k while
   * searching only a few posting lists. */
 class IvfSpec extends SparkSpec {
-  import spark.implicits._
 
   test("IVF recall@10 vs brute force: >=0.8 at nProbe=4, exact at nProbe=8, monotone in probes") {
     val emb = graft.core.Tables.embeddings(spark, sf)

@@ -71,7 +71,6 @@ class JoinScaleSpec extends SparkSpec {
   }
 
   test("o8: z-order files bound BOTH dimensions tighter than the full span") {
-    import org.apache.spark.sql.functions._
     val out = SparkEntry.queries("o8_zorder_layout")(spark, sf).collect()
     assert(out.length === 32)
     val pkSpan = out.map(_.getLong(3)).max - out.map(_.getLong(2)).min + 1

@@ -1,6 +1,6 @@
 package graft
 
-import graft.model.{Ensemble, Kepler}
+import graft.model.Kepler
 
 /** T13h — the eccentric Keplerian RV model (polynomial trig + fixed
   * Newton steps) and its cross-engine-exact MCMC fit. */

@@ -1,6 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import graft.model.{Ensemble, LimbDark}
 
 /** T12d/T13d — the quadratic limb-darkened transit model (the

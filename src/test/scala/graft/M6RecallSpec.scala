@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.multimodal.Multimodal
 
 /** m6's sub-cell salt recall trade, quantified against all-pairs truth

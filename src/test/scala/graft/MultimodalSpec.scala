@@ -1,38 +1,13 @@
 package graft
 
-import graft.pipeline.{Pipeline, PipelineConfig}
 import graft.multimodal.Multimodal
 
-class PipelineSpec extends SparkSpec {
-
-  test("pipeline stages flow raw -> masked -> detrended -> summary") {
-    val p = new Pipeline(spark, PipelineConfig(
-      dataDir = sf,
-      maskWindowsUs = Seq((1704067200000000L + 5L * 86400000000L,
-        1704067200000000L + 6L * 86400000000L)),
-      persistStages = false))
-    val nRaw = p.raw.count()
-    val nMasked = p.masked.count()
-    val nClean = p.detrended.count()
-    assert(nRaw > 0 && nMasked < nRaw && nClean <= nMasked)
-    val s = p.summary.collect()
-    assert(s.length === 1)
-    assert(s.head.getAs[Long]("n_raw") === nRaw)
-    assert(p.stageNames === Seq("Raw", "maskcust", "Detrended"))
-  }
-
-  test("multimodal scaffold: features have fixed dim, frames sampled") {
-    val docs = graft.core.Tables.documents(spark, sf)
-    val media = Multimodal.fromDocuments(docs)
-    assert(media.schema.fieldNames.toSeq ===
-      Seq("media_id", "kind", "payload", "meta"))
-    val feats = Multimodal.extractFeatures(media, dim = 16)
-    val r = feats.head
-    assert(r.getAs[Seq[Float]]("features").length === 16)
-    assert(feats.count() === docs.count())
-    val frames = Multimodal.sampleFrames(media, every = 30)
-    assert(frames.count() > 0)
-  }
+/** Multimodal decode paths beyond the declared m* queries: pooled
+  * frames, pooled images and windowed audio at parameters the queries
+  * do not use, replayed from the closed-form generation formula, plus
+  * the PNG/WAV/AVI codec round-trip and the AVI parser's format
+  * handling. */
+class MultimodalSpec extends SparkSpec {
 
   test("pooledFrames generalizes beyond the declared query: stride 3, 3x3 pool, ragged edges") {
     val docs = graft.core.Tables.documents(spark, sf)

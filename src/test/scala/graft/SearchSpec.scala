@@ -113,7 +113,6 @@ class SearchSpec extends SparkSpec {
     val df = (0 until n).map { i =>
       val tU = E + (i.toLong * 30 * DAY) / n
       val ph = ((tU - E) % pInj + pInj) % pInj
-      val inTr = ph < dur || ph >= pInj - dur / 2  // box near phase 0
       val v = 1.0 - (if (ph < dur) 0.02 else 0.0) + 0.002 * rng.nextGaussian()
       (i.toLong, tU, v)
     }.toDF("id", "t_us", "value")

@@ -14,6 +14,17 @@ class SessionSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.shuffle.partitions") === cores.get.toString)
   }
 
+  test("SPARK_GRAFT_STREAM_SINK accepts unset, memory or file and rejects anything else") {
+    import graft.core.Session.parseStreamSink
+    assert(parseStreamSink(None) === "memory")
+    assert(parseStreamSink(Some("memory")) === "memory")
+    assert(parseStreamSink(Some("file")) === "file")
+    for (bad <- Seq("files", "FILE", "parquet", "")) {
+      val e = intercept[IllegalArgumentException](parseStreamSink(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_STREAM_SINK"), e.getMessage)
+    }
+  }
+
   test("AQE on, nanosAsLong on, UTC session time zone") {
     assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")

@@ -4,8 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.ops.TsOps
 
 /** Property-style invariants the reference asserts ad hoc (SURVEY §5 /
-  * FIXTURES.md): fold preserves rows and values; rebin means stay in
-  * the value hull with the reference error formula; segmentation gives
+  * FIXTURES.md): fold preserves rows and values; segmentation gives
   * #gaps+1 regions; in-transit ∪ out-of-transit partitions the rows;
   * sigma clip reaches a fixpoint on Gaussian-ish data.
   */
@@ -37,24 +36,6 @@ class TsOpsSpec extends SparkSpec {
     val df = synth(500).withColumn("pc",
       TsOps.phaseCenteredUs(col("t_us"), lit(E), lit(P)))
     assert(df.filter(abs(col("pc")) > P / 2).count() === 0)
-  }
-
-  test("rebin: bin means inside hull, error matches reference formula (main.py:3805-3811)") {
-    val df = synth(3000)
-    val binned = TsOps.rebinFixed(df, Seq("part"), "t_us", "vc", 10)
-    val rows = binned.collect()
-    assert(rows.length === 10)
-    val (vmin, vmax) = {
-      val r = df.agg(min("value"), max("value")).head; (r.getDouble(0), r.getDouble(1))
-    }
-    rows.foreach { r =>
-      val m = r.getAs[Double]("vmean")
-      assert(m >= vmin - 0.01 && m <= vmax + 0.01, s"mean $m outside hull")
-      val n = r.getAs[Long]("n")
-      val vvar = r.getAs[Double]("vvar")
-      val verr = r.getAs[Double]("verr")
-      assert(math.abs(verr - math.sqrt(1.0 / n + math.max(vvar, 0.0))) < 1e-12)
-    }
   }
 
   test("segmentation: #regions == #gaps + 1 (main.py:6736-6744)") {
@@ -101,13 +82,5 @@ class TsOpsSpec extends SparkSpec {
     val n3 = c3.count(); val n5 = c5.count()
     assert(n3 >= (0.9 * 3000).toInt)           // keeps the bulk
     assert(n5 <= n3 && n3 - n5 <= 5)           // nearly converged by 3 iters
-  }
-
-  test("time grid spans the range at the requested step") {
-    val df = synth(500)
-    val grid = TsOps.timeGrid(df, Seq("part"), "t_us", 3600000000L, 10000)
-    val n = grid.count()
-    val span = df.agg(max("t_us").cast("long") - min("t_us").cast("long")).head.getLong(0)
-    assert(n === span / 3600000000L + 1)
   }
 }
